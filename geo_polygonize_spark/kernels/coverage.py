@@ -184,6 +184,7 @@ class CoverageIndex:
                 inside[sel] = (crossings % 2).astype(bool)
         return inside
 
+    @np.errstate(over="ignore", invalid="ignore")  # overflowed rows are uncertain
     def _ray_cast_pairs_fast(
         self, px, py, ridx, flat_x, flat_y, off, length, cx, cy, lx32, ly32, E
     ):
@@ -239,6 +240,7 @@ class CoverageIndex:
                     | (np.abs(y2 - pyv) <= ty)
                     | (np.abs(dy) <= ty)
                     | (np.abs(lhs - rhs) <= tau)
+                    | ~np.isfinite(lhs - rhs)  # f32 overflow: exact path decides
                 )
                 u_rows = sel[unc_edge.any(axis=1)]
                 if u_rows.size:

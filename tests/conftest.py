@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 
@@ -5,7 +7,8 @@ import pytest
 def spark():
     from geo_polygonize_spark.plans import build_session
 
-    s = build_session("tests", cores=8, shuffle_partitions=8)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
+    s = build_session("tests", cores=cores, shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -10,15 +10,18 @@ traversal-dependent, areas are not).
 
 import json
 import os
+import pathlib
 
 import numpy as np
 import pytest
 
 from geo_polygonize_spark.kernels.polygonize import polygonize_lines
 from geo_polygonize_spark.kernels.rings import signed_area
+from geo_polygonize_spark.sources.fixtures import fixture
 from geo_polygonize_spark.sources.geojson import geojson_to_lines, polygons_to_geojson
 
 REF = "/root/reference/examples"
+REPO = pathlib.Path(__file__).resolve().parents[1]
 
 CASES = [
     # (name, needs noding)
@@ -62,11 +65,26 @@ def test_golden(name, node):
     np.testing.assert_allclose(got_areas, want_areas, rtol=1e-9, atol=1e-6)
 
 
+def _fixture_geojson(name, path=None):
+    """An in-repo fixture as a FeatureCollection of LineStrings (the
+    reference examples' input layout); written to ``path`` if given."""
+    xs, ys, node, _ = fixture(name)
+    text = json.dumps({"type": "FeatureCollection", "features": [
+        {"type": "Feature", "properties": {},
+         "geometry": {"type": "LineString", "coordinates": [[float(a), float(b)] for a, b in zip(x, y)]}}
+        for x, y in zip(xs, ys)
+    ]})
+    if path is not None:
+        path.write_text(text)
+    return text, node
+
+
 def test_geojson_roundtrip():
     # sink format parses back to the same geometry count
-    with open(f"{REF}/data/nested_holes.geojson") as f:
-        xs, ys = geojson_to_lines(f.read())
+    text, _ = _fixture_geojson("nested_holes")
+    xs, ys = geojson_to_lines(text)
     polys = polygonize_lines(xs, ys)
+    assert sorted(p.area for p in polys) == [400.0, 3200.0, 6400.0]
     text = polygons_to_geojson(polys)
     back = json.loads(text)
     assert len(back["features"]) == len(polys)
@@ -77,36 +95,39 @@ def test_geojson_roundtrip():
 
 def test_cli_polygonize_file(tmp_path):
     """scripts/polygonize_file.py end to end (the reference's only
-    end-user executable, examples/polygonize.rs) — one golden case in
-    CI; all six are validated by the kernel goldens above."""
+    end-user executable, examples/polygonize.rs) on the nested_holes
+    fixture, against the single-group kernel on the same input."""
     import subprocess
     import sys
 
+    inp = tmp_path / "nested_holes.geojson"
+    text, node = _fixture_geojson("nested_holes", inp)
     out = tmp_path / "nested.geojson"
     r = subprocess.run(
-        [sys.executable, "/root/repo/scripts/polygonize_file.py",
-         f"{REF}/data/nested_holes.geojson", str(out), "--cores", "4"],
+        [sys.executable, str(REPO / "scripts" / "polygonize_file.py"),
+         str(inp), str(out), "--cores", "4"] + (["--node"] if node else []),
         capture_output=True, text=True, timeout=300,
     )
     assert r.returncode == 0, r.stderr[-2000:]
-    want_areas, want_count = _golden_areas(f"{REF}/output/nested_holes.geojson")
+    xs, ys = geojson_to_lines(text)
+    want = polygonize_lines(xs, ys, node_input=node, drop_collapsed=False)
     got_areas, got_count = _golden_areas(str(out))
-    assert got_count == want_count
-    assert np.allclose(sorted(got_areas), sorted(want_areas))
+    assert got_count == len(want) == 3
+    assert np.allclose(sorted(got_areas), sorted(p.area for p in want))
 
 
 class TestSvgRender:
-    def test_render_curved_holes(self, spark):
+    def test_render_curved_holes(self, spark, tmp_path):
         """SVG dev-rendering (reference scripts/visualize.py analog):
-        the curved_holes example renders its 5 polygons as evenodd
+        the curved_holes fixture renders its polygons as evenodd
         paths with hole subpaths."""
         from geo_polygonize_spark.operators.polygonize_op import tiled_polygonize
         from geo_polygonize_spark.sources.geojson import read_geojson_lines
         from geo_polygonize_spark.sources.svg import polygons_to_svg
 
-        lines = read_geojson_lines(
-            spark, "/root/reference/examples/data/curved_holes.geojson"
-        )
+        inp = tmp_path / "curved_holes.geojson"
+        _fixture_geojson("curved_holes", inp)
+        lines = read_geojson_lines(spark, str(inp))
         polys = tiled_polygonize(lines, tile_size=1000.0, buffer=1.0)
         svg = polygons_to_svg(polys, width=400)
         assert svg.startswith("<svg ") and svg.endswith("</svg>")

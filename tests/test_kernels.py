@@ -328,3 +328,38 @@ def test_coverage_index_f32_mirror_bit_identical():
     assert np.array_equal(f1, f2)
     assert np.array_equal(n1, n2)
     assert np.array_equal(i1[f1], i2[f2])
+
+
+def test_coverage_index_f32_overflow_falls_back_to_f64():
+    """Rings spanning ~6e19 around 1e19: the f32 cross products
+    overflow to inf (and inf - inf to NaN), which no finite threshold
+    certifies, so those rows must take the exact f64 ray cast."""
+    import numpy as np
+    from geo_polygonize_spark.kernels.coverage import CoverageIndex
+
+    X0, S = 1e19, 3e19
+    polys = [
+        dict(tile_i=0, tile_j=0, poly_id=0, area=4 * S * S,
+             shell_xs=[X0 - S, X0 + S, X0 + S, X0 - S, X0 - S],
+             shell_ys=[X0 - S, X0 - S, X0 + S, X0 + S, X0 - S],
+             hole_xs=[[X0 - S / 2, X0 + S / 3, X0 - S / 2]],
+             hole_ys=[[X0 - S / 2, X0 - S / 4, X0 + S / 2]]),
+        dict(tile_i=0, tile_j=0, poly_id=1, area=S * S / 4,
+             shell_xs=[X0, X0 + 0.9 * S, X0 + 0.2 * S, X0],
+             shell_ys=[X0 - 0.8 * S, X0, X0 + 0.7 * S, X0 - 0.8 * S],
+             hole_xs=None, hole_ys=None),
+    ]
+    idx = CoverageIndex(polys)
+    assert idx.use_f32
+    ref = CoverageIndex(polys)
+    ref._ray_cast_pairs_fast = (
+        lambda px, py, ridx, fx, fy, off, length, *rest:
+        ref._ray_cast_pairs(px, py, ridx, fx, fy, off, length)
+    )
+    pts = np.random.default_rng(3).uniform(X0 - 1.2 * S, X0 + 1.2 * S, size=(20000, 2))
+    f1, i1, n1 = idx.query(pts[:, 0].copy(), pts[:, 1].copy())
+    f2, i2, n2 = ref.query(pts[:, 0].copy(), pts[:, 1].copy())
+    assert 0 < f2.sum() < len(pts) and n2.max() == 2  # both polygons and the hole are hit
+    assert np.array_equal(f1, f2)
+    assert np.array_equal(n1, n2)
+    assert np.array_equal(i1[f1], i2[f2])
