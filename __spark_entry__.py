@@ -570,8 +570,8 @@ def _q_simhash_near(spark, sf_dir):
 
 
 def _q_stitched_nested(spark, sf_dir):
-    # multi-level stitched polygonize: recovers the nested boxes that
-    # the reference-parity tiled path loses at tile 10 / buffer 2
+    # stitched polygonize: recovers the nested boxes that the
+    # reference-parity tiled path loses at tile 10 / buffer 2
     from geo_polygonize_spark.operators.stitch import stitched_polygonize
     from geo_polygonize_spark.sources.fixtures import fixture
 
@@ -580,13 +580,13 @@ def _q_stitched_nested(spark, sf_dir):
         [(i, [float(v) for v in x], [float(v) for v in y], "fx") for i, (x, y) in enumerate(zip(xs, ys))],
         "line_id long, xs array<double>, ys array<double>, dataset string",
     )
-    out = stitched_polygonize(lines, tile_size=10.0, buffer=2.0, bbox=(0.0, 0.0, 100.0, 100.0), strategy="level")
+    out = stitched_polygonize(lines, tile_size=10.0, buffer=2.0, bbox=(0.0, 0.0, 100.0, 100.0))
     return out.select(F.round("area", 6).alias("area"), "n_holes").orderBy("area")
 
 
 def _q_fused_assembly_grid(spark, sf_dir):
     # r5 fused per-core assembly (operators/assembly.py): chain stitch
-    # with assembly="split" forced — phase-2 polygon assembly runs as a
+    # with assembly="fused" forced — phase-2 polygon assembly runs as a
     # mapInPandas over the cached trace output, merged-residue shells
     # broadcast, winners resolved by narrow rows. Grid 20 / tile 5:
     # every claiming-core boundary column becomes merged residue, so
@@ -602,7 +602,7 @@ def _q_fused_assembly_grid(spark, sf_dir):
     )
     polys = chain_stitched_polygonize(
         lines, tile_size=5.0, buffer=1.5, bbox=(0.0, 0.0, float(n), float(n)),
-        drop_collapsed=True, assembly="split",
+        drop_collapsed=True, assembly="fused",
     )
     return polys.agg(
         F.count("*").alias("n_polys"), F.round(F.sum("area"), 6).alias("total_area")
@@ -610,9 +610,9 @@ def _q_fused_assembly_grid(spark, sf_dir):
 
 
 def _q_chain_stitched_nested(spark, sf_dir):
-    # r4 boundary-chain stitch: same semantics as the level chain but
-    # one trace pass + chain-cycle merge; the nested boxes all span
-    # many tiles, so every ring reassembles from boundary chains
+    # r4 boundary-chain stitch called directly: one trace pass +
+    # chain-cycle merge; the nested boxes all span many tiles, so every
+    # ring reassembles from boundary chains
     from geo_polygonize_spark.operators.chain_stitch import chain_stitched_polygonize
     from geo_polygonize_spark.sources.fixtures import fixture
 

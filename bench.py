@@ -254,16 +254,6 @@ def main() -> None:
         cold=True,
     )
 
-    from geo_polygonize_spark.operators.stitch import stitched_polygonize
-
-    timed(
-        "stitched_polygonize_grid100",
-        lambda: stitched_polygonize(
-            grid_df, tile_size=25.0, buffer=1.5, bbox=(0.0, 0.0, float(gn), float(gn)), drop_collapsed=True, strategy="level"
-        ).count(),
-        cold=True,
-    )
-
     # grid 400 (160k cells, 321k vertices): large enough that kernel
     # time dominates stage scheduling — the honest wall-vs-baseline
     # scale point (VERDICT r01 asked for a size where kernel ≥ 80%)
@@ -282,21 +272,8 @@ def main() -> None:
         cold=True,
     )
     assert c4 == g4 * g4, f"grid400 produced {c4}"
-    timed(
-        "stitched_polygonize_grid400",
-        lambda: stitched_polygonize(
-            grid4_df,
-            tile_size=50.0,
-            buffer=1.5,
-            bbox=(0.0, 0.0, float(g4), float(g4)),
-            drop_collapsed=True,
-            strategy="level",
-        ).count(),
-        cold=True,
-    )
-
-    # r4: boundary-chain stitch — the lattice-friendly alternative to
-    # level escalation (one trace pass; only boundary chains shuffle)
+    # exact stitch (the chain engine behind stitched_polygonize): one
+    # trace pass; only boundary chains shuffle
     from geo_polygonize_spark.operators.chain_stitch import chain_stitched_polygonize
 
     timed(

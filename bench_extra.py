@@ -8,7 +8,6 @@ computation is measured, not the sink (guide §1.4).
 Usage:
   python bench_extra.py dedup      # minhash pipeline decomposition
   python bench_extra.py chain400   # chain stitch phases (profile env)
-  python bench_extra.py level400   # level stitch wall
   python bench_extra.py cells      # pip/knn cell joins
   python bench_extra.py pipeline   # image_pipeline
   python bench_extra.py all
@@ -189,24 +188,6 @@ def run_chain400():
     )
 
 
-def run_level400():
-    from geo_polygonize_spark.operators.stitch import stitched_polygonize
-
-    for gn, ts in ((100, 25.0), (400, 50.0)):
-        gx, gy = grid_lines(gn)
-        df = lines_df(gx, gy)
-        bbox = (0.0, 0.0, float(gn), float(gn))
-        stitched_polygonize(
-            df, tile_size=ts, buffer=1.5, bbox=bbox, drop_collapsed=True, strategy="level"
-        ).count()
-        timed(
-            f"level_grid{gn}",
-            lambda df=df, ts=ts, bbox=bbox: stitched_polygonize(
-                df, tile_size=ts, buffer=1.5, bbox=bbox, drop_collapsed=True, strategy="level"
-            ).count(),
-        )
-
-
 # ------------------------------------------------------------ cell joins
 def run_cells():
     from geo_polygonize_spark.operators.polygonize_op import tiled_polygonize as _tp
@@ -298,7 +279,6 @@ def run_analogs():
 TARGETS = {
     "dedup": run_dedup,
     "chain400": run_chain400,
-    "level400": run_level400,
     "cells": run_cells,
     "pipeline": run_pipeline,
     "analogs": run_analogs,

@@ -197,32 +197,14 @@ def _exact_resort(g, order, offsets, bad_nodes, quad, d2):
         order[lo:hi] = fan_sorted
 
 
-def prune_dangles(
-    g: PlanarGraph, window: tuple | None = None, node_mask: np.ndarray | None = None
-) -> int:
+def prune_dangles(g: PlanarGraph) -> int:
     """Iterative degree-1 peeling to fixpoint
     (reference planar_graph.rs:426-472), vectorized by rounds.
 
     Each round removes every current degree-1 node's single unmarked
     edge and decrements the neighbor — the same fixpoint as the
     reference's worklist. Returns the number of edges removed, which
-    equals the reference's processed-dangle count.
-
-    ``window`` (x1, y1, x2, y2): restrict peeling to dangle tips
-    INSIDE the window. Needed by the stitched per-tile kernel: a
-    degree-1 node outside the buffered window may only look like a
-    dangle because its other edges fall outside the tile's input —
-    pruning it would delete globally-real edges and let a spurious
-    ring hide inside the window (nodes inside the window have complete
-    fans, so their in-tile degree equals the global degree and peeling
-    them is always globally correct).
-
-    ``node_mask`` (bool per node): additional validity restriction —
-    only nodes with ``node_mask[n]`` may be peeled. The beacon-pruned
-    stitched levels pass the in-beacon-region mask: with level input
-    pruned to beacon neighborhoods, only nodes INSIDE the beacon
-    region are guaranteed complete fans, so only those may be declared
-    true dangles."""
+    equals the reference's processed-dangle count."""
     if g.adj_de is None:
         raise RuntimeError("sort_edges must run before prune_dangles")
     adj = g.adj_de
@@ -231,15 +213,8 @@ def prune_dangles(
     removed = 0
     degree = g.degree
     marked = g.de_marked
-    if window is not None:
-        wx1, wy1, wx2, wy2 = window
-        in_window = (g.nx >= wx1) & (g.nx <= wx2) & (g.ny >= wy1) & (g.ny <= wy2)
-    else:
-        in_window = None
-    if node_mask is not None:
-        in_window = node_mask if in_window is None else (in_window & node_mask)
     while True:
-        d1 = np.flatnonzero((degree == 1) & in_window if in_window is not None else degree == 1)
+        d1 = np.flatnonzero(degree == 1)
         if d1.size == 0:
             break
         node_is_d1 = np.zeros(g.n_nodes, dtype=bool)

@@ -64,36 +64,6 @@ def dedup_lines(lines_xs: list, lines_ys: list):
     return out_xs, out_ys
 
 
-def trace_rings(
-    x1,
-    y1,
-    x2,
-    y2,
-    node_input: bool = True,
-    snap_grid: float = DEFAULT_SNAP_GRID,
-    prune_window: tuple | None = None,
-):
-    """Segments → traced minimal rings (pre-assembly): noding → graph
-    → CCW sort → dangle pruning → next-CCW tracing. Returns
-    (ring_xs, ring_ys) closed coordinate arrays. This is the per-tile
-    stage of the multi-level stitched polygonize, which defers
-    classification/promotion/assignment to a distributed pass."""
-    x1 = np.asarray(x1, dtype=np.float64)
-    y1 = np.asarray(y1, dtype=np.float64)
-    x2 = np.asarray(x2, dtype=np.float64)
-    y2 = np.asarray(y2, dtype=np.float64)
-    if x1.size == 0:
-        return [], []
-    if node_input:
-        x1, y1, x2, y2 = node_segments(x1, y1, x2, y2, snap_grid)
-        if x1.size == 0:
-            return [], []
-    g = build_graph(x1, y1, x2, y2)
-    sort_edges(g)
-    prune_dangles(g, window=prune_window)
-    return edge_rings(g)
-
-
 def polygonize_segments(
     x1,
     y1,

@@ -93,9 +93,9 @@ def batch_ring_stats(rxs: list, rys: list):
     recentred shoelace area, and area-weighted centroid, all computed
     with ``reduceat`` over flat arrays — no per-ring Python.
 
-    The stitched trace kernel processes every ring of every re-traced
-    level through this path; a per-ring loop here anti-scales (5+ numpy
-    calls × 10⁵ rings × levels measured as the dominant wall cost).
+    The chain-stitch trace and merge kernels process every ring through
+    this path; a per-ring loop here anti-scales (5+ numpy calls × 10⁵
+    rings measured as the dominant wall cost).
 
     Determinism contract: two tiles tracing the same ring (different
     rotation) get BIT-IDENTICAL outputs — rotation is normalized before

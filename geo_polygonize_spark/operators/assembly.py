@@ -1,74 +1,71 @@
-"""Split ring assembly: per-tile polygon assembly for tile-local rings,
-with only the boundary residue routed through a global pass (r5,
-VERDICT r4 item 2 — the global-assembly floor).
+"""Ring assembly for the stitched polygonize: ring set in, polygons out.
 
-Both stitch variants used to finish with ``assemble_rings_distributed``
-(stitch.py): a 6-8-shuffle global DAG over the FULL ring set, while
-``tiled_polygonize`` assembles per tile inside its trace kernel
-(reference analog src/tiling.rs:85-106) and pays no global pass. On a
-lattice coverage nearly every ring is tile-local after chain closure, so
-the global pass is almost pure overhead. This module restores per-tile
-assembly for the stitched paths without giving up exactness.
-
-Protocol
---------
-Fix an assembly grid (``x0``, ``y0``, ``tile_size`` — any grid is
-correct; callers pass the engine's claiming grid).
-
-1. **Classification.** A ring is *local* to tile ``(ti, tj)`` —
-   ``ti = floor((bx1-x0)/ts)`` — iff its bbox fits that tile's CLOSURE
-   (``bx2 ≤ x0+(ti+1)·ts`` and the y analog). Everything else is
-   *global*. Closure-fitting matters: on a lattice aligned with the
-   grid, rings that merely TOUCH a tile edge stay local, and the global
-   set collapses to the genuinely crossing rings (typically just the
-   coverage hull).
-2. **Global residue (driver).** The global set is size-gated (fallback:
-   the old full global pass). Promotion runs driver-side among global
-   rings only — twins share an exact bbox, hence a class — yielding the
-   *global shells*, broadcast (meta + coords) to every tile task. Every
-   global CW ring (promoted or not: promotion adds shell-hood, it does
-   not remove hole-hood — a promoted hull is still absorbed by any
-   strictly larger container) becomes a *visitor* hole, routed to the
-   tile(s) whose closure contains their centroid.
-3. **Per-tile kernel.** One grouped-map pass per tile over its local
-   rings + visiting holes: member promotion (exact-bbox twins are
-   always co-grouped), then hole→parent assignment where each hole's
-   candidate set is (this tile's shells) ∪ (broadcast global shells).
-   *Completeness lemma*: PIP(c, s) ⇒ c ∈ bbox(s) ⊆ closure(tile(s)),
-   so every possible local parent of a hole lives in a tile whose
-   closure contains the hole's centroid — exactly the tiles the hole
-   visits. Winner = lexicographic min (area, rid) over candidates.
-   - Hole with centroid STRICTLY inside the tile: the candidate set is
-     complete here → resolve now. Local winner: attach in-kernel (the
-     polygon never leaves the task). Global winner: emit a NARROW
-     ``(h_rid, win_rid)`` row — coordinates don't move.
-   - Hole with centroid exactly ON a gridline (|touching tiles| > 1):
-     *deferred* — every touching tile emits its best candidate as a
-     narrow row and the finish takes the min across tiles.
-4. **Finish (narrow).** Per-hole winners = final rows ∪ (anchored min
-   of deferred rows). Winners targeting global shells aggregate to net
-   areas first; hole coordinate arrays are fetched from the ring set
-   ONLY for shells that survive ``drop_collapsed`` (on a grid coverage
-   the hull absorbs every CW cell ring and nets to zero, so nothing is
-   fetched at all). Winners targeting local shells (rare: a hole whose
-   centroid sits inside a different tile's shell via a gridline, or a
-   concave global hole whose centroid lands in a local shell) patch the
-   already-emitted polygons through a broadcast join — kernel output is
-   never reshuffled. ``drop_collapsed`` is applied in the finish (the
-   kernel can't know about late-arriving patches), a narrow filter.
-
-Scale shape: ring coordinates cross exactly ONE shuffle (the group-by
-into tile tasks) in the common path; every later stage moves narrow
-winner rows (which carry only their own hole's coords) or
-survivor-pruned arrays — the finish never re-reads the caller's ring
-caches. The global residue is O(tile-boundary crossings) with an
-explicit gate and a lossless fallback.
-
-Reference parity: operational semantics are those of
+Three finishes share the reference semantics of
 ``kernels.rings._assemble_core`` (reference polygonizer.rs:124-261) —
-same degenerate filter, exact-bbox twin promotion (polygonizer.rs:
-152-185), strictly-larger min-area parent rule (polygonizer.rs:226),
-and final unsigned-area filter (polygonizer.rs:255-258).
+degenerate filter, exact-bbox twin promotion (polygonizer.rs:152-185),
+strictly-larger min-area parent rule (polygonizer.rs:226), final
+unsigned-area filter (polygonizer.rs:255-258):
+
+* ``_assemble_rings_local`` — the numpy kernel over the whole ring set
+  in one task (small ring sets);
+* ``assemble_rings_fused`` — per claim core, over the chain engine's
+  cached trace output, with no extra shuffle of ring data (large ring
+  sets; protocol below);
+* ``assemble_rings_distributed`` — DataFrame joins over the global
+  ring set (the fallback for a pathological merged residue, and the
+  tests' ground truth).
+
+Protocol of the fused assembly
+------------------------------
+The chain engine emits two kinds of rings: *core* rings, closed inside
+one claim core (tile, or hot-tile sub-cell) of its trace kernel, and
+*merged* rings, closed by the chain merge.
+
+1. **Core of a core ring.** Every core ring's vertices are half-edge
+   tails claimed by one core, so its bbox corner identifies that core
+   BIT-EXACTLY and orientation-invariantly:
+   ``ti = clip(floor((bx1-x0)/ts))`` — the min-x vertex is in the core,
+   and twins (same vertex set) always co-derive. The trace output's
+   partitions hold whole claim groups, so an in-pandas groupby inside
+   each partition reproduces the per-core grouping without an exchange.
+2. **Merged residue (driver).** The merged rings are size-gated (above
+   the gates: the whole ring set goes to ``assemble_rings_distributed``).
+   Promotion runs driver-side among them — twins share a vertex set,
+   hence a class — yielding the *merged shells*, broadcast (meta +
+   coords, with a per-core reach index) to every task. Every merged CW
+   ring (promoted or not: promotion adds shell-hood, it does not remove
+   hole-hood — a promoted hull is still absorbed by any strictly larger
+   container) becomes a *visitor* hole that probes the cores whose
+   closure contains its centroid; its merged-shell candidates are
+   resolved on the driver.
+3. **Per-core kernel.** Member promotion (exact-bbox twins are always
+   co-grouped), then hole→parent assignment over (this core's shells)
+   ∪ (broadcast merged shells). *Completeness*: a nondegenerate ring's
+   centroid is strictly inside its open bbox, the open bbox of a
+   core-contained ring crosses no core boundary, and clipped edge cores
+   have no interior core boundaries — so every core-ring parent of a
+   member hole lies in the hole's own core. Winner = lexicographic min
+   (area, rid). A local winner attaches in-task (the polygon never
+   leaves the task); a merged winner emits a NARROW ``K_FINAL`` row.
+   Visitor probes emit the core's best candidate as a ``K_PARTIAL``
+   row, and the finish takes the min across cores.
+4. **Bypass.** On an unsplit grid, a core with no CW ring and no
+   visitor yields identity polygons (every ring a plain CCW shell), so
+   its rings never cross the Python boundary: they re-emit JVM-side
+   from the trace output.
+5. **Finish (narrow).** Per-hole winners = final rows ∪ (min of partial
+   rows). Winners targeting merged shells net their areas; winners
+   targeting core shells (rare: a concave merged hole whose centroid
+   lands in a core shell) patch the emitted polygons through a
+   broadcast join — kernel output is never reshuffled.
+   ``drop_collapsed`` is applied in the finish (the kernel can't know
+   about late-arriving patches), a narrow filter.
+
+Scale shape: ring coordinates of interesting cores cross exactly ONE
+Python pass (no shuffle); every later stage moves narrow winner rows
+(which carry only their own hole's coords). The merged residue is
+O(tile-boundary crossings) with an explicit gate and a lossless
+fallback.
 """
 
 from __future__ import annotations
@@ -77,6 +74,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..functions.cells import cell_range_cols
 from ..kernels.bboxjoin import bbox_join
 from ..kernels.rings import _pip_many_vs_ring
 from .polygonize_op import POLYGON_SCHEMA
@@ -84,9 +82,9 @@ from .polygonize_op import POLYGON_SCHEMA
 # kernel emission kinds
 K_POLY = 0      # finished polygon (assembled in-task)
 K_FINAL = 1     # final hole→global-shell assignment (narrow)
-K_PARTIAL = 4   # deferred hole: best candidate from one touching tile
+K_PARTIAL = 4   # visitor hole: best candidate from one touching core
 
-SPLIT_SCHEMA = T.StructType(
+FUSED_SCHEMA = T.StructType(
     [
         T.StructField("kind", T.IntegerType()),
         T.StructField("rid", T.LongType()),
@@ -102,32 +100,16 @@ SPLIT_SCHEMA = T.StructType(
         T.StructField("cand_rid", T.LongType()),
         T.StructField("cand_area", T.DoubleType()),
         T.StructField("h_area", T.DoubleType()),
-        # hole coordinates ride ON the winner rows (the kernels hold
+        # hole coordinates ride ON the winner rows (the kernel holds
         # them anyway), so the finish never re-reads the caller's ring
-        # cache — merged-visitor rows (fused path) leave them null and
-        # resolve from the driver-side residue
+        # cache — merged-visitor rows leave them null and resolve from
+        # the driver-side residue
         T.StructField("h_xs", T.ArrayType(T.DoubleType())),
         T.StructField("h_ys", T.ArrayType(T.DoubleType())),
     ]
 )
 
 _RING_COLS = ["rid", "xs", "ys", "area", "bx1", "by1", "bx2", "by2", "cx", "cy"]
-
-
-def _touching_tiles(cx: float, cy: float, x0: float, y0: float, ts: float):
-    """Tiles whose CLOSURE contains the point — 1, 2, or 4 of them.
-    Float-exact: a point lies on a gridline iff it equals the floor
-    gridline value under the same IEEE sequence the kernel and the SQL
-    routing use."""
-    i = int(np.floor((cx - x0) / ts))
-    j = int(np.floor((cy - y0) / ts))
-    tis = [i]
-    tjs = [j]
-    if cx == x0 + i * ts:
-        tis.append(i - 1)
-    if cy == y0 + j * ts:
-        tjs.append(j - 1)
-    return [(a, b) for a in tis for b in tjs]
 
 
 def _promote_rows(rows):
@@ -158,463 +140,6 @@ def _promote_rows(rows):
     return shells, visitors
 
 
-def _make_split_kernel(x0: float, y0: float, ts: float, gbc):
-    """Per-tile assembly kernel. ``gbc``: broadcast global-shell payload
-    (g_rid, g_area int64/float64 arrays, g_bbox arrays, coords list)."""
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from .spatial_join import _ray_cast_rows
-
-        g = gbc.value
-        n = len(pdf)
-        role = pdf["role"].to_numpy()
-        area = pdf["area"].to_numpy()
-        rid = pdf["rid"].to_numpy()
-        cx = pdf["cx"].to_numpy()
-        cy = pdf["cy"].to_numpy()
-        bx1 = pdf["bx1"].to_numpy()
-        by1 = pdf["by1"].to_numpy()
-        bx2 = pdf["bx2"].to_numpy()
-        by2 = pdf["by2"].to_numpy()
-        coords_x = [np.asarray(v, np.float64) for v in pdf["xs"]]
-        coords_y = [np.asarray(v, np.float64) for v in pdf["ys"]]
-
-        member = role == 0
-        mem_ccw = member & (area > 0.0)
-        mem_cw = member & (area < 0.0)
-
-        # --- member promotion: exact-bbox twin lookup ----------------
-        by_bbox: dict = {}
-        for i in np.flatnonzero(mem_ccw).tolist():
-            by_bbox.setdefault(
-                (bx1[i], by1[i], bx2[i], by2[i]), []
-            ).append(area[i])
-        promoted = np.zeros(n, dtype=bool)
-        for k in np.flatnonzero(mem_cw).tolist():
-            twins = by_bbox.get((bx1[k], by1[k], bx2[k], by2[k]), ())
-            if not any(abs(s + area[k]) < 1e-6 for s in twins):
-                promoted[k] = True
-
-        shell_idx = np.flatnonzero(mem_ccw | (mem_cw & promoted))
-        s_area = np.abs(area[shell_idx])
-        # every CW ring is an assignment candidate — promotion makes it
-        # ALSO a shell, it does not stop it being a hole (see
-        # _promote_rows; kernels.rings._assemble_core assigns over
-        # hole_ids = all CW rings, promoted included)
-        hole_idx = np.flatnonzero(mem_cw | ~member)
-        nh = hole_idx.size
-        h_area = np.abs(area[hole_idx])
-        hx = cx[hole_idx]
-        hy = cy[hole_idx]
-
-        # --- candidate search: local shells ∪ broadcast globals ------
-        best_area = np.full(nh, np.inf)
-        best_rid = np.full(nh, np.iinfo(np.int64).max, dtype=np.int64)
-        best_local = np.full(nh, -1, dtype=np.int64)  # local shell_idx pos
-
-        def update(hsel, areas_c, rids_c, local_pos):
-            # lexicographic (area, rid) min — deterministic and
-            # symmetric across the per-tile / finish resolution
-            take = (areas_c < best_area[hsel]) | (
-                (areas_c == best_area[hsel]) & (rids_c < best_rid[hsel])
-            )
-            rows = hsel[take]
-            best_area[rows] = areas_c[take]
-            best_rid[rows] = rids_c[take]
-            best_local[rows] = local_pos[take] if local_pos is not None else -1
-
-        if nh and shell_idx.size:
-            si, hj = bbox_join(
-                bx1[shell_idx], by1[shell_idx], bx2[shell_idx], by2[shell_idx],
-                hx, hy, hx, hy,
-            )
-            bigger = s_area[si] > h_area[hj] + 1e-6  # polygonizer.rs:226
-            si, hj = si[bigger], hj[bigger]
-            if si.size:
-                inside = np.zeros(si.size, dtype=bool)
-                uq, ucount = np.unique(si, return_counts=True)
-                heavy = np.zeros(si.size, dtype=bool)
-                for u in uq[(ucount * np.fromiter(
-                    (coords_x[shell_idx[u]].size for u in uq.tolist()),
-                    np.int64, uq.size,
-                )) > 4_000_000].tolist():
-                    rows = np.flatnonzero(si == u)
-                    heavy[rows] = True
-                    inside[rows] = _pip_many_vs_ring(
-                        hx[hj[rows]], hy[hj[rows]],
-                        coords_x[shell_idx[u]], coords_y[shell_idx[u]],
-                    )
-                light = np.flatnonzero(~heavy)
-                if light.size:
-                    inside[light] = _ray_cast_rows(
-                        hx[hj[light]], hy[hj[light]],
-                        [
-                            (coords_x[shell_idx[u]], coords_y[shell_idx[u]])
-                            for u in si[light].tolist()
-                        ],
-                    )
-                si, hj = si[inside], hj[inside]
-                if si.size:
-                    # reduce to ONE candidate per hole before the merge
-                    # with globals (update() compares against the
-                    # pre-call best, so duplicate holes in one call
-                    # would be last-write-wins, not min)
-                    srid = rid[shell_idx[si]]
-                    order = np.lexsort((srid, s_area[si], hj))
-                    first = np.concatenate(
-                        ([True], hj[order][1:] != hj[order][:-1])
-                    )
-                    sel = order[first]
-                    update(hj[sel], s_area[si[sel]], srid[sel], si[sel])
-
-        if nh and g["n"]:
-            for gi in range(g["n"]):
-                ga = g["area"][gi]
-                m = np.flatnonzero(
-                    (hx >= g["bx1"][gi]) & (hx <= g["bx2"][gi])
-                    & (hy >= g["by1"][gi]) & (hy <= g["by2"][gi])
-                    & (ga > h_area + 1e-6)
-                )
-                if m.size == 0:
-                    continue
-                ins = _pip_many_vs_ring(
-                    hx[m], hy[m], g["xs"][gi], g["ys"][gi]
-                )
-                m = m[ins]
-                if m.size:
-                    update(
-                        m,
-                        np.full(m.size, ga),
-                        np.full(m.size, g["rid"][gi], dtype=np.int64),
-                        None,
-                    )
-
-        # --- deferral: centroid exactly on an assembly gridline ------
-        gx = x0 + np.floor((hx - x0) / ts) * ts
-        gy = y0 + np.floor((hy - y0) / ts) * ts
-        deferred = (hx == gx) | (hy == gy)
-        has_cand = np.isfinite(best_area)
-
-        # --- emissions -----------------------------------------------
-        out: dict[str, list] = {k.name: [] for k in SPLIT_SCHEMA.fields}
-
-        def emit(kind, **kw):
-            out["kind"].append(kind)
-            for f in SPLIT_SCHEMA.fields[1:]:
-                out[f.name].append(kw.get(f.name))
-
-        # attached[local shell pos] -> list of hole positions
-        attach: dict[int, list[int]] = {}
-        for p in range(nh):
-            if deferred[p]:
-                if has_cand[p]:
-                    emit(
-                        K_PARTIAL,
-                        h_rid=int(rid[hole_idx[p]]),
-                        cand_rid=int(best_rid[p]),
-                        cand_area=float(best_area[p]),
-                        h_area=float(h_area[p]),
-                        h_xs=coords_x[hole_idx[p]],
-                        h_ys=coords_y[hole_idx[p]],
-                    )
-            elif has_cand[p]:
-                if best_local[p] >= 0:
-                    attach.setdefault(int(best_local[p]), []).append(p)
-                else:
-                    emit(
-                        K_FINAL,
-                        h_rid=int(rid[hole_idx[p]]),
-                        cand_rid=int(best_rid[p]),
-                        cand_area=float(best_area[p]),
-                        h_area=float(h_area[p]),
-                        h_xs=coords_x[hole_idx[p]],
-                        h_ys=coords_y[hole_idx[p]],
-                    )
-            # no candidate, not deferred: unparented hole — vanishes
-            # (identical to _assemble_core: never attached anywhere)
-
-        for pos in range(shell_idx.size):
-            i = shell_idx[pos]
-            xs_i, ys_i = coords_x[i], coords_y[i]
-            if promoted[i]:  # re-wind CCW (polygonizer.rs:164-169)
-                xs_i, ys_i = xs_i[::-1], ys_i[::-1]
-            holes = attach.get(pos, ())
-            emit(
-                K_POLY,
-                rid=int(rid[i]),
-                shell_xs=xs_i,
-                shell_ys=ys_i,
-                hole_xs=[coords_x[hole_idx[p]] for p in holes],
-                hole_ys=[coords_y[hole_idx[p]] for p in holes],
-                n_holes=len(holes),
-                net_area=float(s_area[pos] - h_area[list(holes)].sum()),
-                cx=float(cx[i]),
-                cy=float(cy[i]),
-            )
-        # object dtype throughout: mixed int/None long columns must NOT
-        # collapse to float64 (pandas' default), which silently zeroes
-        # the low bits of 64-bit rids — Arrow casts object → schema
-        return pd.DataFrame(
-            {k: pd.Series(v, dtype=object) for k, v in out.items()}
-        )
-
-    return kernel
-
-
-_BYPASS_TILE_GATE = 4096
-
-
-def _split_tagged(rings: DataFrame, x0: float, y0: float, ts: float) -> DataFrame:
-    """Non-degenerate rings tagged with their bbox-corner tile and the
-    tile-local test — shared by the summary aggregate and the split
-    assembly body (bit-identical column expressions by construction)."""
-    nd = rings.where(F.abs("area") >= 1e-9)  # polygonizer.rs:138-140
-    ti = F.floor((F.col("bx1") - x0) / ts).cast("int")
-    tj = F.floor((F.col("by1") - y0) / ts).cast("int")
-    is_local = (
-        (F.col("bx2") <= F.lit(x0) + (ti + 1).cast("double") * ts)
-        & (F.col("by2") <= F.lit(y0) + (tj + 1).cast("double") * ts)
-    )
-    return nd.withColumn("ti", ti).withColumn("tj", tj).withColumn(
-        "is_local", is_local
-    )
-
-
-def split_ring_summary(rings: DataFrame, x0: float, y0: float, ts: float):
-    """The split assembly's one-scan summary row (global-residue gate
-    counts, driver-gated distinct CW member cells, and the TOTAL
-    non-degenerate ring count so a caller's strategy decision shares
-    this scan instead of paying its own count job)."""
-    tagged = _split_tagged(rings, x0, y0, float(ts))
-    cw_struct = F.when(
-        F.col("is_local") & (F.col("area") < 0),
-        F.struct(
-            F.col("ti").alias("i"), F.col("tj").alias("j"),
-            F.col("cx").alias("x"), F.col("cy").alias("y"),
-        ),
-    )
-    return tagged.agg(
-        F.count("*").alias("n_all"),
-        F.count(F.when(~F.col("is_local"), 1)).alias("n"),
-        F.coalesce(
-            F.sum(F.when(~F.col("is_local"), F.size("xs"))), F.lit(0)
-        ).alias("c"),
-        F.slice(
-            F.sort_array(F.collect_set(cw_struct)), 1, _BYPASS_TILE_GATE + 1
-        ).alias("cw_cells"),
-        F.size(F.collect_set(cw_struct)).alias("n_cw_cells"),
-    ).collect()[0]
-
-
-def assemble_rings_split(
-    rings: DataFrame,
-    x0: float,
-    y0: float,
-    tile_size: float,
-    drop_collapsed: bool = False,
-    global_rows_gate: int = 100_000,
-    global_coords_gate: int = 10_000_000,
-    rings_cached: bool = False,
-    summary=None,
-) -> DataFrame:
-    """Assemble polygons from a ring set (RING_SCHEMA + rid), per-tile
-    for tile-local rings (module docstring). Output schema and
-    semantics identical to ``assemble_rings_distributed``; falls back
-    to it when the global residue exceeds the gates.
-
-    ``rings_cached``: pass True when the caller already persisted or
-    checkpointed ``rings``; otherwise this function persists it for its
-    own 2-3 consumers and releases it inside the finish (winner rows
-    carry their hole coords, so the returned plan never references the
-    transient cache)."""
-    from .stitch import assemble_rings_distributed
-
-    import os as _os
-    import time as _time
-    _sprof = bool(_os.environ.get("GP_ASM_PROF"))
-    _st = {"t": _time.time()}
-
-    def _smark(name):
-        if _sprof:
-            now = _time.time()
-            print(f"SPLITPROF| {name}: {now - _st['t']:.3f}", flush=True)
-            _st["t"] = now
-
-    spark = rings.sparkSession
-    ts = float(tile_size)
-    own_cache = not rings_cached
-    if own_cache:
-        rings = rings.persist()
-    tagged = _split_tagged(rings, x0, y0, ts)
-
-    # ONE summary aggregate over the ring set (r6 — was three separate
-    # full scans: the global gate, the CW tile-key job and the residue
-    # stats): global residue gate counts + the distinct CW member cells
-    # (tile + centroid, driver-gated, sorted for determinism) that
-    # drive the member bypass below. Then the residue itself is fetched
-    # through one PARALLEL Arrow job — Spark's incremental
-    # limit().collect() runs 1→4→20-task waves and converts ring arrays
-    # row-by-row through py4j. Callers that already aggregated the
-    # summary for their own strategy decision pass it in (``summary``)
-    # and this function runs zero extra full scans before the kernel.
-    glob = tagged.where(~F.col("is_local")).select(*_RING_COLS)
-    if summary is None:
-        summary = split_ring_summary(rings, x0, y0, ts)
-        _smark("summary_job")
-    if (
-        int(summary["n"]) > global_rows_gate
-        or int(summary["c"]) > global_coords_gate
-    ):
-        # pathological tiling (rings >> tile): the split brings nothing
-        # (rings is cached on either branch of ``rings_cached``)
-        return assemble_rings_distributed(rings, drop_collapsed)
-    grows = glob.toPandas().to_dict("records") if int(summary["n"]) else []
-    gshells, gvisitors = _promote_rows(grows)
-    _smark("glob_collect")
-
-    payload = {
-        "n": len(gshells),
-        "rid": np.fromiter((r["rid"] for r, _ in gshells), np.int64, len(gshells)),
-        "area": np.fromiter((abs(r["area"]) for r, _ in gshells), np.float64, len(gshells)),
-        "bx1": np.fromiter((r["bx1"] for r, _ in gshells), np.float64, len(gshells)),
-        "by1": np.fromiter((r["by1"] for r, _ in gshells), np.float64, len(gshells)),
-        "bx2": np.fromiter((r["bx2"] for r, _ in gshells), np.float64, len(gshells)),
-        "by2": np.fromiter((r["by2"] for r, _ in gshells), np.float64, len(gshells)),
-        "xs": [np.asarray(r["xs"], np.float64) for r, _ in gshells],
-        "ys": [np.asarray(r["ys"], np.float64) for r, _ in gshells],
-    }
-    gbc = spark.sparkContext.broadcast(payload)
-
-    members = tagged.where("is_local").select(
-        F.col("ti").alias("tile_i"), F.col("tj").alias("tile_j"),
-        F.lit(0).alias("role"), *_RING_COLS,
-    )
-    # boundary member holes also visit neighbor tiles (narrow rows in
-    # practice — a snapped centroid rarely lands exactly on a gridline)
-    # r6 member bypass (same argument as the fused path): a tile with
-    # no CW member, no boundary visit and no global visitor produces
-    # identity K_POLY rows for every member — skip the coords shuffle
-    # AND the Python kernel for those members entirely (the dominant
-    # assembly cost on a lattice is moving every ring's coordinates
-    # through the groupBy exchange + two Arrow conversions). The
-    # interesting-tile set is collected narrow (driver-gated) below.
-    gxf = F.lit(x0) + F.floor((F.col("cx") - x0) / ts) * ts
-    gyf = F.lit(y0) + F.floor((F.col("cy") - y0) / ts) * ts
-    ci = F.floor((F.col("cx") - x0) / ts).cast("int")
-    cj = F.floor((F.col("cy") - y0) / ts).cast("int")
-    on_x = F.col("cx") == gxf
-    on_y = F.col("cy") == gyf
-    # the full touching set {ci, ci-1 if on_x} × {cj, cj-1 if on_y}
-    # minus the home tile — note (ci, cj) itself IS a neighbor when the
-    # centroid sits on the home tile's UPPER edge (then ti == ci-1)
-    neighbor_keys = F.filter(
-        F.array(
-            F.struct(ci.alias("i"), cj.alias("j")),
-            F.when(on_x, F.struct((ci - 1).alias("i"), cj.alias("j"))),
-            F.when(on_y, F.struct(ci.alias("i"), (cj - 1).alias("j"))),
-            F.when(on_x & on_y, F.struct((ci - 1).alias("i"), (cj - 1).alias("j"))),
-        ),
-        lambda s: s.isNotNull()
-        & ~((s["i"] == F.col("ti")) & (s["j"] == F.col("tj"))),
-    )
-    boundary_visits = (
-        tagged.where("is_local")
-        .where((F.col("area") < 0) & (on_x | on_y))
-        .withColumn("nk", F.explode(neighbor_keys))
-        .select(
-            F.col("nk.i").alias("tile_i"), F.col("nk.j").alias("tile_j"),
-            F.lit(2).alias("role"), *_RING_COLS,
-        )
-    )
-
-    # interesting tiles = every CW member's home tile + its boundary
-    # neighbor tiles (from the summary's distinct CW cells —
-    # _touching_tiles mirrors the SQL on_x/on_y float math) + the
-    # global visitors' touching tiles. Gated: a hole-dominated input
-    # whose CW cell set exceeds the gate keeps the full Python pass.
-    bypass = None
-    boundary_needed = True
-    if int(summary["n_cw_cells"]) <= _BYPASS_TILE_GATE:
-        interesting_tiles = set()
-        boundary_needed = False
-        for c in summary["cw_cells"] or ():
-            touch = _touching_tiles(float(c["x"]), float(c["y"]), x0, y0, ts)
-            interesting_tiles.add((int(c["i"]), int(c["j"])))
-            interesting_tiles.update(touch)
-            if len(touch) > 1:
-                boundary_needed = True
-        for r in gvisitors:
-            for ab in _touching_tiles(float(r["cx"]), float(r["cy"]), x0, y0, ts):
-                interesting_tiles.add(ab)
-        _B = 1 << 32
-        tkey = F.col("tile_i").cast("long") * F.lit(_B) + F.col("tile_j").cast("long")
-        plain, members = _bypass_interesting_split(
-            members,
-            tkey,
-            {a * _B + b for a, b in interesting_tiles},
-            spark,
-        )
-        bypass = _bypass_poly_rows(plain)
-
-    # the boundary-visit subtree is its own scan of the ring set — skip
-    # it when the summary proves no CW member centroid sits on a
-    # gridline (every lattice coverage)
-    kernel_input = (
-        members.unionByName(boundary_visits) if boundary_needed else members
-    )
-    if gvisitors:
-        vrows = []
-        for r in gvisitors:
-            touch = _touching_tiles(float(r["cx"]), float(r["cy"]), x0, y0, ts)
-            for (a, b) in touch:
-                vrows.append(
-                    (a, b, 1, int(r["rid"]), np.asarray(r["xs"], np.float64),
-                     np.asarray(r["ys"], np.float64), float(r["area"]),
-                     float(r["bx1"]), float(r["by1"]), float(r["bx2"]),
-                     float(r["by2"]), float(r["cx"]), float(r["cy"]))
-                )
-        # pandas + Arrow path: rows carry coordinate arrays (which may
-        # be numpy from the Arrow residue collect above)
-        vcols = ["tile_i", "tile_j", "role", "rid", "xs", "ys",
-                 "area", "bx1", "by1", "bx2", "by2", "cx", "cy"]
-        vpdf = pd.DataFrame(dict(zip(vcols, map(list, zip(*vrows)))))
-        vdf = spark.createDataFrame(
-            vpdf,
-            "tile_i int, tile_j int, role int, rid long, "
-            "xs array<double>, ys array<double>, area double, "
-            "bx1 double, by1 double, bx2 double, by2 double, "
-            "cx double, cy double",
-        )
-        kernel_input = kernel_input.unionByName(vdf)
-
-    kernel = _make_split_kernel(x0, y0, ts, gbc)
-    out = kernel_input.groupBy("tile_i", "tile_j").applyInPandas(kernel, SPLIT_SCHEMA)
-    release = (lambda: rings.unpersist()) if own_cache else None
-    finish_bypass = bypass
-    if bypass is not None and release is not None:
-        # early release (this function owns the ring cache): bypass
-        # rows must ride through the checkpoint so the final plan
-        # never re-reads the released cache
-        out = out.unionByName(bypass)
-        finish_bypass = None
-    # consumed by 3-4 narrow readers; lazy — materializes inside
-    # the finish's first job rather than as its own stage wave.
-    # When the caller keeps the ring cache alive (rings_cached=True,
-    # the stitched_polygonize path), bypass rows skip this checkpoint
-    # and flow straight from that cache into the final plan — no
-    # second copy of the plain ring bytes.
-    out = out.localCheckpoint(eager=False)
-    _smark("kernel_plan")
-
-    # every K_FINAL/K_PARTIAL row of the split kernel carries its hole
-    # coords (members AND visitors enter the kernel with xs/ys), so no
-    # merged_coord_rows fill is needed
-    return _finish_assignments(
-        spark, out, gshells, drop_collapsed, release=release,
-        bypass_polys=finish_bypass,
-    )
-
-
 def core_key_col(x0, y0, ts, cols, rows):
     """SQL claim-core key from the ring bbox corner — mirrors the fused
     kernel's numpy derivation float-for-float (floor of the same IEEE
@@ -636,7 +161,7 @@ def _bypass_poly_rows(plain: DataFrame) -> DataFrame:
     exactly what the Python kernels emit for a group with no CW ring
     and no visitor (every ring a plain CCW shell: promotion needs a CW
     twin, holes are CW rings, so no K_FINAL/K_PARTIAL and hole arrays
-    are empty). Input: _RING_COLS-shaped frame; output: SPLIT_SCHEMA."""
+    are empty). Input: _RING_COLS-shaped frame; output: FUSED_SCHEMA."""
     return plain.select(
         F.lit(K_POLY).cast("int").alias("kind"),
         "rid",
@@ -660,7 +185,8 @@ def _bypass_poly_rows(plain: DataFrame) -> DataFrame:
 def _bypass_interesting_split(df: DataFrame, key_col, keys: set, spark):
     """(plain, interesting) split of ``df`` on ``key_col`` membership in
     the driver-known ``keys`` — literal ``isin`` for small sets, anti/
-    semi broadcast joins above 512 (the _id_filter rule)."""
+    semi broadcast joins above 512 (a 10^5-literal ``isin`` costs tens
+    of seconds of pure py4j expression construction, BENCH.md r5)."""
     if not keys:
         return df, df.where(F.lit(False))
     ids = sorted(keys)
@@ -676,20 +202,6 @@ def _bypass_interesting_split(df: DataFrame, key_col, keys: set, spark):
     )
 
 
-def _id_filter(spark, df: DataFrame, col: str, ids: list):
-    """``df`` rows whose ``col`` is in ``ids`` — as a literal ``isin``
-    for small lists, else a broadcast semi-join over an Arrow-built id
-    frame (a 10^5-literal ``isin`` costs tens of seconds of pure py4j
-    expression construction — the in-trace assembly experiment's
-    lesson, BENCH.md r5)."""
-    if len(ids) <= 512:
-        return df.where(F.col(col).isin(ids))
-    idf = spark.createDataFrame(
-        pd.DataFrame({col: pd.Series(ids, dtype="int64")}), f"{col} long"
-    )
-    return df.join(F.broadcast(idf), col, "left_semi")
-
-
 def _finish_assignments(
     spark,
     out: DataFrame,
@@ -697,19 +209,17 @@ def _finish_assignments(
     drop_collapsed: bool,
     merged_coord_rows: list | None = None,
     extra_partials: DataFrame | None = None,
-    release=None,
     bypass_polys: DataFrame | None = None,
 ) -> DataFrame:
-    """Shared narrow finish over a SPLIT_SCHEMA kernel output: resolve
+    """Narrow finish over a FUSED_SCHEMA kernel output: resolve
     per-hole winners (finals + min over partial candidate rows), net
     the global shells, and patch rare local-shell winners onto the
     emitted polygons via a broadcast join.
 
     Hole coordinates ride ON the winner rows (h_xs/h_ys, emitted by
-    the kernels, which hold every member/visiting ring's coords), so
-    the finish never re-reads the caller's ring caches — ``release``
-    fires right after the single winner-aggregate job. The one
-    exception is fused-path merged visitors (their coords never enter
+    the kernel, which holds every member ring's coords), so the finish
+    never re-reads the caller's ring caches. The one exception is
+    merged visitors (their coords never enter
     the kernel): those rows carry null h_xs and resolve from
     ``merged_coord_rows`` — the (driver-side) global residue rows."""
     import os as _os
@@ -754,186 +264,15 @@ def _finish_assignments(
     winners = finals.unionByName(deferred)
 
     # r6 (guide §2.4/§5 — no driver loop in the query path when nothing
-    # forces one): with no early-release obligation the whole finish
-    # folds into the caller's single action. The old shape ran ONE
-    # separate aggregate job (collect) to fetch per-candidate hole sums
-    # — a full materialization of the kernel-output checkpoint plus ~5
+    # forces one): the whole finish folds into the caller's single
+    # action. The old shape ran ONE separate aggregate job (collect) to
+    # fetch per-candidate hole sums — a full materialization of the kernel-output checkpoint plus ~5
     # AQE stage waves (measured 1.3-2.6 s at grid-400, for a handful of
     # rows) — then re-built the same aggregate as broadcast joins. Here
     # the per-candidate aggregate joins the emitted polygons and the
     # (driver-known) global shells directly inside the returned plan;
     # the two joins reference the same aggregate subtree, so the
     # exchange is planned once and reused.
-    if release is None:
-        if merged_coord_rows:
-            mcdf = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "h_rid": pd.Series(
-                            [int(r["rid"]) for r in merged_coord_rows], dtype="int64"
-                        ),
-                        "m_xs": pd.Series(
-                            [r["xs"] for r in merged_coord_rows], dtype=object
-                        ),
-                        "m_ys": pd.Series(
-                            [r["ys"] for r in merged_coord_rows], dtype=object
-                        ),
-                    }
-                ),
-                "h_rid long, m_xs array<double>, m_ys array<double>",
-            )
-            winners = (
-                winners.join(F.broadcast(mcdf), "h_rid", "left")
-                .withColumn("h_xs", F.coalesce("h_xs", "m_xs"))
-                .withColumn("h_ys", F.coalesce("h_ys", "m_ys"))
-                .drop("m_xs", "m_ys")
-            )
-        pagg = (
-            winners.groupBy("cand_rid")
-            .agg(
-                F.collect_list("h_xs").alias("p_xs"),
-                F.collect_list("h_ys").alias("p_ys"),
-                F.sum("h_area").alias("p_sum"),
-                F.count("*").alias("p_n"),
-            )
-            .withColumnRenamed("cand_rid", "rid")
-        )
-        # local-shell winners patch onto emitted polygons (rare); global
-        # candidate rids never match a K_POLY rid, so no pre-split of
-        # the aggregate is needed
-        polys = (
-            polys.join(F.broadcast(pagg), "rid", "left")
-            .withColumn(
-                "hole_xs",
-                F.when(F.col("p_xs").isNotNull(),
-                       F.concat("hole_xs", "p_xs")).otherwise(F.col("hole_xs")),
-            )
-            .withColumn(
-                "hole_ys",
-                F.when(F.col("p_ys").isNotNull(),
-                       F.concat("hole_ys", "p_ys")).otherwise(F.col("hole_ys")),
-            )
-            .withColumn(
-                "net_area", F.col("net_area") - F.coalesce("p_sum", F.lit(0.0))
-            )
-            .withColumn(
-                "n_holes",
-                (F.col("n_holes") + F.coalesce("p_n", F.lit(0))).cast("int"),
-            )
-            .drop("p_xs", "p_ys", "p_sum", "p_n")
-        )
-        if bypass_polys is not None:
-            # identity rows of plain cores/tiles: never patch targets
-            # (callers' argument), so they union in AFTER the patch join
-            polys = polys.select(
-                *[f.name for f in SPLIT_SCHEMA.fields]
-            ).unionByName(bypass_polys)
-        if drop_collapsed:
-            polys = polys.where(F.col("net_area") > 1e-6)
-
-        gpolys = None
-        if gshells:
-            gpdf = pd.DataFrame(
-                {
-                    "rid": pd.Series(
-                        [int(r["rid"]) for r, _ in gshells], dtype="int64"
-                    ),
-                    "shell_xs": pd.Series(
-                        [list(r["xs"])[::-1] if prom else list(r["xs"])
-                         for r, prom in gshells], dtype=object),
-                    "shell_ys": pd.Series(
-                        [list(r["ys"])[::-1] if prom else list(r["ys"])
-                         for r, prom in gshells], dtype=object),
-                    "s_area": pd.Series(
-                        [abs(float(r["area"])) for r, _ in gshells], dtype="float64"
-                    ),
-                    "cx": pd.Series(
-                        [float(r["cx"]) for r, _ in gshells], dtype="float64"
-                    ),
-                    "cy": pd.Series(
-                        [float(r["cy"]) for r, _ in gshells], dtype="float64"
-                    ),
-                }
-            )
-            gbase = spark.createDataFrame(
-                gpdf,
-                "rid long, shell_xs array<double>, shell_ys array<double>, "
-                "s_area double, cx double, cy double",
-            )
-            gpolys = (
-                gbase.join(F.broadcast(pagg), "rid", "left")
-                .select(
-                    "rid", "shell_xs", "shell_ys",
-                    F.col("p_xs").alias("hole_xs"),
-                    F.col("p_ys").alias("hole_ys"),
-                    F.coalesce("p_n", F.lit(0)).cast("int").alias("n_holes"),
-                    (F.col("s_area") - F.coalesce("p_sum", F.lit(0.0))).alias(
-                        "net_area"
-                    ),
-                    "cx", "cy",
-                )
-            )
-            if drop_collapsed:
-                gpolys = gpolys.where(F.col("net_area") > 1e-6)
-
-        final_cols = [
-            F.lit(-2).cast("int").alias("tile_i"),  # stitched marker
-            F.lit(-2).cast("int").alias("tile_j"),
-            F.col("rid").alias("poly_id"),
-            "shell_xs", "shell_ys",
-            F.coalesce(
-                "hole_xs", F.array().cast("array<array<double>>")
-            ).alias("hole_xs"),
-            F.coalesce(
-                "hole_ys", F.array().cast("array<array<double>>")
-            ).alias("hole_ys"),
-            "n_holes",
-            F.col("net_area").alias("area"),
-            "cx", "cy",
-        ]
-        result = polys.select(*final_cols)
-        if gpolys is not None:
-            result = result.unionByName(gpolys.select(*final_cols))
-        _fmark("inplan_build")
-        return result
-
-    # ONE aggregate job over the (narrow) winner rows serves both the
-    # global-shell nets AND the local-winner detection: the distinct
-    # target count is ≤ |global shells| + |rare local winners|, so the
-    # collect stays driver-safe even when (grid coverages) every CW
-    # ring wins to the hull.
-    g_rid_set = {int(r["rid"]) for r, _ in gshells}
-    _fmark("plan_build")
-    wagg = (
-        winners.groupBy("cand_rid")
-        .agg(F.sum("h_area").alias("hsum"), F.count("*").alias("hn"))
-        .collect()
-    )
-    _fmark("winner_agg_job")
-    gagg = {}
-    local_win_rids = []
-    for r in wagg:
-        cr = int(r["cand_rid"])
-        if cr in g_rid_set:
-            gagg[cr] = (float(r["hsum"]), int(r["hn"]))
-        else:
-            local_win_rids.append(cr)
-    surviving = []
-    for r, prom in gshells:
-        hsum, hn = gagg.get(int(r["rid"]), (0.0, 0))
-        net = abs(r["area"]) - hsum
-        if drop_collapsed and net <= 1e-6:  # polygonizer.rs:255-258
-            continue
-        surviving.append((r, prom, net, hn))
-
-    # the winner aggregate above materialized ``out``'s checkpoint, and
-    # every later consumer (hole coords, patch, polys) reads from it —
-    # the caller's ring caches are dead weight from here on
-    if release is not None:
-        release()
-
-    # fill null winner coords (fused-path merged visitors) from the
-    # driver-side residue rows
     if merged_coord_rows:
         mcdf = spark.createDataFrame(
             pd.DataFrame(
@@ -957,102 +296,105 @@ def _finish_assignments(
             .withColumn("h_ys", F.coalesce("h_ys", "m_ys"))
             .drop("m_xs", "m_ys")
         )
+    pagg = (
+        winners.groupBy("cand_rid")
+        .agg(
+            F.collect_list("h_xs").alias("p_xs"),
+            F.collect_list("h_ys").alias("p_ys"),
+            F.sum("h_area").alias("p_sum"),
+            F.count("*").alias("p_n"),
+        )
+        .withColumnRenamed("cand_rid", "rid")
+    )
+    # local-shell winners patch onto emitted polygons (rare); global
+    # candidate rids never match a K_POLY rid, so no pre-split of
+    # the aggregate is needed
+    polys = (
+        polys.join(F.broadcast(pagg), "rid", "left")
+        .withColumn(
+            "hole_xs",
+            F.when(F.col("p_xs").isNotNull(),
+                   F.concat("hole_xs", "p_xs")).otherwise(F.col("hole_xs")),
+        )
+        .withColumn(
+            "hole_ys",
+            F.when(F.col("p_ys").isNotNull(),
+                   F.concat("hole_ys", "p_ys")).otherwise(F.col("hole_ys")),
+        )
+        .withColumn(
+            "net_area", F.col("net_area") - F.coalesce("p_sum", F.lit(0.0))
+        )
+        .withColumn(
+            "n_holes",
+            (F.col("n_holes") + F.coalesce("p_n", F.lit(0))).cast("int"),
+        )
+        .drop("p_xs", "p_ys", "p_sum", "p_n")
+    )
+    if bypass_polys is not None:
+        # identity rows of plain cores/tiles: never patch targets
+        # (callers' argument), so they union in AFTER the patch join
+        polys = polys.select(
+            *[f.name for f in FUSED_SCHEMA.fields]
+        ).unionByName(bypass_polys)
+    if drop_collapsed:
+        polys = polys.where(F.col("net_area") > 1e-6)
 
     gpolys = None
-    if surviving:
-        # pandas + Arrow path: the residue can hold thousands of rows
-        # with coordinate arrays, and row-by-row py4j conversion is the
-        # slow way to ship them
+    if gshells:
         gpdf = pd.DataFrame(
             {
-                "rid": pd.Series([int(r["rid"]) for r, _, _, _ in surviving], dtype="int64"),
+                "rid": pd.Series(
+                    [int(r["rid"]) for r, _ in gshells], dtype="int64"
+                ),
                 "shell_xs": pd.Series(
                     [list(r["xs"])[::-1] if prom else list(r["xs"])
-                     for r, prom, _, _ in surviving], dtype=object),
+                     for r, prom in gshells], dtype=object),
                 "shell_ys": pd.Series(
                     [list(r["ys"])[::-1] if prom else list(r["ys"])
-                     for r, prom, _, _ in surviving], dtype=object),
-                "net_area": pd.Series([net for _, _, net, _ in surviving], dtype="float64"),
-                "n_holes": pd.Series([hn for _, _, _, hn in surviving], dtype="int32"),
-                "cx": pd.Series([float(r["cx"]) for r, _, _, _ in surviving], dtype="float64"),
-                "cy": pd.Series([float(r["cy"]) for r, _, _, _ in surviving], dtype="float64"),
+                     for r, prom in gshells], dtype=object),
+                "s_area": pd.Series(
+                    [abs(float(r["area"])) for r, _ in gshells], dtype="float64"
+                ),
+                "cx": pd.Series(
+                    [float(r["cx"]) for r, _ in gshells], dtype="float64"
+                ),
+                "cy": pd.Series(
+                    [float(r["cy"]) for r, _ in gshells], dtype="float64"
+                ),
             }
         )
         gbase = spark.createDataFrame(
             gpdf,
             "rid long, shell_xs array<double>, shell_ys array<double>, "
-            "net_area double, n_holes int, cx double, cy double",
+            "s_area double, cx double, cy double",
         )
-        need_holes = [int(r["rid"]) for r, _, _, hn in surviving if hn > 0]
-        if need_holes:
-            hole_coords = (
-                _id_filter(spark, winners, "cand_rid", need_holes)
-                .groupBy("cand_rid")
-                .agg(
-                    F.collect_list("h_xs").alias("hole_xs"),
-                    F.collect_list("h_ys").alias("hole_ys"),
-                )
-                .withColumnRenamed("cand_rid", "rid")
-            )
-            gpolys = gbase.join(F.broadcast(hole_coords), "rid", "left")
-        else:
-            gpolys = gbase.withColumn(
-                "hole_xs", F.lit(None).cast("array<array<double>>")
-            ).withColumn("hole_ys", F.lit(None).cast("array<array<double>>"))
-
-    # --- patch local-shell winners onto emitted polygons (rare) ------
-    if local_win_rids:
-        winners_l = _id_filter(spark, winners, "cand_rid", local_win_rids)
-        patch = (
-            winners_l.groupBy("cand_rid")
-            .agg(
-                F.collect_list("h_xs").alias("p_xs"),
-                F.collect_list("h_ys").alias("p_ys"),
-                F.sum("h_area").alias("p_sum"),
-                F.count("*").alias("p_n"),
-            )
-            .withColumnRenamed("cand_rid", "rid")
-        )
-        polys = (
-            polys.join(F.broadcast(patch), "rid", "left")
-            .withColumn(
-                "hole_xs",
-                F.when(F.col("p_xs").isNotNull(),
-                       F.concat("hole_xs", "p_xs")).otherwise(F.col("hole_xs")),
-            )
-            .withColumn(
-                "hole_ys",
-                F.when(F.col("p_ys").isNotNull(),
-                       F.concat("hole_ys", "p_ys")).otherwise(F.col("hole_ys")),
-            )
-            .withColumn(
-                "net_area", F.col("net_area") - F.coalesce("p_sum", F.lit(0.0))
-            )
-            .withColumn(
-                "n_holes",
-                (F.col("n_holes") + F.coalesce("p_n", F.lit(0))).cast("int"),
+        gpolys = (
+            gbase.join(F.broadcast(pagg), "rid", "left")
+            .select(
+                "rid", "shell_xs", "shell_ys",
+                F.col("p_xs").alias("hole_xs"),
+                F.col("p_ys").alias("hole_ys"),
+                F.coalesce("p_n", F.lit(0)).cast("int").alias("n_holes"),
+                (F.col("s_area") - F.coalesce("p_sum", F.lit(0.0))).alias(
+                    "net_area"
+                ),
+                "cx", "cy",
             )
         )
-    if bypass_polys is not None:
-        # r6: identity rows of plain cores/tiles — they never crossed
-        # the Python kernel and (callers' argument) can never be patch
-        # targets, so they join the emitted polygons AFTER the patch
-        # join, straight from the caller's long-lived ring storage (no
-        # second copy through the kernel-output checkpoint). Callers
-        # only pass this when that storage outlives the returned plan.
-        polys = polys.select(*[f.name for f in SPLIT_SCHEMA.fields]).unionByName(
-            bypass_polys
-        )
-    if drop_collapsed:
-        polys = polys.where(F.col("net_area") > 1e-6)
+        if drop_collapsed:
+            gpolys = gpolys.where(F.col("net_area") > 1e-6)
 
     final_cols = [
         F.lit(-2).cast("int").alias("tile_i"),  # stitched marker
         F.lit(-2).cast("int").alias("tile_j"),
         F.col("rid").alias("poly_id"),
         "shell_xs", "shell_ys",
-        F.coalesce("hole_xs", F.array().cast("array<array<double>>")).alias("hole_xs"),
-        F.coalesce("hole_ys", F.array().cast("array<array<double>>")).alias("hole_ys"),
+        F.coalesce(
+            "hole_xs", F.array().cast("array<array<double>>")
+        ).alias("hole_xs"),
+        F.coalesce(
+            "hole_ys", F.array().cast("array<array<double>>")
+        ).alias("hole_ys"),
         "n_holes",
         F.col("net_area").alias("area"),
         "cx", "cy",
@@ -1060,29 +402,8 @@ def _finish_assignments(
     result = polys.select(*final_cols)
     if gpolys is not None:
         result = result.unionByName(gpolys.select(*final_cols))
-    _fmark("tail_build")
+    _fmark("inplan_build")
     return result
-
-
-# --------------------------------------------------------------------------
-# Fused variant for the chain engine: phase-2 assembly runs as a
-# mapInPandas over the CACHED trace-kernel output with NO extra shuffle.
-# Every trace-local ring's vertices lie inside the claiming (sub-)cell
-# (a fully-claimed cycle's vertices are all half-edge tails there), so
-# its bbox corner identifies that core BIT-EXACTLY and orientation-
-# invariantly: ti = clip(floor((bx1-x0)/ts)) — the min-x vertex is in
-# the core, twins (same vertex set) always co-derive. GroupBy output
-# partitions hold whole claim groups, so an in-pandas groupby inside
-# each partition reproduces the per-core grouping without an exchange.
-# Member holes can NEVER need cross-core deferral here: a nondegenerate
-# ring's centroid is strictly inside its open bbox, the open bbox of a
-# core-fitting ring contains no core-boundary gridline, and clipped
-# edge cores have no interior core boundaries — so the per-core
-# candidate set (own core's shells + broadcast merged shells) is
-# complete. Merged (chain-closed) rings form the global residue:
-# promotion driver-side, CW rings probe the touching cores as broadcast
-# visitors (partial rows, min in the shared finish).
-# --------------------------------------------------------------------------
 
 
 def _touching_cores(cx, cy, x0, y0, ts, cols, rows, fmap):
@@ -1133,8 +454,7 @@ def _best_reduce(si, hj, areas, rids):
 def _core_local_assembly(
     area, rid, cx, cy, bx1, by1, bx2, by2, coords_x, coords_y, idx, ray_cast_rows
 ):
-    """Single-claim-core member assembly WITHOUT merged-shell knowledge
-    (shared by the phase-2 fused kernel and the in-trace assembly):
+    """Single-claim-core member assembly WITHOUT merged-shell knowledge:
     exact-bbox twin promotion (polygonizer.rs:152-185) and hole→parent
     local-candidate search (strictly-larger min-(area, rid) rule,
     polygonizer.rs:226) over the rings at positions ``idx``.
@@ -1217,8 +537,8 @@ def _pip_candidates(
 
 def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
     """Per-PARTITION assembly kernel (mapInPandas): regroups the cached
-    trace output by claim core (derived from bbox corners — header
-    comment), then runs the same member assembly as the split kernel:
+    trace output by claim core (derived from bbox corners — module
+    docstring step 1), then runs the member assembly (step 3):
     exact-bbox twin promotion, hole→parent candidates over (own core's
     shells ∪ broadcast merged shells), in-task attach for local
     winners, narrow K_FINAL rows for merged winners, K_PARTIAL probes
@@ -1277,11 +597,11 @@ def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
                 vis_by_key.setdefault(k, []).append(vi)
         g_by_core = g.get("by_core")
 
-        out: dict = {k.name: [] for k in SPLIT_SCHEMA.fields}
+        out: dict = {k.name: [] for k in FUSED_SCHEMA.fields}
 
         def emit(kind, **kw):
             out["kind"].append(kind)
-            for fld in SPLIT_SCHEMA.fields[1:]:
+            for fld in FUSED_SCHEMA.fields[1:]:
                 out[fld.name].append(kw.get(fld.name))
 
         for a, b in zip(bounds[:-1], bounds[1:]):
@@ -1393,564 +713,6 @@ def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
     return kernel
 
 
-_RESOLVE_SCHEMA = (
-    "kind int, h_rid long, loser_rid long, win_rid long, "
-    "win_area double, h_area double"
-)
-
-
-def _make_merged_resolve_kernel(gbc):
-    """mapInPandas kernel over NARROW hole rows (CHAIN_FUSED_SCHEMA
-    kinds 2/3): finds each hole's best merged-shell parent via the
-    broadcast per-core reach index (strictly-larger min-(area, rid)
-    rule) and emits a row ONLY when a merged shell adopts an
-    unparented hole (kind 2) or beats the recorded local candidate
-    (kind 3 — a steal)."""
-
-    def kernel(batches):
-        g = gbc.value
-        by_core = g.get("by_core") or {}
-        always = list(g.get("always", ()))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            kind = pdf["kind"].to_numpy()
-            h_rid = pdf["rid"].to_numpy()
-            core = pdf["core"].to_numpy()
-            h_area = pdf["area"].to_numpy()
-            hx = pdf["cx"].to_numpy()
-            hy = pdf["cy"].to_numpy()
-            cand_rid = pdf["cand_rid"].to_numpy(dtype=object)
-            cand_area = pdf["cand_area"].to_numpy(dtype=object)
-            n = len(pdf)
-            best_area = np.full(n, np.inf)
-            best_rid = np.full(n, np.iinfo(np.int64).max, dtype=np.int64)
-            order = np.argsort(core, kind="stable")
-            cs = core[order]
-            bounds = np.concatenate(
-                ([0], np.flatnonzero(cs[1:] != cs[:-1]) + 1, [n])
-            )
-            for a, b in zip(bounds[:-1], bounds[1:]):
-                rows_ = order[a:b]
-                glist = always + list(by_core.get(int(cs[a]), ()))
-                for gi in glist:
-                    ga = g["area"][gi]
-                    m = rows_[
-                        (hx[rows_] >= g["bx1"][gi]) & (hx[rows_] <= g["bx2"][gi])
-                        & (hy[rows_] >= g["by1"][gi]) & (hy[rows_] <= g["by2"][gi])
-                        & (ga > h_area[rows_] + 1e-6)
-                    ]
-                    if m.size == 0:
-                        continue
-                    ins = _pip_many_vs_ring(hx[m], hy[m], g["xs"][gi], g["ys"][gi])
-                    m = m[ins]
-                    take = (ga < best_area[m]) | (
-                        (ga == best_area[m]) & (g["rid"][gi] < best_rid[m])
-                    )
-                    rows2 = m[take]
-                    best_area[rows2] = ga
-                    best_rid[rows2] = g["rid"][gi]
-            out = {k: [] for k in (
-                "kind", "h_rid", "loser_rid", "win_rid", "win_area", "h_area"
-            )}
-            for p in np.flatnonzero(np.isfinite(best_area)).tolist():
-                if kind[p] == 3:
-                    ca = float(cand_area[p])
-                    cr = int(cand_rid[p])
-                    if not (
-                        best_area[p] < ca
-                        or (best_area[p] == ca and int(best_rid[p]) < cr)
-                    ):
-                        continue  # local attachment stands
-                    out["loser_rid"].append(cr)
-                else:
-                    out["loser_rid"].append(None)
-                out["kind"].append(int(kind[p]))
-                out["h_rid"].append(int(h_rid[p]))
-                out["win_rid"].append(int(best_rid[p]))
-                out["win_area"].append(float(best_area[p]))
-                out["h_area"].append(float(h_area[p]))
-            yield pd.DataFrame({k: pd.Series(v, dtype=object) for k, v in out.items()})
-
-    return kernel
-
-
-def _vis_pip_kernel(batches):
-    """PIP-confirm visitor-hole centroids against local-shell rows
-    (bbox+area prefiltered in the plan)."""
-    from .spatial_join import _ray_cast_rows
-
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        inside = _ray_cast_rows(
-            pdf["vcx"].to_numpy(), pdf["vcy"].to_numpy(),
-            [
-                (np.asarray(x, np.float64), np.asarray(y, np.float64))
-                for x, y in zip(pdf["xs"], pdf["ys"])
-            ],
-        )
-        yield pdf.loc[inside, ["h_rid", "cand_rid", "cand_area"]]
-
-
-def assemble_rings_fused_trace(
-    trace_out: DataFrame,
-    merged: DataFrame | None,
-    x0: float,
-    y0: float,
-    tile_size: float,
-    cols: int,
-    rows: int,
-    fmap: dict,
-    drop_collapsed: bool = False,
-    global_rows_gate: int = 100_000,
-    global_coords_gate: int = 10_000_000,
-    release=None,
-) -> DataFrame | None:
-    """Finish for the IN-TRACE assembled chain output
-    (CHAIN_FUSED_SCHEMA): polygons were assembled inside the trace
-    kernel, so everything after the trace moves NARROW rows — merged
-    residue meta/coords (driver+broadcast), per-hole revision records,
-    and rare patch rows — plus ONE executor-local checkpoint of the
-    final polygons (JVM-side; ring coordinates never re-cross Python).
-
-    Revision semantics vs the phase-2 fused kernel are identical:
-    a chain-closed (merged) shell adopts unparented holes and steals a
-    locally-attached hole exactly when it wins the strictly-larger
-    min-(area, rid) rule. Returns None when the merged residue trips
-    the collection gates — the caller falls back to the lossless
-    distributed assembly."""
-    import os as _os
-    import time as _time
-    _profon = bool(_os.environ.get("GP_ASM_PROF"))
-    _tm = {"t": _time.time()}
-
-    def _mark(name):
-        if _profon:
-            now = _time.time()
-            print(f"FTPROF| {name}: {now - _tm['t']:.3f}", flush=True)
-            _tm["t"] = now
-
-    spark = trace_out.sparkSession
-    polys = trace_out.where(F.col("kind") == 0)
-
-    grows: list = []
-    if merged is not None:
-        merged_rid = (
-            merged.where(F.abs("area") >= 1e-9)
-            .withColumn("rid", F.xxhash64("xs", "ys"))
-            .select(*_RING_COLS)
-        )
-        grows = [
-            r.asDict() for r in merged_rid.limit(global_rows_gate + 1).collect()
-        ]
-        if (
-            len(grows) > global_rows_gate
-            or sum(len(r["xs"]) for r in grows) > global_coords_gate
-        ):
-            return None
-    gshells, gvisitors = _promote_rows(grows)
-    ng = len(gshells)
-    _mark('merged_collect+promote')
-
-    final_cols = [
-        F.lit(-2).cast("int").alias("tile_i"),
-        F.lit(-2).cast("int").alias("tile_j"),
-        F.col("rid").alias("poly_id"),
-        F.col("xs").alias("shell_xs"), F.col("ys").alias("shell_ys"),
-        "hole_xs", "hole_ys", "n_holes",
-        F.col("net_area").alias("area"), "cx", "cy",
-    ]
-
-    if ng == 0 and not gvisitors:
-        # no merged residue: the tentative assembly IS the answer
-        out_polys = polys
-        if drop_collapsed:
-            out_polys = out_polys.where(F.col("net_area") > 1e-6)
-        final = out_polys.select(*final_cols).localCheckpoint(eager=True)
-        if release is not None:
-            release()
-        return final
-
-    # ---- driver meta + per-core reach index for merged shells -------
-    g_rid = np.fromiter((r["rid"] for r, _ in gshells), np.int64, ng)
-    g_area = np.fromiter((abs(r["area"]) for r, _ in gshells), np.float64, ng)
-    g_bx1 = np.fromiter((r["bx1"] for r, _ in gshells), np.float64, ng)
-    g_by1 = np.fromiter((r["by1"] for r, _ in gshells), np.float64, ng)
-    g_bx2 = np.fromiter((r["bx2"] for r, _ in gshells), np.float64, ng)
-    g_by2 = np.fromiter((r["by2"] for r, _ in gshells), np.float64, ng)
-    g_xs = [np.asarray(r["xs"], np.float64) for r, _ in gshells]
-    g_ys = [np.asarray(r["ys"], np.float64) for r, _ in gshells]
-    ts = float(tile_size)
-    by_core: dict = {}
-    g_always: list = []
-    if ng:
-        i_lo = np.clip(np.floor((g_bx1 - x0) / ts).astype(np.int64) - 1, 0, cols - 1)
-        i_hi = np.clip(np.floor((g_bx2 - x0) / ts).astype(np.int64) + 1, 0, cols - 1)
-        j_lo = np.clip(np.floor((g_by1 - y0) / ts).astype(np.int64) - 1, 0, rows - 1)
-        j_hi = np.clip(np.floor((g_by2 - y0) / ts).astype(np.int64) + 1, 0, rows - 1)
-        for gi in range(ng):
-            span = (int(i_hi[gi]) - int(i_lo[gi]) + 1) * (
-                int(j_hi[gi]) - int(j_lo[gi]) + 1
-            )
-            if span > 4096:
-                g_always.append(gi)
-                continue
-            for a in range(int(i_lo[gi]), int(i_hi[gi]) + 1):
-                for b in range(int(j_lo[gi]), int(j_hi[gi]) + 1):
-                    fv = fmap.get((a, b), 1)
-                    if fv == 1:
-                        by_core.setdefault(_core_key(a, b, 1, 0, 0, rows), []).append(gi)
-                    else:
-                        for p in range(fv):
-                            for q in range(fv):
-                                by_core.setdefault(
-                                    _core_key(a, b, fv, p, q, rows), []
-                                ).append(gi)
-    payload = {
-        "n": ng, "rid": g_rid, "area": g_area,
-        "bx1": g_bx1, "by1": g_by1, "bx2": g_bx2, "by2": g_by2,
-        "xs": g_xs, "ys": g_ys, "by_core": by_core, "always": g_always,
-    }
-    gbc = spark.sparkContext.broadcast(payload)
-    _mark('reach_index+broadcast')
-
-    # ---- narrow merged-parent resolution (adopts + steals) ----------
-    adopts: list = []  # (h_rid, win_rid, h_area)
-    steals: list = []  # (h_rid, loser_rid, win_rid, h_area)
-    if ng:
-        narrow = trace_out.where(F.col("kind").isin(2, 3)).select(
-            "kind", "rid", "core", "area", "cx", "cy", "cand_rid", "cand_area"
-        )
-        for r in narrow.mapInPandas(
-            _make_merged_resolve_kernel(gbc), _RESOLVE_SCHEMA
-        ).collect():
-            if int(r["kind"]) == 2:
-                adopts.append((int(r["h_rid"]), int(r["win_rid"]), float(r["h_area"])))
-            else:
-                steals.append(
-                    (int(r["h_rid"]), int(r["loser_rid"]), int(r["win_rid"]),
-                     float(r["h_area"]))
-                )
-
-    _mark('narrow_resolve')
-    # ---- visitors (merged CW holes): local shells ∪ merged shells ---
-    # driver part — merged-vs-merged candidates (min per visitor)
-    vis_best: dict = {}  # h_rid -> (area, rid)
-    vis_meta: dict = {}  # h_rid -> (h_area, cx, cy, xs, ys)
-    if gvisitors:
-        for r in gvisitors:
-            vis_meta[int(r["rid"])] = (
-                abs(r["area"]), float(r["cx"]), float(r["cy"]), r["xs"], r["ys"]
-            )
-        if ng:
-            nv = len(gvisitors)
-            v_cx = np.fromiter((r["cx"] for r in gvisitors), np.float64, nv)
-            v_cy = np.fromiter((r["cy"] for r in gvisitors), np.float64, nv)
-            v_ha = np.fromiter((abs(r["area"]) for r in gvisitors), np.float64, nv)
-            v_rid = np.fromiter((r["rid"] for r in gvisitors), np.int64, nv)
-            si, hj = bbox_join(g_bx1, g_by1, g_bx2, g_by2, v_cx, v_cy, v_cx, v_cy)
-            keep = g_area[si] > v_ha[hj] + 1e-6
-            si, hj = si[keep], hj[keep]
-            if si.size:
-                inside = np.zeros(si.size, dtype=bool)
-                for u in np.unique(si).tolist():
-                    rws = np.flatnonzero(si == u)
-                    inside[rws] = _pip_many_vs_ring(
-                        v_cx[hj[rws]], v_cy[hj[rws]], g_xs[u], g_ys[u]
-                    )
-                si, hj = si[inside], hj[inside]
-            for s, h in zip(si.tolist(), hj.tolist()):
-                key = int(v_rid[h])
-                cand = (float(g_area[s]), int(g_rid[s]))
-                if key not in vis_best or cand < vis_best[key]:
-                    vis_best[key] = cand
-        # plan part — local-shell candidates in the visitor's touching
-        # cores only (a core-contained shell lies inside its core box,
-        # so any local parent's core closure contains the centroid)
-        vrows = []
-        for r in gvisitors:
-            touch = _touching_cores(r["cx"], r["cy"], x0, y0, ts, cols, rows, fmap)
-            for a, b, fv, p, q in touch:
-                vrows.append(
-                    (int(r["rid"]), float(abs(r["area"])),
-                     float(r["cx"]), float(r["cy"]),
-                     int(_core_key(a, b, fv, p, q, rows)))
-                )
-        if vrows:
-            vdf = spark.createDataFrame(
-                vrows, "h_rid long, h_area double, vcx double, vcy double, core long"
-            )
-            cand = (
-                polys.join(F.broadcast(vdf), "core")
-                .where(
-                    (F.col("vcx") >= F.col("bx1")) & (F.col("vcx") <= F.col("bx2"))
-                    & (F.col("vcy") >= F.col("by1")) & (F.col("vcy") <= F.col("by2"))
-                    & (F.abs("area") > F.col("h_area") + F.lit(1e-6))
-                )
-                .select(
-                    "h_rid", "vcx", "vcy", "xs", "ys",
-                    F.col("rid").alias("cand_rid"),
-                    F.abs("area").alias("cand_area"),
-                )
-            )
-            for r in cand.mapInPandas(
-                _vis_pip_kernel, "h_rid long, cand_rid long, cand_area double"
-            ).collect():
-                key = int(r["h_rid"])
-                c = (float(r["cand_area"]), int(r["cand_rid"]))
-                if key not in vis_best or c < vis_best[key]:
-                    vis_best[key] = c
-
-    _mark('visitors')
-    # ---- per-merged-shell nets + hole-coord routing -----------------
-    g_rid_set = set(g_rid.tolist())
-    gagg: dict = {}  # g_rid -> [h_sum, h_n]
-
-    def _g_add(gr, ha):
-        e = gagg.setdefault(gr, [0.0, 0])
-        e[0] += ha
-        e[1] += 1
-
-    for h, w, ha in adopts:
-        _g_add(w, ha)
-    for h, loser, w, ha in steals:
-        _g_add(w, ha)
-    vis_local_patch: dict = {}  # local cand_rid -> [(xs, ys, h_area)]
-    vis_merged: list = []  # (h_rid, win_rid) — coords from vis_meta
-    for h_ridv, (warea, wrid) in vis_best.items():
-        ha, vcx_, vcy_, vxs, vys = vis_meta[h_ridv]
-        if wrid in g_rid_set:
-            _g_add(wrid, ha)
-            vis_merged.append((h_ridv, wrid))
-        else:
-            vis_local_patch.setdefault(wrid, []).append((vxs, vys, ha))
-
-    # ---- patches on local polygons ----------------------------------
-    out_polys = polys
-    if steals:
-        agg: dict = {}
-        for h, loser, w, ha in steals:
-            e = agg.setdefault(loser, [[], 0.0])
-            e[0].append(h)
-            e[1] += ha
-        sp = spark.createDataFrame(
-            [(k, v[0], v[1]) for k, v in agg.items()],
-            "rid long, stolen_rids array<long>, stolen_sum double",
-        )
-        # stage the filtered zip in a temp column FIRST — the per-field
-        # withColumns below must all read the same pre-patch arrays
-        zipped = F.arrays_zip("hole_rids", "hole_xs", "hole_ys")
-        kept = F.filter(
-            zipped,
-            lambda z: ~F.coalesce(
-                F.array_contains("stolen_rids", z["hole_rids"]), F.lit(False)
-            ),
-        )
-        out_polys = (
-            out_polys.join(F.broadcast(sp), "rid", "left")
-            .withColumn("_kept", kept)
-            .withColumn(
-                "hole_xs",
-                F.when(F.col("stolen_rids").isNotNull(),
-                       F.transform("_kept", lambda z: z["hole_xs"]))
-                .otherwise(F.col("hole_xs")),
-            )
-            .withColumn(
-                "hole_ys",
-                F.when(F.col("stolen_rids").isNotNull(),
-                       F.transform("_kept", lambda z: z["hole_ys"]))
-                .otherwise(F.col("hole_ys")),
-            )
-            .withColumn(
-                "hole_rids",
-                F.when(F.col("stolen_rids").isNotNull(),
-                       F.transform("_kept", lambda z: z["hole_rids"]))
-                .otherwise(F.col("hole_rids")),
-            )
-            .withColumn(
-                "n_holes",
-                F.when(F.col("stolen_rids").isNotNull(),
-                       F.size("_kept")).otherwise(F.col("n_holes")).cast("int"),
-            )
-            .withColumn(
-                "net_area",
-                F.col("net_area") + F.coalesce("stolen_sum", F.lit(0.0)),
-            )
-            .drop("stolen_rids", "stolen_sum", "_kept")
-        )
-    if vis_local_patch:
-        prows = []
-        for crid, lst in vis_local_patch.items():
-            prows.append(
-                (crid, [list(x) for x, _, _ in lst], [list(y) for _, y, _ in lst],
-                 float(sum(a for _, _, a in lst)), len(lst))
-            )
-        ppdf = pd.DataFrame(
-            {
-                "rid": pd.Series([r[0] for r in prows], dtype="int64"),
-                "p_xs": pd.Series([r[1] for r in prows], dtype=object),
-                "p_ys": pd.Series([r[2] for r in prows], dtype=object),
-                "p_sum": pd.Series([r[3] for r in prows], dtype="float64"),
-                "p_n": pd.Series([r[4] for r in prows], dtype="int32"),
-            }
-        )
-        patch = spark.createDataFrame(
-            ppdf,
-            "rid long, p_xs array<array<double>>, p_ys array<array<double>>, "
-            "p_sum double, p_n int",
-        )
-        out_polys = (
-            out_polys.join(F.broadcast(patch), "rid", "left")
-            .withColumn(
-                "hole_xs",
-                F.when(F.col("p_xs").isNotNull(),
-                       F.concat("hole_xs", "p_xs")).otherwise(F.col("hole_xs")),
-            )
-            .withColumn(
-                "hole_ys",
-                F.when(F.col("p_ys").isNotNull(),
-                       F.concat("hole_ys", "p_ys")).otherwise(F.col("hole_ys")),
-            )
-            .withColumn(
-                "net_area", F.col("net_area") - F.coalesce("p_sum", F.lit(0.0))
-            )
-            .withColumn(
-                "n_holes",
-                (F.col("n_holes") + F.coalesce("p_n", F.lit(0))).cast("int"),
-            )
-            .drop("p_xs", "p_ys", "p_sum", "p_n")
-        )
-
-    _mark('local_patches_plan')
-    # ---- merged polygons (driver gbase + routed hole coords) --------
-    surviving = []
-    for r, prom in gshells:
-        hsum, hn = gagg.get(int(r["rid"]), (0.0, 0))
-        net = abs(r["area"]) - hsum
-        if drop_collapsed and net <= 1e-6:  # polygonizer.rs:255-258
-            continue
-        surviving.append((r, prom, net, hn))
-    _mark('gb:surviving')
-    gpolys = None
-    if surviving:
-        gpdf = pd.DataFrame(
-            {
-                "rid": pd.Series([int(r["rid"]) for r, _, _, _ in surviving], dtype="int64"),
-                "xs": pd.Series(
-                    [list(r["xs"])[::-1] if prom else list(r["xs"])
-                     for r, prom, _, _ in surviving], dtype=object),
-                "ys": pd.Series(
-                    [list(r["ys"])[::-1] if prom else list(r["ys"])
-                     for r, prom, _, _ in surviving], dtype=object),
-                "net_area": pd.Series([net for _, _, net, _ in surviving], dtype="float64"),
-                "n_holes": pd.Series([hn for _, _, _, hn in surviving], dtype="int32"),
-                "cx": pd.Series([float(r["cx"]) for r, _, _, _ in surviving], dtype="float64"),
-                "cy": pd.Series([float(r["cy"]) for r, _, _, _ in surviving], dtype="float64"),
-            }
-        )
-        gbase = spark.createDataFrame(
-            gpdf,
-            "rid long, xs array<double>, ys array<double>, "
-            "net_area double, n_holes int, cx double, cy double",
-        )
-        _mark('gb:createDataFrame')
-        need_holes = {int(r["rid"]) for r, _, _, hn in surviving if hn > 0}
-        if need_holes:
-            # route hole coords: adopted (kind-2 cache rows), stolen
-            # (extracted from the loser polygon rows), visitor-merged
-            # (driver meta) — all narrow/rare
-            routes = [(h, w) for h, w, _ in adopts] + [
-                (h, w) for h, _, w, _ in steals
-            ] + vis_merged
-            routes = [(h, w) for h, w in routes if w in need_holes]
-            rdf = spark.createDataFrame(routes, "h_rid long, win_rid long")
-            _mark('gb:routes')
-            # broadcast SEMI-joins, never isin: the id sets can reach
-            # 10^5 and Column.isin builds one JVM literal per element
-            # (measured 99 s of pure Py4J on sparse-60k)
-            def _idf(ids, col):
-                return spark.createDataFrame(
-                    pd.DataFrame({col: pd.Series(sorted(ids), dtype="int64")}),
-                    f"{col} long",
-                )
-
-            srcs = []
-            adopt_ids = {int(h) for h, w, _ in adopts}
-            if adopt_ids:
-                srcs.append(
-                    trace_out.where(F.col("kind") == 2)
-                    .join(F.broadcast(_idf(adopt_ids, "rid")), "rid", "semi")
-                    .select(F.col("rid").alias("h_rid"), "xs", "ys")
-                )
-            if steals:
-                loser_ids = {int(loser) for _, loser, _, _ in steals}
-                stolen_ids = {int(h) for h, _, _, _ in steals}
-                zipped = F.arrays_zip("hole_rids", "hole_xs", "hole_ys")
-                srcs.append(
-                    polys.join(F.broadcast(_idf(loser_ids, "rid")), "rid", "semi")
-                    .select(F.explode(zipped).alias("z"))
-                    .select(
-                        F.col("z.hole_rids").alias("h_rid"),
-                        F.col("z.hole_xs").alias("xs"),
-                        F.col("z.hole_ys").alias("ys"),
-                    )
-                    .join(F.broadcast(_idf(stolen_ids, "h_rid")), "h_rid", "semi")
-                )
-            if vis_merged:
-                vm = pd.DataFrame(
-                    {
-                        "h_rid": pd.Series([h for h, _ in vis_merged], dtype="int64"),
-                        "xs": pd.Series(
-                            [list(vis_meta[h][3]) for h, _ in vis_merged], dtype=object),
-                        "ys": pd.Series(
-                            [list(vis_meta[h][4]) for h, _ in vis_merged], dtype=object),
-                    }
-                )
-                srcs.append(
-                    spark.createDataFrame(
-                        vm, "h_rid long, xs array<double>, ys array<double>"
-                    )
-                )
-            coords = srcs[0]
-            for s in srcs[1:]:
-                coords = coords.unionByName(s)
-            hole_coords = (
-                coords.join(F.broadcast(rdf), "h_rid")
-                .groupBy("win_rid")
-                .agg(
-                    F.collect_list("xs").alias("hole_xs"),
-                    F.collect_list("ys").alias("hole_ys"),
-                )
-                .withColumnRenamed("win_rid", "rid")
-            )
-            gpolys = gbase.join(F.broadcast(hole_coords), "rid", "left")
-            _mark('gb:coords_plan')
-        else:
-            gpolys = gbase.withColumn(
-                "hole_xs", F.lit(None).cast("array<array<double>>")
-            ).withColumn("hole_ys", F.lit(None).cast("array<array<double>>"))
-        gpolys = gpolys.withColumn(
-            "hole_xs",
-            F.coalesce("hole_xs", F.array().cast("array<array<double>>")),
-        ).withColumn(
-            "hole_ys",
-            F.coalesce("hole_ys", F.array().cast("array<array<double>>")),
-        )
-
-    _mark('gbase_plan')
-    if drop_collapsed:
-        out_polys = out_polys.where(F.col("net_area") > 1e-6)
-    result = out_polys.select(*final_cols)
-    if gpolys is not None:
-        result = result.unionByName(gpolys.select(*final_cols))
-    final = result.localCheckpoint(eager=True)
-    _mark('final_checkpoint')
-    if release is not None:
-        release()
-    return final
-
-
 def assemble_rings_fused(
     trace_out: DataFrame,
     merged: DataFrame | None,
@@ -1963,24 +725,22 @@ def assemble_rings_fused(
     drop_collapsed: bool = False,
     global_rows_gate: int = 100_000,
     global_coords_gate: int = 10_000_000,
-    release=None,
     merged_rows_bound: int | None = None,
     merged_coords_bound: int | None = None,
     cw_cores: set | None = None,
 ) -> DataFrame:
     """Chain-engine assembly with ZERO extra shuffles of ring data:
-    phase 2 maps over the cached trace output (header comment).
+    phase 2 maps over the cached trace output (module docstring).
 
     ``cw_cores``: pre-computed claim-core keys holding at least one CW
     ring (the chain engine folds this into its counts job); None =
     compute here with one narrow job. Only consulted when ``fmap`` is
     empty (bypass path).
 
-    ``trace_out``: the persisted CHAIN_SCHEMA kernel output (kind 0 =
-    local rings, already degenerate-filtered). ``merged``: chain-merge
-    output frame (RING_SCHEMA-ish), or None when no chains existed.
-    ``release``: caller callback freeing the trace cache — invoked once
-    the returned plan no longer references it.
+    ``trace_out``: the checkpointed CHAIN_SCHEMA kernel output (kind 0
+    = core rings, already degenerate-filtered); it must outlive the
+    returned plan, which keeps reading it. ``merged``: chain-merge
+    output frame (RING_SCHEMA), or None when no chains existed.
 
     ``merged_rows_bound`` / ``merged_coords_bound``: caller-known upper
     bounds on the merged residue (the chain engine gets both free from
@@ -1989,8 +749,6 @@ def assemble_rings_fused(
     through ONE parallel Arrow job (``toPandas``) instead of Spark's
     incremental ``limit().collect()`` — which executes 1→4→20-task
     waves and converts ring arrays row-by-row through py4j."""
-    from .stitch import assemble_rings_distributed
-
     import os as _os
     import time as _time
     _prof = bool(_os.environ.get("GP_ASM_PROF"))
@@ -2035,13 +793,10 @@ def assemble_rings_fused(
             or sum(len(r["xs"]) for r in grows) > global_coords_gate
         ):
             # pathological residue: hand the FULL ring set to the
-            # distributed assembly (lossless, slower). Eager local
-            # checkpoint, then release the caller's trace cache — the
-            # old persist leaked in the CacheManager for the session
-            # lifetime and never fired the release callback (ADVICE r5)
+            # distributed assembly (lossless, slower), behind one eager
+            # local checkpoint its several joins share (a persist would
+            # leak in the CacheManager for the session lifetime)
             rings = ringrows.unionByName(merged_rid).localCheckpoint(eager=True)
-            if release is not None:
-                release()
             return assemble_rings_distributed(rings, drop_collapsed)
     _mark("merged_collect+promote")
     gshells, gvisitors = _promote_rows(grows)
@@ -2182,15 +937,8 @@ def assemble_rings_fused(
     # NOT ride through this checkpoint: they flow straight from the
     # caller's trace storage into the final plan (zero extra copies of
     # plain ring bytes) — valid because the chain engine's trace output
-    # is a self-GC'd localCheckpoint that outlives the plan (r6). If a
-    # caller still passes an eager ``release`` callback, keep the old
-    # union-into-checkpoint shape so early release stays safe.
-    out = phase2_in.mapInPandas(kernel, SPLIT_SCHEMA)
-    finish_bypass = bypass
-    if bypass is not None and release is not None:
-        out = out.unionByName(bypass)
-        finish_bypass = None
-    out = out.localCheckpoint(eager=False)
+    # is a self-GC'd localCheckpoint that outlives the plan (r6).
+    out = phase2_in.mapInPandas(kernel, FUSED_SCHEMA).localCheckpoint(eager=False)
     _mark("phase2_plan")  # lazy: kernel wall lands in the finish's first job
 
     # hole coords: local winners carry theirs on the K_FINAL rows;
@@ -2199,8 +947,267 @@ def assemble_rings_fused(
     res = _finish_assignments(
         spark, out, gshells, drop_collapsed,
         merged_coord_rows=grows,
-        extra_partials=extra_partials, release=release,
-        bypass_polys=finish_bypass,
+        extra_partials=extra_partials,
+        bypass_polys=bypass,
     )
     _mark("finish")
     return res
+
+
+def _assemble_rings_local(rings: DataFrame, drop_collapsed: bool) -> DataFrame:
+    """Single-task assembly: the numpy assembly kernel over the whole
+    (small) ring set — identical semantics to the distributed joins, a
+    fraction of the latency. coalesce(1) + mapInPandas, NOT a
+    groupBy(lit) grouped-map: coalesce narrowly reads the cached ring
+    partitions into one task with no single-partition shuffle
+    exchange."""
+    from ..kernels.rings import assemble_polygons_pdf
+
+    def kernel(batches):
+        ring_xs: list = []
+        ring_ys: list = []
+        for pdf in batches:
+            ring_xs.extend(np.asarray(v, dtype=np.float64) for v in pdf["xs"])
+            ring_ys.extend(np.asarray(v, dtype=np.float64) for v in pdf["ys"])
+        yield assemble_polygons_pdf(ring_xs, ring_ys, drop_collapsed, -2, -2)
+
+    return rings.select("xs", "ys").coalesce(1).mapInPandas(kernel, POLYGON_SCHEMA)
+
+
+def assemble_rings_distributed(rings: DataFrame, drop_collapsed: bool = False) -> DataFrame:
+    """Distributed assembly over a global ring set (the DataFrame
+    translation of kernels.rings.assemble_polygons; same semantics,
+    reference polygonizer.rs:124-261).
+
+    Shuffle discipline: every classification / promotion / candidate /
+    winner stage runs over NARROW metadata rows (rid, area, bbox,
+    centroid — 72 bytes). Ring coordinate arrays cross the wire in
+    exactly three bounded places: once per candidate-bearing shell
+    into the PIP kernel, once per ASSIGNED hole into the hole
+    aggregation, and once per output polygon in the final attach —
+    never per candidate row, never through the promotion joins."""
+    coords = rings.select("rid", "xs", "ys")
+    meta = rings.select("rid", "area", "bx1", "by1", "bx2", "by2", "cx", "cy")
+    shells = meta.where("area > 0").select(
+        "rid", F.col("area").alias("s_area"), "bx1", "by1", "bx2", "by2", "cx", "cy"
+    )
+    holes = meta.where("area < 0").select(
+        F.col("rid").alias("h_rid"),
+        (-F.col("area")).alias("h_area"),
+        F.col("bx1").alias("hbx1"),
+        F.col("by1").alias("hby1"),
+        F.col("bx2").alias("hbx2"),
+        F.col("by2").alias("hby2"),
+        F.col("cx").alias("hcx"),
+        F.col("cy").alias("hcy"),
+    )
+
+    # --- promotion: CW ring with no CCW twin (exact bbox + ~area) ----
+    twins = (
+        holes.join(
+            shells.select("s_area", "bx1", "by1", "bx2", "by2"),
+            (F.col("hbx1") == F.col("bx1"))
+            & (F.col("hby1") == F.col("by1"))
+            & (F.col("hbx2") == F.col("bx2"))
+            & (F.col("hby2") == F.col("by2"))
+            & (F.abs(F.col("h_area") - F.col("s_area")) < 1e-6),
+            "left_semi",
+        )
+    ).select("h_rid")
+    promoted = holes.join(twins, "h_rid", "left_anti").select(
+        F.col("h_rid").alias("rid"),
+        F.col("h_area").alias("s_area"),
+        F.col("hbx1").alias("bx1"),
+        F.col("hby1").alias("by1"),
+        F.col("hbx2").alias("bx2"),
+        F.col("hby2").alias("by2"),
+        F.col("hcx").alias("cx"),
+        F.col("hcy").alias("cy"),
+        F.lit(True).alias("promoted"),
+    )
+    all_shells = shells.withColumn("promoted", F.lit(False)).unionByName(promoted)
+
+    # --- hole assignment: bbox cell-join + PIP(hole centroid) --------
+    # cell grid sized from the shell bbox distribution (driver-side agg
+    # of 4 scalars)
+    stats = all_shells.agg(
+        F.min("bx1").alias("gx0"),
+        F.min("by1").alias("gy0"),
+        F.max("bx2").alias("gx1"),
+        F.max("by2").alias("gy1"),
+        F.expr("percentile_approx(bx2 - bx1, 0.5)").alias("med"),
+        F.count("*").alias("n"),
+        F.max("s_area").alias("max_area"),
+    ).collect()[0]
+    if stats["n"] == 0:
+        return rings.sparkSession.createDataFrame([], POLYGON_SCHEMA)
+    gx0, gy0 = float(stats["gx0"]), float(stats["gy0"])
+    span = max(float(stats["gx1"]) - gx0, float(stats["gy1"]) - gy0, 1e-300)
+    cell = max(span / max(int(np.sqrt(stats["n"])), 1), float(stats["med"] or 0.0), span * 1e-9)
+    n_cells = 1 << 20
+
+    # NARROW candidate generation: only (rid, bbox, area) replicate per
+    # covered cell — ring coordinate arrays never enter the cell join.
+    # (A shell spanning the full extent — e.g. a grid hull — covers
+    # every cell; replicating its 10⁵-vertex array per cell is an
+    # O(cells × ring) shuffle blowup, measured as the dominant cost.)
+    sc = all_shells.select("rid", "s_area", "bx1", "by1", "bx2", "by2")
+    ci1 = cell_range_cols(F.col("bx1"), gx0, cell, n_cells)
+    ci2 = cell_range_cols(F.col("bx2"), gx0, cell, n_cells)
+    cj1 = cell_range_cols(F.col("by1"), gy0, cell, n_cells)
+    cj2 = cell_range_cols(F.col("by2"), gy0, cell, n_cells)
+    shell_cells = sc.withColumn("cell_i", F.explode(F.sequence(ci1, ci2))).withColumn(
+        "cell_j", F.explode(F.sequence(cj1, cj2))
+    )
+    # holes that cannot have a strictly-larger parent (above all the
+    # promoted coverage hull — whose centroid would otherwise generate
+    # a candidate against every cell-mate) never enter the cell join
+    # (polygonizer.rs:226; same prefilter as the kernel assembly)
+    hole_pts = holes.where(
+        F.col("h_area") < F.lit(float(stats["max_area"])) - 1e-6
+    ).select("h_rid", "hcx", "hcy", "h_area").withColumn(
+        "cell_i", cell_range_cols(F.col("hcx"), gx0, cell, n_cells)
+    ).withColumn("cell_j", cell_range_cols(F.col("hcy"), gy0, cell, n_cells))
+    # a hole keys to exactly ONE cell, so each (hole, shell) candidate
+    # pair arises once — no dedup needed
+    cand = hole_pts.join(shell_cells, ["cell_i", "cell_j"]).where(
+        (F.col("hcx") >= F.col("bx1"))
+        & (F.col("hcx") <= F.col("bx2"))
+        & (F.col("hcy") >= F.col("by1"))
+        & (F.col("hcy") <= F.col("by2"))
+        & (F.col("s_area") > F.col("h_area") + 1e-6)  # polygonizer.rs:226
+    )
+    # group candidates per shell, then join the shell's ring arrays by
+    # rid — coordinates cross the wire exactly once per shell; the PIP
+    # kernel is many-probes-vs-one-ring (y-bucketed for huge rings).
+    # Promoted shells join the ORIGINAL (reversed) ring — orientation
+    # does not change even-odd containment.
+    # persisted: consumed by the broadcast key prune AND the coords
+    # join — an unpersisted broadcast build would re-execute the whole
+    # candidate pipeline a second time
+    per_shell = cand.groupBy("rid", "s_area").agg(
+        F.collect_list(F.struct("h_rid", "hcx", "hcy", "h_area")).alias("probes")
+    ).persist()
+    # broadcast-semi prune coords BEFORE its shuffle: only the
+    # candidate-bearing shells' arrays move (an unpruned join by rid
+    # would shuffle EVERY ring's arrays — measured as the dominant
+    # assembly bytes)
+    cand_shells = coords.join(
+        F.broadcast(per_shell.select("rid")), "rid", "left_semi"
+    )
+    with_coords = per_shell.join(cand_shells, "rid")
+
+    hit_schema = T.StructType(
+        [
+            T.StructField("h_rid", T.LongType()),
+            T.StructField("rid", T.LongType()),
+            T.StructField("s_area", T.DoubleType()),
+            T.StructField("h_area_back", T.DoubleType()),
+        ]
+    )
+
+    def pip_hits(batches):
+        """Two regimes per Arrow batch: HEAVY shells (probes × ring
+        length > 4M) go through the y-bucketed per-ring index; the
+        long tail of small shells (typically 1-2 probes each) flattens
+        into ONE length-grouped dense ray cast for the whole batch —
+        per-row numpy setup on 10⁵ tiny groups was the dominant
+        assembly CPU."""
+        from ..kernels.rings import _pip_many_vs_ring
+        from .spatial_join import _ray_cast_rows
+
+        for pdf in batches:
+            hr: list = []
+            rr: list = []
+            sa: list = []
+            ha_out: list = []
+            flat_px: list = []
+            flat_py: list = []
+            flat_rings: list = []
+            flat_meta: list = []
+            for row in pdf.itertuples(index=False):
+                probes = row.probes
+                if len(probes) == 0:
+                    continue
+                ring_x = np.asarray(row.xs, np.float64)
+                ring_y = np.asarray(row.ys, np.float64)
+                if len(probes) * ring_x.size > 4_000_000:
+                    pxx = np.fromiter((p["hcx"] for p in probes), np.float64, len(probes))
+                    pyy = np.fromiter((p["hcy"] for p in probes), np.float64, len(probes))
+                    inside = _pip_many_vs_ring(pxx, pyy, ring_x, ring_y)
+                    for i in np.flatnonzero(inside):
+                        p = probes[i]
+                        hr.append(p["h_rid"])
+                        rr.append(row.rid)
+                        sa.append(row.s_area)
+                        ha_out.append(p["h_area"])
+                else:
+                    for p in probes:
+                        flat_px.append(p["hcx"])
+                        flat_py.append(p["hcy"])
+                        flat_rings.append((ring_x, ring_y))
+                        flat_meta.append((p["h_rid"], row.rid, row.s_area, p["h_area"]))
+            if flat_rings:
+                inside = _ray_cast_rows(
+                    np.asarray(flat_px, np.float64), np.asarray(flat_py, np.float64), flat_rings
+                )
+                for i in np.flatnonzero(inside):
+                    m = flat_meta[i]
+                    hr.append(m[0])
+                    rr.append(m[1])
+                    sa.append(m[2])
+                    ha_out.append(m[3])
+            if hr:
+                yield pd.DataFrame(
+                    {
+                        "h_rid": np.asarray(hr, np.int64),
+                        "rid": np.asarray(rr, np.int64),
+                        "s_area": np.asarray(sa, np.float64),
+                        "h_area_back": np.asarray(ha_out, np.float64),
+                    }
+                )
+
+    hit = with_coords.mapInPandas(pip_hits, hit_schema)
+    winners = (
+        hit.groupBy("h_rid")
+        .agg(F.min_by(F.struct("rid"), "s_area").alias("best"), F.min("h_area_back").alias("h_area"))
+        .select("h_rid", F.col("best.rid").alias("rid"), "h_area")
+        .persist()  # read by its own broadcast key prune + the join
+    )
+    hole_coords = coords.select(
+        F.col("rid").alias("h_rid"), F.col("xs").alias("h_xs"), F.col("ys").alias("h_ys")
+    ).join(F.broadcast(winners.select("h_rid")), "h_rid", "left_semi")
+    # hole ring arrays: once per ASSIGNED hole, by id
+    assigned = winners.join(hole_coords, "h_rid")
+
+    hole_agg = assigned.groupBy("rid").agg(
+        F.collect_list("h_xs").alias("hole_xs"),
+        F.collect_list("h_ys").alias("hole_ys"),
+        F.sum("h_area").alias("holes_area"),
+        F.count("*").alias("n_holes"),
+    )
+
+    out = (
+        all_shells.join(hole_agg, "rid", "left")
+        .withColumn("holes_area", F.coalesce("holes_area", F.lit(0.0)))
+        .withColumn("n_holes", F.coalesce("n_holes", F.lit(0)).cast("int"))
+        .withColumn("net_area", F.col("s_area") - F.col("holes_area"))
+    )
+    if drop_collapsed:
+        out = out.where(F.col("net_area") > 1e-6)  # polygonizer.rs:255-258
+    # single arrays attach per output polygon; promoted shells re-wind
+    # CCW here (polygonizer.rs:164-169)
+    out = out.join(coords, "rid")
+    return out.select(
+        F.lit(-2).cast("int").alias("tile_i"),  # stitched marker
+        F.lit(-2).cast("int").alias("tile_j"),
+        F.col("rid").alias("poly_id"),
+        F.when(F.col("promoted"), F.reverse("xs")).otherwise(F.col("xs")).alias("shell_xs"),
+        F.when(F.col("promoted"), F.reverse("ys")).otherwise(F.col("ys")).alias("shell_ys"),
+        F.coalesce("hole_xs", F.array().cast("array<array<double>>")).alias("hole_xs"),
+        F.coalesce("hole_ys", F.array().cast("array<array<double>>")).alias("hole_ys"),
+        "n_holes",
+        F.col("net_area").alias("area"),
+        "cx",
+        "cy",
+    )

@@ -1,12 +1,7 @@
-"""Boundary-chain stitched polygonize — the single-trace alternative to
-the level-escalation chain in ``stitch.py`` (SURVEY.md §7 step 4's
-original sketch, r3 VERDICT item 4).
+"""Boundary-chain stitched polygonize: exact distributed polygonize with
+no maximum polygon size (the engine behind ``stitch.stitched_polygonize``).
 
-Why: the level design re-NODES escalated windows at every level, and on
-lattice-like linework (the reference's canonical grid benches,
-reference benches/polygonize_bench.rs:7-38) every tile boundary
-escalates, so each level re-pays noding+tracing over most of the data.
-Here the segment data is noded and traced EXACTLY ONCE (one grouped-map
+The segment data is noded and traced EXACTLY ONCE (one grouped-map
 pass); everything that crosses a tile boundary leaves the kernel as an
 open boundary CHAIN — perimeter-scale data — and only chains flow
 through the merge shuffles.
@@ -26,8 +21,10 @@ Protocol (each step local and deterministic):
    one full step out of the core stays inside the window; the operator
    enforces ``buffer_eff = max(buffer, L_max + 4·snap_grid)`` (one
    narrow aggregate). Within the window, sub-segmentation equals the
-   global noding (any splitter of an in-window span touches the
-   window — the same complete-fan argument as stitch.py step 1).
+   global noding: any segment incident to a node inside the window
+   touches the window, so it is present, and every splitter of an
+   in-window span touches the window too — identical
+   sub-segmentation in every tile that contains the span.
 3. **Tracing.** The next-CCW successor permutation runs over the FULL
    multigraph with NO dangle pruning (pruning is window-dependent, so
    two tiles could disagree near a window edge; instead dangles ride
@@ -54,18 +51,18 @@ Protocol (each step local and deterministic):
    coordinates, cancels spurs, and emits the closed ring. A dangling
    link (tail with no matching head) is topologically impossible under
    (1)+(2), so the kernel RAISES on it rather than dropping data.
-6. **Assembly.** The ring set (local + merged) feeds the same
-   classification / twin-promotion / hole-assignment pipeline as
-   stitch.py (local kernel or distributed joins) — semantics
-   identical to the reference polygonizer (polygonizer.rs:124-261).
+6. **Assembly.** The ring set (local + merged) feeds the
+   classification / twin-promotion / hole-assignment pipeline of
+   ``assembly.py`` (one-task kernel, per-core fused assembly, or
+   distributed joins) — semantics identical to the reference
+   polygonizer (polygonizer.rs:124-261).
 
 Scale shape: one wide shuffle of segment data (the tile repartition),
-then shuffles over chain rows only. For a W×W-tile lattice the level
-design's escalation re-traces O(W²) cells log W times; here the chain
-stages move O(W·tiles_crossed) rows. Skew: the one grouped-map pass
-uses the same explicit repartition as tiled_polygonize; a pathological
-single tile can still be hot (no sub-split here yet — documented
-limitation vs stitch.py's 3c).
+then shuffles over chain rows only: for a W×W-tile lattice the chain
+stages move O(W·tiles_crossed) rows. Skew: tiles whose window draws
+more than ``max_segments_per_tile`` segments sub-split into f×f
+claiming cells (a finer claiming partition — chains crossing sub-cell
+boundaries merge exactly like tile-crossing ones).
 """
 
 from __future__ import annotations
@@ -85,8 +82,27 @@ from ..kernels.graph import build_graph, sort_edges, successor_permutation
 from ..kernels.noding import node_segments
 from ..kernels.polygonize import DEFAULT_SNAP_GRID
 from ..kernels.rings import batch_ring_stats
+from .assembly import (
+    _assemble_rings_local,
+    assemble_rings_distributed,
+    assemble_rings_fused,
+    core_key_col,
+)
 from .polygonize_op import _bbox_of_segments, segmentize_df
-from .stitch import RING_SCHEMA, _tile_range_cols
+
+RING_SCHEMA = T.StructType(
+    [
+        T.StructField("xs", T.ArrayType(T.DoubleType())),
+        T.StructField("ys", T.ArrayType(T.DoubleType())),
+        T.StructField("area", T.DoubleType()),  # signed
+        T.StructField("bx1", T.DoubleType()),
+        T.StructField("by1", T.DoubleType()),
+        T.StructField("bx2", T.DoubleType()),
+        T.StructField("by2", T.DoubleType()),
+        T.StructField("cx", T.DoubleType()),
+        T.StructField("cy", T.DoubleType()),
+    ]
+)
 
 CHAIN_SCHEMA = T.StructType(
     [
@@ -105,38 +121,40 @@ CHAIN_SCHEMA = T.StructType(
     ]
 )
 
-# r5 in-trace assembly: the trace kernel emits assembled POLYGONS for
-# its core-contained rings (kind 0) plus chains (kind 1), unparented
-# CW holes awaiting a possible merged-shell parent (kind 2), and
-# narrow attached-hole records (kind 3) so the finish can revise the
-# rare holes a chain-closed (merged) shell steals. ``area`` is the
-# SIGNED shell area on kind 0 (promotion = area<0, reversible), the
-# UNSIGNED hole area on kinds 2/3.
-CHAIN_FUSED_SCHEMA = T.StructType(
-    [
-        T.StructField("kind", T.IntegerType()),
-        T.StructField("rid", T.LongType()),
-        T.StructField("core", T.LongType()),
-        T.StructField("xs", T.ArrayType(T.DoubleType())),
-        T.StructField("ys", T.ArrayType(T.DoubleType())),
-        T.StructField("hole_xs", T.ArrayType(T.ArrayType(T.DoubleType()))),
-        T.StructField("hole_ys", T.ArrayType(T.ArrayType(T.DoubleType()))),
-        T.StructField("hole_rids", T.ArrayType(T.LongType())),
-        T.StructField("n_holes", T.IntegerType()),
-        T.StructField("net_area", T.DoubleType()),
-        T.StructField("area", T.DoubleType()),
-        T.StructField("bx1", T.DoubleType()),
-        T.StructField("by1", T.DoubleType()),
-        T.StructField("bx2", T.DoubleType()),
-        T.StructField("by2", T.DoubleType()),
-        T.StructField("cx", T.DoubleType()),
-        T.StructField("cy", T.DoubleType()),
-        T.StructField("head_key", T.LongType()),
-        T.StructField("tail_key", T.LongType()),
-        T.StructField("cand_rid", T.LongType()),
-        T.StructField("cand_area", T.DoubleType()),
-    ]
-)
+
+
+def _tile_range_cols(x0, y0, ts_k, buffer, cols, rows, bx1, by1, bx2, by2):
+    """Covered-tile index ranges (boundary-inclusive) for a bbox on
+    the (x0, y0)-anchored grid of size ts_k with buffered windows.
+
+    BOTH bounds clamp into [0, n-1]: for a bbox wholly outside the
+    grid an unclamped lo > hi makes Spark's ``sequence(lo, hi)``
+    DESCEND instead of being empty — materializing phantom out-of-grid
+    tiles (the cross-engine equivalence test's overhanging fixtures
+    catch this). Two-sided clamping collapses
+    out-of-grid geometry into the edge tile — exactly the convention
+    the kernels' vertex-claim clips already use — and keeps the
+    pairwise-meet property: any two intersecting segments still share
+    the (clamped) tile of their intersection point, since clamping is
+    monotone."""
+    ts_l = F.lit(ts_k)
+    i_lo = F.least(
+        F.greatest(F.ceil((bx1 - F.lit(x0 + buffer)) / ts_l - 1), F.lit(0)),
+        F.lit(cols - 1),
+    ).cast("int")
+    i_hi = F.greatest(
+        F.least(F.floor((bx2 - F.lit(x0 - buffer)) / ts_l), F.lit(cols - 1)),
+        F.lit(0),
+    ).cast("int")
+    j_lo = F.least(
+        F.greatest(F.ceil((by1 - F.lit(y0 + buffer)) / ts_l - 1), F.lit(0)),
+        F.lit(rows - 1),
+    ).cast("int")
+    j_hi = F.greatest(
+        F.least(F.floor((by2 - F.lit(y0 - buffer)) / ts_l), F.lit(rows - 1)),
+        F.lit(0),
+    ).cast("int")
+    return i_lo, i_hi, j_lo, j_hi
 
 
 _PRESPLIT_TMPDIR: str | None = None
@@ -503,142 +521,6 @@ def _make_chain_kernel(x0, y0, ts, buffer_eff, snap_grid, cols, rows, fmap):
     return kernel
 
 
-def _ring_rids(coords_x, coords_y, area, bx1, by1, bx2, by2) -> np.ndarray:
-    """Deterministic 64-bit ring ids folding EVERY vertex (r6, ADVICE
-    r5: the sampled-vertex version could silently merge two distinct
-    canonical rings agreeing on length, endpoints and stats): each
-    vertex is mixed with its position and XOR-reduced per ring (one
-    vectorized pass over the flattened layout), then chained with the
-    canonical stats. Rings are rotation-canonicalized before their
-    stats, so every field is tracer-invariant; the SIGNED area
-    separates exact-bbox twins. Same 64-bit collision posture as the
-    chain link keys (the merge collision guard documents it)."""
-    n = len(coords_x)
-    if n == 0:
-        return np.empty(0, np.int64)
-    lens = np.fromiter((a.size for a in coords_x), np.int64, n)
-    off = np.concatenate(([0], np.cumsum(lens)))
-    fx = np.concatenate(coords_x)
-    fy = np.concatenate(coords_y)
-    pos = (
-        np.arange(int(off[-1]), dtype=np.uint64)
-        - np.repeat(off[:-1].astype(np.uint64), lens)
-    )
-    with np.errstate(over="ignore"):
-        ps = _mix64(pos ^ np.uint64(0x9E3779B97F4A7C15))
-        ev = _mix64(fx.view(np.uint64) ^ ps) ^ _mix64(fy.view(np.uint64) ^ _mix64(ps))
-        vhash = np.bitwise_xor.reduceat(ev, off[:-1])
-    parts = [
-        lens.astype(np.float64),
-        np.asarray(area, np.float64), np.asarray(bx1, np.float64),
-        np.asarray(by1, np.float64), np.asarray(bx2, np.float64),
-        np.asarray(by2, np.float64),
-    ]
-    with np.errstate(over="ignore"):
-        h = _mix64(np.full(n, 0x243F6A8885A308D3, dtype=np.uint64) ^ vhash)
-        for a in parts:
-            h = _mix64(h ^ a.view(np.uint64))
-    return h.view(np.int64)
-
-
-def _make_chain_fused_kernel(x0, y0, ts, buffer_eff, snap_grid, cols, rows, fmap):
-    """Trace + IN-TASK tentative assembly (r5): wraps the plain chain
-    kernel and assembles this claim core's polygons immediately, so
-    ring coordinates never take a second Python round-trip through a
-    phase-2 kernel. Soundness is the fused-assembly completeness
-    argument (assembly.py header): a fully-claimed ring lies inside
-    its core, so a member hole's local candidates all live in this
-    task; only chain-closed (merged) shells can revise an attachment,
-    deferred to narrow rows (kinds 2/3) resolved in
-    ``assembly.assemble_rings_fused_trace``."""
-    from .assembly import _core_key, _core_local_assembly
-
-    inner = _make_chain_kernel(x0, y0, ts, buffer_eff, snap_grid, cols, rows, fmap)
-
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        from .spatial_join import _ray_cast_rows
-
-        tile_i, tile_j, f, sub_i, sub_j = (int(v) for v in key)
-        core = int(_core_key(tile_i, tile_j, f, sub_i, sub_j, rows))
-        base = inner(key, pdf)
-        out: dict = {fld.name: [] for fld in CHAIN_FUSED_SCHEMA.fields}
-
-        def emit(kind, **kw):
-            out["kind"].append(kind)
-            for fld in CHAIN_FUSED_SCHEMA.fields[1:]:
-                out[fld.name].append(kw.get(fld.name))
-
-        kinds = base["kind"].to_numpy() if len(base) else np.empty(0, np.int64)
-        for i in np.flatnonzero(kinds == 1).tolist():
-            emit(
-                1, core=core, xs=base["xs"].iat[i], ys=base["ys"].iat[i],
-                head_key=int(base["head_key"].iat[i]),
-                tail_key=int(base["tail_key"].iat[i]),
-            )
-
-        ring_pos = np.flatnonzero(kinds == 0)
-        if ring_pos.size:
-            area = base["area"].to_numpy()[ring_pos]
-            bx1 = base["bx1"].to_numpy()[ring_pos]
-            by1 = base["by1"].to_numpy()[ring_pos]
-            bx2 = base["bx2"].to_numpy()[ring_pos]
-            by2 = base["by2"].to_numpy()[ring_pos]
-            cxa = base["cx"].to_numpy()[ring_pos]
-            cya = base["cy"].to_numpy()[ring_pos]
-            coords_x = [
-                np.asarray(base["xs"].iat[i], np.float64) for i in ring_pos.tolist()
-            ]
-            coords_y = [
-                np.asarray(base["ys"].iat[i], np.float64) for i in ring_pos.tolist()
-            ]
-            rid = _ring_rids(coords_x, coords_y, area, bx1, by1, bx2, by2)
-            (
-                sh, s_area, ho, h_area, hx, hy, best_area, best_rid, best_local
-            ) = _core_local_assembly(
-                area, rid, cxa, cya, bx1, by1, bx2, by2,
-                coords_x, coords_y, np.arange(ring_pos.size), _ray_cast_rows,
-            )
-            attach: dict = {}
-            for p in range(ho.size):
-                if best_local[p] >= 0:
-                    attach.setdefault(int(best_local[p]), []).append(p)
-                    emit(
-                        3, rid=int(rid[ho[p]]), core=core,
-                        area=float(h_area[p]), cx=float(hx[p]), cy=float(hy[p]),
-                        cand_rid=int(best_rid[p]), cand_area=float(best_area[p]),
-                    )
-                else:
-                    # no local parent — a merged shell may adopt it
-                    emit(
-                        2, rid=int(rid[ho[p]]), core=core,
-                        xs=coords_x[ho[p]], ys=coords_y[ho[p]],
-                        area=float(h_area[p]), cx=float(hx[p]), cy=float(hy[p]),
-                    )
-            for pos in range(sh.size):
-                p = int(sh[pos])
-                xs_p, ys_p = coords_x[p], coords_y[p]
-                if area[p] < 0:  # promoted CW: re-wind CCW (reversible)
-                    xs_p, ys_p = xs_p[::-1], ys_p[::-1]
-                holes = attach.get(pos, ())
-                emit(
-                    0, rid=int(rid[p]), core=core, xs=xs_p, ys=ys_p,
-                    hole_xs=[coords_x[ho[q]] for q in holes],
-                    hole_ys=[coords_y[ho[q]] for q in holes],
-                    hole_rids=[int(rid[ho[q]]) for q in holes],
-                    n_holes=len(holes),
-                    net_area=float(abs(area[p]) - h_area[list(holes)].sum()),
-                    area=float(area[p]),
-                    bx1=float(bx1[p]), by1=float(by1[p]),
-                    bx2=float(bx2[p]), by2=float(by2[p]),
-                    cx=float(cxa[p]), cy=float(cya[p]),
-                )
-        return pd.DataFrame(
-            {k: pd.Series(v, dtype=object) for k, v in out.items()}
-        )
-
-    return kernel
-
-
 def _merge_walk(rows) -> tuple[list, list]:
     """Walk chain links and close every cycle in one dict pass.
     ``rows``: iterable of (head_key, tail_key, xs, ys). Returns closed
@@ -696,14 +578,13 @@ def _merge_walk(rows) -> tuple[list, list]:
     return out_xs, out_ys
 
 
-def _rings_pdf(ring_xs: list, ring_ys: list, level: int) -> pd.DataFrame:
+def _rings_pdf(ring_xs: list, ring_ys: list) -> pd.DataFrame:
     """Closed rings → RING_SCHEMA rows (canonicalized, degenerates
     dropped)."""
     if not ring_xs:
         return pd.DataFrame(
             {f.name: pd.Series([], dtype=object) if f.name in ("xs", "ys")
-             else np.empty(0, np.float64 if f.name not in ("level", "beacon")
-                           else (np.int32 if f.name == "level" else bool))
+             else np.empty(0, np.float64)
              for f in RING_SCHEMA.fields}
         )
     xr, yr, off, L, bx1, by1, bx2, by2, area, cxs, cys = batch_ring_stats(
@@ -727,8 +608,6 @@ def _rings_pdf(ring_xs: list, ring_ys: list, level: int) -> pd.DataFrame:
             "by2": by2[keep],
             "cx": cxs[keep],
             "cy": cys[keep],
-            "level": np.full(keep.size, level, np.int32),
-            "beacon": np.zeros(keep.size, bool),
         }
     )
 
@@ -738,7 +617,7 @@ def _merge_chain_cycles_local(chains: DataFrame) -> DataFrame:
     narrowly gathers the cached chain rows (no shuffle exchange) and a
     single dict walk closes every cycle — no CC driver rounds, no
     per-cycle grouped-map overhead. The same latency-vs-scale trade as
-    stitch._assemble_rings_local, gated by the same kind of row-count
+    assembly._assemble_rings_local, gated by the same kind of row-count
     threshold."""
 
     def merge_all(batches):
@@ -747,7 +626,7 @@ def _merge_chain_cycles_local(chains: DataFrame) -> DataFrame:
             for r in pdf.itertuples(index=False):
                 rows.append((r.head_key, r.tail_key, r.xs, r.ys))
         xs, ys = _merge_walk(rows)
-        yield _rings_pdf(xs, ys, level=1)
+        yield _rings_pdf(xs, ys)
 
     return chains.select("head_key", "tail_key", "xs", "ys").coalesce(1).mapInPandas(
         merge_all, RING_SCHEMA
@@ -788,7 +667,7 @@ def _merge_chain_cycles_distributed(chains: DataFrame) -> DataFrame:
             xs, ys = _merge_walk(rows)
             all_xs.extend(xs)
             all_ys.extend(ys)
-        yield _rings_pdf(all_xs, all_ys, level=1)
+        yield _rings_pdf(all_xs, all_ys)
 
     return part.select("keeper", "head_key", "tail_key", "xs", "ys").mapInPandas(
         merge_part, RING_SCHEMA
@@ -935,7 +814,7 @@ def _presplit_long_segments(
     sbx2 = F.greatest("x1", "x2") + F.lit(eps)
     sby1 = F.least("y1", "y2") - F.lit(eps)
     sby2 = F.greatest("y1", "y2") + F.lit(eps)
-    # two-sided clamps: see stitch._tile_range_cols (descending-
+    # two-sided clamps: see _tile_range_cols (descending-
     # sequence hazard — out-of-grid segments collapse into the edge
     # tile, where every mutually-intersecting out-of-grid pair still
     # meets because clamping is monotone)
@@ -1031,8 +910,6 @@ def chain_stitched_polygonize(
     max_segments_per_tile: int | None = 200_000,
     max_split_factor: int = 16,
     target_segments_per_tile: int = 8000,
-    _segments: DataFrame | None = None,
-    _seg_stats: tuple[float, int] | None = None,
 ) -> DataFrame:
     """Exact distributed polygonize via boundary-chain stitching (module
     docstring). Output semantics match ``stitched_polygonize`` /
@@ -1042,16 +919,15 @@ def chain_stitched_polygonize(
     coalesced task (a dict walk over perimeter-scale rows — far below
     the per-round latency of the distributed CC path); larger sets take
     the pointer-doubling CC + partition-local walk."""
-    from .stitch import _assemble_rings_local, assemble_rings_distributed
-
+    if assembly not in ("auto", "local", "fused", "distributed"):
+        raise ValueError(
+            f"assembly must be auto|local|fused|distributed, got {assembly!r}"
+        )
     import time as _time
 
     _t = _time.time()
-    _orig_tile = float(tile_size)
     _presplit_file: str | None = None
-    segments = (
-        _segments if _segments is not None else segmentize_df(lines_df).persist()
-    )
+    segments = segmentize_df(lines_df).persist()
     _to_unpersist = [segments]  # cache hygiene: dropped once consumed
     if bbox is None:
         bbox = _bbox_of_segments(segments)
@@ -1060,14 +936,11 @@ def chain_stitched_polygonize(
     seg_len = F.sqrt(
         (F.col("x2") - F.col("x1")) ** 2 + (F.col("y2") - F.col("y1")) ** 2
     )
-    if _seg_stats is not None:  # strategy-auto caller already paid this
-        l_max, n_segments = _seg_stats
-    else:
-        _st = segments.agg(
-            F.max(seg_len).alias("l"), F.count("*").alias("n")
-        ).collect()[0]
-        l_max = _st["l"] or 0.0
-        n_segments = int(_st["n"])
+    _st = segments.agg(
+        F.max(seg_len).alias("l"), F.count("*").alias("n")
+    ).collect()[0]
+    l_max = _st["l"] or 0.0
+    n_segments = int(_st["n"])
     _t = _prof("segmentize+stats", _t)
     if (l_max / tile_size) ** 2 >= 32.0:
         # long-segment regime (full-extent lattice lines): buffer_eff
@@ -1143,13 +1016,12 @@ def chain_stitched_polygonize(
     )
     spark = lines_df.sparkSession
 
-    # hot-tile skew sub-split (north_rule explicit salting; mirrors
-    # stitch.py 3c): tiles whose window draws more than
-    # max_segments_per_tile segments shatter into f×f claiming
-    # sub-cells. In the chain protocol this is ONLY a finer claiming
-    # partition — link keys are half-edge identities, so chains
-    # crossing sub-cell boundaries merge exactly like tile-crossing
-    # ones, with no ownership escalation machinery.
+    # hot-tile skew sub-split (north_rule explicit salting): tiles
+    # whose window draws more than max_segments_per_tile segments
+    # shatter into f×f claiming sub-cells. This is ONLY a finer
+    # claiming partition — link keys are half-edge identities, so
+    # chains crossing sub-cell boundaries merge exactly like
+    # tile-crossing ones.
     fmap: dict[tuple[int, int], int] = {}
     # a tile's window count is bounded by the total segment count, so
     # when the whole input fits one kernel task no tile can be hot —
@@ -1181,7 +1053,7 @@ def chain_stitched_polygonize(
         tile_x0 = F.lit(x0) + F.col("tile_i").cast("double") * F.lit(tile_size)
         tile_y0 = F.lit(y0) + F.col("tile_j").cast("double") * F.lit(tile_size)
         side = F.lit(tile_size) / F.col("f")
-        # two-sided clamps: see stitch._tile_range_cols (descending-
+        # two-sided clamps: see _tile_range_cols (descending-
         # sequence hazard)
         si_lo = F.least(F.greatest(F.ceil((sbx1 - F.lit(buffer_eff) - tile_x0) / side - 1), F.lit(0)), F.col("f") - 1).cast("int")
         si_hi = F.greatest(F.least(F.floor((sbx2 + F.lit(buffer_eff) - tile_x0) / side), F.col("f") - 1), F.lit(0)).cast("int")
@@ -1200,44 +1072,24 @@ def chain_stitched_polygonize(
     n_parts = max(int(spark.sparkContext.defaultParallelism) * 2, 16)
     assigned = assigned.repartition(n_parts, *key_cols)
 
-    if assembly not in ("auto", "local", "distributed", "split", "fused"):
-        raise ValueError(
-            f"assembly must be auto|local|distributed|split|fused, got {assembly!r}"
-        )
-    # r5 in-trace assembly (assembly="fused", experimental, NEVER the
-    # auto pick): assembling polygons inside the trace kernel LOST the
-    # interleaved A/B to the phase-2 fused assembly on every workload
-    # (grid-400 7.6 s vs 6.1, grid-100 3.6 s vs 1.3, grid-800 15.0 s
-    # vs 13.6, sparse-60k ~2× — BENCH.md r5) — the avoided second
-    # Python pass over ring coordinates was already cheap (parallel
-    # map over the cached trace output), while the fused trace pays a
-    # 21-field Arrow schema on EVERY ring plus a driver round-trip for
-    # the merged residue. Kept as an explicit option because it is the
-    # one shape whose finish moves only narrow rows when the merged
-    # residue is tiny; auto stays on the measured winner.
-    use_fused_trace = assembly == "fused"
-    kernel = (
-        _make_chain_fused_kernel if use_fused_trace else _make_chain_kernel
-    )(x0, y0, float(tile_size), buffer_eff, snap_grid, cols, rows, fmap)
-    out = assigned.groupBy(*key_cols).applyInPandas(
-        kernel, CHAIN_FUSED_SCHEMA if use_fused_trace else CHAIN_SCHEMA
+    kernel = _make_chain_kernel(
+        x0, y0, float(tile_size), buffer_eff, snap_grid, cols, rows, fmap
     )
-    if use_fused_trace:
-        out = out.persist()
-    else:
-        # r6: self-GC'd localCheckpoint instead of persist — blocks are
-        # ContextCleaner-freed when the returned plan drops (no
-        # CacheManager entry to leak or to plan-match a later run), and
-        # the final plan may legitimately keep reading it (the fused
-        # assembly's bypass rows flow straight from here — zero extra
-        # copies of plain ring bytes)
-        out = out.localCheckpoint(eager=False)
+    # r6: self-GC'd localCheckpoint instead of persist — blocks are
+    # ContextCleaner-freed when the returned plan drops (no
+    # CacheManager entry to leak or to plan-match a later run), and
+    # the final plan may legitimately keep reading it (the fused
+    # assembly's bypass rows flow straight from here — zero extra
+    # copies of plain ring bytes)
+    out = (
+        assigned.groupBy(*key_cols)
+        .applyInPandas(kernel, CHAIN_SCHEMA)
+        .localCheckpoint(eager=False)
+    )
 
-    if not use_fused_trace:
-        local_rings = out.where(F.col("kind") == 0).select(
-            "xs", "ys", "area", "bx1", "by1", "bx2", "by2", "cx", "cy",
-            F.lit(0).cast("int").alias("level"), F.lit(False).alias("beacon"),
-        )
+    local_rings = out.where(F.col("kind") == 0).select(
+        "xs", "ys", "area", "bx1", "by1", "bx2", "by2", "cx", "cy"
+    )
     chains = out.where(F.col("kind") == 1)
     # ONE job over the checkpointed kernel output supplies all three
     # decisions (merge strategy + assembly strategy + the r6 bypass's
@@ -1251,10 +1103,8 @@ def chain_stitched_polygonize(
     # count is bounded by the chain total + one closing vertex per
     # ring — letting the fused assembly skip the incremental limit
     # gate and collect the residue through one parallel Arrow job
-    from .assembly import core_key_col
-
     kc_aggs = [F.count("*").alias("n"), F.sum(F.size("xs")).alias("c")]
-    if not use_fused_trace and not fmap:
+    if not fmap:
         kc_aggs.append(
             F.collect_set(
                 F.when(
@@ -1266,7 +1116,7 @@ def chain_stitched_polygonize(
     kc_rows = out.groupBy("kind").agg(*kc_aggs).collect()
     kc = {int(r["kind"]): (int(r["n"]), int(r["c"] or 0)) for r in kc_rows}
     cw_cores = None
-    if not use_fused_trace and not fmap:
+    if not fmap:
         cw_cores = {
             int(v)
             for r in kc_rows
@@ -1294,32 +1144,6 @@ def chain_stitched_polygonize(
         merged = _merge_chain_cycles_distributed(chains)
     _t = _prof("merge_build", _t)
 
-    if use_fused_trace:
-        from .assembly import assemble_rings_fused_trace
-
-        res = assemble_rings_fused_trace(
-            out, merged, x0, y0, float(tile_size), cols, rows, fmap,
-            drop_collapsed=drop_collapsed, release=out.unpersist,
-        )
-        _t = _prof("fused_trace_finish", _t)
-        if res is not None:
-            return res
-        # pathological merged residue tripped the collection gates:
-        # lossless fallback — re-run with ring emission + the
-        # distributed assembly (costs one extra trace; residues this
-        # size mean the input is boundary-dominated anyway)
-        out.unpersist()
-        return chain_stitched_polygonize(
-            lines_df, _orig_tile, buffer=buffer, bbox=bbox,
-            snap_grid=snap_grid, drop_collapsed=drop_collapsed,
-            assembly="distributed",
-            distributed_assembly_threshold=distributed_assembly_threshold,
-            chain_merge_threshold=chain_merge_threshold,
-            max_segments_per_tile=max_segments_per_tile,
-            max_split_factor=max_split_factor,
-            target_segments_per_tile=target_segments_per_tile,
-        )
-
     if assembly == "auto":
         # r5: large ring sets take the FUSED per-core assembly (zero
         # extra shuffles of ring data) instead of the global joins —
@@ -1331,26 +1155,24 @@ def chain_stitched_polygonize(
         assembly = (
             "local"
             if n_rings_upper <= min(distributed_assembly_threshold, 100_000)
-            else "split"
+            else "fused"
         )
-    if assembly == "split":
-        from .assembly import assemble_rings_fused
-
+    if assembly == "fused":
         # fused phase-2: maps over the checkpointed trace output (no
         # ring reshuffle — every trace-local ring's core is derived
-        # from its bbox corner, bit-exactly the claiming core). No
-        # release callback: the trace checkpoint is self-GC'd and the
-        # bypass rows in the final plan read it directly (r6).
+        # from its bbox corner, bit-exactly the claiming core). The
+        # trace checkpoint is self-GC'd and the bypass rows in the final
+        # plan read it directly (r6).
         return assemble_rings_fused(
             out, merged, x0, y0, float(tile_size), cols, rows, fmap,
-            drop_collapsed=drop_collapsed, release=None,
+            drop_collapsed=drop_collapsed,
             merged_rows_bound=n_chains,
             merged_coords_bound=chain_coords + n_chains,
             cw_cores=cw_cores,
         )
 
     rings = local_rings if merged is None else local_rings.unionByName(merged)
-    rings = rings.withColumn("rid", F.xxhash64("xs", "ys")).drop("beacon")
+    rings = rings.withColumn("rid", F.xxhash64("xs", "ys"))
     if assembly == "local":
         # single consumer, one coalesced task — reads the trace
         # checkpoint narrowly, no intermediate ring copy needed (r6;

@@ -1,125 +1,25 @@
-"""Multi-level stitched polygonize — rings across partition boundaries.
+"""Stitched polygonize — rings across partition boundaries.
 
 This is the from-scratch distributed design the north_star asks for
 and the reference lacks: its TiledPolygonizer silently LOSES any
 polygon larger than tile+buffer (reference src/tiling.rs:66-106 —
 the centroid-owner tile never sees the full ring; SURVEY.md §3.3).
 
-Correctness argument (each step local and deterministic):
-
-1. A tile's input is every segment whose bbox intersects its buffered
-   window, noded on the GLOBAL snap grid. Within the window the
-   subgraph is complete: any segment incident to a node inside the
-   window touches the window, so it is present, and pairwise splits
-   between two segments inside the window involve co-present segments
-   — identical sub-segmentation in every tile that contains them.
-2. Therefore a traced ring that lies entirely inside the window
-   (ring bbox ⊆ window) follows globally-correct next-CCW successors
-   at every node → it IS a global ring. Conversely a spurious ring
-   (mis-traced from partial linework) must visit a node outside the
-   window, so its bbox escapes the window → the fit test rejects it.
-3. Levels: level k uses tile size ``tile_size · 2^k``. A ring is
-   emitted at level k by the (sub-)tile owning its centroid iff it
-   FITS that owner's buffered window. Rings are canonicalized BEFORE
-   the centroid/bbox computation, so every tile that traces the same
-   ring derives bit-identical ownership and fit decisions. Cross-level
-   duplicates collapse on the canonical ring hash.
-3b. Beacon-pruned escalation (the 100 TB path — level k+1 does NOT
-   rescan the world): a tile emits a BEACON bbox for (a) every raw
-   trace whose bbox escapes its window and (b) every complete ring
-   that does not fit its centroid-owner's window. Level k+1 processes
-   ONLY tiles whose buffered window intersects a level-k beacon; no
-   beacons → the loop stops. Soundness: let R be a global ring not yet
-   emitted at level k. Any active tile whose window contains a segment
-   s of R traces s's half-edge; the trace either escapes (beacon ∋ s),
-   or completes — and a complete in-window trace is a global ring
-   (complete-fan argument in step 2), whose owner-fit test fails while
-   R is unemittable (beacon ∋ s). So beacons cover R's linework at
-   every level below R's emission level m; the owner-at-m window
-   contains R's bbox, hence intersects those beacons, hence is active
-   — and it fits+owns R, so R is emitted. Escalation volume decays
-   geometrically with the linework that actually crosses tile
-   boundaries; a fully tile-local input stops after level 0.
-3c. Skew: each level sub-splits hot tiles (count > max_segments_per
-   tile) into f×f sub-tiles; the per-level factor map rides into every
-   kernel so all tracers agree on the owner SUB-window. A ring that
-   fits the owner tile but not the owner sub-window beacons and emits
-   one level up.
-4. Assembly (classification → twin promotion → smallest-containing-
-   shell hole assignment → net-area filter, reference
-   polygonizer.rs:124-261) runs as DISTRIBUTED DataFrame ops over the
-   global ring set: exact-bbox anti-join for promotion, cell-key
-   equi-join + vectorized PIP for assignment, one group-aggregate for
-   the final polygons — no single-node step anywhere.
+The engine is the boundary-chain stitch in ``chain_stitch.py``: one
+windowed trace pass claims every half-edge in exactly one tile core,
+emits core-closed rings directly, and merges the open boundary chains
+into the remaining rings by their link keys. Its module docstring
+carries the correctness argument (claiming, exactness window, spur
+cancellation, link keys, cycle closure); ``assembly.py`` carries the
+argument for the per-core polygon assembly.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame
 
-from ..functions.cells import cell_range_cols
-from ..kernels.polygonize import DEFAULT_SNAP_GRID, trace_rings
-from ..kernels.rings import batch_ring_stats
-from .polygonize_op import POLYGON_SCHEMA, _bbox_of_segments, segmentize_df
-
-RING_SCHEMA = T.StructType(
-    [
-        T.StructField("xs", T.ArrayType(T.DoubleType())),
-        T.StructField("ys", T.ArrayType(T.DoubleType())),
-        T.StructField("area", T.DoubleType()),  # signed
-        T.StructField("bx1", T.DoubleType()),
-        T.StructField("by1", T.DoubleType()),
-        T.StructField("bx2", T.DoubleType()),
-        T.StructField("by2", T.DoubleType()),
-        T.StructField("cx", T.DoubleType()),
-        T.StructField("cy", T.DoubleType()),
-        T.StructField("level", T.IntegerType()),
-        # True: not a ring — an escalation beacon bbox (escaped trace
-        # or owner-unfittable ring); drives level-(k+1) tile pruning
-        T.StructField("beacon", T.BooleanType()),
-    ]
-)
-
-
-STITCH_KEY = ["tile_i", "tile_j", "f", "sub_i", "sub_j"]
-
-
-def _tile_range_cols(x0, y0, ts_k, buffer, cols, rows, bx1, by1, bx2, by2):
-    """Covered-tile index ranges (boundary-inclusive) for a bbox on
-    the (x0, y0)-anchored grid of size ts_k with buffered windows.
-
-    BOTH bounds clamp into [0, n-1] (r6): a bbox wholly outside the
-    grid previously produced lo > hi, and Spark's ``sequence(lo, hi)``
-    DESCENDS in that case instead of being empty — materializing
-    phantom out-of-grid tiles whose kernels owned and re-emitted
-    out-of-bbox rings once per level (caught by the promoted
-    cross-engine equivalence test: level emitted up to 4 copies of
-    each fully-overhanging ring). Two-sided clamping collapses
-    out-of-grid geometry into the edge tile — exactly the convention
-    the kernels' vertex-claim clips already use — and keeps the
-    pairwise-meet property: any two intersecting segments still share
-    the (clamped) tile of their intersection point, since clamping is
-    monotone."""
-    ts_l = F.lit(ts_k)
-    i_lo = F.least(
-        F.greatest(F.ceil((bx1 - F.lit(x0 + buffer)) / ts_l - 1), F.lit(0)),
-        F.lit(cols - 1),
-    ).cast("int")
-    i_hi = F.greatest(
-        F.least(F.floor((bx2 - F.lit(x0 - buffer)) / ts_l), F.lit(cols - 1)),
-        F.lit(0),
-    ).cast("int")
-    j_lo = F.least(
-        F.greatest(F.ceil((by1 - F.lit(y0 + buffer)) / ts_l - 1), F.lit(0)),
-        F.lit(rows - 1),
-    ).cast("int")
-    j_hi = F.greatest(
-        F.least(F.floor((by2 - F.lit(y0 - buffer)) / ts_l), F.lit(rows - 1)),
-        F.lit(0),
-    ).cast("int")
-    return i_lo, i_hi, j_lo, j_hi
+from ..kernels.polygonize import DEFAULT_SNAP_GRID
+from .chain_stitch import chain_stitched_polygonize
 
 
 def stitched_polygonize(
@@ -134,1145 +34,36 @@ def stitched_polygonize(
     max_segments_per_tile: int | None = 200_000,
     max_split_factor: int = 16,
     strategy: str = "auto",
-    escalation: str = "pruned",
-    _segments: DataFrame | None = None,
 ) -> DataFrame:
     """Exact distributed polygonize with no maximum polygon size.
 
-    ``strategy``: "auto" (default) resolves to "chain" — the r5
-    COLD-plan engine A/B (cold_ab_r5.json; clearCache before every
-    run, counts oracle-pinned) has chain beating the level engine on
-    every calibration workload once the plan-cache artifact is removed
-    (grid-400 6.0 vs 8.3 s, grid-800 10.6 vs 17.1 s, sparse-60k 6.8
-    vs 21.6–30.5 s, random-200 1.6 vs 3.5–5.0 s; the earlier
-    "level wins lattices" rule was measured on warm interleaved runs
-    that were reading persisted intermediates back from the
-    CacheManager, BENCH.md r5). "level" (this body — beacon-pruned
-    level escalation) stays available explicitly; its escalation
-    design remains the boundary-volume argument for inputs whose
-    unresolved linework decays geometrically. "chain"
-    (``chain_stitch.chain_stitched_polygonize``) — one trace pass +
-    boundary-chain merge. All produce identical output to the
-    single-group ``polygonize``.
-
     Output matches the single-group ``polygonize`` exactly (same ring
-    set, same assembly semantics), but every stage is distributed, and
-    levels above 0 touch ONLY beacon-escalated regions (module
-    docstring step 3b) — a tile-local input costs one tiled pass plus
-    one empty beacon check.
+    set, same assembly semantics), but every stage is distributed.
 
-    ``assembly``: "auto" (single-group kernel assembly below
-    ``distributed_assembly_threshold`` rings — a handful of joins over
-    a small ring set costs more in stage latency than one kernel
-    call), "local" (always single-group), or "distributed" (always
-    the DataFrame joins — the unbounded-scale path).
+    ``strategy``: "auto" (default) or "chain" — both run
+    ``chain_stitch.chain_stitched_polygonize``. The chain engine beat
+    the retired beacon-pruned level engine on every cold calibration
+    workload (cold_ab_r5.json: grid-400 6.0 vs 8.3 s, grid-800 10.6 vs
+    17.1 s, sparse-60k 6.8 vs 21.6–30.5 s, random-200 1.6 vs 3.5–5.0 s).
 
-    ``escalation``: "pruned" (default, r5) ships the previous level's
-    beacon boxes into each level-k kernel as tagged rows; the kernel
-    clips its segment input to the fattened boxes and rejects any
-    traced ring with consecutive vertices in no common box (a missed
-    split can only hide where two vertices span different boxes — see
-    the kernel comment), so levels ≥ 1 node and trace O(unresolved
-    linework) instead of re-polygonizing their full windows. "full"
-    restores the window-complete inputs (every level re-derives all
-    rings in its active tiles).
+    ``assembly``: "auto" (single-task assembly up to
+    ``min(distributed_assembly_threshold, 100_000)`` rings, the per-core
+    fused assembly above), "local" (always one task), "fused" (always
+    the per-core assembly of ``assembly.assemble_rings_fused``) or
+    "distributed" (always the DataFrame joins — the unbounded-scale
+    path).
     """
-    from .chain_stitch import _prof  # env-gated phase timers (SPARK_GRAFT_PROFILE)
-    import os as _os
-    import time as _time
-
-    _t = _time.time()
-    _seg_stats = None
-    if strategy == "auto":
-        # chain wins every cold calibration workload (docstring) and
-        # computes the segment stats itself — auto is free
-        strategy = "chain"
-    if strategy == "chain":
-        from .chain_stitch import chain_stitched_polygonize
-
-        return chain_stitched_polygonize(
-            lines_df,
-            tile_size,
-            buffer=buffer,
-            bbox=bbox,
-            snap_grid=snap_grid,
-            drop_collapsed=drop_collapsed,
-            assembly=assembly,
-            distributed_assembly_threshold=distributed_assembly_threshold,
-            max_segments_per_tile=max_segments_per_tile,
-            max_split_factor=max_split_factor,
-            _segments=_segments,
-            _seg_stats=_seg_stats,
-        )
-    if strategy != "level":
-        raise ValueError(f"strategy must be auto|level|chain, got {strategy!r}")
-    if escalation not in ("pruned", "full"):
-        raise ValueError(f"escalation must be pruned|full, got {escalation!r}")
-    segments = _segments if _segments is not None else segmentize_df(
-        lines_df
-    ).persist()
-    if bbox is None:
-        bbox = _bbox_of_segments(segments)
-    x0, y0, x1g, y1g = (float(v) for v in bbox)
-    extent = max(x1g - x0, y1g - y0, tile_size)
-    n_levels = int(np.ceil(np.log2(max(extent / tile_size, 1.0)))) + 1
-
-    spark = lines_df.sparkSession
-    n_parts = max(int(spark.sparkContext.defaultParallelism) * 2, 16)
-
-    # r6 (guide §1.2/§2.3 — fewer passes, shuffle fewer bytes): split
-    # long segments to feature scale BEFORE the level chain, exactly as
-    # the chain engine does. Without it, full-extent construction lines
-    # defeat the beacon-pruned escalation on lattices: the level-(k≥1)
-    # kernel clips each segment to the param-interval HULL of its
-    # beacon-box intersections, and a line crossing many boundary
-    # strips keeps nearly its whole span — so every level re-noded and
-    # re-traced close to the full linework (measured: levels 1-3 cost
-    # ~2× level 0 at grid-400). With unit-scale pieces the clip is
-    # tight and escalation input really is boundary-volume. Exactness:
-    # _presplit_long_segments is round 1 of the global noder on the
-    # same snapped/normalized/deduplicated input, so every window's
-    # noding converges to the identical global fixpoint (the same
-    # argument — and helper — as chain_stitch). Env-gated for A/B.
-    _own_caches: list = []
-    _presplit_file = None
-    _did_presplit = False
-    if _segments is None:
-        _own_caches.append(segments)
-    n_segments: int | None = None
-    seg_len_c = F.sqrt(
-        (F.col("x2") - F.col("x1")) ** 2 + (F.col("y2") - F.col("y1")) ** 2
-    )
-    _st_row = segments.agg(
-        F.max(seg_len_c).alias("l"), F.count("*").alias("n")
-    ).collect()[0]
-    l_max = float(_st_row["l"] or 0.0)
-    n_segments = int(_st_row["n"])
-    _t = _prof("level/seg_stats", _t)
-    if _os.environ.get("SPARK_GRAFT_LEVEL_PRESPLIT", "0") != "0":
-        if (l_max / tile_size) ** 2 >= 32.0:
-            from .chain_stitch import _presplit_long_segments
-
-            split_df, _split_stats, _aux_cache, _presplit_file = (
-                _presplit_long_segments(
-                    segments, tile_size, x0, y0, x1g, y1g, snap_grid,
-                    n_segments=n_segments,
-                )
-            )
-            segments = split_df.persist()
-            _did_presplit = True
-            _own_caches.append(segments)
-            if _aux_cache is not None:
-                _own_caches.append(_aux_cache)
-            # post-split count: known free on the driver fast path;
-            # unknown on the distributed path (level needs no l_max,
-            # so don't pay an extra agg — just let the factor job run)
-            n_segments = _split_stats[1] if _split_stats is not None else None
-            _t = _prof("level/presplit", _t)
-
-    sbx1 = F.least("x1", "x2")
-    sbx2 = F.greatest("x1", "x2")
-    sby1 = F.least("y1", "y2")
-    sby2 = F.greatest("y1", "y2")
-
-    # level-0 skew sub-split (north_rule explicit salting): hot tiles
-    # shatter into f×f sub-tiles; the factor map rides into EVERY
-    # level-0 kernel so all tracers of a ring agree on its owner's
-    # sub-window (module docstring 3c). One aggregation — the same
-    # cost tiled_polygonize pays. Levels ≥ 1 process beacon-pruned
-    # escalation regions only, so they run unsplit (and the FINAL
-    # level must never split: its single window covers the bbox, so
-    # nothing can escape it). r6: a tile's window count is bounded by
-    # the total segment count, so when the whole input is below the
-    # hot-tile threshold no tile can be hot — skip the count job
-    # (the chain engine's gate; saves a full stage wave on small and
-    # lattice inputs).
-    factors: dict[tuple[int, int], int] = {}
-    if (
-        max_segments_per_tile is not None
-        and n_levels > 1
-        and (n_segments is None or n_segments > max_segments_per_tile)
-    ):
-        cols0 = max(int(np.ceil((x1g - x0) / tile_size)), 1)
-        rows0 = max(int(np.ceil((y1g - y0) / tile_size)), 1)
-        i_lo, i_hi, j_lo, j_hi = _tile_range_cols(
-            x0, y0, tile_size, buffer, cols0, rows0, sbx1, sby1, sbx2, sby2
-        )
-        fac_rows = (
-            segments.withColumn("tile_i", F.explode(F.sequence(i_lo, i_hi)))
-            .withColumn("tile_j", F.explode(F.sequence(j_lo, j_hi)))
-            .groupBy("tile_i", "tile_j")
-            .count()
-            .filter(F.col("count") > max_segments_per_tile)
-            .collect()
-        )
-        factors = {
-            (int(r["tile_i"]), int(r["tile_j"])): int(
-                min(np.ceil(np.sqrt(r["count"] / max_segments_per_tile)), max_split_factor)
-            )
-            for r in fac_rows
-        }
-        _t = _prof("level/factor_map", _t)
-
-    # The level chain is LAZY: level k+1's tile set derives from level
-    # k's beacons through a broadcast semi-join INSIDE the plan, so one
-    # final action executes every level as stages of one job (each
-    # out_k persists on first touch and feeds both the ring union and
-    # the next level's pruning). A level with no beacons makes every
-    # later level an empty stage — near-zero cost, no driver barrier
-    # per level.
-    level_rings = []
-    level_outs = []  # persisted per-level kernel outputs (released below)
-    active = None  # level-k tile keys to process; None = all (level 0)
-    region = None  # level-k beacon-box rows (escalation="pruned")
-    region_cells = None  # fine-grid cover of the beacon boxes (r6 prune)
-    fine = tile_size / 8.0
-    # r6 ladder compression (guide §1.2 — fewer passes): escalate
-    # 0 → 1 → final instead of doubling through every intermediate
-    # size. Each intermediate level re-nodes and re-traces its whole
-    # active region (the interval-hull clip is load-bearing: keeping
-    # the linework BETWEEN box hits is what subdivides would-be
-    # spurious faces of a partial subgraph, so escalated input can
-    # never be thinned to the beacon strips alone), and on every
-    # measured workload escalation either dies after level 1 (local
-    # inputs — the final rung then costs zero: its active set is
-    # empty) or never decays (closed lattice networks — window-hull
-    # escapes re-beacon at every size, so levels between 1 and final
-    # re-traced everything and emitted nothing, measured 0.9-2.9 s
-    # each at grid-400). Exactness is ladder-agnostic: the soundness
-    # chain (3b) only needs nested grids + a complete final window,
-    # the minimal-level skip is parameterized by the PREDECESSOR RUNG
-    # (a ring fitting only between the rungs emits exactly once at the
-    # final level), and rid = canonical ring hash is level-independent
-    # — pinned by the cross-engine equivalence test. Env knob restores
-    # the full ladder for A/B.
-    if n_levels > 3 and _os.environ.get("SPARK_GRAFT_LEVEL_LADDER", "") != "full":
-        ladder = [0, 1, n_levels - 1]
-    else:
-        ladder = list(range(n_levels))
-    for idx, k in enumerate(ladder):
-        ts_k = tile_size * (2.0**k)
-        cols = max(int(np.ceil((x1g - x0) / ts_k)), 1)
-        rows = max(int(np.ceil((y1g - y0) / ts_k)), 1)
-
-        src = segments
-        if region_cells is not None:
-            # r6 pre-SHUFFLE prune (guide §2.3 — shuffle fewer bytes):
-            # a level-k kernel clips its input to the fattened beacon
-            # boxes anyway, so only segments whose bbox can intersect a
-            # box need to ship. Membership test on a fine grid
-            # (tile_size/8 ≈ strip width): two intersecting rectangles
-            # share a point, hence share the fine cell containing it,
-            # so cell-cover overlap is a sound superset of
-            # bbox-intersect (box covers padded one cell for float
-            # slack). Only used after a presplit (feature-scale
-            # segments — a full-extent line would cover O(extent/fine)
-            # cells and defeat the prune). Duplicate survivors (one per
-            # matching cell) are exact duplicates and the kernel's
-            # node_segments dedups them bit-identically. Without this,
-            # the FINAL level's single task serially received the
-            # entire split segment set through one exchange partition
-            # (measured: 4-7 s at grid-400) just to clip ~90% away.
-            sfi_lo = F.floor((sbx1 - F.lit(x0)) / F.lit(fine)).cast("long")
-            sfi_hi = F.floor((sbx2 - F.lit(x0)) / F.lit(fine)).cast("long")
-            sfj_lo = F.floor((sby1 - F.lit(y0)) / F.lit(fine)).cast("long")
-            sfj_hi = F.floor((sby2 - F.lit(y0)) / F.lit(fine)).cast("long")
-            src = (
-                segments.withColumn("_fi", F.explode(F.sequence(sfi_lo, sfi_hi)))
-                .withColumn("_fj", F.explode(F.sequence(sfj_lo, sfj_hi)))
-                .withColumn(
-                    "_fc", F.col("_fi") * F.lit(4294967296) + F.col("_fj")
-                )
-                .join(F.broadcast(region_cells), "_fc", "left_semi")
-                .drop("_fi", "_fj", "_fc")
-            )
-        i_lo, i_hi, j_lo, j_hi = _tile_range_cols(
-            x0, y0, ts_k, buffer, cols, rows, sbx1, sby1, sbx2, sby2
-        )
-        assigned = src.withColumn("tile_i", F.explode(F.sequence(i_lo, i_hi))).withColumn(
-            "tile_j", F.explode(F.sequence(j_lo, j_hi))
-        )
-        if active is not None:
-            assigned = assigned.join(F.broadcast(active), ["tile_i", "tile_j"], "left_semi")
-
-        k_factors = factors if k == 0 else {}
-        if k_factors:
-            fdf = spark.createDataFrame(
-                [(ti, tj, fv) for (ti, tj), fv in k_factors.items()],
-                "tile_i int, tile_j int, f int",
-            )
-            assigned = assigned.join(F.broadcast(fdf), ["tile_i", "tile_j"], "left").fillna(
-                {"f": 1}
-            )
-            tile_x0 = F.lit(x0) + F.col("tile_i").cast("double") * F.lit(ts_k)
-            tile_y0 = F.lit(y0) + F.col("tile_j").cast("double") * F.lit(ts_k)
-            side = F.lit(ts_k) / F.col("f")
-            # two-sided clamps: see _tile_range_cols (descending-
-            # sequence hazard)
-            si_lo = F.least(F.greatest(F.ceil((sbx1 - F.lit(buffer) - tile_x0) / side - 1), F.lit(0)), F.col("f") - 1).cast("int")
-            si_hi = F.greatest(F.least(F.floor((sbx2 + F.lit(buffer) - tile_x0) / side), F.col("f") - 1), F.lit(0)).cast("int")
-            sj_lo = F.least(F.greatest(F.ceil((sby1 - F.lit(buffer) - tile_y0) / side - 1), F.lit(0)), F.col("f") - 1).cast("int")
-            sj_hi = F.greatest(F.least(F.floor((sby2 + F.lit(buffer) - tile_y0) / side), F.col("f") - 1), F.lit(0)).cast("int")
-            assigned = assigned.withColumn("sub_i", F.explode(F.sequence(si_lo, si_hi))).withColumn(
-                "sub_j", F.explode(F.sequence(sj_lo, sj_hi))
-            )
-        else:
-            assigned = (
-                assigned.withColumn("f", F.lit(1))
-                .withColumn("sub_i", F.lit(0))
-                .withColumn("sub_j", F.lit(0))
-            )
-
-        assigned = assigned.select(
-            "tile_i", "tile_j", "f", "sub_i", "sub_j",
-            "x1", "y1", "x2", "y2", F.lit(False).alias("is_box"),
-        )
-        if region is not None:
-            # the previous level's beacon boxes ride into the SAME
-            # groups as the segments (tagged rows) so the kernel can
-            # clip its input — no driver barrier, the level chain
-            # stays one lazy job
-            assigned = assigned.unionByName(region)
-        # explicit repartition at level 0: defeat AQE 1-task coalesce
-        # (grouped-map cost is kernel CPU, not shuffle bytes); groupBy
-        # reuses it. Levels ≥ 1 carry only beacon-escalated linework —
-        # cap their stages at the tile count (the region union defeats
-        # AQE's post-shuffle coalescing, which otherwise launched
-        # ~400 near-empty python-worker tasks per level — measured
-        # +1.0 s wall on grid-400).
-        if k == 0:
-            assigned = assigned.repartition(n_parts, *STITCH_KEY)
-        else:
-            assigned = assigned.repartition(
-                min(cols * rows, n_parts), *STITCH_KEY
-            )
-        # predecessor semantics follow the LADDER, not k-1: the
-        # minimal-level skip must test the rung that actually ran
-        prev_factors = (
-            None if idx == 0 else (factors if ladder[idx - 1] == 0 else {})
-        )
-        if idx > 0:
-            ts_p = tile_size * (2.0 ** ladder[idx - 1])
-            prev_grid = (
-                max(int(np.ceil((x1g - x0) / ts_p)), 1),
-                max(int(np.ceil((y1g - y0) / ts_p)), 1),
-            )
-        else:
-            prev_grid = None
-        kernel = _make_ring_kernel(
-            x0, y0, float(ts_k), k, buffer, snap_grid, k_factors, prev_factors,
-            is_final=(k == n_levels - 1), prev_grid=prev_grid, grid=(cols, rows),
-            prev_ts=(None if idx == 0 else tile_size * (2.0 ** ladder[idx - 1])),
-        )
-        out = assigned.groupBy(*STITCH_KEY).applyInPandas(kernel, RING_SCHEMA).persist()
-        if _os.environ.get("SPARK_GRAFT_LEVEL_PROF"):
-            # per-level attribution (profiling only): force this level's
-            # cache now so the phase print isolates its cost; the later
-            # eager ring checkpoint then reads the caches
-            n_lv = out.count()
-            _t = _prof(f"level/L{k} (rows={n_lv})", _t)
-        level_outs.append(out)
-        level_rings.append(out.where(~F.col("beacon")))
-
-        if idx + 1 >= len(ladder):
-            break
-        # next-rung active tiles: every tile whose buffered window
-        # intersects a level-k beacon bbox — distributed, lazy
-        beacons = out.where(F.col("beacon")).select("bx1", "by1", "bx2", "by2")
-        ts_n = tile_size * (2.0 ** ladder[idx + 1])
-        cols_n = max(int(np.ceil((x1g - x0) / ts_n)), 1)
-        rows_n = max(int(np.ceil((y1g - y0) / ts_n)), 1)
-        bi_lo, bi_hi, bj_lo, bj_hi = _tile_range_cols(
-            x0, y0, ts_n, buffer, cols_n, rows_n,
-            F.col("bx1"), F.col("by1"), F.col("bx2"), F.col("by2"),
-        )
-        # no distinct: a left-semi join tolerates duplicate keys on the
-        # build side, and skipping it saves a shuffle per level
-        routed = beacons.withColumn(
-            "tile_i", F.explode(F.sequence(bi_lo, bi_hi))
-        ).withColumn("tile_j", F.explode(F.sequence(bj_lo, bj_hi)))
-        active = routed.select("tile_i", "tile_j")
-        if escalation == "pruned":
-            # coalesce(1): the box frame is boundary-sized; without it
-            # the union's map side re-reads every cached partition of
-            # ``out`` as its own task (~64 near-empty tasks per level)
-            region = routed.select(
-                "tile_i",
-                "tile_j",
-                F.lit(1).alias("f"),
-                F.lit(0).alias("sub_i"),
-                F.lit(0).alias("sub_j"),
-                F.col("bx1").alias("x1"),
-                F.col("by1").alias("y1"),
-                F.col("bx2").alias("x2"),
-                F.col("by2").alias("y2"),
-                F.lit(True).alias("is_box"),
-            ).coalesce(1)
-            if _did_presplit:
-                # fine-grid cover of the FATTENED boxes (same pad the
-                # kernel clip uses, plus one cell of float slack each
-                # side) — drives the pre-shuffle segment prune above
-                fpad = buffer + 4.0 * snap_grid
-                bfi_lo = (
-                    F.floor((F.col("bx1") - F.lit(x0) - F.lit(fpad)) / F.lit(fine))
-                    .cast("long") - 1
-                )
-                bfi_hi = (
-                    F.floor((F.col("bx2") - F.lit(x0) + F.lit(fpad)) / F.lit(fine))
-                    .cast("long") + 1
-                )
-                bfj_lo = (
-                    F.floor((F.col("by1") - F.lit(y0) - F.lit(fpad)) / F.lit(fine))
-                    .cast("long") - 1
-                )
-                bfj_hi = (
-                    F.floor((F.col("by2") - F.lit(y0) + F.lit(fpad)) / F.lit(fine))
-                    .cast("long") + 1
-                )
-                region_cells = (
-                    beacons.withColumn("_fi", F.explode(F.sequence(bfi_lo, bfi_hi)))
-                    .withColumn("_fj", F.explode(F.sequence(bfj_lo, bfj_hi)))
-                    .select(
-                        (F.col("_fi") * F.lit(4294967296) + F.col("_fj")).alias("_fc")
-                    )
-                    .distinct()
-                )
-
-    rings = level_rings[0]
-    for df in level_rings[1:]:
-        rings = rings.unionByName(df)
-    # NO cross-level dedup shuffle — emission is unique by
-    # construction: the level grids are NESTED (factor 2, same
-    # anchor), so a ring's owner core at level k lies inside its owner
-    # core at k+1 and fits(k) ⇒ fits(k+1); the minimal-level skip test
-    # (fits at k-1 → don't emit at k) therefore rejects every level
-    # above the first fitting one, and within a level exactly one
-    # (sub-)tile owns the centroid. The three-way equivalence and
-    # skew-split property tests pin this down. rid = canonical ring
-    # hash (rotation-normalized arrays) for the assembly joins.
-    rings = rings.withColumn("rid", F.xxhash64("xs", "ys")).drop("beacon")
-
-    if assembly not in ("auto", "local", "distributed", "split"):
-        raise ValueError(
-            f"assembly must be auto|local|distributed|split, got {assembly!r}"
-        )
-    # the ring set is the hub of the assembly DAG (promotion anti-join,
-    # cell join, hole aggregation all re-consume it). r6: localCheckpoint
-    # instead of persist — the level chain's logical plan (n_levels of
-    # unions over persisted frames) made every downstream action re-run
-    # Catalyst over the whole tree (~0.5-0.7 s of driver planning PER
-    # assembly job, 4-6 jobs); the checkpoint truncates lineage to a
-    # leaf, is GC-cleaned with the frame, and leaves no CacheManager
-    # entry to plan-match a later run. On the auto path the checkpoint
-    # is LAZY: the summary aggregate below is the first action anyway,
-    # so the whole level chain materializes inside it instead of as its
-    # own job wave (the cache cleanup moves after that action); explicit
-    # assembly choices keep the eager shape because their first action
-    # may only happen in the caller.
-    _lazy_ckpt = assembly == "auto"
-    rings = rings.localCheckpoint(eager=not _lazy_ckpt)
-
-    def _drop_trace_caches():
-        # the checkpoint holds the data now — the per-level kernel
-        # caches (and the segment/presplit caches + the driver
-        # pre-split parquet handoff, if any) are dead weight
-        for o in level_outs:
-            o.unpersist()
-        for c in _own_caches:
-            c.unpersist()
-        if _presplit_file is not None:
-            try:
-                _os.remove(_presplit_file)
-            except OSError:
-                pass
-
-    if not _lazy_ckpt:
-        _drop_trace_caches()
-    if _os.environ.get("SPARK_GRAFT_PROFILE"):
-        # force the whole lazy level chain here so the phase split is
-        # levels+trace vs assembly (rings is persisted — the count the
-        # auto branch runs anyway just moves into this phase)
-        n_r = rings.count()
-        _t = _prof(f"level/levels+trace (rings={n_r})", _t)
-    _summary = None
-    if assembly == "auto":
-        # r5: large ring sets take the per-tile split assembly (one
-        # coords shuffle + narrow residue; operators/assembly.py).
-        # Crossover re-measured with split available: the one-task
-        # local assembly is serial-bound (grid-800: 14.7 s local vs
-        # 3.5 s split interleaved; grid-400: 3.4 vs 3.1) — 100k rings
-        # is the conservative switch point. r6: the decision count
-        # rides on the split assembly's OWN summary aggregate (one
-        # scan serves both), so choosing "split" costs no extra job —
-        # and it is the action that materializes the lazy checkpoint.
-        from .assembly import split_ring_summary
-
-        _summary = split_ring_summary(rings, x0, y0, float(tile_size))
-        _drop_trace_caches()
-        assembly = (
-            "local"
-            if int(_summary["n_all"]) <= min(distributed_assembly_threshold, 100_000)
-            else "split"
-        )
-    if assembly == "local":
-        out = _assemble_rings_local(rings, drop_collapsed=drop_collapsed)
-    elif assembly == "split":
-        from .assembly import assemble_rings_split
-
-        out = assemble_rings_split(
-            rings, x0, y0, float(tile_size), drop_collapsed=drop_collapsed,
-            rings_cached=True,  # persisted above
-            summary=_summary,
-        )
-    else:
-        out = assemble_rings_distributed(rings, drop_collapsed=drop_collapsed)
-    _prof(f"level/assembly_call ({assembly})", _t)
-    return out
-
-
-def _assemble_rings_local(rings: DataFrame, drop_collapsed: bool) -> DataFrame:
-    """Single-task assembly: the numpy assembly kernel over the whole
-    (small) ring set — identical semantics to the distributed joins, a
-    fraction of the latency. coalesce(1) + mapInPandas, NOT a
-    groupBy(lit) grouped-map: coalesce narrowly reads the cached ring
-    partitions into one task with no single-partition shuffle
-    exchange."""
-    from ..kernels.rings import assemble_polygons_pdf
-
-    def kernel(batches):
-        ring_xs: list = []
-        ring_ys: list = []
-        for pdf in batches:
-            ring_xs.extend(np.asarray(v, dtype=np.float64) for v in pdf["xs"])
-            ring_ys.extend(np.asarray(v, dtype=np.float64) for v in pdf["ys"])
-        yield assemble_polygons_pdf(ring_xs, ring_ys, drop_collapsed, -2, -2)
-
-    return rings.select("xs", "ys").coalesce(1).mapInPandas(kernel, POLYGON_SCHEMA)
-
-
-def _merge_boxes(boxes: np.ndarray, cap: int = 64) -> np.ndarray:
-    """Reduce a box set to ≤ ``cap`` by repeatedly merging spatially
-    adjacent pairs (lexsorted centers). Merging only GROWS coverage,
-    so the result is always a sound (conservative) escalation region —
-    with cap=1 it degrades to the hull, i.e. the pre-r5 full-window
-    behavior."""
-    boxes = np.unique(boxes, axis=0)
-    while boxes.shape[0] > cap:
-        cx = (boxes[:, 0] + boxes[:, 2]) * 0.5
-        cy = (boxes[:, 1] + boxes[:, 3]) * 0.5
-        boxes = boxes[np.lexsort((cy, cx))]
-        a, b = boxes[0::2], boxes[1::2]
-        tail = a[b.shape[0]:]
-        a = a[: b.shape[0]]
-        merged = np.stack(
-            (
-                np.minimum(a[:, 0], b[:, 0]),
-                np.minimum(a[:, 1], b[:, 1]),
-                np.maximum(a[:, 2], b[:, 2]),
-                np.maximum(a[:, 3], b[:, 3]),
-            ),
-            axis=1,
-        )
-        boxes = np.concatenate((merged, tail))
-    return boxes
-
-
-def _clip_segments_to_region(x1, y1, x2, y2, boxes):
-    """Keep segments intersecting any box; clip each survivor to the
-    param-interval HULL of its box intersections (one sub-segment per
-    input segment — no collinear duplicates for the noder). Points
-    and crossings INSIDE any box are preserved exactly: for p ∈ box B
-    on segment s, s ∩ B is part of the kept interval, so clipping
-    never cuts region-interior geometry."""
-    n = x1.size
-    if n == 0:
-        return x1, y1, x2, y2
-    dx = (x2 - x1)[:, None]
-    dy = (y2 - y1)[:, None]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        tx1 = (boxes[None, :, 0] - x1[:, None]) / dx
-        tx2 = (boxes[None, :, 2] - x1[:, None]) / dx
-        ty1 = (boxes[None, :, 1] - y1[:, None]) / dy
-        ty2 = (boxes[None, :, 3] - y1[:, None]) / dy
-    txlo, txhi = np.minimum(tx1, tx2), np.maximum(tx1, tx2)
-    tylo, tyhi = np.minimum(ty1, ty2), np.maximum(ty1, ty2)
-    zx = dx == 0
-    inx = (x1[:, None] >= boxes[None, :, 0]) & (x1[:, None] <= boxes[None, :, 2])
-    txlo = np.where(zx, np.where(inx, -np.inf, np.inf), txlo)
-    txhi = np.where(zx, np.where(inx, np.inf, -np.inf), txhi)
-    zy = dy == 0
-    iny = (y1[:, None] >= boxes[None, :, 1]) & (y1[:, None] <= boxes[None, :, 3])
-    tylo = np.where(zy, np.where(iny, -np.inf, np.inf), tylo)
-    tyhi = np.where(zy, np.where(iny, np.inf, -np.inf), tyhi)
-    tlo = np.maximum(txlo, tylo)
-    thi = np.minimum(txhi, tyhi)
-    hit = (tlo <= thi) & (thi >= 0.0) & (tlo <= 1.0)
-    keep = hit.any(axis=1)
-    t0 = np.where(hit, np.clip(tlo, 0.0, 1.0), np.inf).min(axis=1)[keep]
-    t1 = np.where(hit, np.clip(thi, 0.0, 1.0), -np.inf).max(axis=1)[keep]
-    bx, by = x1[keep], y1[keep]
-    ex, ey = (x2 - x1)[keep], (y2 - y1)[keep]
-    return bx + t0 * ex, by + t0 * ey, bx + t1 * ex, by + t1 * ey
-
-
-def _make_ring_kernel(x0, y0, ts_py, level, buffer, snap_grid, factors, prev_factors=None,
-                      is_final=False, prev_grid=None, grid=None, prev_ts=None):
-    """Per-(sub-)tile trace kernel. ``factors``: this level's hot-tile
-    split map {(tile_i, tile_j): f} — closed over so EVERY tracer
-    derives the same owner sub-window for a given ring (3c).
-    ``prev_factors``: level k-1's map, for the minimal-level skip: a
-    ring that already FIT its owner's window at k-1 was emitted there
-    (that owner is provably active while the ring is unemitted — 3b),
-    so re-tracing levels don't re-emit it — but ONLY if that owner
-    tile exists in level k-1's clamped grid (``prev_grid`` =
-    (cols, rows)): input outside the declared bbox clamps into edge
-    tiles, so an out-of-grid owner can fit numerically yet was never
-    processed, and skipping on it silently drops the ring.
-
-    ``is_final``: the top level is ONE group whose conceptual window
-    is the whole plane — it owns and emits every remaining
-    globally-correct ring instead of testing against the bbox-sized
-    window. Without this, any ring whose bbox or centroid falls
-    outside the declared bbox (stale bbox metadata, segments
-    overhanging the extent) beacons into the void and is silently
-    lost — found by the sparse-60k engine A/B, where segments extend
-    up to 25 units past the declared bbox and the level engine
-    dropped 249 of 195,518 polygons.
-
-    ``grid``: this level's clamped grid dims (cols, rows). Edge-tile
-    CORES extend unbounded outward so the cores partition the whole
-    plane, not just the bbox — a vertex outside the bbox must belong
-    to SOME core or its linework is never tight-beaconed and the
-    pruned escalation clips it away (the −6 residue of the same
-    sparse-60k find)."""
-
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        import os as _os
-        import time as _time
-
-        _kt0 = _time.time()
-        _kn_in = len(pdf)
-        tile_i, tile_j, f, sub_i, sub_j = (int(v) for v in key)
-        side = ts_py / f
-        core_x0 = x0 + tile_i * ts_py + sub_i * side
-        core_y0 = y0 + tile_j * ts_py + sub_j * side
-        win = (core_x0 - buffer, core_y0 - buffer, core_x0 + side + buffer, core_y0 + side + buffer)
-        sx1 = pdf["x1"].to_numpy(np.float64)
-        sy1 = pdf["y1"].to_numpy(np.float64)
-        sx2 = pdf["x2"].to_numpy(np.float64)
-        sy2 = pdf["y2"].to_numpy(np.float64)
-        boxes = None
-        if "is_box" in pdf.columns:
-            bmask = pdf["is_box"].to_numpy(dtype=bool)
-            if bmask.any():
-                # escalation region (r5): previous level's beacon
-                # boxes, fattened so every segment CROSSING region
-                # linework is kept — for an edge (a,b) inside one
-                # fattened box, any crossing segment u intersects the
-                # box (convexity) and is therefore present, so noding
-                # along region-interior linework is exact
-                pad = buffer + 4.0 * snap_grid
-                boxes = np.stack(
-                    (
-                        sx1[bmask] - pad,
-                        sy1[bmask] - pad,
-                        sx2[bmask] + pad,
-                        sy2[bmask] + pad,
-                    ),
-                    axis=1,
-                )
-                boxes = _merge_boxes(boxes, cap=64)
-                sx1, sy1, sx2, sy2 = (
-                    v[~bmask] for v in (sx1, sy1, sx2, sy2)
-                )
-                sx1, sy1, sx2, sy2 = _clip_segments_to_region(
-                    sx1, sy1, sx2, sy2, boxes
-                )
-        # prune only inside-window dangle tips (see graph.prune_dangles:
-        # outside-tip stubs must survive so affected rings escape the
-        # window and escalate instead of tracing spurious hulls). The
-        # FINAL level has no outside: prune every dangle, exactly like
-        # the single-group path — an unpruned out-of-window stub there
-        # would spike a real ring into a hash-different variant
-        prune_win = (
-            (-np.inf, -np.inf, np.inf, np.inf) if is_final else win
-        )
-        rxs, rys = trace_rings(
-            sx1,
-            sy1,
-            sx2,
-            sy2,
-            node_input=True,
-            snap_grid=snap_grid,
-            prune_window=prune_win,
-        )
-        # fully vectorized post-trace pass (no per-ring Python): the
-        # canonical rotation happens BEFORE any accumulation, so every
-        # tile that traces the same ring derives bit-identical
-        # area/centroid/bbox — ownership decisions must agree across
-        # tracers (3)
-        xr, yr, off, L, bx1, by1, bx2, by2, area, cx, cy = batch_ring_stats(rxs, rys)
-        n = area.size
-        if n == 0:
-            inwin = np.zeros(0, dtype=bool)
-        elif is_final:
-            # single top-level group: the input is complete (tile
-            # ranges clamp everything into the grid), so every trace
-            # is globally correct ("full") or region-validated
-            # ("pruned") — no window test, and no beacons to emit
-            # (there is no next level)
-            inwin = np.ones(n, dtype=bool)
-        else:
-            inwin = (bx1 >= win[0]) & (by1 >= win[1]) & (bx2 <= win[2]) & (by2 <= win[3])
-        # RAW escape: any trace polluted by the window edge (wrong
-        # turns or dangle detours at incomplete-fan nodes) necessarily
-        # visits an out-of-window node → its bbox escapes → beacon (3b)
-        degen = np.abs(area) < 1e-9  # polygonizer.rs:138-140
-
-        # --- tight escape beacons (r5) -------------------------------
-        # An escaped cycle beacons ONLY if it touches this core, and
-        # its beacon bbox covers just its CORE-INCIDENT segments, not
-        # the whole wander. Soundness: every segment s of an unemitted
-        # ring has an endpoint vertex p in exactly one core; that core
-        # tile's local cycle through s's half-edge visits p (in core)
-        # and either completes (→ emitted / type-b beacon with full
-        # ring bbox) or escapes (→ tight beacon whose box includes p
-        # AND its ring-neighbors, hence all of s — axis-box convexity).
-        # So unemitted linework stays beacon-covered, while interior
-        # tiles' window-artifact cycles (no core vertex) stop
-        # beaconing — escalation regions hug the unresolved linework
-        # instead of blanketing every tile at every level.
-        if n:
-            # edge-of-grid cores are unbounded outward (factory
-            # docstring): out-of-bbox vertices clamp into them
-            cx_lo = -np.inf if (grid is not None and tile_i == 0 and sub_i == 0) else core_x0
-            cx_hi = (
-                np.inf
-                if (grid is not None and tile_i == grid[0] - 1 and sub_i == f - 1)
-                else core_x0 + side
-            )
-            cy_lo = -np.inf if (grid is not None and tile_j == 0 and sub_j == 0) else core_y0
-            cy_hi = (
-                np.inf
-                if (grid is not None and tile_j == grid[1] - 1 and sub_j == f - 1)
-                else core_y0 + side
-            )
-            vin = (xr >= cx_lo) & (xr < cx_hi) & (yr >= cy_lo) & (yr < cy_hi)
-            ring_core = np.logical_or.reduceat(vin, off)
-            idx = np.arange(xr.size)
-            ring_end = off + L - 1
-            nxt = idx + 1
-            nxt[ring_end] = off
-            prv = idx - 1
-            prv[off] = ring_end
-            # dm: vertices on core-incident segments (a segment is
-            # core-incident iff either endpoint vertex is in-core, so
-            # dilate the vertex mask by one ring-neighbor each way)
-            dm = vin | vin[nxt] | vin[prv]
-            if boxes is not None:
-                # region validity: every traversed edge must lie in a
-                # COMMON fattened box — a split can only be missed by
-                # an absent crossing segment, and an absent segment
-                # cannot reach an edge whose endpoints share a box
-                # (the box is convex and keeps every intersecting
-                # segment). Real unemitted rings always pass: each of
-                # their edges sits wholly inside one per-run beacon
-                # box from the previous level (run boxes include both
-                # endpoints of every core-incident segment).
-                nb = boxes.shape[0]
-                mb = np.zeros((xr.size, 64), dtype=bool)
-                mb[:, :nb] = (
-                    (xr[:, None] >= boxes[None, :, 0])
-                    & (xr[:, None] <= boxes[None, :, 2])
-                    & (yr[:, None] >= boxes[None, :, 1])
-                    & (yr[:, None] <= boxes[None, :, 3])
-                )
-                bits = np.frombuffer(
-                    np.packbits(mb, axis=1).tobytes(), dtype=np.uint64
-                )
-                edge_ok = (bits & bits[nxt]) != 0
-                valid = np.logical_and.reduceat(edge_ok, off)
-            else:
-                valid = np.ones(n, dtype=bool)
-            esc = (~inwin | ~valid) & ring_core
-            # one beacon box per RUN of consecutive core-incident
-            # vertices (an L-shaped shell fragment through a corner
-            # core yields two thin strips, not one core-sized box);
-            # runs never merge across the flat ring boundary, so a
-            # fragment straddling the canonical start point emits two
-            # run boxes plus a wrap box for its start edge
-            ring_id = np.repeat(np.arange(n), L)
-            vesc = dm & esc[ring_id]
-            pos = np.flatnonzero(vesc)
-            if pos.size:
-                is_off = np.zeros(xr.size, dtype=bool)
-                is_off[off] = True
-                starts_v = vesc & (~vesc[prv] | is_off)
-                bnd = np.flatnonzero(starts_v[pos])
-                rbx1 = np.minimum.reduceat(xr[pos], bnd)
-                rby1 = np.minimum.reduceat(yr[pos], bnd)
-                rbx2 = np.maximum.reduceat(xr[pos], bnd)
-                rby2 = np.maximum.reduceat(yr[pos], bnd)
-                wrap = np.flatnonzero(esc & vesc[ring_end] & vesc[off])
-                if wrap.size:
-                    we, wo = ring_end[wrap], off[wrap]
-                    rbx1 = np.concatenate((rbx1, np.minimum(xr[we], xr[wo])))
-                    rby1 = np.concatenate((rby1, np.minimum(yr[we], yr[wo])))
-                    rbx2 = np.concatenate((rbx2, np.maximum(xr[we], xr[wo])))
-                    rby2 = np.concatenate((rby2, np.maximum(yr[we], yr[wo])))
-            else:
-                rbx1 = rby1 = rbx2 = rby2 = np.empty(0)
-        else:
-            ring_core = np.zeros(0, dtype=bool)
-            valid = np.ones(0, dtype=bool)
-            rbx1 = rby1 = rbx2 = rby2 = np.empty(0)
-
-        def owner_fit(ts, fmap):
-            oti = np.floor((cx - x0) / ts).astype(np.int64)
-            otj = np.floor((cy - y0) / ts).astype(np.int64)
-            ox0 = x0 + oti * ts
-            oy0 = y0 + otj * ts
-            oside = np.full(n, ts)
-            f_arr = np.ones(n, dtype=np.int64)
-            osi = np.zeros(n, dtype=np.int64)
-            osj = np.zeros(n, dtype=np.int64)
-            for (hti, htj), fv in fmap.items():
-                m = (oti == hti) & (otj == htj)
-                if not m.any():
-                    continue
-                s = ts / fv
-                si = np.clip(np.floor((cx[m] - ox0[m]) / s).astype(np.int64), 0, fv - 1)
-                sj = np.clip(np.floor((cy[m] - oy0[m]) / s).astype(np.int64), 0, fv - 1)
-                ox0[m] += si * s
-                oy0[m] += sj * s
-                oside[m] = s
-                f_arr[m] = fv
-                osi[m] = si
-                osj[m] = sj
-            fits = (
-                (bx1 >= ox0 - buffer)
-                & (by1 >= oy0 - buffer)
-                & (bx2 <= ox0 + oside + buffer)
-                & (by2 <= oy0 + oside + buffer)
-            )
-            return (oti, otj, f_arr, osi, osj), fits
-
-        owner, fits_owner = owner_fit(ts_py, factors)
-        if is_final:
-            # the single top group owns everything that remains (see
-            # factory docstring) — emission is gated only by validity,
-            # degeneracy, and the minimal-level skip below
-            fits_owner = np.ones(n, dtype=bool)
-            owner_ok = np.ones(n, dtype=bool)
-        else:
-            owner_ok = (
-                (owner[0] == tile_i)
-                & (owner[1] == tile_j)
-                & (owner[2] == f)
-                & (owner[3] == sub_i)
-                & (owner[4] == sub_j)
-            )
-        # type-b beacons: COMPLETE (and region-valid) rings that don't
-        # fit their owner's (sub-)window — per-ring rows with the full
-        # ring bbox. Escaped or region-invalid cycles beacon through
-        # the per-run boxes (rb*) instead.
-        is_beacon = valid & inwin & ~degen & ~fits_owner
-        emit = valid & inwin & ~degen & fits_owner
-        if prev_factors is not None:
-            # predecessor RUNG size, not ts/2: with the compressed
-            # ladder the final rung's predecessor is level 1, and
-            # skipping on a never-run intermediate grid would silently
-            # drop every ring that fits it
-            prev_owner, fits_prev = owner_fit(
-                ts_py / 2.0 if prev_ts is None else prev_ts, prev_factors
-            )
-            if prev_grid is not None:
-                # a numerically-fitting owner OUTSIDE level k-1's
-                # clamped grid was never processed — don't skip on it
-                fits_prev &= (
-                    (prev_owner[0] >= 0)
-                    & (prev_owner[0] < prev_grid[0])
-                    & (prev_owner[1] >= 0)
-                    & (prev_owner[1] < prev_grid[1])
-                )
-            # already emitted at its minimal fitting level — don't ship
-            # duplicates through Arrow + shuffle
-            emit &= ~fits_prev
-        emit &= owner_ok
-
-        em = np.flatnonzero(emit)
-        bc = np.flatnonzero(is_beacon)
-        xs_out, ys_out = [], []
-        for i in em:
-            o, l = off[i], L[i]
-            xs_out.append(np.concatenate((xr[o : o + l], xr[o : o + 1])))
-            ys_out.append(np.concatenate((yr[o : o + l], yr[o : o + 1])))
-        n_bc = bc.size + rbx1.size
-        n_out = em.size + n_bc
-        if _os.environ.get("SPARK_GRAFT_KERNEL_PROF"):
-            print(
-                f"KPROF L{level} tile=({tile_i},{tile_j}) in={_kn_in} "
-                f"clip={sx1.size} rings={n} emit={em.size} bc={n_bc} "
-                f"dt={_time.time() - _kt0:.3f}",
-                flush=True,
-            )
-        obj = lambda v: pd.Series(v, dtype=object)
-        zeros_bc = np.zeros(n_bc)
-        return pd.DataFrame(
-            {
-                "xs": obj(xs_out + [np.empty(0)] * n_bc),
-                "ys": obj(ys_out + [np.empty(0)] * n_bc),
-                "area": np.concatenate((area[em], zeros_bc)),
-                "bx1": np.concatenate((bx1[em], bx1[bc], rbx1)),
-                "by1": np.concatenate((by1[em], by1[bc], rby1)),
-                "bx2": np.concatenate((bx2[em], bx2[bc], rbx2)),
-                "by2": np.concatenate((by2[em], by2[bc], rby2)),
-                "cx": np.concatenate((cx[em], zeros_bc)),
-                "cy": np.concatenate((cy[em], zeros_bc)),
-                "level": np.full(n_out, level, dtype=np.int32),
-                "beacon": np.concatenate(
-                    (np.zeros(em.size, dtype=bool), np.ones(n_bc, dtype=bool))
-                ),
-            }
-        )
-
-    return kernel
-
-
-def assemble_rings_distributed(rings: DataFrame, drop_collapsed: bool = False) -> DataFrame:
-    """Distributed assembly over a global ring set (the DataFrame
-    translation of kernels.rings.assemble_polygons; same semantics,
-    reference polygonizer.rs:124-261).
-
-    Shuffle discipline: every classification / promotion / candidate /
-    winner stage runs over NARROW metadata rows (rid, area, bbox,
-    centroid — 72 bytes). Ring coordinate arrays cross the wire in
-    exactly three bounded places: once per candidate-bearing shell
-    into the PIP kernel, once per ASSIGNED hole into the hole
-    aggregation, and once per output polygon in the final attach —
-    never per candidate row, never through the promotion joins."""
-    coords = rings.select("rid", "xs", "ys")
-    meta = rings.select("rid", "area", "bx1", "by1", "bx2", "by2", "cx", "cy")
-    shells = meta.where("area > 0").select(
-        "rid", F.col("area").alias("s_area"), "bx1", "by1", "bx2", "by2", "cx", "cy"
-    )
-    holes = meta.where("area < 0").select(
-        F.col("rid").alias("h_rid"),
-        (-F.col("area")).alias("h_area"),
-        F.col("bx1").alias("hbx1"),
-        F.col("by1").alias("hby1"),
-        F.col("bx2").alias("hbx2"),
-        F.col("by2").alias("hby2"),
-        F.col("cx").alias("hcx"),
-        F.col("cy").alias("hcy"),
-    )
-
-    # --- promotion: CW ring with no CCW twin (exact bbox + ~area) ----
-    twins = (
-        holes.join(
-            shells.select("s_area", "bx1", "by1", "bx2", "by2"),
-            (F.col("hbx1") == F.col("bx1"))
-            & (F.col("hby1") == F.col("by1"))
-            & (F.col("hbx2") == F.col("bx2"))
-            & (F.col("hby2") == F.col("by2"))
-            & (F.abs(F.col("h_area") - F.col("s_area")) < 1e-6),
-            "left_semi",
-        )
-    ).select("h_rid")
-    promoted = holes.join(twins, "h_rid", "left_anti").select(
-        F.col("h_rid").alias("rid"),
-        F.col("h_area").alias("s_area"),
-        F.col("hbx1").alias("bx1"),
-        F.col("hby1").alias("by1"),
-        F.col("hbx2").alias("bx2"),
-        F.col("hby2").alias("by2"),
-        F.col("hcx").alias("cx"),
-        F.col("hcy").alias("cy"),
-        F.lit(True).alias("promoted"),
-    )
-    all_shells = shells.withColumn("promoted", F.lit(False)).unionByName(promoted)
-
-    # --- hole assignment: bbox cell-join + PIP(hole centroid) --------
-    # cell grid sized from the shell bbox distribution (driver-side agg
-    # of 4 scalars)
-    stats = all_shells.agg(
-        F.min("bx1").alias("gx0"),
-        F.min("by1").alias("gy0"),
-        F.max("bx2").alias("gx1"),
-        F.max("by2").alias("gy1"),
-        F.expr("percentile_approx(bx2 - bx1, 0.5)").alias("med"),
-        F.count("*").alias("n"),
-        F.max("s_area").alias("max_area"),
-    ).collect()[0]
-    if stats["n"] == 0:
-        return rings.sparkSession.createDataFrame([], POLYGON_SCHEMA)
-    gx0, gy0 = float(stats["gx0"]), float(stats["gy0"])
-    span = max(float(stats["gx1"]) - gx0, float(stats["gy1"]) - gy0, 1e-300)
-    cell = max(span / max(int(np.sqrt(stats["n"])), 1), float(stats["med"] or 0.0), span * 1e-9)
-    n_cells = 1 << 20
-
-    # NARROW candidate generation: only (rid, bbox, area) replicate per
-    # covered cell — ring coordinate arrays never enter the cell join.
-    # (A shell spanning the full extent — e.g. a grid hull — covers
-    # every cell; replicating its 10⁵-vertex array per cell is an
-    # O(cells × ring) shuffle blowup, measured as the dominant cost.)
-    sc = all_shells.select("rid", "s_area", "bx1", "by1", "bx2", "by2")
-    ci1 = cell_range_cols(F.col("bx1"), gx0, cell, n_cells)
-    ci2 = cell_range_cols(F.col("bx2"), gx0, cell, n_cells)
-    cj1 = cell_range_cols(F.col("by1"), gy0, cell, n_cells)
-    cj2 = cell_range_cols(F.col("by2"), gy0, cell, n_cells)
-    shell_cells = sc.withColumn("cell_i", F.explode(F.sequence(ci1, ci2))).withColumn(
-        "cell_j", F.explode(F.sequence(cj1, cj2))
-    )
-    # holes that cannot have a strictly-larger parent (above all the
-    # promoted coverage hull — whose centroid would otherwise generate
-    # a candidate against every cell-mate) never enter the cell join
-    # (polygonizer.rs:226; same prefilter as the kernel assembly)
-    hole_pts = holes.where(
-        F.col("h_area") < F.lit(float(stats["max_area"])) - 1e-6
-    ).select("h_rid", "hcx", "hcy", "h_area").withColumn(
-        "cell_i", cell_range_cols(F.col("hcx"), gx0, cell, n_cells)
-    ).withColumn("cell_j", cell_range_cols(F.col("hcy"), gy0, cell, n_cells))
-    # a hole keys to exactly ONE cell, so each (hole, shell) candidate
-    # pair arises once — no dedup needed
-    cand = hole_pts.join(shell_cells, ["cell_i", "cell_j"]).where(
-        (F.col("hcx") >= F.col("bx1"))
-        & (F.col("hcx") <= F.col("bx2"))
-        & (F.col("hcy") >= F.col("by1"))
-        & (F.col("hcy") <= F.col("by2"))
-        & (F.col("s_area") > F.col("h_area") + 1e-6)  # polygonizer.rs:226
-    )
-    # group candidates per shell, then join the shell's ring arrays by
-    # rid — coordinates cross the wire exactly once per shell; the PIP
-    # kernel is many-probes-vs-one-ring (y-bucketed for huge rings).
-    # Promoted shells join the ORIGINAL (reversed) ring — orientation
-    # does not change even-odd containment.
-    # persisted: consumed by the broadcast key prune AND the coords
-    # join — an unpersisted broadcast build would re-execute the whole
-    # candidate pipeline a second time
-    per_shell = cand.groupBy("rid", "s_area").agg(
-        F.collect_list(F.struct("h_rid", "hcx", "hcy", "h_area")).alias("probes")
-    ).persist()
-    # broadcast-semi prune coords BEFORE its shuffle: only the
-    # candidate-bearing shells' arrays move (an unpruned join by rid
-    # would shuffle EVERY ring's arrays — measured as the dominant
-    # assembly bytes)
-    cand_shells = coords.join(
-        F.broadcast(per_shell.select("rid")), "rid", "left_semi"
-    )
-    with_coords = per_shell.join(cand_shells, "rid")
-
-    hit_schema = T.StructType(
-        [
-            T.StructField("h_rid", T.LongType()),
-            T.StructField("rid", T.LongType()),
-            T.StructField("s_area", T.DoubleType()),
-            T.StructField("h_area_back", T.DoubleType()),
-        ]
-    )
-
-    def pip_hits(batches):
-        """Two regimes per Arrow batch: HEAVY shells (probes × ring
-        length > 4M) go through the y-bucketed per-ring index; the
-        long tail of small shells (typically 1-2 probes each) flattens
-        into ONE length-grouped dense ray cast for the whole batch —
-        per-row numpy setup on 10⁵ tiny groups was the dominant
-        assembly CPU."""
-        from ..kernels.rings import _pip_many_vs_ring
-        from .spatial_join import _ray_cast_rows
-
-        for pdf in batches:
-            hr: list = []
-            rr: list = []
-            sa: list = []
-            ha_out: list = []
-            flat_px: list = []
-            flat_py: list = []
-            flat_rings: list = []
-            flat_meta: list = []
-            for row in pdf.itertuples(index=False):
-                probes = row.probes
-                if len(probes) == 0:
-                    continue
-                ring_x = np.asarray(row.xs, np.float64)
-                ring_y = np.asarray(row.ys, np.float64)
-                if len(probes) * ring_x.size > 4_000_000:
-                    pxx = np.fromiter((p["hcx"] for p in probes), np.float64, len(probes))
-                    pyy = np.fromiter((p["hcy"] for p in probes), np.float64, len(probes))
-                    inside = _pip_many_vs_ring(pxx, pyy, ring_x, ring_y)
-                    for i in np.flatnonzero(inside):
-                        p = probes[i]
-                        hr.append(p["h_rid"])
-                        rr.append(row.rid)
-                        sa.append(row.s_area)
-                        ha_out.append(p["h_area"])
-                else:
-                    for p in probes:
-                        flat_px.append(p["hcx"])
-                        flat_py.append(p["hcy"])
-                        flat_rings.append((ring_x, ring_y))
-                        flat_meta.append((p["h_rid"], row.rid, row.s_area, p["h_area"]))
-            if flat_rings:
-                inside = _ray_cast_rows(
-                    np.asarray(flat_px, np.float64), np.asarray(flat_py, np.float64), flat_rings
-                )
-                for i in np.flatnonzero(inside):
-                    m = flat_meta[i]
-                    hr.append(m[0])
-                    rr.append(m[1])
-                    sa.append(m[2])
-                    ha_out.append(m[3])
-            if hr:
-                yield pd.DataFrame(
-                    {
-                        "h_rid": np.asarray(hr, np.int64),
-                        "rid": np.asarray(rr, np.int64),
-                        "s_area": np.asarray(sa, np.float64),
-                        "h_area_back": np.asarray(ha_out, np.float64),
-                    }
-                )
-
-    hit = with_coords.mapInPandas(pip_hits, hit_schema)
-    winners = (
-        hit.groupBy("h_rid")
-        .agg(F.min_by(F.struct("rid"), "s_area").alias("best"), F.min("h_area_back").alias("h_area"))
-        .select("h_rid", F.col("best.rid").alias("rid"), "h_area")
-        .persist()  # read by its own broadcast key prune + the join
-    )
-    hole_coords = coords.select(
-        F.col("rid").alias("h_rid"), F.col("xs").alias("h_xs"), F.col("ys").alias("h_ys")
-    ).join(F.broadcast(winners.select("h_rid")), "h_rid", "left_semi")
-    # hole ring arrays: once per ASSIGNED hole, by id
-    assigned = winners.join(hole_coords, "h_rid")
-
-    hole_agg = assigned.groupBy("rid").agg(
-        F.collect_list("h_xs").alias("hole_xs"),
-        F.collect_list("h_ys").alias("hole_ys"),
-        F.sum("h_area").alias("holes_area"),
-        F.count("*").alias("n_holes"),
-    )
-
-    out = (
-        all_shells.join(hole_agg, "rid", "left")
-        .withColumn("holes_area", F.coalesce("holes_area", F.lit(0.0)))
-        .withColumn("n_holes", F.coalesce("n_holes", F.lit(0)).cast("int"))
-        .withColumn("net_area", F.col("s_area") - F.col("holes_area"))
-    )
-    if drop_collapsed:
-        out = out.where(F.col("net_area") > 1e-6)  # polygonizer.rs:255-258
-    # single arrays attach per output polygon; promoted shells re-wind
-    # CCW here (polygonizer.rs:164-169)
-    out = out.join(coords, "rid")
-    return out.select(
-        F.lit(-2).cast("int").alias("tile_i"),  # stitched marker
-        F.lit(-2).cast("int").alias("tile_j"),
-        F.col("rid").alias("poly_id"),
-        F.when(F.col("promoted"), F.reverse("xs")).otherwise(F.col("xs")).alias("shell_xs"),
-        F.when(F.col("promoted"), F.reverse("ys")).otherwise(F.col("ys")).alias("shell_ys"),
-        F.coalesce("hole_xs", F.array().cast("array<array<double>>")).alias("hole_xs"),
-        F.coalesce("hole_ys", F.array().cast("array<array<double>>")).alias("hole_ys"),
-        "n_holes",
-        F.col("net_area").alias("area"),
-        "cx",
-        "cy",
+    if strategy not in ("auto", "chain"):
+        raise ValueError(f"strategy must be auto|chain, got {strategy!r}")
+    return chain_stitched_polygonize(
+        lines_df,
+        tile_size,
+        buffer=buffer,
+        bbox=bbox,
+        snap_grid=snap_grid,
+        drop_collapsed=drop_collapsed,
+        assembly=assembly,
+        distributed_assembly_threshold=distributed_assembly_threshold,
+        max_segments_per_tile=max_segments_per_tile,
+        max_split_factor=max_split_factor,
     )

@@ -1,7 +1,7 @@
 """Probe-gated interleaved A/B of the polygonize strategies (r5,
-VERDICT r4 items 2/3/7): tiled vs level-stitch vs chain-stitch
-(distributed vs split assembly) on the calibration workloads the auto
-strategy rule must rank correctly — lattice grids (100/400, optionally
+VERDICT r4 items 2/3/7): tiled vs the chain stitch (distributed vs
+fused assembly, and the auto pick) on the calibration workloads the
+auto assembly rule must rank correctly — lattice grids (100/400, optionally
 800 via --grid800), random coarse linework, and the sparse 60k-segment
 probe from BENCH.md.
 
@@ -100,39 +100,21 @@ def main() -> None:
 
     add("grid100", "tiled", lambda: tiled_polygonize(
         g1, tile_size=25.0, buffer=1.5, bbox=bb1, drop_collapsed=True).count(), 10000)
-    add("grid100", "level", lambda: stitched_polygonize(
-        g1, tile_size=25.0, buffer=1.5, bbox=bb1, drop_collapsed=True, strategy="level").count(), 10000)
-    add("grid100", "chain_split", lambda: chain_stitched_polygonize(
-        g1, tile_size=25.0, buffer=1.5, bbox=bb1, drop_collapsed=True).count(), 10000)
     add("grid100", "chain_fused", lambda: chain_stitched_polygonize(
         g1, tile_size=25.0, buffer=1.5, bbox=bb1, drop_collapsed=True,
         assembly="fused").count(), 10000)
     add("grid400", "tiled", lambda: tiled_polygonize(
         g4, tile_size=50.0, buffer=1.5, bbox=bb4, drop_collapsed=True).count(), 160000)
-    add("grid400", "level", lambda: stitched_polygonize(
-        g4, tile_size=50.0, buffer=1.5, bbox=bb4, drop_collapsed=True, strategy="level").count(), 160000)
     add("grid400", "chain_dist", lambda: chain_stitched_polygonize(
         g4, tile_size=50.0, buffer=1.5, bbox=bb4, drop_collapsed=True,
         assembly="distributed").count(), 160000)
-    add("grid400", "chain_split", lambda: chain_stitched_polygonize(
-        g4, tile_size=50.0, buffer=1.5, bbox=bb4, drop_collapsed=True,
-        assembly="split").count(), 160000)
     add("grid400", "chain_fused", lambda: chain_stitched_polygonize(
         g4, tile_size=50.0, buffer=1.5, bbox=bb4, drop_collapsed=True,
         assembly="fused").count(), 160000)
     add("random200", "tiled", lambda: tiled_polygonize(
         r2, tile_size=50.0, buffer=10.0, bbox=bb1, drop_collapsed=True).count())
-    add("random200", "level", lambda: stitched_polygonize(
-        r2, tile_size=50.0, buffer=10.0, bbox=bb1, drop_collapsed=True, strategy="level").count())
-    add("random200", "chain_split", lambda: chain_stitched_polygonize(
-        r2, tile_size=50.0, buffer=10.0, bbox=bb1, drop_collapsed=True).count())
     add("sparse60k", "tiled", lambda: tiled_polygonize(
         sparse, tile_size=100.0, buffer=30.0, bbox=sparse_bb, drop_collapsed=True).count())
-    add("sparse60k", "level", lambda: stitched_polygonize(
-        sparse, tile_size=100.0, buffer=30.0, bbox=sparse_bb, drop_collapsed=True, strategy="level").count())
-    add("sparse60k", "chain_split", lambda: chain_stitched_polygonize(
-        sparse, tile_size=100.0, buffer=30.0, bbox=sparse_bb, drop_collapsed=True,
-        assembly="split").count())
     add("sparse60k", "chain_fused", lambda: chain_stitched_polygonize(
         sparse, tile_size=100.0, buffer=30.0, bbox=sparse_bb, drop_collapsed=True,
         assembly="fused").count())
@@ -149,11 +131,6 @@ def main() -> None:
         bb8 = (0.0, 0.0, 800.0, 800.0)
         add("grid800", "tiled", lambda: tiled_polygonize(
             g8, tile_size=100.0, buffer=1.5, bbox=bb8, drop_collapsed=True).count(), 640000)
-        add("grid800", "level", lambda: stitched_polygonize(
-            g8, tile_size=100.0, buffer=1.5, bbox=bb8, drop_collapsed=True, strategy="level").count(), 640000)
-        add("grid800", "chain_split", lambda: chain_stitched_polygonize(
-            g8, tile_size=100.0, buffer=1.5, bbox=bb8, drop_collapsed=True,
-            assembly="split").count(), 640000)
         add("grid800", "chain_fused", lambda: chain_stitched_polygonize(
             g8, tile_size=100.0, buffer=1.5, bbox=bb8, drop_collapsed=True,
             assembly="fused").count(), 640000)

@@ -1,10 +1,10 @@
-"""COLD-plan engine A/B (r5): tiled vs level(pruned) vs level(full) vs
-chain on the calibration workloads, with spark.catalog.clearCache()
-before every run.
+"""COLD-plan engine A/B (r5): tiled vs the chain stitch (explicit and
+through strategy="auto") on the calibration workloads, with
+spark.catalog.clearCache() before every run.
 
 Why: Spark's CacheManager matches persisted frames by LOGICAL PLAN, so
 re-running an identical polygonize call in one session reads every
-persisted intermediate (level outs, chain trace, rings) from cache —
+persisted intermediate (chain trace, rings) from cache —
 interleaved warm rounds measured cache reads, not the engines. A
 production coverage build is one-shot; cold is the honest number. Both
 are reported in BENCH.md, labeled.
@@ -101,14 +101,6 @@ def main() -> None:
     ENGINES = {
         "tiled": lambda ln, ts, bb: tiled_polygonize(
             ln, tile_size=ts, buffer=1.5, bbox=bb, drop_collapsed=True
-        ),
-        "level": lambda ln, ts, bb: stitched_polygonize(
-            ln, tile_size=ts, buffer=1.5, bbox=bb, strategy="level",
-            escalation="pruned", drop_collapsed=True,
-        ),
-        "level-full": lambda ln, ts, bb: stitched_polygonize(
-            ln, tile_size=ts, buffer=1.5, bbox=bb, strategy="level",
-            escalation="full", drop_collapsed=True,
         ),
         "chain": lambda ln, ts, bb: stitched_polygonize(
             ln, tile_size=ts, buffer=1.5, bbox=bb, strategy="chain",

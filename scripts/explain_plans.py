@@ -125,32 +125,7 @@ def main() -> None:
     ]
     sections.append(("pip_join (cells): narrow join, rings cross once per polygon", p, checks))
 
-    # 6. stitched polygonize: beacon-pruned lazy level chain
-    from geo_polygonize_spark.operators.stitch import stitched_polygonize
-
-    st = stitched_polygonize(
-        lines, tile_size=4.0, buffer=1.5, bbox=(0.0, 0.0, 12.0, 12.0),
-        drop_collapsed=True, assembly="distributed", max_segments_per_tile=None,
-        strategy="level",  # this section checks the LEVEL plan shape
-    )
-    p = plan_of(st)
-    n_levels = 3  # extent 12 / tile 4 → levels 4, 8, 16
-    kernel_nodes = [h for h, _ in detail_blocks(p) if h.startswith("FlatMapGroupsInPandas")]
-    checks = [
-        # each level's kernel output is persisted and consumed twice
-        # (ring union + next level's beacon pruning); explain() prints
-        # the subtree once per consumer, execution dedupes via the
-        # cache — so the plan shows ≤ 2 kernels per level and MUST show
-        # the InMemoryRelation that makes the reuse real
-        ("one trace kernel per level (≤2 plan copies via cache reuse)",
-         n_levels <= len(kernel_nodes) <= 2 * n_levels and "InMemoryRelation" in p),
-        ("beacon tile pruning is broadcast (no shuffle semi-join)",
-         "BroadcastHashJoin" in p and p.count("LeftSemi") >= n_levels - 1),
-        ("no cartesian product", "CartesianProduct" not in p),
-    ]
-    sections.append(("stitched_polygonize: beacon-pruned level chain", p, checks))
-
-    # 7. minhash LSH: shingle arrays cross only the verify join, never
+    # 6. minhash LSH: shingle arrays cross only the verify join, never
     # the band-bucket self-join
     from geo_polygonize_spark.operators.dedup import minhash_lsh_dedup
 
@@ -168,7 +143,7 @@ def main() -> None:
     ]
     sections.append(("minhash_lsh_dedup: narrow band self-join", p, checks))
 
-    # 7b. chain-stitch trace stage: segment data crosses ONE exchange
+    # 7. chain-stitch trace stage: segment data crosses ONE exchange
     # (the claiming-key repartition) into the grouped-map trace kernel;
     # chain merging later moves only chain rows
     from geo_polygonize_spark.operators.chain_stitch import (

@@ -5,7 +5,7 @@ revision> (git worktree add <dir> d5814c2); the default run writes the
 AFTER plans against /root/repo.
 
 Reading note: frames that localCheckpoint internally (the banded
-minhash frame, the chain/level ring checkpoints) appear as
+minhash frame, the chain trace checkpoint) appear as
 ``Scan ExistingRDD`` leaves in the captured plan — the upstream
 subtree (e.g. the signature mapInPandas) executed while the frame was
 constructed; the leaf IS the evidence that downstream consumers read
@@ -105,26 +105,13 @@ dump(
     "chain_stitched_grid60",
     chain_stitched_polygonize(
         lines_df(g4x, g4y), tile_size=15.0, buffer=1.5,
-        bbox=(0.0, 0.0, 60.0, 60.0), drop_collapsed=True, assembly="split",
+        bbox=(0.0, 0.0, 60.0, 60.0), drop_collapsed=True, assembly="fused",
     ),
     "fused-assembly final plan: phase-2 bypass should leave the mapInPandas "
     "fed by a pruned scan and the bulk rings on a JVM-only projection",
 )
 
-# ---- 4. level stitched (ring checkpoint + split assembly) --------------
-from geo_polygonize_spark.operators.stitch import stitched_polygonize
-
-dump(
-    "stitched_level_grid60",
-    stitched_polygonize(
-        lines_df(g4x, g4y), tile_size=15.0, buffer=1.5,
-        bbox=(0.0, 0.0, 60.0, 60.0), drop_collapsed=True, strategy="level",
-        assembly="split",
-    ),
-    "level engine final plan over the eager ring checkpoint",
-)
-
-# ---- 5. CC round plan (fused message-stream round) ---------------------
+# ---- 4. CC round plan (fused message-stream round) ---------------------
 from geo_polygonize_spark.operators.dedup import connected_keepers
 
 pairs = spark.createDataFrame(

@@ -1,20 +1,24 @@
-"""Split per-tile ring assembly (operators/assembly.py): equivalence
-with the distributed global assembly on real coverages, plus direct
-synthetic-ring probes of the rare protocol paths (deferred on-gridline
-visitors, local-shell winner patches, the global-residue fallback
-gate)."""
+"""Ring assembly (operators/assembly.py): equivalence of the local,
+fused and distributed finishes on real coverages, plus direct
+synthetic-ring probes of the fused assembly's rare protocol paths
+(on-gridline visitors, core-shell winner patches, the merged-residue
+fallback gate)."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import functions as F
 
-from geo_polygonize_spark.operators.assembly import assemble_rings_split
-from geo_polygonize_spark.operators.chain_stitch import chain_stitched_polygonize
-from geo_polygonize_spark.operators.polygonize_op import polygonize
-from geo_polygonize_spark.operators.stitch import (
+from geo_polygonize_spark.operators.assembly import (
     assemble_rings_distributed,
-    stitched_polygonize,
+    assemble_rings_fused,
 )
+from geo_polygonize_spark.operators.chain_stitch import (
+    CHAIN_SCHEMA,
+    RING_SCHEMA,
+    chain_stitched_polygonize,
+)
+from geo_polygonize_spark.operators.polygonize_op import polygonize
+from geo_polygonize_spark.operators.stitch import stitched_polygonize
 from geo_polygonize_spark.sources.fixtures import fixture, grid_lines, random_lines
 
 from .conftest import lines_to_df
@@ -40,26 +44,20 @@ def canon(rows):
     return sorted(out)
 
 
-RING_FIELDS = (
-    "rid long, xs array<double>, ys array<double>, area double, "
-    "bx1 double, by1 double, bx2 double, by2 double, cx double, cy double"
-)
-
-
-def ring_row(rid, x1, y1, x2, y2, cw=False, cx=None, cy=None):
-    """Closed axis-aligned rectangle ring row. ``cx``/``cy`` override
-    the centroid — the assembly trusts ring-stat columns, so synthetic
-    centroids let tests steer routing/PIP deterministically (a concave
-    ring's true centroid can sit anywhere inside its bbox, including
-    inside an unrelated shell — this emulates that without drawing the
-    concave geometry)."""
+def ring_row(x1, y1, x2, y2, cw=False, cx=None, cy=None):
+    """Closed axis-aligned rectangle ring as a RING_SCHEMA row.
+    ``cx``/``cy`` override the centroid — the assembly trusts ring-stat
+    columns, so synthetic centroids let tests steer routing/PIP
+    deterministically (a concave ring's true centroid can sit anywhere
+    inside its bbox, including inside an unrelated shell — this
+    emulates that without drawing the concave geometry)."""
     xs = [x1, x2, x2, x1, x1]
     ys = [y1, y1, y2, y2, y1]
     if cw:
         xs, ys = xs[::-1], ys[::-1]
     area = (x2 - x1) * (y2 - y1) * (-1.0 if cw else 1.0)
     return (
-        rid, [float(v) for v in xs], [float(v) for v in ys], float(area),
+        [float(v) for v in xs], [float(v) for v in ys], float(area),
         float(x1), float(y1), float(x2), float(y2),
         float((x1 + x2) / 2 if cx is None else cx),
         float((y1 + y2) / 2 if cy is None else cy),
@@ -82,13 +80,13 @@ class TestSplitEquivalence:
             b = canon(
                 chain_stitched_polygonize(
                     df, tile_size=5.0, bbox=bbox, drop_collapsed=dc,
-                    assembly="split",
+                    assembly="fused",
                 ).collect()
             )
             c = canon(
                 stitched_polygonize(
                     df, tile_size=5.0, bbox=bbox, drop_collapsed=dc,
-                    assembly="split",
+                    assembly="local",
                 ).collect()
             )
             assert a == b == c
@@ -97,28 +95,25 @@ class TestSplitEquivalence:
         xs, ys = random_lines(60)
         df = lines_to_df(spark, xs, ys)
         bbox = (0.0, 0.0, 100.0, 100.0)
-        a = canon(
-            chain_stitched_polygonize(
-                df, tile_size=25.0, buffer=10.0, bbox=bbox,
-                drop_collapsed=True, assembly="distributed",
-            ).collect()
+        a, b, c = (
+            canon(
+                chain_stitched_polygonize(
+                    df, tile_size=25.0, buffer=10.0, bbox=bbox,
+                    drop_collapsed=True, assembly=mode,
+                ).collect()
+            )
+            for mode in ("distributed", "fused", "local")
         )
-        b = canon(
-            chain_stitched_polygonize(
-                df, tile_size=25.0, buffer=10.0, bbox=bbox,
-                drop_collapsed=True, assembly="split",
-            ).collect()
-        )
-        assert a == b
+        assert a == b == c
 
     def test_nested_holes_vs_global(self, spark):
         """Cross-tile shells (100/60/20 rings vs tile 10) land in the
-        global residue and must still assign their holes exactly."""
+        merged residue and must still assign their holes exactly."""
         xs, ys, node, snap = fixture("nested_holes")
         df = lines_to_df(spark, xs, ys)
         got = chain_stitched_polygonize(
             df, tile_size=10.0, buffer=2.0, bbox=(0.0, 0.0, 100.0, 100.0),
-            assembly="split",
+            assembly="fused",
         ).collect()
         want = polygonize(df, node_input=node, snap_grid=snap).collect()
         assert keyset(got) == keyset(want)
@@ -126,18 +121,18 @@ class TestSplitEquivalence:
 
 class TestAutoStrategy:
     def test_auto_matches_global_both_regimes(self, spark):
-        """r5 (VERDICT r4 item 3): strategy='auto' keys on the presplit
-        trigger ((l_max/tile)² ≥ 32 → level, else chain) and stays
-        exact in both regimes."""
+        """strategy='auto' runs the chain engine and stays exact on both
+        sides of its long-segment presplit trigger
+        ((l_max/tile)² ≥ 32 → presplit first)."""
         n = 24
         xs, ys = grid_lines(n)
         df = lines_to_df(spark, xs, ys)
         bb = (0.0, 0.0, float(n), float(n))
         want = keyset(polygonize(df, node_input=True, drop_collapsed=True).collect())
-        # tile 8 → (24/8)² = 9 < 32 → chain regime
+        # tile 8 → (24/8)² = 9 < 32 → no presplit
         a = stitched_polygonize(df, tile_size=8.0, bbox=bb, drop_collapsed=True)
         assert keyset(a.collect()) == want
-        # tile 4 → (24/4)² = 36 ≥ 32 → level regime
+        # tile 4 → (24/4)² = 36 ≥ 32 → presplit
         b = stitched_polygonize(df, tile_size=4.0, bbox=bb, drop_collapsed=True)
         assert keyset(b.collect()) == want
 
@@ -145,134 +140,146 @@ class TestAutoStrategy:
         xs, ys = grid_lines(8)
         df = lines_to_df(spark, xs, ys)
         bb = (0.0, 0.0, 8.0, 8.0)
-        for strat in ("level", "chain", "auto"):
+        for strat in ("chain", "auto"):
             got = stitched_polygonize(
                 df, tile_size=4.0, bbox=bb, drop_collapsed=True, strategy=strat
             ).count()
             assert got == 64
-        with pytest.raises(ValueError, match="strategy"):
-            stitched_polygonize(df, tile_size=4.0, bbox=bb, strategy="bogus").count()
+        for strat in ("bogus", "level"):
+            with pytest.raises(ValueError, match="strategy"):
+                stitched_polygonize(df, tile_size=4.0, bbox=bb, strategy=strat).count()
+
+
+def _claim_core(x, y, ts, cols, rows):
+    """The chain kernel's clipped half-open claiming core of a vertex."""
+    return (
+        min(max(int(np.floor(x / ts)), 0), cols - 1),
+        min(max(int(np.floor(y / ts)), 0), rows - 1),
+    )
 
 
 class TestSplitProtocol:
-    """Direct probes of assemble_rings_split over synthetic ring rows —
-    the ground truth is assemble_rings_distributed on the SAME rows."""
+    """Direct probes of assemble_rings_fused over synthetic rings, split
+    the way the chain engine splits them: a ring whose vertices all lie
+    in one claiming core is a kind-0 trace row, every other ring is a
+    merged (chain-closed) ring. The ground truth is
+    assemble_rings_distributed on the SAME rings."""
 
-    def _both(self, spark, rows, ts, drop_collapsed=False):
-        rings = spark.createDataFrame(rows, RING_FIELDS).persist()
-        split = canon(
-            assemble_rings_split(
-                rings, 0.0, 0.0, ts, drop_collapsed=drop_collapsed
+    def _both(self, spark, rows, ts, drop_collapsed=False, **fused_kw):
+        ext = max(max(r[5], r[6]) for r in rows)
+        cols = rows_n = max(int(np.ceil(ext / ts)), 1)
+        core, merged = [], []
+        for r in rows:
+            cores = {_claim_core(x, y, ts, cols, rows_n) for x, y in zip(r[0], r[1])}
+            (core if len(cores) == 1 else merged).append(r)
+        # one partition: the trace output's partitions hold whole claim
+        # groups, which a round-robin createDataFrame would not
+        trace = spark.createDataFrame(
+            [(0, r[0], r[1], 0, 0) + r[2:] for r in core], CHAIN_SCHEMA
+        ).coalesce(1)
+        mdf = spark.createDataFrame(merged, RING_SCHEMA) if merged else None
+        fused = canon(
+            assemble_rings_fused(
+                trace, mdf, 0.0, 0.0, ts, cols, rows_n, {},
+                drop_collapsed=drop_collapsed, **fused_kw,
             ).collect()
+        )
+        rings = spark.createDataFrame(rows, RING_SCHEMA).withColumn(
+            "rid", F.xxhash64("xs", "ys")
         )
         dist = canon(
-            assemble_rings_distributed(
-                rings, drop_collapsed=drop_collapsed
-            ).collect()
+            assemble_rings_distributed(rings, drop_collapsed=drop_collapsed).collect()
         )
-        rings.unpersist()
-        return split, dist
+        return fused, dist, len(core), len(merged)
 
     def test_deferred_on_gridline_visitor(self, spark):
-        """A CW hole straddling the x=10 gridline with centroid exactly
-        ON it is routed to both touching tiles and resolved by the
-        finish min — winner is the enclosing global shell."""
+        """A merged CW hole straddling the x=10 gridline with centroid
+        exactly ON it probes both touching cores and is resolved by the
+        finish min — winner is the enclosing merged shell."""
         rows = [
-            ring_row(1, 0, 0, 20, 12),             # global shell (spans tiles)
-            ring_row(2, 9, 4, 11, 6, cw=True),     # hole, centroid (10.0, 5.0)
-            ring_row(3, 1, 1, 5, 5),               # unrelated local shell
+            ring_row(0, 0, 20, 12),             # merged shell (spans cores)
+            ring_row(9, 4, 11, 6, cw=True),     # merged hole, centroid (10, 5)
+            ring_row(1, 1, 5, 5),               # unrelated core shell
         ]
-        assert rows[1][8] == 10.0  # centroid IS on the ts=10 gridline
-        split, dist = self._both(spark, rows, 10.0)
-        assert split == dist
-        by_holes = {r[1]: r for r in split}
+        assert rows[1][7] == 10.0  # centroid IS on the ts=10 gridline
+        fused, dist, n_core, n_merged = self._both(spark, rows, 10.0)
+        assert (n_core, n_merged) == (1, 2)
+        assert fused == dist
+        by_holes = {r[1]: r for r in fused}
         assert by_holes[1][0] == pytest.approx(240.0 - 4.0)  # hole assigned
 
     def test_local_shell_wins_visitor_hole(self, spark):
-        """Concave-emulating case: a global-class CW ring whose centroid
-        lies inside a LOCAL shell strictly smaller than the global
-        container — the local shell must win and the already-emitted
-        per-tile polygon is patched."""
+        """Concave-emulating case: a merged CW ring whose centroid lies
+        inside a CORE shell strictly smaller than the merged container
+        — the core shell must win and its already-emitted polygon is
+        patched."""
         rows = [
-            ring_row(1, 0, 0, 24, 24),                      # global shell, 576
-            ring_row(2, 2, 2, 8, 8),                        # local shell, 36
+            ring_row(0, 0, 24, 24),                      # merged shell, 576
+            ring_row(2, 2, 8, 8),                        # core shell, 36
             # CW ring crossing x=10 but with (synthetic, concave-style)
-            # centroid (5,5) inside local shell 2
-            ring_row(3, 9, 20, 12, 22, cw=True, cx=5.0, cy=5.0),
+            # centroid (5,5) inside core shell 2
+            ring_row(9, 20, 12, 22, cw=True, cx=5.0, cy=5.0),
         ]
-        split, dist = self._both(spark, rows, 10.0)
-        assert split == dist
-        patched = [r for r in split if r[0] == pytest.approx(36.0 - 6.0)]
+        fused, dist, n_core, n_merged = self._both(spark, rows, 10.0)
+        assert (n_core, n_merged) == (1, 2)
+        assert fused == dist
+        patched = [r for r in fused if r[0] == pytest.approx(36.0 - 6.0)]
         assert len(patched) == 1 and patched[0][1] == 1  # shell 2 got it
 
     def test_promoted_ring_is_also_a_hole(self, spark):
         """A CW ring with no CCW twin is promoted to a shell AND still
         absorbed as a hole by its smallest strictly-larger container
-        (how a filled grid's hull nets to zero)."""
+        (how a filled grid's hull nets to zero) — both for a core ring
+        (member promotion in the kernel) and a merged ring (driver-side
+        promotion, visitor hole)."""
         rows = [
-            ring_row(1, 0, 0, 30, 30),              # big shell
-            ring_row(2, 2, 2, 6, 6, cw=True),       # twinless CW: promoted + hole
+            ring_row(0, 0, 30, 30),              # big merged shell
+            ring_row(2, 2, 6, 6, cw=True),       # twinless core CW
+            ring_row(17, 3, 21, 7, cw=True),     # twinless merged CW
         ]
         for dc in (False, True):
-            split, dist = self._both(spark, rows, 10.0, drop_collapsed=dc)
-            assert split == dist
-        split, _ = self._both(spark, rows, 10.0)
-        areas = sorted(r[0] for r in split)
-        assert areas == [pytest.approx(16.0), pytest.approx(900.0 - 16.0)]
+            fused, dist, n_core, n_merged = self._both(
+                spark, rows, 10.0, drop_collapsed=dc
+            )
+            assert (n_core, n_merged) == (1, 2)
+            assert fused == dist
+        fused, _, _, _ = self._both(spark, rows, 10.0)
+        areas = sorted(r[0] for r in fused)
+        assert areas == [
+            pytest.approx(16.0), pytest.approx(16.0), pytest.approx(900.0 - 32.0)
+        ]
 
     def test_tile_edge_touching_rings_stay_local(self, spark):
-        """Closure-fitting classification: rings whose bbox TOUCHES a
-        gridline are still local (the lattice fast path); only true
-        crossers go global. Checked indirectly: results exact on an
-        aligned grid where every tile-edge cell touches."""
-        rows = [ring_row(i * 100 + j, i * 5, j * 5, i * 5 + 5, j * 5 + 5)
+        """Rings on an aligned lattice touch core edges: cells whose
+        vertices sit on their core's lower-left edges (or the clipped
+        outer edge) stay core rings, cells touching an inner upper edge
+        close through the merge. Both kinds plus the merged hull must
+        assemble exactly."""
+        rows = [ring_row(i * 5, j * 5, i * 5 + 5, j * 5 + 5)
                 for i in range(4) for j in range(4)]
-        rows.append(ring_row(99999, 0, 0, 20, 20, cw=True))  # hull
-        split, dist = self._both(spark, rows, 10.0, drop_collapsed=True)
-        assert split == dist
+        rows.append(ring_row(0, 0, 20, 20, cw=True))  # hull
+        fused, dist, n_core, n_merged = self._both(
+            spark, rows, 10.0, drop_collapsed=True
+        )
+        assert (n_core, n_merged) == (9, 8)
+        assert fused == dist
         # 16 CCW cells + the promoted hull (CCW cells are shells, not
         # holes — nothing absorbs into the hull in this construction,
         # so its net stays 400 and it survives drop_collapsed)
-        assert len(split) == 17
+        assert len(fused) == 17
 
     def test_fallback_gate_delegates_to_distributed(self, spark):
-        """Above the global-residue gate the split path must hand the
-        WHOLE set to the distributed assembly, losslessly."""
+        """Above the merged-residue gate the fused path must hand the
+        WHOLE ring set (core + merged) to the distributed assembly,
+        losslessly."""
         rows = [
-            ring_row(1, 0, 0, 20, 12),
-            ring_row(2, 9, 4, 11, 6, cw=True),
+            ring_row(0, 0, 20, 12),
+            ring_row(9, 4, 11, 6, cw=True),
+            ring_row(1, 1, 5, 5),
+            ring_row(2, 2, 3, 3, cw=True),
         ]
-        rings = spark.createDataFrame(rows, RING_FIELDS)
-        a = canon(
-            assemble_rings_split(
-                rings, 0.0, 0.0, 10.0, global_rows_gate=0
-            ).collect()
+        fused, dist, n_core, n_merged = self._both(
+            spark, rows, 10.0, global_rows_gate=0
         )
-        b = canon(assemble_rings_distributed(rings).collect())
-        assert a == b
-
-
-class TestIdFilter:
-    def test_large_list_semi_join_equals_isin(self, spark):
-        """_id_filter (r5): above 512 ids the literal isin is replaced
-        by a broadcast semi-join — the results must be identical, and
-        the small-list path must keep using the literal expression."""
-        from geo_polygonize_spark.operators.assembly import _id_filter
-
-        df = spark.range(0, 5000).select(F.col("id").alias("cand_rid"))
-        big = [int(v) for v in range(0, 5000, 3)]  # 1667 ids > 512
-        small = big[:100]
-        got_big = sorted(
-            r["cand_rid"] for r in _id_filter(spark, df, "cand_rid", big).collect()
-        )
-        assert got_big == sorted(set(big))
-        got_small = sorted(
-            r["cand_rid"]
-            for r in _id_filter(spark, df, "cand_rid", small).collect()
-        )
-        assert got_small == sorted(set(small))
-        # ids absent from the frame simply don't match
-        got_miss = _id_filter(
-            spark, df, "cand_rid", [999999 + i for i in range(600)]
-        ).count()
-        assert got_miss == 0
+        assert (n_core, n_merged) == (2, 2)
+        assert fused == dist

@@ -1,6 +1,6 @@
 """Boundary-chain stitched polygonize (operators/chain_stitch.py):
-equivalence with the global single-group polygonize on the same
-fixtures as the level-chain stitch, plus chain-specific edge cases
+equivalence with the global single-group polygonize, plus
+chain-specific edge cases
 (rings decomposed across many tiles, cross-tile dangles/spurs)."""
 
 import numpy as np
@@ -28,8 +28,7 @@ def test_chain_equals_global_on_grid(spark):
 
 def test_chain_recovers_big_polygons(spark):
     """nested_holes rings (100/60/20) vs tile 10: every big ring spans
-    many tiles and must reassemble from boundary chains — the case the
-    level design pays escalation for."""
+    many tiles and must reassemble from boundary chains."""
     xs, ys, node, snap = fixture("nested_holes")
     df = lines_to_df(spark, xs, ys)
     bbox = (0.0, 0.0, 100.0, 100.0)
@@ -161,7 +160,7 @@ def test_chain_with_skew_subsplit_equals_global(spark):
     """Hot-tile f×f claiming sub-split (tiny max_segments_per_tile):
     chains now also cross SUB-cell boundaries and must merge exactly —
     in the chain protocol sub-splitting is only a finer claiming
-    partition, with no escalation machinery."""
+    partition."""
     n = 10
     xs, ys = grid_lines(n)
     df = lines_to_df(spark, xs, ys)
@@ -202,11 +201,10 @@ def test_chain_subsplit_big_rings_and_dangles(spark):
     assert sorted(round(r["area"], 6) for r in got) == [0.0, 400.0, 3200.0, 6400.0]
 
 
-def test_chain_fused_trace_assembly_equals_global(spark):
-    """assembly="fused" (r5 in-trace assembly): polygons are assembled
-    inside the trace kernel and only narrow rows reach the finish.
-    Covers merged shells adopting unparented holes (nested_holes) and
-    a plain lattice with no merged residue at all."""
+def test_chain_fused_assembly_equals_global(spark):
+    """assembly="fused" (per-core assembly over the trace output):
+    covers merged shells adopting holes that have no core parent
+    (nested_holes) and a plain lattice with no merged residue at all."""
     xs, ys, node, snap = fixture("nested_holes")
     df = lines_to_df(spark, xs, ys)
     got = chain_stitched_polygonize(
@@ -230,10 +228,10 @@ def test_chain_fused_trace_assembly_equals_global(spark):
 
 
 def test_chain_fused_visitor_routing(spark):
-    """Mixed scales under the fused trace: the net-zero promoted hull
-    is a merged shell that must adopt the 64 one-cell CW holes through
-    the narrow kind-2 adopt route, and the giant merged ring must stay
-    hole-free."""
+    """Mixed scales under the fused assembly: the net-zero promoted
+    hull is a merged shell that must adopt the 64 one-cell CW holes,
+    from core tasks and merged visitors alike, and the giant merged
+    ring must stay hole-free."""
     n = 8
     gx, gy = grid_lines(n)
     gx = [x + 20.0 for x in gx]
@@ -259,9 +257,9 @@ def test_chain_fused_visitor_routing(spark):
 
 
 def test_chain_fused_subsplit_and_dist_merge(spark):
-    """Fused trace under forced f×f claiming sub-splits AND the forced
-    distributed chain merge: both alternate code paths feed the same
-    fused finish."""
+    """Fused assembly under forced f×f claiming sub-splits (no
+    bypass: the full Python pass) AND the forced distributed chain
+    merge: both alternate code paths feed the same fused finish."""
     xs, ys, node, snap = fixture("nested_holes")
     xs = xs + [[50.0, 120.0]]
     ys = ys + [[50.0, 50.0]]
@@ -280,20 +278,27 @@ def test_chain_fused_subsplit_and_dist_merge(spark):
 
 
 def test_chain_fused_gate_fallback(spark, monkeypatch):
-    """When the merged residue trips the fused finish's collection
-    gates it returns None and the engine must fall back to the
-    lossless distributed assembly with identical results."""
+    """When the merged residue trips the fused assembly's collection
+    gates it must hand the whole ring set to the lossless distributed
+    assembly, with identical results."""
     from geo_polygonize_spark.operators import assembly as asm
+    from geo_polygonize_spark.operators import chain_stitch
 
-    real = asm.assemble_rings_fused_trace
+    real_fused = asm.assemble_rings_fused
+    real_dist = asm.assemble_rings_distributed
     calls = []
 
     def gated(*a, **kw):
-        calls.append(1)
+        calls.append("fused")
         kw["global_rows_gate"] = 0  # any merged residue trips the gate
-        return real(*a, **kw)
+        return real_fused(*a, **kw)
 
-    monkeypatch.setattr(asm, "assemble_rings_fused_trace", gated)
+    def dist(*a, **kw):
+        calls.append("distributed")
+        return real_dist(*a, **kw)
+
+    monkeypatch.setattr(chain_stitch, "assemble_rings_fused", gated)
+    monkeypatch.setattr(asm, "assemble_rings_distributed", dist)
     xs, ys, node, snap = fixture("nested_holes")
     df = lines_to_df(spark, xs, ys)
     got = chain_stitched_polygonize(
@@ -302,12 +307,13 @@ def test_chain_fused_gate_fallback(spark, monkeypatch):
     ).collect()
     want = polygonize(df, node_input=node, snap_grid=snap).collect()
     assert keyset(got) == keyset(want)
-    assert calls  # the gated finish ran (and returned None internally)
+    assert calls == ["fused", "distributed"]
 
 
 def test_stitched_strategy_chain_dispatch(spark):
     """stitched_polygonize(strategy="chain") delegates to the chain
-    engine and matches the level strategy exactly."""
+    engine and matches the default strategy exactly; retired
+    selections are rejected."""
     import pytest
 
     from geo_polygonize_spark.operators.stitch import stitched_polygonize
@@ -324,3 +330,7 @@ def test_stitched_strategy_chain_dispatch(spark):
     assert keyset(got) == keyset(want) and len(got) == 64
     with pytest.raises(ValueError, match="strategy must be"):
         stitched_polygonize(df, tile_size=3.0, strategy="nope")
+    with pytest.raises(ValueError, match="assembly must be"):
+        stitched_polygonize(df, tile_size=3.0, assembly="split")
+    with pytest.raises(TypeError, match="escalation"):
+        stitched_polygonize(df, tile_size=3.0, escalation="pruned")

@@ -1,6 +1,6 @@
 """Property-based cross-checks (hypothesis): on arbitrary random
 linework the three execution paths — single-group polygonize, tiled
-(buffer large enough), and multi-level stitched — must produce the
+(buffer large enough), and stitched — must produce the
 same polygon multiset; and the kernel must match a brute-force
 shapely-free oracle for areas (Euler check: faces partition the
 covered area)."""
@@ -99,9 +99,9 @@ def test_three_paths_agree(spark, seed):
 
 @pytest.mark.parametrize("seed", [5, 23])
 def test_stitched_skew_split_agrees_with_global(spark, seed):
-    """Random linework with FORCED level-0 sub-splits: beacon
-    escalation across sub-windows must still reproduce the global
-    polygonize exactly."""
+    """Random linework with FORCED hot-tile sub-splits: chains crossing
+    claiming sub-cells must still reproduce the global polygonize
+    exactly."""
     from geo_polygonize_spark.operators.polygonize_op import polygonize
     from geo_polygonize_spark.operators.stitch import stitched_polygonize
 

@@ -1,4 +1,4 @@
-"""Multi-level stitched polygonize: exactness where plain tiling
+"""Stitched polygonize: exactness where plain tiling
 fails (polygons larger than tile+buffer) and equivalence elsewhere."""
 
 import numpy as np
@@ -62,9 +62,9 @@ def test_stitched_equals_global_on_random(spark):
 
 
 def test_stitched_mixed_scales(spark):
-    # a giant ring enclosing a small grid: the giant ring only fits at
-    # the top level while grid cells emit at level 0; the giant shell
-    # must receive the grid's outer CW ring as a hole via the
+    # a giant ring enclosing a small grid: the giant ring closes only
+    # through the chain merge while grid cells close inside their tile
+    # cores; the giant shell must receive the grid's outer CW ring as a hole via the
     # distributed assignment
     n = 8
     gx, gy = grid_lines(n)
@@ -87,9 +87,9 @@ def test_stitched_mixed_scales(spark):
 
 
 def test_stitched_with_skew_subsplit_equals_global(spark):
-    """Force per-level hot-tile sub-splits (tiny max_segments_per_tile):
-    rings that fit a tile but not its sub-window must escalate a level
-    via beacons and still come out exactly once."""
+    """Force hot-tile sub-splits (tiny max_segments_per_tile): rings
+    that fit a tile but not its claiming sub-cell must close through
+    the chain merge and still come out exactly once."""
     n = 10
     xs, ys = grid_lines(n)
     df = lines_to_df(spark, xs, ys)
@@ -109,8 +109,8 @@ def test_stitched_with_skew_subsplit_equals_global(spark):
 
 
 def test_stitched_subsplit_recovers_big_polygons(spark):
-    # sub-splits + beacons + big rings together: the nested_holes rings
-    # cannot fit any level-0 sub-window, so every one escalates
+    # sub-splits + big rings together: the nested_holes rings cannot
+    # fit any claiming sub-cell, so every one closes through the merge
     xs, ys, node, snap = fixture("nested_holes")
     df = lines_to_df(spark, xs, ys)
     got = stitched_polygonize(
@@ -148,7 +148,7 @@ def test_cross_engine_equivalence_random(spark, seed):
     caught the r5 bbox-overhang bug, promoted from scripts/cold_ab.py
     into CI. Random linework with a randomized segment-length regime
     and bbox overhang (the r5 bug's trigger class); single-group ground
-    truth vs level(pruned)/chain/auto on value-level canonical keys,
+    truth vs chain/auto on value-level canonical keys,
     and tiled's deficit must consist ONLY of polygons its owner-tile
     buffered window provably cannot produce (the documented
     bounded-window contract, reference src/tiling.rs:66-106)."""
@@ -171,11 +171,7 @@ def test_cross_engine_equivalence_random(spark, seed):
     want = keyset(want_rows)
     assert want, "degenerate fixture: ground truth produced no polygons"
 
-    for kwargs in (
-        {"strategy": "level", "escalation": "pruned"},
-        {"strategy": "chain"},
-        {"strategy": "auto"},
-    ):
+    for kwargs in ({"strategy": "chain"}, {"strategy": "auto"}):
         got = stitched_polygonize(
             df, tile_size=ts_, buffer=buf, bbox=bbox, drop_collapsed=True, **kwargs
         ).collect()
@@ -234,13 +230,9 @@ def test_stitched_dangle_only_input(spark):
 def test_stitched_exact_when_input_overhangs_bbox(spark):
     """Segments extending past the DECLARED bbox (stale bbox metadata,
     the production hazard at catalog scale) — every stitched engine
-    must still match the global single-group result exactly. Pre-r5
-    the level engine silently dropped every polygon whose centroid or
-    bbox fell outside the declared bbox: out-of-grid owner tiles were
-    clamped away, the top-level window only covered bbox+buffer, and
-    segments wholly outside the bbox belonged to no tile core so the
-    pruned escalation clipped their linework (sparse-60k A/B: 249 of
-    195,518 polygons missing, in both escalation modes)."""
+    must still match the global single-group result exactly: segments
+    wholly outside the bbox clamp into the edge tiles, whose claiming
+    cores extend unbounded outward."""
     rng = np.random.default_rng(7)
     nl = 3000
     pts = rng.uniform(0, 200.0, size=(nl, 2))
@@ -255,38 +247,9 @@ def test_stitched_exact_when_input_overhangs_bbox(spark):
     assert any(
         r["cx"] < 0 or r["cy"] < 0 or r["cx"] > 200 or r["cy"] > 200 for r in want
     )
-    for kwargs in (
-        {"strategy": "level", "escalation": "pruned"},
-        {"strategy": "level", "escalation": "full"},
-        {"strategy": "chain"},
-    ):
+    for kwargs in ({"strategy": "chain"}, {"strategy": "auto"}):
         got = stitched_polygonize(
             df, tile_size=20.0, buffer=1.5, bbox=bbox, drop_collapsed=True, **kwargs
         ).collect()
         assert keyset(got) == keyset(want), kwargs
 
-
-def test_level_ladder_jump_emits_skipped_rung_rings(spark):
-    """r6 ladder compression (stitch.py escalates 0 -> 1 -> final): a
-    ring whose bbox fits ONLY an intermediate rung's window (here the
-    old level-2 grid, which the compressed ladder never runs) must
-    still be emitted exactly once — at the final rung, because the
-    minimal-level skip tests the PREDECESSOR RUNG (level 1), not ts/2.
-    A ts/2 regression would skip it as "already emitted" and lose it."""
-    # bbox 64, tile 4 -> n_levels=5, ladder [0, 1, 4]
-    n = 16  # 4-unit cells on [0,64]
-    gx, gy = grid_lines(n)
-    gx = [x * 4.0 for x in gx]
-    gy = [y * 4.0 for y in gy]
-    # square of side 12 at (21,21)-(33,33): fits its level-2 owner
-    # window ([14.5, 33.5] at buffer 1.5) but no level-0/1 window
-    sqx = np.array([21.0, 33.0, 33.0, 21.0, 21.0])
-    sqy = np.array([21.0, 21.0, 33.0, 33.0, 21.0])
-    df = lines_to_df(spark, gx + [sqx], gy + [sqy])
-    bbox = (0.0, 0.0, 64.0, 64.0)
-    want = polygonize(df, node_input=True, drop_collapsed=True).collect()
-    got = stitched_polygonize(
-        df, tile_size=4.0, buffer=1.5, bbox=bbox, drop_collapsed=True,
-        strategy="level",
-    ).collect()
-    assert keyset(got) == keyset(want)
