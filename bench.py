@@ -8,7 +8,7 @@ BENCHMARKS.md) and a few oracle-checked operator analogs on the
 TPC-H-ish tables.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: the cores this process may run on).
 """
 
 from __future__ import annotations
@@ -69,6 +69,11 @@ def _probe_gate() -> tuple[float, list[float], bool]:
     return history[-1], history, history[-1] > limit
 
 
+def _mem_total_mb() -> int:
+    with open("/proc/meminfo") as fh:
+        return next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:")) // 1024
+
+
 _RUNS_LOG = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "bench_runs.jsonl"
 )
@@ -79,7 +84,9 @@ def _consolidate(result: dict) -> dict:
     emitted by bench.py itself instead of hand-built after the fact.
     Every run appends its full result to bench_runs.jsonl; each emitted
     JSON carries the best wall per query across all logged runs at the
-    same (sf, cpus), stamped with the probe value CLOSEST IN TIME to
+    same (sf, cpus, MemTotal) — the host key, so rows of a different
+    machine never merge (rows logged before the key carried MemTotal
+    match nothing) — stamped with the probe value CLOSEST IN TIME to
     that query in the run that achieved it — so a fast number recorded
     in a throttled session and a slow number from a healthy one are
     distinguishable at a glance."""
@@ -91,7 +98,7 @@ def _consolidate(result: dict) -> dict:
                     r = json.loads(line)
                 except json.JSONDecodeError:
                     continue
-                if r.get("sf") == result["sf"] and r.get("cpus") == result["cpus"]:
+                if all(r.get(k) == result[k] for k in ("sf", "cpus", "mem_total_mb")):
                     runs.append(r)
     best: dict[str, dict] = {}
     for r in runs:
@@ -104,7 +111,7 @@ def _consolidate(result: dict) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
     sf = float(sf_dir.rstrip("/").split("sf")[-1])
 
     host_probe, probe_history, host_throttled = _probe_gate()
@@ -425,6 +432,7 @@ def main() -> None:
         "steal_at_query": steal_at_query,
         "sf": sf,
         "cpus": cpus,
+        "mem_total_mb": _mem_total_mb(),
         "n_images": n_images,
         "n_pipeline_rows": n_out,
         "dedup_docs_per_sec": docs_per_sec,

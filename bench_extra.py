@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from geo_polygonize_spark.plans import build_session
 from geo_polygonize_spark.sources.fixtures import grid_lines, random_lines
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 spark = build_session("bench_extra", cores=CPUS, shuffle_partitions=max(CPUS, 8))

@@ -6,16 +6,32 @@ single-process library; a crash restarts from scratch). Design:
 * work unit = one (sub-)tile group of the tiled polygonize;
 * polygons append under ``<dir>/polygons/run_id=<id>``; one metrics
   row per completed tile appends to ``<dir>/metrics``:
-  ``(tile key, fingerprint, n_segments, n_polys, run_id,
-  completed_at)``. Fingerprint = commutative sum of per-segment
-  xxhash64 → lineage records *what input* the tile was computed from.
+  ``(tile key, n_segments, fingerprint, n_polys, run_id,
+  completed_at)``. Fingerprint = bit_xor of per-segment xxhash64 →
+  lineage records *what input* the tile was computed from.
 * metrics commit AFTER polygons, so a crash mid-run leaves orphan
   polygon files but no metrics row — the resume recomputes the tile
   and the read path ignores orphans (it only admits polygons whose
   (tile key, run_id) is the tile's LATEST committed metrics row).
-* resume = anti-join of the current assignment's (tile key,
-  fingerprint) against committed metrics — unchanged tiles skip,
+* resume = compare the current assignment's (tile key, n_segments,
+  fingerprint) with the latest committed rows — unchanged tiles skip,
   changed/missing tiles recompute. Idempotent end to end.
+
+Job shape of one call. The tile-assigned segments are persisted once
+and feed both the per-tile metrics and the kernel. Two small frames
+come back to the driver, one row per (sub-)tile each: the current
+metrics and the store's latest committed rows. The driver decides what
+is pending and what is stale, so no ``limit`` probe runs. Then, only
+if something is pending, the kernel writes the polygons and a scan of
+the new run directory counts them; when only some tiles are pending, a
+semi-join with the broadcast pending keys selects their segments. Then
+the metrics and tombstone rows are appended in one write. These rows
+are data (``createDataFrame``); ``run_id`` and ``completed_at`` never
+become literals in a plan. Every read of the store passes its schema,
+so no schema-inference job runs.
+A call over an unchanged store therefore writes nothing, and it
+compiles no new code after its first run in the JVM (README,
+"Deployment notes").
 """
 
 from __future__ import annotations
@@ -24,13 +40,32 @@ import time
 import uuid
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from .operators.polygonize_op import (
     POLYGON_SCHEMA,
     TILE_KEY,
     prepare_assigned,
     prepare_tiled,
+)
+
+KEY_SCHEMA = T.StructType([T.StructField(c, T.IntegerType()) for c in TILE_KEY])
+METRICS_SCHEMA = T.StructType(
+    KEY_SCHEMA.fields
+    + [
+        T.StructField("n_segments", T.LongType()),
+        T.StructField("fingerprint", T.LongType()),
+        T.StructField("n_polys", T.LongType()),
+        T.StructField("run_id", T.StringType()),
+        T.StructField("completed_at", T.DoubleType()),
+    ]
+)
+# polygon rows carry the FULL sub-tile group key so resume admission is
+# exact even when a single sub-tile recomputes; run_id is the partition
+# directory
+POLYGONS_SCHEMA = T.StructType(POLYGON_SCHEMA.fields + KEY_SCHEMA.fields[2:])
+STORE_POLYGONS_SCHEMA = T.StructType(
+    POLYGONS_SCHEMA.fields + [T.StructField("run_id", T.StringType())]
 )
 
 
@@ -46,7 +81,7 @@ def _tile_metrics(assigned: DataFrame) -> DataFrame:
 
 def _latest_metrics(spark: SparkSession, metrics_path: str) -> DataFrame | None:
     try:
-        m = spark.read.parquet(metrics_path)
+        m = spark.read.schema(METRICS_SCHEMA).parquet(metrics_path)
     except AnalysisException as e:
         # absent metrics dir = never-checkpointed store (fresh run);
         # other failures must surface (same rationale as the polygons
@@ -56,6 +91,13 @@ def _latest_metrics(spark: SparkSession, metrics_path: str) -> DataFrame | None:
         raise
     w = Window.partitionBy(*TILE_KEY).orderBy(F.col("completed_at").desc())
     return m.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+
+
+def _key_values(rows) -> dict[tuple, tuple]:
+    """tile key -> (n_segments, fingerprint) of collected metrics rows."""
+    return {
+        tuple(r[c] for c in TILE_KEY): (r["n_segments"], r["fingerprint"]) for r in rows
+    }
 
 
 def resumable_tiled_polygonize(
@@ -91,56 +133,38 @@ def resumable_tiled_polygonize(
         )
     else:
         assigned, kernel = prepare_tiled(lines_df, tile_size, buffer=buffer, **kwargs)
-    metrics_now = _tile_metrics(assigned).persist()
+    # one assignment (and one skew-factor aggregate) feeds the metrics
+    # and the kernel
+    assigned = assigned.persist()
+    now = _key_values(_tile_metrics(assigned).collect())
 
     poly_path = f"{ckpt_dir}/polygons"
     metrics_path = f"{ckpt_dir}/metrics"
 
     latest = _latest_metrics(spark, metrics_path)
-    if latest is not None:
-        # n_segments joins too: xor cancels on duplicated segments, so
-        # (fingerprint, count) together identify the tile's multiset
-        pending_keys = metrics_now.join(
-            latest.select(*TILE_KEY, "fingerprint", "n_segments"),
-            on=TILE_KEY + ["fingerprint", "n_segments"],
-            how="left_anti",
-        ).select(*TILE_KEY)
-        # stale keys: committed in the store but absent from the
-        # CURRENT assignment — a vanished tile, or a sub-tile layout
-        # superseded by a different skew-split factor f (a changed
-        # max_segments_per_tile or data growth). Without invalidation
-        # their polygons stay admitted NEXT TO the new layout's —
-        # silent duplication of the tile's coverage. Tombstone metrics
-        # rows (a newer run that wrote zero polygons for the key) make
-        # the latest-run admission drop them.
-        stale_candidates = latest.select(*TILE_KEY)
-        if scope_to_assigned:
-            # incremental scope: only parents present in the current
-            # assignment may invalidate; everything else is trusted
-            parents = metrics_now.select("tile_i", "tile_j").distinct()
-            stale_candidates = stale_candidates.join(
-                F.broadcast(parents), ["tile_i", "tile_j"], "left_semi"
-            )
-        stale_keys = stale_candidates.join(
-            metrics_now.select(*TILE_KEY), on=TILE_KEY, how="left_anti"
-        )
-    else:
-        pending_keys = metrics_now.select(*TILE_KEY)
-        stale_keys = None
+    committed = {} if latest is None else _key_values(latest.collect())
+    # n_segments is compared too: xor cancels on duplicated segments,
+    # so (n_segments, fingerprint) together identify the tile's multiset
+    pending = [k for k, v in now.items() if committed.get(k) != v]
+    # stale keys: committed in the store but absent from the CURRENT
+    # assignment — a vanished tile, or a sub-tile layout superseded by
+    # a different skew-split factor f (a changed max_segments_per_tile
+    # or data growth). Without invalidation their polygons stay
+    # admitted NEXT TO the new layout's — silent duplication of the
+    # tile's coverage. Tombstone metrics rows (a newer run that wrote
+    # zero polygons for the key, n_segments = 0) make the latest-run
+    # admission drop them; a key whose latest row already is one needs
+    # no new tombstone. Under scope_to_assigned (incremental recompute)
+    # only parents present in the current assignment may invalidate;
+    # everything else is trusted.
+    parents = {k[:2] for k in now}
+    stale = [
+        k
+        for k, (n_segments, _) in committed.items()
+        if n_segments > 0 and k not in now and (not scope_to_assigned or k[:2] in parents)
+    ]
 
-    # polygon rows carry the FULL sub-tile group key so resume
-    # admission is exact even when a single sub-tile recomputes
     import pandas as pd
-    from pyspark.sql import types as T
-
-    ckpt_schema = T.StructType(
-        POLYGON_SCHEMA.fields
-        + [
-            T.StructField("f", T.IntegerType()),
-            T.StructField("sub_i", T.IntegerType()),
-            T.StructField("sub_j", T.IntegerType()),
-        ]
-    )
 
     def keyed_kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         out = kernel(key, pdf)
@@ -150,33 +174,30 @@ def resumable_tiled_polygonize(
         return out
 
     run_id = uuid.uuid4().hex
-    if pending_keys.limit(1).count() > 0:
-        pending = assigned.join(F.broadcast(pending_keys), TILE_KEY, "left_semi")
-        polys = pending.groupBy(*TILE_KEY).applyInPandas(keyed_kernel, ckpt_schema)
-        polys.write.mode("append").parquet(f"{poly_path}/run_id={run_id}")
+    rows = []
+    if pending:
+        # every tile pending (a fresh store): skip the semi-join and its
+        # broadcast job, ~3% of a perfbench lattice round's CPU
+        todo = assigned
+        if len(pending) < len(now):
+            todo = assigned.join(
+                F.broadcast(spark.createDataFrame(pending, KEY_SCHEMA)), TILE_KEY, "left_semi"
+            )
+        run_dir = f"{poly_path}/run_id={run_id}"
+        polys = todo.groupBy(*TILE_KEY).applyInPandas(keyed_kernel, POLYGONS_SCHEMA)
+        polys.write.mode("append").parquet(run_dir)
         # count what actually landed (cheap scan of the new run dir)
-        written = spark.read.parquet(f"{poly_path}/run_id={run_id}")
-        counts = written.groupBy(*TILE_KEY).agg(F.count("*").alias("n_polys"))
-        (
-            _tile_metrics(pending)
-            .join(counts, TILE_KEY, "left")
-            .fillna({"n_polys": 0})
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("completed_at", F.lit(float(time.time())))
-            .write.mode("append")
-            .parquet(metrics_path)
+        landed = (
+            spark.read.schema(POLYGONS_SCHEMA).parquet(run_dir).groupBy(*TILE_KEY).count()
         )
-    if stale_keys is not None and stale_keys.limit(1).count() > 0:
-        (
-            stale_keys.withColumn("n_segments", F.lit(0).cast("long"))
-            .withColumn("fingerprint", F.lit(0).cast("long"))
-            .withColumn("n_polys", F.lit(0).cast("long"))
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("completed_at", F.lit(float(time.time())))
-            .write.mode("append")
-            .parquet(metrics_path)
-        )
-    metrics_now.unpersist()
+        n_polys = {tuple(r[c] for c in TILE_KEY): r["count"] for r in landed.collect()}
+        rows += [(*k, *now[k], n_polys.get(k, 0), run_id) for k in pending]
+    rows += [(*k, 0, 0, 0, run_id) for k in stale]
+    assigned.unpersist()
+    if rows:
+        completed_at = time.time()
+        metrics = spark.createDataFrame([(*r, completed_at) for r in rows], METRICS_SCHEMA)
+        metrics.coalesce(1).write.mode("append").parquet(metrics_path)
     return read_checkpointed_coverage(spark, ckpt_dir)
 
 
@@ -190,8 +211,10 @@ def read_checkpointed_coverage(spark: SparkSession, ckpt_dir: str) -> DataFrame:
     if latest is None:
         return spark.createDataFrame([], POLYGON_SCHEMA)
     try:
-        polys = spark.read.option("basePath", f"{ckpt_dir}/polygons").parquet(
-            f"{ckpt_dir}/polygons/run_id=*"
+        polys = (
+            spark.read.schema(STORE_POLYGONS_SCHEMA)
+            .option("basePath", f"{ckpt_dir}/polygons")
+            .parquet(f"{ckpt_dir}/polygons/run_id=*")
         )
     except AnalysisException as e:
         # ONLY a genuinely absent polygons dir reads as empty (a

@@ -6,6 +6,16 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Entries of Spark's JVM-wide generated-code cache. Spark's default of
+# 100 is smaller than one repeated workload: perfbench's `lattice` used
+# 131 distinct classes (set-up 8, round 123; 104 once the checkpoint
+# path stopped generating per-call code) and `images` 123, so the LRU
+# missed on nearly every lookup and each round recompiled what the
+# round before had compiled. A whole `bench.py` run at sf0.1 (13 leaves,
+# one session) compiles 434 distinct classes. Census:
+# scripts/codegen_census.py, 4-vCPU / 15.7 GB host.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def default_driver_memory() -> str:
     """min(48g, 40% of physical memory): the driver JVM of a local
@@ -45,6 +55,8 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
+        # static: read once per JVM, when the first query compiles
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.extraJavaOptions", "-Dio.netty.tryReflectionSetAccessible=true")
     )
     for k, v in (extra_conf or {}).items():

@@ -1,6 +1,9 @@
 """Image table payload invariants + flagship pipeline + checkpoint
 resume (FIXTURES.md §4; BASELINE.json input_hint invariants)."""
 
+import os
+import shutil
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -198,6 +201,15 @@ class TestPipeline:
         assert all(abs(r["poly_area"] - 1.0) < 1e-9 for r in rows)
 
 
+def _store_files(root) -> dict:
+    """Relative path -> size of every file under ``root``."""
+    return {
+        os.path.relpath(os.path.join(d, f), root): os.path.getsize(os.path.join(d, f))
+        for d, _, fs in os.walk(root)
+        for f in fs
+    }
+
+
 class TestCheckpoint:
     def test_resume_noop_and_equivalence(self, spark, tmp_path):
         from geo_polygonize_spark.checkpoint import resumable_tiled_polygonize
@@ -212,12 +224,15 @@ class TestCheckpoint:
         )
         a_rows = sorted((round(r["cx"], 9), round(r["cy"], 9)) for r in a.collect())
         assert len(a_rows) == n * n
+        files_before = _store_files(ck)
         # second invocation: pure scan, no recompute, same rows
         b = resumable_tiled_polygonize(
             spark, lines, ck, tile_size=5.0, buffer=1.5, bbox=bbox, drop_collapsed=True
         )
         b_rows = sorted((round(r["cx"], 9), round(r["cy"], 9)) for r in b.collect())
         assert a_rows == b_rows
+        # ... and it wrote nothing: same store paths and sizes
+        assert _store_files(ck) == files_before
         # metrics carry lineage columns
         m = spark.read.parquet(f"{ck}/metrics")
         assert {"fingerprint", "n_segments", "n_polys", "run_id", "completed_at"} <= set(
@@ -245,6 +260,16 @@ class TestCheckpoint:
             spark, lines_full, ck, tile_size=5.0, buffer=1.5, bbox=bbox, drop_collapsed=True
         )
         assert out.count() == n * n
+        # a dangle inside tile (0, 0) alone: only that tile recomputes
+        lines_dangle = lines_to_df(spark, xs + [np.array([0.2, 0.8])], ys + [np.array([0.2, 0.2])])
+        n_metrics = spark.read.parquet(f"{ck}/metrics").count()
+        out = resumable_tiled_polygonize(
+            spark, lines_dangle, ck, tile_size=5.0, buffer=1.5, bbox=bbox, drop_collapsed=True
+        )
+        assert out.count() == n * n
+        m = spark.read.parquet(f"{ck}/metrics")
+        assert m.count() == n_metrics + 1
+        assert m.orderBy(F.col("completed_at").desc()).first()["tile_i"] == 0
 
     def test_resume_invalidates_superseded_split_layout(self, spark, tmp_path):
         """Changing the skew-split factor between runs (here: a lower
@@ -298,6 +323,59 @@ class TestCheckpoint:
         rows = out.collect()
         assert len(rows) == 25
         assert all(r["cx"] <= 5.0 and r["cy"] <= 5.0 for r in rows)
+
+    def test_repeat_calls_compile_nothing_new(self, spark, tmp_path):
+        """A repeated operation reuses the generated classes of its first
+        run: no limit counter and no per-call literal (run id, commit
+        time) may end up in generated code, and the session's codegen
+        cache holds the operation's classes."""
+        from geo_polygonize_spark.checkpoint import resumable_tiled_polygonize
+        from geo_polygonize_spark.operators.stitch import stitched_polygonize
+
+        n = 10
+        xs, ys = grid_lines(n)
+        lines = lines_to_df(spark, xs, ys).persist()
+        bbox = (0.0, 0.0, float(n), float(n))
+        codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+        def new_compiles(call) -> int:
+            call()
+            before = codegen.METRIC_COMPILATION_TIME().getCount()
+            call()
+            return codegen.METRIC_COMPILATION_TIME().getCount() - before
+
+        def checkpointed(store: str, src=lines):
+            out = resumable_tiled_polygonize(
+                spark, src, store, tile_size=5.0, buffer=1.5, bbox=bbox, drop_collapsed=True
+            )
+            assert out.count() == n * n
+
+        stores = iter(str(tmp_path / f"ck{i}") for i in range(2))
+        # a dangle inside tile (0, 0) alone: a resume of a copy of the
+        # full store recomputes that tile only (the pending-key semi-join)
+        dangle = lines_to_df(
+            spark, xs + [np.array([0.2, 0.8])], ys + [np.array([0.2, 0.2])]
+        ).persist()
+        partials = iter(str(tmp_path / f"partial{i}") for i in range(2))
+
+        def partial_resume():
+            store = next(partials)
+            shutil.copytree(tmp_path / "ck0", store)
+            checkpointed(store, dangle)
+
+        def exact():
+            out = stitched_polygonize(
+                lines, tile_size=5.0, buffer=1.5, bbox=bbox, drop_collapsed=True
+            )
+            assert out.count() == n * n
+
+        # a write into a fresh store each call, then resumes of ck0
+        assert new_compiles(lambda: checkpointed(next(stores))) == 0
+        assert new_compiles(lambda: checkpointed(str(tmp_path / "ck0"))) == 0
+        assert new_compiles(partial_resume) == 0
+        assert new_compiles(exact) == 0
+        lines.unpersist()
+        dangle.unpersist()
 
     def test_read_empty_checkpoint_dir(self, spark, tmp_path):
         from geo_polygonize_spark.checkpoint import read_checkpointed_coverage
