@@ -15,6 +15,11 @@ operation that re-runs a plan compiled before should show 0.
 ``--cache-entries`` overrides ``spark.sql.codegen.cache.maxEntries``
 for the run; with a cache larger than the run's working set, the
 warm-up round's compiles are the number of distinct classes it uses.
+
+Each operation's CPU is also split three ways by process: the driver
+(this process), the JVM (``comm`` = ``java``) and the Python workers
+(everything else below them: the daemon and the workers it forks; a
+worker that exited counts through the daemon's reaped-children time).
 """
 
 from __future__ import annotations
@@ -29,12 +34,31 @@ import tempfile
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from perfbench.rss import tree_cpu_s  # noqa: E402
+from perfbench.rss import cpu_s, descendants  # noqa: E402
 from perfbench.run import driver_heap_mb, host_fingerprint  # noqa: E402
 from perfbench.trace import Tracer  # noqa: E402
 from perfbench.workloads import WORKLOADS  # noqa: E402
 
 CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+SPLIT = ("driver_s", "jvm_s", "py_s")
+
+
+def _comm(pid: int) -> str:
+    try:
+        with open(f"/proc/{pid}/comm") as fh:
+            return fh.read().strip()
+    except OSError:
+        return ""
+
+
+def cpu_split(root: int) -> dict:
+    """CPU seconds used so far by ``root``'s process tree, by ``SPLIT``:
+    ``root`` itself, the JVM, and the Python workers (the rest)."""
+    out = dict.fromkeys(SPLIT, 0.0)
+    for pid in descendants(root):
+        kind = "driver_s" if pid == root else "jvm_s" if _comm(pid) == "java" else "py_s"
+        out[kind] += cpu_s(pid)
+    return out
 
 
 def compiles(spark) -> int:
@@ -43,7 +67,8 @@ def compiles(spark) -> int:
 
 
 class Census:
-    """Rows of (phase, op, compiles, jobs, cpu_s), one per measured call."""
+    """Rows of (phase, op, compiles, jobs, cpu_s and its ``SPLIT``), one
+    per measured call."""
 
     def __init__(self, spark):
         self.spark = spark
@@ -53,15 +78,18 @@ class Census:
         sc = self.spark.sparkContext
         group = f"census-{len(self.rows)}"
         sc.setJobGroup(group, f"{phase} {op}")
-        c0, cpu0 = compiles(self.spark), tree_cpu_s(os.getpid())
+        c0, cpu0 = compiles(self.spark), cpu_split(os.getpid())
         try:
             return fn()
         finally:
+            cpu1 = cpu_split(os.getpid())
+            split = {k: round(cpu1[k] - cpu0[k], 2) for k in SPLIT}
             self.rows.append({
                 "phase": phase, "op": op,
                 "compiles": compiles(self.spark) - c0,
                 "jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
-                "cpu_s": round(tree_cpu_s(os.getpid()) - cpu0, 2),
+                "cpu_s": round(sum(split.values()), 2),
+                **split,
             })
             sc.setLocalProperty("spark.jobGroup.id", None)
 
@@ -126,14 +154,17 @@ def main() -> int:
 
     print(f"codegen census {args.workload} seed={args.seed} nproc={cores} "
           f"mem_total_mb={host['mem_total_mb']} codegen.cache.maxEntries={conf}")
-    print(f"  {'phase':<8} {'op':<24} {'compiles':>8} {'jobs':>5} {'cpu_s':>7}")
+    cols = ("cpu_s",) + SPLIT
+    print(f"  {'phase':<8} {'op':<24} {'compiles':>8} {'jobs':>5}" + "".join(f" {c:>8}" for c in cols))
+
+    def line(phase, op, rows):
+        print(f"  {phase:<8} {op:<24} {sum(r['compiles'] for r in rows):>8} "
+              f"{sum(r['jobs'] for r in rows):>5}" + "".join(f" {sum(r[c] for r in rows):>8.2f}" for c in cols))
+
     for row in census.rows:
-        print(f"  {row['phase']:<8} {row['op']:<24} {row['compiles']:>8} {row['jobs']:>5} {row['cpu_s']:>7.2f}")
-    phases = dict.fromkeys(row["phase"] for row in census.rows)
-    for phase in phases:
-        rows = [row for row in census.rows if row["phase"] == phase]
-        print(f"  {phase:<8} {'(total)':<24} {sum(r['compiles'] for r in rows):>8} "
-              f"{sum(r['jobs'] for r in rows):>5} {sum(r['cpu_s'] for r in rows):>7.2f}")
+        line(row["phase"], row["op"], [row])
+    for phase in dict.fromkeys(row["phase"] for row in census.rows):
+        line(phase, "(total)", [row for row in census.rows if row["phase"] == phase])
     print(json.dumps({"workload": args.workload, "seed": args.seed, "cache_max_entries": conf,
                       "rows": census.rows}))
     return 0

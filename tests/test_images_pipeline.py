@@ -148,10 +148,37 @@ class TestSpatialJoin:
         pts = derive_points(images, bbox)
         key = lambda r: (r["image_id"], r["poly_tile_i"], r["poly_tile_j"],
                          r["poly_id"], round(r["poly_area"], 9), r["n_containing"])
-        a = sorted(key(r) for r in pip_join(pts, polys, 0.0, 0.0, 1.0).collect())
-        b = sorted(key(r) for r in pip_join(
-            pts, polys, 0.0, 0.0, 1.0, strategy="broadcast").collect())
-        assert a == b and len(a) > 0
+
+        def cells_equal_broadcast(p, salt=None):
+            # both joins use the division-free crossing rule: row for row
+            a = sorted(key(r) for r in pip_join(p, polys, 0.0, 0.0, 1.0, salt=salt).collect())
+            b = sorted(key(r) for r in pip_join(
+                p, polys, 0.0, 0.0, 1.0, strategy="broadcast").collect())
+            assert a == b
+            return a
+
+        a = cells_equal_broadcast(pts)
+        assert len(a) > 0
+        assert cells_equal_broadcast(pts, salt=3) == a
+        str_pts = pts.select(
+            F.concat(F.lit("img"), F.col("image_id").cast("string")).alias("image_id"), "x", "y"
+        )
+        assert len(cells_equal_broadcast(str_pts)) == len(a)
+        # a quarter-step lattice over the bbox: points on edges and
+        # vertices, and on the outer boundary, where some drop out
+        q = 4 * n + 1
+        lattice = spark.createDataFrame(
+            [(i * q + j, i / 4.0, j / 4.0) for i in range(q) for j in range(q)],
+            "image_id long, x double, y double",
+        )
+        on_lattice = cells_equal_broadcast(lattice)
+        assert 0 < len(on_lattice) < q * q
+        assert len(cells_equal_broadcast(lattice, salt=3)) == len(on_lattice)
+        outside = spark.createDataFrame(
+            [(i, -1.0 - i, float(n) + 0.5 * i) for i in range(20)],
+            "image_id long, x double, y double",
+        )
+        assert cells_equal_broadcast(outside) == []
         # prebuilt-index path (r5, the amortized-per-batch production
         # shape): identical rows, polygons frame not even consulted
         from geo_polygonize_spark.operators.spatial_join import (
@@ -330,6 +357,7 @@ class TestCheckpoint:
         time) may end up in generated code, and the session's codegen
         cache holds the operation's classes."""
         from geo_polygonize_spark.checkpoint import resumable_tiled_polygonize
+        from geo_polygonize_spark.operators.spatial_join import knn_join_cells
         from geo_polygonize_spark.operators.stitch import stitched_polygonize
 
         n = 10
@@ -376,6 +404,35 @@ class TestCheckpoint:
         assert new_compiles(exact) == 0
         lines.unpersist()
         dangle.unpersist()
+
+        # the expanding-radius kNN: an outlier point takes several rounds,
+        # each ending in an emptiness probe of the leftover points
+        rng = np.random.default_rng(3)
+        cents = spark.createDataFrame(
+            [(i, float(x), float(y)) for i, (x, y) in enumerate(rng.uniform(0, 100, (40, 2)))],
+            "centroid_id long, cx double, cy double",
+        ).persist()
+        pts = spark.createDataFrame(
+            [(f"p{i}", float(x), float(y))
+             for i, (x, y) in enumerate(rng.uniform(0, 100, (200, 2)).tolist() + [[300.0, 300.0]])],
+            "image_id string, x double, y double",
+        ).persist()
+
+        def knn():
+            assert knn_join_cells(pts, cents, k=2).count() == 2 * 201
+
+        # AQE re-plans each query as its stages finish, so the plan a
+        # repeat runs (and the classes it compiles) can depend on timing;
+        # with AQE off a repeat compiles nothing new unless the operator
+        # itself generates per-call code
+        aqe = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            assert new_compiles(knn) == 0
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        pts.unpersist()
+        cents.unpersist()
 
     def test_read_empty_checkpoint_dir(self, spark, tmp_path):
         from geo_polygonize_spark.checkpoint import read_checkpointed_coverage
