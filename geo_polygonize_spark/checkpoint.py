@@ -42,12 +42,8 @@ import uuid
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
-from .operators.polygonize_op import (
-    POLYGON_SCHEMA,
-    TILE_KEY,
-    prepare_assigned,
-    prepare_tiled,
-)
+from .operators.polygonize_op import POLYGON_SCHEMA, prepare_assigned, prepare_tiled
+from .operators.tiling import TILE_KEY
 
 KEY_SCHEMA = T.StructType([T.StructField(c, T.IntegerType()) for c in TILE_KEY])
 METRICS_SCHEMA = T.StructType(
@@ -79,13 +75,27 @@ def _tile_metrics(assigned: DataFrame) -> DataFrame:
     )
 
 
+def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
+    """Existence check through the JVM Hadoop FileSystem — correct on
+    local paths, HDFS, and object stores alike (anything the session's
+    Hadoop configuration can resolve)."""
+    jvm = spark.sparkContext._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return bool(fs.exists(jpath))
+
+
 def _latest_metrics(spark: SparkSession, metrics_path: str) -> DataFrame | None:
+    # a fresh store has no metrics dir yet: check before reading, since
+    # Spark logs a WARN stack trace for every read of an absent path
+    if not _hadoop_path_exists(spark, metrics_path):
+        return None
     try:
         m = spark.read.schema(METRICS_SCHEMA).parquet(metrics_path)
     except AnalysisException as e:
-        # absent metrics dir = never-checkpointed store (fresh run);
-        # other failures must surface (same rationale as the polygons
-        # read in read_checkpointed_coverage)
+        # the dir vanished after the check: a fresh store again; other
+        # failures must surface (same rationale as the polygons read in
+        # read_checkpointed_coverage)
         if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
             return None
         raise
@@ -211,11 +221,10 @@ def read_checkpointed_coverage(spark: SparkSession, ckpt_dir: str) -> DataFrame:
     if latest is None:
         return spark.createDataFrame([], POLYGON_SCHEMA)
     try:
-        polys = (
-            spark.read.schema(STORE_POLYGONS_SCHEMA)
-            .option("basePath", f"{ckpt_dir}/polygons")
-            .parquet(f"{ckpt_dir}/polygons/run_id=*")
-        )
+        # the store root, not a ``run_id=*`` glob: partition discovery
+        # finds run_id, and Spark logs a WARN stack trace for every glob
+        # read even when each run dir exists
+        polys = spark.read.schema(STORE_POLYGONS_SCHEMA).parquet(f"{ckpt_dir}/polygons")
     except AnalysisException as e:
         # ONLY a genuinely absent polygons dir reads as empty (a
         # metrics-only checkpoint: every committed run wrote 0 polygons,

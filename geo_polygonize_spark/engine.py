@@ -19,12 +19,12 @@ cell join.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.cells import morton_cell_col
 from .operators.polygonize_op import tiled_polygonize
 from .operators.spatial_join import pip_join, raster_tile_assign
+from .operators.tiling import grid_shape
 
 
 def derive_points(
@@ -47,9 +47,8 @@ def derive_points(
 
 def tile_centroids(bbox, tile_size: float) -> list[tuple[int, float, float]]:
     """Centers of the raster tile grid (the kNN targets)."""
-    x0, y0, x1, y1 = bbox
-    cols = max(int(np.ceil((x1 - x0) / tile_size)), 1)
-    rows = max(int(np.ceil((y1 - y0) / tile_size)), 1)
+    x0, y0 = bbox[0], bbox[1]
+    cols, rows = grid_shape(bbox, tile_size)
     out = []
     for j in range(rows):
         for i in range(cols):
@@ -80,7 +79,7 @@ def image_pipeline(
     coverage: containing polygon (smallest), kNN tile centroids,
     raster tile, Morton cell, caption + phash passthrough.
     """
-    x0, y0, x1, y1 = bbox
+    x0, y0 = bbox[0], bbox[1]
     if cell_size is None:
         cell_size = tile_size / 4.0
 
@@ -134,8 +133,7 @@ def image_pipeline(
     # column arithmetic (whole-stage codegen), no distance matrix.
     # knn_join / nearest_centroid_cols remain the operators for
     # irregular centroid sets and k > 1.
-    cols = max(int(np.ceil((x1 - x0) / tile_size)), 1)
-    rows = max(int(np.ceil((y1 - y0) / tile_size)), 1)
+    cols, rows = grid_shape(bbox, tile_size)
     ti = F.greatest(
         F.least(F.floor((F.col("x") - F.lit(x0)) / F.lit(tile_size)), F.lit(cols - 1)), F.lit(0)
     )

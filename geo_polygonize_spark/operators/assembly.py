@@ -78,6 +78,7 @@ from ..functions.cells import cell_range_cols
 from ..kernels.bboxjoin import bbox_join
 from ..kernels.rings import _pip_many_vs_ring
 from .polygonize_op import POLYGON_SCHEMA
+from .tiling import claim_cores, core_key, core_key_col, core_reach_index, touching_cores
 
 # kernel emission kinds
 K_POLY = 0      # finished polygon (assembled in-task)
@@ -138,22 +139,6 @@ def _promote_rows(rows):
             if not any(abs(s - h_area) < 1e-6 for s in twins):
                 shells.append((r, True))  # promoted — AND a hole above
     return shells, visitors
-
-
-def core_key_col(x0, y0, ts, cols, rows):
-    """SQL claim-core key from the ring bbox corner — mirrors the fused
-    kernel's numpy derivation float-for-float (floor of the same IEEE
-    double quotient, same clip) for the unsplit (f = 1) case:
-    ``_core_key(ti, tj, 1, 0, 0, rows)``."""
-    ti_c = F.least(
-        F.greatest(F.floor((F.col("bx1") - F.lit(x0)) / F.lit(ts)), F.lit(0)),
-        F.lit(cols - 1),
-    ).cast("long")
-    tj_c = F.least(
-        F.greatest(F.floor((F.col("by1") - F.lit(y0)) / F.lit(ts)), F.lit(0)),
-        F.lit(rows - 1),
-    ).cast("long")
-    return ((ti_c * F.lit(rows) + tj_c) * F.lit(17) + F.lit(1)) * F.lit(256)
 
 
 def _bypass_poly_rows(plain: DataFrame) -> DataFrame:
@@ -222,17 +207,6 @@ def _finish_assignments(
     merged visitors (their coords never enter
     the kernel): those rows carry null h_xs and resolve from
     ``merged_coord_rows`` — the (driver-side) global residue rows."""
-    import os as _os
-    import time as _time
-    _fprof = bool(_os.environ.get("GP_ASM_PROF"))
-    _ft = {"t": _time.time()}
-
-    def _fmark(name):
-        if _fprof:
-            now = _time.time()
-            print(f"FINPROF| {name}: {now - _ft['t']:.3f}", flush=True)
-            _ft["t"] = now
-
     polys = out.where(F.col("kind") == K_POLY)
     _wcols = ["h_rid", "cand_rid", "cand_area", "h_area", "h_xs", "h_ys"]
     finals = out.where(F.col("kind") == K_FINAL).select(*_wcols)
@@ -402,46 +376,7 @@ def _finish_assignments(
     result = polys.select(*final_cols)
     if gpolys is not None:
         result = result.unionByName(gpolys.select(*final_cols))
-    _fmark("inplan_build")
     return result
-
-
-def _touching_cores(cx, cy, x0, y0, ts, cols, rows, fmap):
-    """Claim cores whose closure contains the point, at tile AND
-    hot-tile sub-cell granularity, mirroring the trace kernel's
-    clipped-floor claiming arithmetic float-for-float."""
-    i = min(max(int(np.floor((cx - x0) / ts)), 0), cols - 1)
-    j = min(max(int(np.floor((cy - y0) / ts)), 0), rows - 1)
-    tis = {i}
-    if cx == x0 + i * ts and i > 0:
-        tis.add(i - 1)
-    tjs = {j}
-    if cy == y0 + j * ts and j > 0:
-        tjs.add(j - 1)
-    out = []
-    for a in tis:
-        for b in tjs:
-            fv = fmap.get((a, b), 1)
-            side = ts / fv
-            tx0 = x0 + a * ts
-            ty0 = y0 + b * ts
-            u = min(max(int(np.floor((cx - tx0) / side)), 0), fv - 1)
-            v = min(max(int(np.floor((cy - ty0) / side)), 0), fv - 1)
-            us = {u}
-            if cx == tx0 + u * side and u > 0:
-                us.add(u - 1)
-            vs = {v}
-            if cy == ty0 + v * side and v > 0:
-                vs.add(v - 1)
-            for p in us:
-                for q in vs:
-                    out.append((a, b, fv, p, q))
-    return out
-
-
-def _core_key(ti, tj, fv, si, sj, rows):
-    """Single int64 group key for a claim core (f ≤ 16, si/sj < f)."""
-    return (((ti * rows + tj) * 17 + fv) * 16 + si) * 16 + sj
 
 
 def _best_reduce(si, hj, areas, rids):
@@ -565,26 +500,7 @@ def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
         coords_x = [np.asarray(v, np.float64) for v in pdf["xs"]]
         coords_y = [np.asarray(v, np.float64) for v in pdf["ys"]]
 
-        ti = np.clip(np.floor((bx1 - x0) / ts).astype(np.int64), 0, cols - 1)
-        tj = np.clip(np.floor((by1 - y0) / ts).astype(np.int64), 0, rows - 1)
-        f_arr = np.ones(n, dtype=np.int64)
-        si_arr = np.zeros(n, dtype=np.int64)
-        sj_arr = np.zeros(n, dtype=np.int64)
-        for (hti, htj), fv in fmap.items():
-            hot = (ti == hti) & (tj == htj)
-            if not hot.any():
-                continue
-            side = ts / fv
-            si_arr[hot] = np.clip(
-                np.floor((bx1[hot] - (x0 + hti * ts)) / side).astype(np.int64),
-                0, fv - 1,
-            )
-            sj_arr[hot] = np.clip(
-                np.floor((by1[hot] - (y0 + htj * ts)) / side).astype(np.int64),
-                0, fv - 1,
-            )
-            f_arr[hot] = fv
-        gkey = _core_key(ti, tj, f_arr, si_arr, sj_arr, rows)
+        gkey = core_key(*claim_cores(bx1, by1, x0, y0, ts, cols, rows, fmap), rows)
         order = np.argsort(gkey, kind="stable")
         gk_s = gkey[order]
         bounds = np.concatenate(
@@ -749,17 +665,6 @@ def assemble_rings_fused(
     through ONE parallel Arrow job (``toPandas``) instead of Spark's
     incremental ``limit().collect()`` — which executes 1→4→20-task
     waves and converts ring arrays row-by-row through py4j."""
-    import os as _os
-    import time as _time
-    _prof = bool(_os.environ.get("GP_ASM_PROF"))
-    _t = {"t": _time.time()}
-
-    def _mark(name):
-        if _prof:
-            now = _time.time()
-            print(f"ASMPROF| {name}: {now - _t['t']:.3f}", flush=True)
-            _t["t"] = now
-
     spark = trace_out.sparkSession
     ts = float(tile_size)
     ringrows = trace_out.where(F.col("kind") == 0).select(
@@ -798,7 +703,6 @@ def assemble_rings_fused(
             # leak in the CacheManager for the session lifetime)
             rings = ringrows.unionByName(merged_rid).localCheckpoint(eager=True)
             return assemble_rings_distributed(rings, drop_collapsed)
-    _mark("merged_collect+promote")
     gshells, gvisitors = _promote_rows(grows)
 
     ng = len(gshells)
@@ -811,41 +715,18 @@ def assemble_rings_fused(
     g_xs = [np.asarray(r["xs"], np.float64) for r, _ in gshells]
     g_ys = [np.asarray(r["ys"], np.float64) for r, _ in gshells]
 
-    # per-core reach index (padded one core each side — a superset is
-    # harmless, every candidate is still bbox+PIP-tested in the kernel)
-    by_core: dict = {}
-    g_always: list = []  # world-spanning shells (e.g. the hull): tested
-    # by every core rather than enumerated into a giant index
-    if ng:
-        i_lo = np.clip(np.floor((g_bx1 - x0) / ts).astype(np.int64) - 1, 0, cols - 1)
-        i_hi = np.clip(np.floor((g_bx2 - x0) / ts).astype(np.int64) + 1, 0, cols - 1)
-        j_lo = np.clip(np.floor((g_by1 - y0) / ts).astype(np.int64) - 1, 0, rows - 1)
-        j_hi = np.clip(np.floor((g_by2 - y0) / ts).astype(np.int64) + 1, 0, rows - 1)
-        for gi in range(ng):
-            span = (int(i_hi[gi]) - int(i_lo[gi]) + 1) * (
-                int(j_hi[gi]) - int(j_lo[gi]) + 1
-            )
-            if span > 4096:
-                g_always.append(gi)
-                continue
-            for a in range(int(i_lo[gi]), int(i_hi[gi]) + 1):
-                for b in range(int(j_lo[gi]), int(j_hi[gi]) + 1):
-                    fv = fmap.get((a, b), 1)
-                    if fv == 1:
-                        by_core.setdefault(_core_key(a, b, 1, 0, 0, rows), []).append(gi)
-                    else:
-                        for p in range(fv):
-                            for q in range(fv):
-                                by_core.setdefault(
-                                    _core_key(a, b, fv, p, q, rows), []
-                                ).append(gi)
+    # per-core reach index: only merged shells whose bbox can reach a
+    # core are tested there; world-spanning shells (e.g. the hull) are
+    # tested by every core
+    by_core, g_always = core_reach_index(
+        g_bx1, g_by1, g_bx2, g_by2, x0, y0, ts, cols, rows, fmap
+    )
     payload = {
         "n": ng, "rid": g_rid, "area": g_area,
         "bx1": g_bx1, "by1": g_by1, "bx2": g_bx2, "by2": g_by2,
         "xs": g_xs, "ys": g_ys, "by_core": by_core, "always": g_always,
     }
     gbc = spark.sparkContext.broadcast(payload)
-    _mark("index+broadcast")
 
     # visitor holes: every merged CW ring, probing the cores whose
     # closure contains its centroid; their merged-shell candidates are
@@ -861,8 +742,8 @@ def assemble_rings_fused(
         v_cx = np.fromiter((r["cx"] for r in gvisitors), np.float64, nv)
         v_cy = np.fromiter((r["cy"] for r in gvisitors), np.float64, nv)
         for vi, r in enumerate(gvisitors):
-            touch = _touching_cores(r["cx"], r["cy"], x0, y0, ts, cols, rows, fmap)
-            keys = [_core_key(a, b, fv, p, q, rows) for a, b, fv, p, q in touch]
+            touch = touching_cores(r["cx"], r["cy"], x0, y0, ts, cols, rows, fmap)
+            keys = [core_key(a, b, fv, p, q, rows) for a, b, fv, p, q in touch]
             vis.append(
                 (int(v_rid[vi]), float(v_ha[vi]), float(v_cx[vi]), float(v_cy[vi]), keys)
             )
@@ -887,7 +768,6 @@ def assemble_rings_fused(
                          float(g_area[si[s]]), float(v_ha[hj[s]]))
                     )
     vbc = spark.sparkContext.broadcast(vis)
-    _mark("visitor_candidates")
     extra_partials = (
         spark.createDataFrame(
             extra_rows, "h_rid long, cand_rid long, cand_area double, h_area double"
@@ -928,7 +808,6 @@ def assemble_rings_fused(
             ringrows, core_c, set(cw_cores) | vis_cores, spark
         )
         bypass = _bypass_poly_rows(plain)
-        _mark("bypass_split")
 
     kernel = _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc)
     # lazy checkpoint of the (now small: interesting cores only) kernel
@@ -939,19 +818,16 @@ def assemble_rings_fused(
     # plain ring bytes) — valid because the chain engine's trace output
     # is a self-GC'd localCheckpoint that outlives the plan (r6).
     out = phase2_in.mapInPandas(kernel, FUSED_SCHEMA).localCheckpoint(eager=False)
-    _mark("phase2_plan")  # lazy: kernel wall lands in the finish's first job
 
     # hole coords: local winners carry theirs on the K_FINAL rows;
     # merged visitors (K_PARTIAL + extra_partials) resolve from the
     # driver-side residue rows
-    res = _finish_assignments(
+    return _finish_assignments(
         spark, out, gshells, drop_collapsed,
         merged_coord_rows=grows,
         extra_partials=extra_partials,
         bypass_polys=bypass,
     )
-    _mark("finish")
-    return res
 
 
 def _assemble_rings_local(rings: DataFrame, drop_collapsed: bool) -> DataFrame:

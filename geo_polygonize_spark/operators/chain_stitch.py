@@ -86,9 +86,26 @@ from .assembly import (
     _assemble_rings_local,
     assemble_rings_distributed,
     assemble_rings_fused,
-    core_key_col,
 )
 from .polygonize_op import _bbox_of_segments, segmentize_df
+from .tiling import (
+    TILE_KEY,
+    assign_windows,
+    claim_cores,
+    core_key_col,
+    grid_shape,
+    hot_tile_factors,
+    repartition_tiles,
+    split_hot_tiles,
+    unsplit,
+)
+
+# ``assembly="auto"`` assembles up to this many rings (an upper bound
+# from the trace counts) in one task, more with the fused assembly
+LOCAL_ASSEMBLY_MAX_RINGS = 100_000
+# the chain engine halves a coarse tile while the average segment count
+# per tile stays above this (see chain_stitched_polygonize)
+TARGET_SEGMENTS_PER_TILE = 8000
 
 RING_SCHEMA = T.StructType(
     [
@@ -123,40 +140,6 @@ CHAIN_SCHEMA = T.StructType(
 
 
 
-def _tile_range_cols(x0, y0, ts_k, buffer, cols, rows, bx1, by1, bx2, by2):
-    """Covered-tile index ranges (boundary-inclusive) for a bbox on
-    the (x0, y0)-anchored grid of size ts_k with buffered windows.
-
-    BOTH bounds clamp into [0, n-1]: for a bbox wholly outside the
-    grid an unclamped lo > hi makes Spark's ``sequence(lo, hi)``
-    DESCEND instead of being empty — materializing phantom out-of-grid
-    tiles (the cross-engine equivalence test's overhanging fixtures
-    catch this). Two-sided clamping collapses
-    out-of-grid geometry into the edge tile — exactly the convention
-    the kernels' vertex-claim clips already use — and keeps the
-    pairwise-meet property: any two intersecting segments still share
-    the (clamped) tile of their intersection point, since clamping is
-    monotone."""
-    ts_l = F.lit(ts_k)
-    i_lo = F.least(
-        F.greatest(F.ceil((bx1 - F.lit(x0 + buffer)) / ts_l - 1), F.lit(0)),
-        F.lit(cols - 1),
-    ).cast("int")
-    i_hi = F.greatest(
-        F.least(F.floor((bx2 - F.lit(x0 - buffer)) / ts_l), F.lit(cols - 1)),
-        F.lit(0),
-    ).cast("int")
-    j_lo = F.least(
-        F.greatest(F.ceil((by1 - F.lit(y0 + buffer)) / ts_l - 1), F.lit(0)),
-        F.lit(rows - 1),
-    ).cast("int")
-    j_hi = F.greatest(
-        F.least(F.floor((by2 - F.lit(y0 - buffer)) / ts_l), F.lit(rows - 1)),
-        F.lit(0),
-    ).cast("int")
-    return i_lo, i_hi, j_lo, j_hi
-
-
 _PRESPLIT_TMPDIR: str | None = None
 
 
@@ -169,20 +152,6 @@ def _presplit_tmpdir() -> str:
         _PRESPLIT_TMPDIR = tempfile.mkdtemp(prefix="gp_presplit_")
         atexit.register(shutil.rmtree, _PRESPLIT_TMPDIR, ignore_errors=True)
     return _PRESPLIT_TMPDIR
-
-
-def _prof(label: str, t0: float) -> float:
-    """Env-gated phase timer (SPARK_GRAFT_PROFILE=1): prints the wall
-    between driver-side phase boundaries — each phase ends at a Spark
-    action, so the print attributes real cluster work, not lazy plan
-    building. Zero cost when unset."""
-    import os
-    import time
-
-    t1 = time.time()
-    if os.environ.get("SPARK_GRAFT_PROFILE"):
-        print(f"CHAINPROF {label}: {t1 - t0:.3f}s", flush=True)
-    return t1
 
 
 def _mix64(h: np.ndarray) -> np.ndarray:
@@ -266,7 +235,7 @@ def _rings_have_spurs(ring_xs: list, ring_ys: list) -> np.ndarray:
     return flags
 
 
-def _make_chain_kernel(x0, y0, ts, buffer_eff, snap_grid, cols, rows, fmap):
+def _make_chain_kernel(x0, y0, ts, snap_grid, cols, rows, fmap):
     def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tile_i, tile_j, f, sub_i, sub_j = (int(v) for v in key)
 
@@ -302,32 +271,15 @@ def _make_chain_kernel(x0, y0, ts, buffer_eff, snap_grid, cols, rows, fmap):
         if m == 0:
             return empty
 
-        sx = g.nx[g.de_src]
-        sy = g.ny[g.de_src]
         # claim: tail node inside this (sub-)tile's core cell. The
         # owner index is CLIPPED to the tile grid so nodes exactly on
-        # the global bbox max edge (floor index == cols/rows) belong
-        # to the last tile instead of to nobody — every half-edge must
-        # have exactly one claimant or chain links dangle. Hot tiles
-        # sub-split into f×f claiming cells; the factor map is closed
-        # over so every kernel derives the same owner for any node.
-        ci = np.clip(np.floor((sx - x0) / ts).astype(np.int64), 0, cols - 1)
-        cj = np.clip(np.floor((sy - y0) / ts).astype(np.int64), 0, rows - 1)
-        f_arr = np.ones(sx.size, dtype=np.int64)
-        osi = np.zeros(sx.size, dtype=np.int64)
-        osj = np.zeros(sx.size, dtype=np.int64)
-        for (hti, htj), fv in fmap.items():
-            hot = (ci == hti) & (cj == htj)
-            if not hot.any():
-                continue
-            s = ts / fv
-            osi[hot] = np.clip(
-                np.floor((sx[hot] - (x0 + hti * ts)) / s).astype(np.int64), 0, fv - 1
-            )
-            osj[hot] = np.clip(
-                np.floor((sy[hot] - (y0 + htj * ts)) / s).astype(np.int64), 0, fv - 1
-            )
-            f_arr[hot] = fv
+        # the global bbox max edge belong to the last tile instead of to
+        # nobody — every half-edge must have exactly one claimant or
+        # chain links dangle. The factor map is closed over so every
+        # kernel derives the same owner for any node.
+        ci, cj, f_arr, osi, osj = claim_cores(
+            g.nx[g.de_src], g.ny[g.de_src], x0, y0, ts, cols, rows, fmap
+        )
         claimed = (
             (ci == tile_i)
             & (cj == tile_j)
@@ -695,10 +647,7 @@ SEG_SCHEMA = T.StructType(
 def _presplit_long_segments(
     segments: DataFrame,
     tile_size: float,
-    x0: float,
-    y0: float,
-    x1g: float,
-    y1g: float,
+    bbox: tuple[float, float, float, float],
     snap_grid: float,
     n_segments: int | None = None,
     driver_gate: int = 4096,
@@ -780,8 +729,8 @@ def _presplit_long_segments(
         l_new = float(np.sqrt((x2 - x1) ** 2 + (y2 - y1) ** 2).max()) if x1.size else 0.0
         return out, (l_new, int(x1.size)), None, path
     eps = 2.0 * max(snap_grid, 1e-300)
-    cols = max(int(np.ceil((x1g - x0) / tile_size)), 1)
-    rows = max(int(np.ceil((y1g - y0) / tile_size)), 1)
+    x0, y0 = bbox[0], bbox[1]
+    cols, rows = grid_shape(bbox, tile_size)
 
     def snap_norm(batches):
         from ..kernels.noding import snap
@@ -814,10 +763,12 @@ def _presplit_long_segments(
     sbx2 = F.greatest("x1", "x2") + F.lit(eps)
     sby1 = F.least("y1", "y2") - F.lit(eps)
     sby2 = F.greatest("y1", "y2") + F.lit(eps)
-    # two-sided clamps: see _tile_range_cols (descending-
-    # sequence hazard — out-of-grid segments collapse into the edge
-    # tile, where every mutually-intersecting out-of-grid pair still
-    # meets because clamping is monotone)
+    # eps-padded plain-floor ranges, NOT the buffered windows of
+    # tiling.assign_windows: a split pair must share the tile holding
+    # its intersection point. Two-sided clamps as in tiling
+    # (descending-sequence hazard — out-of-grid segments collapse into
+    # the edge tile, where every mutually-intersecting out-of-grid pair
+    # still meets because clamping is monotone)
     i_lo = F.least(F.greatest(F.floor((sbx1 - F.lit(x0)) / F.lit(tile_size)), F.lit(0)), F.lit(cols - 1)).cast("int")
     i_hi = F.greatest(F.least(F.floor((sbx2 - F.lit(x0)) / F.lit(tile_size)), F.lit(cols - 1)), F.lit(0)).cast("int")
     j_lo = F.least(F.greatest(F.floor((sby1 - F.lit(y0)) / F.lit(tile_size)), F.lit(0)), F.lit(rows - 1)).cast("int")
@@ -905,11 +856,9 @@ def chain_stitched_polygonize(
     snap_grid: float = DEFAULT_SNAP_GRID,
     drop_collapsed: bool = False,
     assembly: str = "auto",
-    distributed_assembly_threshold: int = 200_000,
     chain_merge_threshold: int = 200_000,
     max_segments_per_tile: int | None = 200_000,
     max_split_factor: int = 16,
-    target_segments_per_tile: int = 8000,
 ) -> DataFrame:
     """Exact distributed polygonize via boundary-chain stitching (module
     docstring). Output semantics match ``stitched_polygonize`` /
@@ -923,15 +872,13 @@ def chain_stitched_polygonize(
         raise ValueError(
             f"assembly must be auto|local|fused|distributed, got {assembly!r}"
         )
-    import time as _time
-
-    _t = _time.time()
     _presplit_file: str | None = None
     segments = segmentize_df(lines_df).persist()
     _to_unpersist = [segments]  # cache hygiene: dropped once consumed
     if bbox is None:
         bbox = _bbox_of_segments(segments)
-    x0, y0, x1g, y1g = (float(v) for v in bbox)
+    bbox = tuple(float(v) for v in bbox)
+    x0, y0 = bbox[0], bbox[1]
 
     seg_len = F.sqrt(
         (F.col("x2") - F.col("x1")) ** 2 + (F.col("y2") - F.col("y1")) ** 2
@@ -941,7 +888,6 @@ def chain_stitched_polygonize(
     ).collect()[0]
     l_max = _st["l"] or 0.0
     n_segments = int(_st["n"])
-    _t = _prof("segmentize+stats", _t)
     if (l_max / tile_size) ** 2 >= 32.0:
         # long-segment regime (full-extent lattice lines): buffer_eff
         # balloons to l_max, so a segment replicates to
@@ -953,7 +899,7 @@ def chain_stitched_polygonize(
         # than the redundancy they remove (measured: grid-100/tile-25
         # regressed ~0.3 s, grid-400/tile-25 improved ~2.4 s).
         segments, _split_stats, _aux_cache, _presplit_file = _presplit_long_segments(
-            segments, tile_size, x0, y0, x1g, y1g, snap_grid,
+            segments, tile_size, bbox, snap_grid,
             n_segments=n_segments,
         )
         segments = segments.persist()
@@ -973,7 +919,6 @@ def chain_stitched_polygonize(
             n_segments = int(_st["n"])
         # the raw segment cache is no longer read by anything downstream
         _to_unpersist.pop(0).unpersist()
-        _t = _prof("presplit+stats", _t)
     buffer_eff = max(float(buffer), float(l_max) * (1 + 1e-9) + 4 * snap_grid)
 
     # Unlike tiled_polygonize (where tile_size defines output
@@ -981,7 +926,7 @@ def chain_stitched_polygonize(
     # claiming partition — output is the global ring set for any tile
     # size, and exactness needs only buffer_eff ≥ max segment length.
     # So refine an overly coarse caller tile while the average per-tile
-    # noding volume stays above ``target_segments_per_tile`` (coarse
+    # noding volume stays above ``TARGET_SEGMENTS_PER_TILE`` (coarse
     # tiles re-node quadratically more than their share on dense
     # linework). r5 re-tune with the fused assembly: 8k/tile (grid-400
     # stays at tile 50 / 64 tasks) beats the r4 4k (tile 25 / 256
@@ -994,26 +939,14 @@ def chain_stitched_polygonize(
         cand = tile_eff / 2.0
         if cand < 8.0 * buffer_eff:
             break
-        n_tiles = max(int(np.ceil((x1g - x0) / tile_eff)), 1) * max(
-            int(np.ceil((y1g - y0) / tile_eff)), 1
-        )
-        if n_segments / n_tiles <= target_segments_per_tile:
+        n_cols, n_rows = grid_shape(bbox, tile_eff)
+        if n_segments / (n_cols * n_rows) <= TARGET_SEGMENTS_PER_TILE:
             break
         tile_eff = cand
     tile_size = tile_eff
 
-    cols = max(int(np.ceil((x1g - x0) / tile_size)), 1)
-    rows = max(int(np.ceil((y1g - y0) / tile_size)), 1)
-    sbx1 = F.least("x1", "x2")
-    sbx2 = F.greatest("x1", "x2")
-    sby1 = F.least("y1", "y2")
-    sby2 = F.greatest("y1", "y2")
-    i_lo, i_hi, j_lo, j_hi = _tile_range_cols(
-        x0, y0, tile_size, buffer_eff, cols, rows, sbx1, sby1, sbx2, sby2
-    )
-    assigned = segments.withColumn("tile_i", F.explode(F.sequence(i_lo, i_hi))).withColumn(
-        "tile_j", F.explode(F.sequence(j_lo, j_hi))
-    )
+    cols, rows = grid_shape(bbox, tile_size)
+    assigned = assign_windows(segments, x0, y0, tile_size, buffer_eff, cols, rows)
     spark = lines_df.sparkSession
 
     # hot-tile skew sub-split (north_rule explicit salting): tiles
@@ -1021,60 +954,30 @@ def chain_stitched_polygonize(
     # shatter into f×f claiming sub-cells. This is ONLY a finer
     # claiming partition — link keys are half-edge identities, so
     # chains crossing sub-cell boundaries merge exactly like
-    # tile-crossing ones.
+    # tile-crossing ones. The kernels claim through the driver-side
+    # factor map, so the factors are collected.
     fmap: dict[tuple[int, int], int] = {}
     # a tile's window count is bounded by the total segment count, so
     # when the whole input fits one kernel task no tile can be hot —
     # skip the per-tile count job entirely (the common small case)
     if max_segments_per_tile is not None and n_segments > max_segments_per_tile:
-        fac_rows = (
-            assigned.groupBy("tile_i", "tile_j")
-            .count()
-            .filter(F.col("count") > max_segments_per_tile)
-            .collect()
-        )
         fmap = {
-            (int(r["tile_i"]), int(r["tile_j"])): int(
-                min(
-                    np.ceil(np.sqrt(r["count"] / max_segments_per_tile)),
-                    max_split_factor,
-                )
-            )
-            for r in fac_rows
+            (r["tile_i"], r["tile_j"]): r["f"]
+            for r in hot_tile_factors(
+                assigned, max_segments_per_tile, max_split_factor
+            ).collect()
         }
     if fmap:
         fdf = spark.createDataFrame(
             [(ti, tj, fv) for (ti, tj), fv in fmap.items()],
             "tile_i int, tile_j int, f int",
         )
-        assigned = assigned.join(F.broadcast(fdf), ["tile_i", "tile_j"], "left").fillna(
-            {"f": 1}
-        )
-        tile_x0 = F.lit(x0) + F.col("tile_i").cast("double") * F.lit(tile_size)
-        tile_y0 = F.lit(y0) + F.col("tile_j").cast("double") * F.lit(tile_size)
-        side = F.lit(tile_size) / F.col("f")
-        # two-sided clamps: see _tile_range_cols (descending-
-        # sequence hazard)
-        si_lo = F.least(F.greatest(F.ceil((sbx1 - F.lit(buffer_eff) - tile_x0) / side - 1), F.lit(0)), F.col("f") - 1).cast("int")
-        si_hi = F.greatest(F.least(F.floor((sbx2 + F.lit(buffer_eff) - tile_x0) / side), F.col("f") - 1), F.lit(0)).cast("int")
-        sj_lo = F.least(F.greatest(F.ceil((sby1 - F.lit(buffer_eff) - tile_y0) / side - 1), F.lit(0)), F.col("f") - 1).cast("int")
-        sj_hi = F.greatest(F.least(F.floor((sby2 + F.lit(buffer_eff) - tile_y0) / side), F.col("f") - 1), F.lit(0)).cast("int")
-        assigned = assigned.withColumn("sub_i", F.explode(F.sequence(si_lo, si_hi))).withColumn(
-            "sub_j", F.explode(F.sequence(sj_lo, sj_hi))
-        )
+        assigned = split_hot_tiles(assigned, fdf, x0, y0, tile_size, buffer_eff)
     else:
-        assigned = (
-            assigned.withColumn("f", F.lit(1))
-            .withColumn("sub_i", F.lit(0))
-            .withColumn("sub_j", F.lit(0))
-        )
-    key_cols = ["tile_i", "tile_j", "f", "sub_i", "sub_j"]
-    n_parts = max(int(spark.sparkContext.defaultParallelism) * 2, 16)
-    assigned = assigned.repartition(n_parts, *key_cols)
+        assigned = unsplit(assigned)
+    assigned = repartition_tiles(assigned)
 
-    kernel = _make_chain_kernel(
-        x0, y0, float(tile_size), buffer_eff, snap_grid, cols, rows, fmap
-    )
+    kernel = _make_chain_kernel(x0, y0, float(tile_size), snap_grid, cols, rows, fmap)
     # r6: self-GC'd localCheckpoint instead of persist — blocks are
     # ContextCleaner-freed when the returned plan drops (no
     # CacheManager entry to leak or to plan-match a later run), and
@@ -1082,7 +985,7 @@ def chain_stitched_polygonize(
     # assembly's bypass rows flow straight from here — zero extra
     # copies of plain ring bytes)
     out = (
-        assigned.groupBy(*key_cols)
+        assigned.groupBy(*TILE_KEY)
         .applyInPandas(kernel, CHAIN_SCHEMA)
         .localCheckpoint(eager=False)
     )
@@ -1123,7 +1026,6 @@ def chain_stitched_polygonize(
             if int(r["kind"]) == 0
             for v in (r["cwc"] or ())
         }
-    _t = _prof("trace+counts", _t)
     n_chains, chain_coords = kc.get(1, (0, 0))
     n_rings_upper = kc.get(0, (0, 0))[0] + n_chains
     # the counts job materialized the kernel output cache — the segment
@@ -1142,7 +1044,6 @@ def chain_stitched_polygonize(
         merged = _merge_chain_cycles_local(chains)
     else:
         merged = _merge_chain_cycles_distributed(chains)
-    _t = _prof("merge_build", _t)
 
     if assembly == "auto":
         # r5: large ring sets take the FUSED per-core assembly (zero
@@ -1154,7 +1055,7 @@ def chain_stitched_polygonize(
         # — and only fused survives 100×, so the tie goes to it.
         assembly = (
             "local"
-            if n_rings_upper <= min(distributed_assembly_threshold, 100_000)
+            if n_rings_upper <= LOCAL_ASSEMBLY_MAX_RINGS
             else "fused"
         )
     if assembly == "fused":

@@ -44,6 +44,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..kernels.polygonize import DEFAULT_SNAP_GRID, polygonize_segments_pdf
+from .tiling import (
+    TILE_KEY,
+    assign_windows,
+    grid_shape,
+    hot_tile_factors,
+    owned_by_core,
+    repartition_tiles,
+    split_hot_tiles,
+)
 
 POLYGON_SCHEMA = T.StructType(
     [
@@ -113,9 +122,6 @@ def _bbox_of_segments(segments: DataFrame) -> tuple[float, float, float, float]:
     return (r["bx0"], r["by0"], r["bx1"], r["by1"])
 
 
-TILE_KEY = ["tile_i", "tile_j", "f", "sub_i", "sub_j"]
-
-
 def prepare_tiled(
     lines_df: DataFrame,
     tile_size: float,
@@ -132,13 +138,10 @@ def prepare_tiled(
     segments = segmentize_df(lines_df)
     if bbox is None:
         bbox = _bbox_of_segments(segments)
-    x0, y0, x1g, y1g = (float(v) for v in bbox)
-    cols = max(int(np.ceil((x1g - x0) / tile_size)), 1)
-    rows = max(int(np.ceil((y1g - y0) / tile_size)), 1)
-
-    assigned = assign_tiles(segments, tile_size, buffer, x0, y0, cols, rows)
+    x0, y0 = float(bbox[0]), float(bbox[1])
+    cols, rows = grid_shape(bbox, tile_size)
     return prepare_assigned(
-        assigned,
+        assign_windows(segments, x0, y0, tile_size, buffer, cols, rows),
         tile_size,
         buffer=buffer,
         x0=x0,
@@ -147,53 +150,6 @@ def prepare_tiled(
         drop_collapsed=drop_collapsed,
         max_segments_per_tile=max_segments_per_tile,
         max_split_factor=max_split_factor,
-    )
-
-
-def assign_tiles(
-    segments: DataFrame,
-    tile_size: float,
-    buffer: float,
-    x0: float,
-    y0: float,
-    cols: int,
-    rows: int,
-) -> DataFrame:
-    """Buffered tile assignment as pure column expressions —
-    boundary-INCLUSIVE tile ranges: a bbox touching a buffered tile
-    edge exactly belongs to that tile too (the reference uses
-    Rect::intersects, which is closed — tiling.rs:74; the
-    exact-boundary fixture tiling_tests.rs:52-80 depends on it).
-    i_lo = ceil(v - 1) includes the tile whose upper edge == bx1."""
-    bx1 = F.least("x1", "x2")
-    bx2 = F.greatest("x1", "x2")
-    by1 = F.least("y1", "y2")
-    by2 = F.greatest("y1", "y2")
-    ts = F.lit(tile_size)
-    # BOTH bounds clamp into [0, n-1] (r6): lo > hi previously made
-    # Spark's sequence() DESCEND, materializing phantom out-of-grid
-    # tiles for segments wholly outside the declared bbox — whose
-    # kernels then emitted polygons the documented contract (and the
-    # reference's bbox-derived grid, src/tiling.rs:42-58) says are
-    # dropped. Clamping collapses out-of-grid segments into the edge
-    # tile; their polygons' centroids stay outside every half-open
-    # core, so ownership drops them exactly as documented.
-    i_lo = F.least(
-        F.greatest(F.ceil((bx1 - F.lit(x0 + buffer)) / ts - 1), F.lit(0)),
-        F.lit(cols - 1),
-    ).cast("int")
-    i_hi = F.greatest(
-        F.least(F.floor((bx2 - F.lit(x0 - buffer)) / ts), F.lit(cols - 1)), F.lit(0)
-    ).cast("int")
-    j_lo = F.least(
-        F.greatest(F.ceil((by1 - F.lit(y0 + buffer)) / ts - 1), F.lit(0)),
-        F.lit(rows - 1),
-    ).cast("int")
-    j_hi = F.greatest(
-        F.least(F.floor((by2 - F.lit(y0 - buffer)) / ts), F.lit(rows - 1)), F.lit(0)
-    ).cast("int")
-    return segments.withColumn("tile_i", F.explode(F.sequence(i_lo, i_hi))).withColumn(
-        "tile_j", F.explode(F.sequence(j_lo, j_hi))
     )
 
 
@@ -209,76 +165,19 @@ def prepare_assigned(
     max_split_factor: int = 16,
 ):
     """Skew sub-split + kernel for ALREADY tile-assigned segments
-    (``assign_tiles`` output, or a tile-partitioned segment store as in
-    the streaming path)."""
-    bx1 = F.least("x1", "x2")
-    bx2 = F.greatest("x1", "x2")
-    by1 = F.least("y1", "y2")
-    by2 = F.greatest("y1", "y2")
-    ts = F.lit(tile_size)
-
-    # ---- skew split: hot tiles → f×f buffered sub-tiles --------------
+    (``tiling.assign_windows`` output, or a tile-partitioned segment
+    store as in the streaming path). The hot-tile factors stay inside
+    the plan, a broadcast join of one aggregate."""
+    factors = None
     if max_segments_per_tile is not None:
-        factors = (
-            assigned.groupBy("tile_i", "tile_j")
-            .count()
-            .filter(F.col("count") > max_segments_per_tile)
-            .select(
-                "tile_i",
-                "tile_j",
-                F.least(
-                    F.ceil(F.sqrt(F.col("count") / F.lit(max_segments_per_tile))),
-                    F.lit(max_split_factor),
-                )
-                .cast("int")
-                .alias("f"),
-            )
-        )
-        assigned = assigned.join(F.broadcast(factors), ["tile_i", "tile_j"], "left").fillna(
-            {"f": 1}
-        )
-    else:
-        assigned = assigned.withColumn("f", F.lit(1))
-
-    tile_x0 = F.lit(x0) + F.col("tile_i").cast("double") * ts
-    tile_y0 = F.lit(y0) + F.col("tile_j").cast("double") * ts
-    side = ts / F.col("f")
-    # two-sided clamps: see assign_tiles (descending-sequence hazard)
-    si_lo = F.least(
-        F.greatest(F.ceil((bx1 - F.lit(buffer) - tile_x0) / side - 1), F.lit(0)),
-        F.col("f") - 1,
-    ).cast("int")
-    si_hi = F.greatest(
-        F.least(F.floor((bx2 + F.lit(buffer) - tile_x0) / side), F.col("f") - 1), F.lit(0)
-    ).cast("int")
-    sj_lo = F.least(
-        F.greatest(F.ceil((by1 - F.lit(buffer) - tile_y0) / side - 1), F.lit(0)),
-        F.col("f") - 1,
-    ).cast("int")
-    sj_hi = F.greatest(
-        F.least(F.floor((by2 + F.lit(buffer) - tile_y0) / side), F.col("f") - 1), F.lit(0)
-    ).cast("int")
-    assigned = assigned.withColumn("sub_i", F.explode(F.sequence(si_lo, si_hi))).withColumn(
-        "sub_j", F.explode(F.sequence(sj_lo, sj_hi))
+        factors = hot_tile_factors(assigned, max_segments_per_tile, max_split_factor)
+    assigned = repartition_tiles(
+        split_hot_tiles(assigned, factors, x0, y0, tile_size, buffer)
     )
-
-    # Explicit hash repartition on the tile key BEFORE the grouped-map
-    # UDF: a grouped-map's cost is per-group kernel CPU, not shuffle
-    # bytes, but AQE coalesces by bytes — a few MB of compressed
-    # segments collapse to ONE task and serialize the whole stage
-    # (observed: grid-400 polygonize = 31s single-task vs ~3s spread).
-    # groupBy reuses this exact hash partitioning, so no extra shuffle.
-    sess = assigned.sparkSession
-    n_parts = max(int(sess.sparkContext.defaultParallelism) * 2, 16)
-    assigned = assigned.repartition(n_parts, *TILE_KEY)
 
     ts_py = float(tile_size)
 
     def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tile_i, tile_j, f, sub_i, sub_j = (int(k) for k in key)
-        side_py = ts_py / f
-        core_x0 = x0 + tile_i * ts_py + sub_i * side_py
-        core_y0 = y0 + tile_j * ts_py + sub_j * side_py
         out = polygonize_segments_pdf(
             pdf["x1"].to_numpy(),
             pdf["y1"].to_numpy(),
@@ -287,20 +186,14 @@ def prepare_assigned(
             node_input=True,  # per-tile noding, reference tiling.rs:62-63
             snap_grid=snap_grid,
             drop_collapsed=drop_collapsed,
-            tile_i=tile_i,
-            tile_j=tile_j,
+            tile_i=int(key[0]),
+            tile_j=int(key[1]),
         )
-        cx = out["cx"].to_numpy()
-        cy = out["cy"].to_numpy()
         # sliver filter (tiling.rs:94-97) + half-open ownership
         # (tiling.rs:99-106); cores partition the plane → exactly-once
         # across (sub-)tiles
-        m = (
-            (out["area"].to_numpy() >= 1e-6)
-            & (cx >= core_x0)
-            & (cx < core_x0 + side_py)
-            & (cy >= core_y0)
-            & (cy < core_y0 + side_py)
+        m = (out["area"].to_numpy() >= 1e-6) & owned_by_core(
+            out["cx"].to_numpy(), out["cy"].to_numpy(), key, x0, y0, ts_py
         )
         out = out[m].reset_index(drop=True)
         out["poly_id"] = np.arange(len(out), dtype=np.int64)

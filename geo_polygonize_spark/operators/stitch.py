@@ -30,7 +30,6 @@ def stitched_polygonize(
     snap_grid: float = DEFAULT_SNAP_GRID,
     drop_collapsed: bool = False,
     assembly: str = "auto",
-    distributed_assembly_threshold: int = 200_000,
     max_segments_per_tile: int | None = 200_000,
     max_split_factor: int = 16,
     strategy: str = "auto",
@@ -47,10 +46,10 @@ def stitched_polygonize(
     17.1 s, sparse-60k 6.8 vs 21.6–30.5 s, random-200 1.6 vs 3.5–5.0 s).
 
     ``assembly``: "auto" (single-task assembly up to
-    ``min(distributed_assembly_threshold, 100_000)`` rings, the per-core
-    fused assembly above), "local" (always one task), "fused" (always
-    the per-core assembly of ``assembly.assemble_rings_fused``) or
-    "distributed" (always the DataFrame joins — the unbounded-scale
+    ``chain_stitch.LOCAL_ASSEMBLY_MAX_RINGS`` (100,000) rings, the
+    per-core fused assembly above), "local" (always one task), "fused"
+    (always the per-core assembly of ``assembly.assemble_rings_fused``)
+    or "distributed" (always the DataFrame joins — the unbounded-scale
     path).
     """
     if strategy not in ("auto", "chain"):
@@ -63,7 +62,6 @@ def stitched_polygonize(
         snap_grid=snap_grid,
         drop_collapsed=drop_collapsed,
         assembly=assembly,
-        distributed_assembly_threshold=distributed_assembly_threshold,
         max_segments_per_tile=max_segments_per_tile,
         max_split_factor=max_split_factor,
     )

@@ -27,22 +27,11 @@ the tile-partitioned store removes that O(corpus) per-batch term.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from ..checkpoint import resumable_tiled_polygonize
-from ..operators.polygonize_op import assign_tiles, segmentize_df
-
-import numpy as np
-
-
-def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check through the JVM Hadoop FileSystem — correct on
-    local paths, HDFS, and object stores alike (anything the session's
-    Hadoop configuration can resolve)."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
+from ..checkpoint import _hadoop_path_exists, resumable_tiled_polygonize
+from ..operators.polygonize_op import segmentize_df
+from ..operators.tiling import assign_windows, grid_shape
 
 
 def streaming_polygonize(
@@ -68,16 +57,15 @@ def streaming_polygonize(
     StreamingQuery; read the current coverage any time with
     ``read_coverage``.
     """
-    x0, y0, x1g, y1g = (float(v) for v in bbox)
-    cols = max(int(np.ceil((x1g - x0) / tile_size)), 1)
-    rows = max(int(np.ceil((y1g - y0) / tile_size)), 1)
+    x0, y0 = float(bbox[0]), float(bbox[1])
+    cols, rows = grid_shape(bbox, tile_size)
     seg_root = f"{store_dir}/segments"
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        seg = assign_tiles(
-            segmentize_df(batch_df), tile_size, buffer, x0, y0, cols, rows
+        seg = assign_windows(
+            segmentize_df(batch_df), x0, y0, tile_size, buffer, cols, rows
         ).persist()
         seg.write.mode("append").partitionBy("tile_i", "tile_j").parquet(seg_root)
         touched = [

@@ -120,7 +120,7 @@ def main() -> None:
     checks = [
         ("cell-key Exchanges carry no ring arrays (narrow cell join)", len(cell_exch_with_arrays) == 0),
         ("cell explode output pruned of ring arrays", len(gen_with_arrays) == 0),
-        ("per-polygon batch PIP kernel (MapInPandas)", "MapInPandas" in p),
+        ("per-batch PIP refine kernel (MapInArrow)", "MapInArrow" in p),
         ("no cartesian product", "CartesianProduct" not in p),
     ]
     sections.append(("pip_join (cells): narrow join, rings cross once per polygon", p, checks))
@@ -146,31 +146,22 @@ def main() -> None:
     # 7. chain-stitch trace stage: segment data crosses ONE exchange
     # (the claiming-key repartition) into the grouped-map trace kernel;
     # chain merging later moves only chain rows
-    from geo_polygonize_spark.operators.chain_stitch import (
-        CHAIN_SCHEMA,
-        _make_chain_kernel,
-        _tile_range_cols as _trc,
-    )
+    from geo_polygonize_spark.operators.chain_stitch import CHAIN_SCHEMA, _make_chain_kernel
     from geo_polygonize_spark.operators.polygonize_op import segmentize_df as _segdf
+    from geo_polygonize_spark.operators.tiling import (
+        TILE_KEY,
+        assign_windows,
+        grid_shape,
+        repartition_tiles,
+        unsplit,
+    )
 
-    segs = _segdf(lines)
-    ci_lo, ci_hi, cj_lo, cj_hi = _trc(
-        0.0, 0.0, 4.0, 1.5, 3, 3,
-        F.least("x1", "x2"), F.least("y1", "y2"),
-        F.greatest("x1", "x2"), F.greatest("y1", "y2"),
+    cols, rows = grid_shape((0.0, 0.0, 12.0, 12.0), 4.0)
+    chain_assigned = repartition_tiles(
+        unsplit(assign_windows(_segdf(lines), 0.0, 0.0, 4.0, 1.5, cols, rows))
     )
-    chain_assigned = (
-        segs.withColumn("tile_i", F.explode(F.sequence(ci_lo, ci_hi)))
-        .withColumn("tile_j", F.explode(F.sequence(cj_lo, cj_hi)))
-        .withColumn("f", F.lit(1))
-        .withColumn("sub_i", F.lit(0))
-        .withColumn("sub_j", F.lit(0))
-        .repartition(8, "tile_i", "tile_j", "f", "sub_i", "sub_j")
-    )
-    ck = _make_chain_kernel(0.0, 0.0, 4.0, 1.5, 1e-10, 3, 3, {})
-    chain_out = chain_assigned.groupBy(
-        "tile_i", "tile_j", "f", "sub_i", "sub_j"
-    ).applyInPandas(ck, CHAIN_SCHEMA)
+    ck = _make_chain_kernel(0.0, 0.0, 4.0, 1e-10, cols, rows, {})
+    chain_out = chain_assigned.groupBy(*TILE_KEY).applyInPandas(ck, CHAIN_SCHEMA)
     p = plan_of(chain_out)
     checks = [
         ("one exchange into the trace kernel", p.count("- Exchange") == 1),

@@ -266,6 +266,34 @@ class TestCheckpoint:
             m.columns
         )
 
+    def test_store_reads_name_existing_paths(self, spark, tmp_path, monkeypatch):
+        """Every store read during a fresh write and a resume names a
+        path that exists, with no glob: Spark logs a WARN stack trace
+        for a read of an absent path and for every glob read."""
+        from geo_polygonize_spark.checkpoint import resumable_tiled_polygonize
+
+        reader = type(spark.read)
+        real_parquet = reader.parquet
+        paths = []
+
+        def recording_parquet(self, *p, **kw):
+            paths.extend(p)
+            return real_parquet(self, *p, **kw)
+
+        monkeypatch.setattr(reader, "parquet", recording_parquet)
+        xs, ys = grid_lines(6)
+        lines = lines_to_df(spark, xs, ys)
+        ck = str(tmp_path / "ck")
+        for _ in range(2):  # fresh write, then resume
+            out = resumable_tiled_polygonize(
+                spark, lines, ck, tile_size=3.0, buffer=1.5, bbox=(0.0, 0.0, 6.0, 6.0),
+                drop_collapsed=True,
+            )
+            assert out.count() == 36
+        assert paths
+        assert [p for p in paths if any(c in p for c in "*?[{")] == []
+        assert [p for p in paths if not os.path.exists(p)] == []
+
     def test_resume_after_partial(self, spark, tmp_path):
         """Simulate a partial run: checkpoint half the linework, then
         run the full job against the same dir — only changed/missing
