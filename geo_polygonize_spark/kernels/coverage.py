@@ -6,18 +6,21 @@ a uniform cell grid over polygon bboxes with CSR buckets, flat ring
 coordinate arrays, and a fully vectorized batched query:
 
   cells → candidate (point, polygon) pairs → bbox filter →
-  length-grouped ray cast (shell, then holes of hits) →
+  ``kernels.rings.ray_cast_pairs`` (shell, then holes of hits) →
   smallest-area winner per point.
 
 Built once on the driver from the (bounded-size) polygon coverage and
-shipped to executors inside the Arrow UDF closure — the classic
-broadcast-side spatial join. The shuffle-based cell join remains in
-operators/spatial_join.py for coverages too large to broadcast.
+shipped to executors as a ``SparkContext.broadcast`` (once per
+executor, not per task) — the classic broadcast-side spatial join.
+The shuffle-based cell join remains in operators/spatial_join.py for
+coverages too large to broadcast.
 """
 
 from __future__ import annotations
 
 import numpy as np
+
+from .rings import ray_cast_pairs
 
 _U32 = float(2.0**-24)  # f32 unit roundoff
 
@@ -160,30 +163,6 @@ class CoverageIndex:
 
     # -- query ---------------------------------------------------------
 
-    def _ray_cast_pairs(self, px, py, ridx, flat_x, flat_y, off, length):
-        """Even-odd crossings for (point, ring) pairs, grouped by ring
-        length (division-free rule, see kernels/rings.py)."""
-        inside = np.zeros(ridx.size, dtype=bool)
-        pl = length[ridx]
-        for L in np.unique(pl):
-            sel_all = np.flatnonzero(pl == L)
-            step = max(int(4_000_000 // max(L, 1)), 64)
-            for s0 in range(0, sel_all.size, step):
-                sel = sel_all[s0 : s0 + step]
-                base = off[ridx[sel]][:, None] + np.arange(L)[None, :]
-                X = flat_x[base]
-                Y = flat_y[base]
-                x1, x2 = X[:, :-1], X[:, 1:]
-                y1, y2 = Y[:, :-1], Y[:, 1:]
-                pyv = py[sel][:, None]
-                pxv = px[sel][:, None]
-                straddle = (y1 > pyv) != (y2 > pyv)
-                lhs = (pxv - x1) * (y2 - y1)
-                rhs = (x2 - x1) * (pyv - y1)
-                crossings = np.count_nonzero(straddle & ((lhs < rhs) == (y2 > y1)), axis=1)
-                inside[sel] = (crossings % 2).astype(bool)
-        return inside
-
     @np.errstate(over="ignore", invalid="ignore")  # overflowed rows are uncertain
     def _ray_cast_pairs_fast(
         self, px, py, ridx, flat_x, flat_y, off, length, cx, cy, lx32, ly32, E
@@ -199,7 +178,7 @@ class CoverageIndex:
         comparison, u = 2^-24 — both ≥ 2× a worst-case forward error
         analysis of the f32 expressions vs the f64 ones) route every
         uncertain PAIR to the exact f64 path, so the combined result is
-        bit-identical to ``_ray_cast_pairs`` on all inputs. Probes more
+        bit-identical to ``ray_cast_pairs`` on all inputs. Probes more
         than ~B·5e-7 from every edge (every realistic probe — snapped
         coverages and quantized probe grids sit orders of magnitude
         further) never take the fallback, and the hot loop moves half
@@ -247,9 +226,7 @@ class CoverageIndex:
                     unc_rows.append(u_rows)
         if unc_rows:
             ur = np.concatenate(unc_rows)
-            inside[ur] = self._ray_cast_pairs(
-                px[ur], py[ur], ridx[ur], flat_x, flat_y, off, length
-            )
+            inside[ur] = ray_cast_pairs(px[ur], py[ur], ridx[ur], flat_x, flat_y, off)
         return inside
 
     def query(self, px: np.ndarray, py: np.ndarray):
@@ -308,15 +285,13 @@ class CoverageIndex:
 
         # shell ray cast (f32 mirror + certified exact fallback, unless
         # the index was built f64-only)
-        if getattr(self, "use_f32", True):
+        if self.use_f32:
             inside = self._ray_cast_pairs_fast(
                 px[prow], py[prow], pcol, self.sx, self.sy, self.soff, self.slen,
                 self.scx, self.scy, self.sx32, self.sy32, self.sE,
             )
         else:
-            inside = self._ray_cast_pairs(
-                px[prow], py[prow], pcol, self.sx, self.sy, self.soff, self.slen
-            )
+            inside = ray_cast_pairs(px[prow], py[prow], pcol, self.sx, self.sy, self.soff)
         prow, pcol = prow[inside], pcol[inside]
         if prow.size and self.hole_poly.size:
             # hole exclusion: pairs (point, hole ring) for polys with holes
@@ -337,16 +312,15 @@ class CoverageIndex:
                     + np.repeat(h_lo, h_cnt)
                 )
                 hridx = horder[hpos]
-                if getattr(self, "use_f32", True):
+                if self.use_f32:
                     in_hole = self._ray_cast_pairs_fast(
                         px[prow[src]], py[prow[src]], hridx,
                         self.hx, self.hy, self.hoff, self.hlen,
                         self.hcx, self.hcy, self.hx32, self.hy32, self.hE,
                     )
                 else:
-                    in_hole = self._ray_cast_pairs(
-                        px[prow[src]], py[prow[src]], hridx,
-                        self.hx, self.hy, self.hoff, self.hlen,
+                    in_hole = ray_cast_pairs(
+                        px[prow[src]], py[prow[src]], hridx, self.hx, self.hy, self.hoff
                     )
                 bad = np.zeros(prow.size, dtype=bool)
                 bad[src[in_hole]] = True

@@ -14,8 +14,11 @@ Reproduces the reference's post-tracing stages
   area > hole_area + 1e-6 (polygonizer.rs:192-249)
 * assembly: polygon net area (shell - holes) must exceed 1e-6
   (polygonizer.rs:251-259)
-* ``point_in_ring`` is the numpy-broadcast analog of the SIMD ray
-  cast (simd.rs:31-79) — identical even-odd crossing condition.
+* ``ray_cast_pairs`` is the package's one point-in-ring test, the
+  numpy analog of the SIMD ray cast (simd.rs:31-79): hole→parent
+  assignment, the coverage index and both PIP joins call it.
+  ``point_in_ring`` / ``points_in_ring`` keep the division form of the
+  same crossing condition as an independent oracle for tests.
 """
 
 from __future__ import annotations
@@ -214,8 +217,9 @@ def point_in_ring(px: float, py: float, xs: np.ndarray, ys: np.ndarray) -> bool:
 
 
 def points_in_ring(px: np.ndarray, py: np.ndarray, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
-    """Batched many-points × one-ring even-odd ray cast (same crossing
-    rule as ``point_in_ring``), used by the image PIP join."""
+    """Batched many-points × one-ring even-odd ray cast in the division
+    form of ``point_in_ring``. No operator calls it: it is the tests'
+    independent oracle for ``ray_cast_pairs``."""
     px = np.asarray(px, dtype=np.float64)[:, None]
     py = np.asarray(py, dtype=np.float64)[:, None]
     x1 = xs[None, :-1]
@@ -229,6 +233,47 @@ def points_in_ring(px: np.ndarray, py: np.ndarray, xs: np.ndarray, ys: np.ndarra
     return (crossings % 2).astype(bool)
 
 
+# Work budget of one dense cast block, in (pair, edge) cells. A ring
+# whose pairs would not fit one block (pairs × length above it) is
+# probed through its y-bucketed edge index instead. Near 2^18 cells the
+# two paths cost the same on rings of 257-65,537 vertices, and blocks
+# of this size stay in cache (4M-cell blocks ran up to 1.8× slower).
+_PAIR_BUDGET = 1 << 18
+
+
+def _odd_crossings(px, py, x1, y1, x2, y2):
+    """Even-odd parity per row: probes ``(px, py)`` (column vectors)
+    against the edges ``(x1, y1) → (x2, y2)`` in the columns. The
+    crossing condition of SimdRing::contains (simd.rs:31-79) in
+    division-free form: px < xint(py) ⇔ (px-x1)(y2-y1) <> (x2-x1)(py-y1)
+    by the sign of (y2-y1), so axis-aligned edges never divide by
+    zero."""
+    straddle = (y1 > py) != (y2 > py)
+    lhs = (px - x1) * (y2 - y1)
+    rhs = (x2 - x1) * (py - y1)
+    return np.count_nonzero(straddle & ((lhs < rhs) == (y2 > y1)), axis=1) % 2 == 1
+
+
+def _dense_pairs(px, py, ridx, fx, fy, off):
+    """Pairs grouped by ring length L: each group gathers its rings into
+    dense (pairs × L) blocks of at most ``_PAIR_BUDGET`` cells — no
+    padding, so one long ring does not widen the short ones."""
+    inside = np.zeros(ridx.size, dtype=bool)
+    pl = off[ridx + 1] - off[ridx]
+    for L in np.unique(pl):
+        sel_all = np.flatnonzero(pl == L)
+        step = max(int(_PAIR_BUDGET // max(L, 1)), 64)
+        for s0 in range(0, sel_all.size, step):
+            sel = sel_all[s0 : s0 + step]
+            base = off[ridx[sel]][:, None] + np.arange(L)[None, :]
+            X = fx[base]
+            Y = fy[base]
+            inside[sel] = _odd_crossings(
+                px[sel][:, None], py[sel][:, None], X[:, :-1], Y[:, :-1], X[:, 1:], Y[:, 1:]
+            )
+    return inside
+
+
 def _pip_many_vs_ring(px: np.ndarray, py: np.ndarray, xs: np.ndarray, ys: np.ndarray):
     """Even-odd containment of MANY probe points vs ONE closed ring,
     via a y-bucketed edge index: a horizontal ray at ``py`` can only
@@ -236,7 +281,8 @@ def _pip_many_vs_ring(px: np.ndarray, py: np.ndarray, xs: np.ndarray, ys: np.nda
     ~E/B edges of its bucket instead of all E. Turns the
     hull-vs-all-holes assignment (the dominant assembly cost on grid
     inputs: 10⁵ probes × 10⁵-vertex hull) from O(P·E) into
-    O(E + P·E/B). Identical crossing rule to the dense path."""
+    O(E + P·E/B). Bucketing is monotone in y, so every straddling edge
+    lands in its probe's bucket: the result equals the dense cast's."""
     x1, y1 = xs[:-1], ys[:-1]
     x2, y2 = xs[1:], ys[1:]
     e = x1.size
@@ -274,16 +320,41 @@ def _pip_many_vs_ring(px: np.ndarray, py: np.ndarray, xs: np.ndarray, ys: np.nda
         if es.size == 0:
             continue
         rows = pid_s[s0:s1]
-        pxv = px[rows][:, None]
-        pyv = py[rows][:, None]
-        ex1, ey1 = x1[es][None, :], y1[es][None, :]
-        ex2, ey2 = x2[es][None, :], y2[es][None, :]
-        straddle = (ey1 > pyv) != (ey2 > pyv)
-        lhs = (pxv - ex1) * (ey2 - ey1)
-        rhs = (ex2 - ex1) * (pyv - ey1)
-        crossm = straddle & ((lhs < rhs) == (ey2 > ey1))
-        out[rows] = (np.count_nonzero(crossm, axis=1) % 2).astype(bool)
+        out[rows] = _odd_crossings(
+            px[rows][:, None], py[rows][:, None],
+            x1[es][None, :], y1[es][None, :], x2[es][None, :], y2[es][None, :],
+        )
     return out
+
+
+def ray_cast_pairs(px, py, ridx, fx, fy, off) -> np.ndarray:
+    """Even-odd containment of probe ``(px[k], py[k])`` in ring
+    ``ridx[k]``, per pair. Rings are CSR: ring r is the closed ring
+    ``fx[off[r] : off[r + 1]]``, ``fy[...]``; orientation does not
+    matter. The package's one point-in-ring test (SimdRing::contains,
+    simd.rs:31-79).
+
+    Each ring picks its path from its own load: a ring whose pairs ×
+    length exceed ``_PAIR_BUDGET`` (a coverage hull probed by every
+    hole) goes through its y-bucketed edge index, O(E + P·E/B); every
+    other pair joins the length-grouped dense cast. Both evaluate
+    ``_odd_crossings`` on every edge that can straddle the probe, so
+    the path never changes a result."""
+    cnt = np.bincount(ridx)
+    is_heavy = cnt * np.diff(off[: cnt.size + 1]) > _PAIR_BUDGET
+    if not is_heavy.any():
+        return _dense_pairs(px, py, ridx, fx, fy, off)
+    inside = np.zeros(ridx.size, dtype=bool)
+    # heavy pairs grouped by ring with one sort, so many heavy rings
+    # cost O(pairs log pairs), not a scan of every pair per ring
+    heavy = np.flatnonzero(is_heavy[ridx])
+    heavy = heavy[np.argsort(ridx[heavy], kind="stable")]
+    for rows in np.split(heavy, np.flatnonzero(np.diff(ridx[heavy])) + 1):
+        ring = slice(off[ridx[rows[0]]], off[ridx[rows[0]] + 1])
+        inside[rows] = _pip_many_vs_ring(px[rows], py[rows], fx[ring], fy[ring])
+    light = np.flatnonzero(~is_heavy[ridx])
+    inside[light] = _dense_pairs(px[light], py[light], ridx[light], fx, fy, off)
+    return inside
 
 
 @dataclass
@@ -436,8 +507,7 @@ def _assemble_core(ring_xs: list, ring_ys: list):
     sx2 = cat(bxs2[shell_ids], bxs2[hole_ids][pf])
     sy1 = cat(bys1[shell_ids], bys1[hole_ids][pf])
     sy2 = cat(bys2[shell_ids], bys2[hole_ids][pf])
-    shell_len = cat(lens[shell_ids], lens[hole_ids][pf])
-    shell_off = cat(offs[:-1][shell_ids], offs[:-1][hole_ids][pf])
+    shell_ring = cat(shell_ids, hole_ids[pf])
 
     # --- hole assignment (polygonizer.rs:192-249) ---------------------
     hole_area_sum = np.zeros(n_shells)
@@ -468,54 +538,12 @@ def _assemble_core(ring_xs: list, ring_ys: list):
         bigger = all_shell_area[si] > h_area[hj] + 1e-6
         si, hj = si[bigger], hj[bigger]
         if si.size:
-            # vectorized PIP of hole centroids vs candidate shells,
-            # grouped by shell ring length (pad-free gather), chunked
-            # so the (rows × L) temporaries stay cache-sized. Shells
-            # whose (candidate count × ring length) is large — e.g. a
-            # grid hull probed by every cell — go through the
-            # y-bucketed edge index instead (O(E + P·E/B), not O(P·E)).
-            probe_x = cent_x[hole_ids][hj]
-            probe_y = cent_y[hole_ids][hj]
-            inside = np.zeros(si.size, dtype=bool)
-            pair_len = shell_len[si]
-
-            heavy_pairs = np.zeros(si.size, dtype=bool)
-            uq, ucount = np.unique(si, return_counts=True)
-            heavy_u = uq[(ucount * shell_len[uq]) > 4_000_000]
-            for u in heavy_u.tolist():
-                rows = np.flatnonzero(si == u)
-                heavy_pairs[rows] = True
-                o, l = shell_off[u], shell_len[u]
-                inside[rows] = _pip_many_vs_ring(
-                    probe_x[rows], probe_y[rows], fx[o : o + l], fy[o : o + l]
-                )
-            pair_len = np.where(heavy_pairs, -1, pair_len)
-            for L in np.unique(pair_len):
-                if L < 0:
-                    continue
-                sel_all = np.flatnonzero(pair_len == L)
-                step = max(int(2_000_000 // max(L, 1)), 64)
-                for s0 in range(0, sel_all.size, step):
-                    sel = sel_all[s0 : s0 + step]
-                    base = shell_off[si[sel]][:, None] + np.arange(L)[None, :]
-                    X = fx[base]
-                    Y = fy[base]
-                    # promoted shells are reversed rings — orientation
-                    # does not change even-odd crossings
-                    x1m, x2m = X[:, :-1], X[:, 1:]
-                    y1m, y2m = Y[:, :-1], Y[:, 1:]
-                    pyv = probe_y[sel][:, None]
-                    pxv = probe_x[sel][:, None]
-                    # division-free crossing test: px < xint(py)
-                    # ⇔ (px-x1)(y2-y1) <> (x2-x1)(py-y1) by sign of
-                    # (y2-y1); avoids div-by-zero NaN/inf slow paths on
-                    # axis-aligned edges
-                    straddle = (y1m > pyv) != (y2m > pyv)
-                    lhs = (pxv - x1m) * (y2m - y1m)
-                    rhs = (x2m - x1m) * (pyv - y1m)
-                    cross_m = straddle & ((lhs < rhs) == (y2m > y1m))
-                    crossings = np.count_nonzero(cross_m, axis=1)
-                    inside[sel] = (crossings % 2).astype(bool)
+            # PIP of hole centroids vs candidate shells; promoted shells
+            # are reversed rings — orientation does not change even-odd
+            # crossings
+            inside = ray_cast_pairs(
+                cent_x[hole_ids][hj], cent_y[hole_ids][hj], shell_ring[si], fx, fy, offs
+            )
             si, hj = si[inside], hj[inside]
             if si.size:
                 # smallest containing shell per hole (argmin)

@@ -23,39 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 
-def _topk_schema(k: int) -> T.StructType:
-    return T.StructType(
-        [
-            f
-            for i in range(k)
-            for f in (
-                T.StructField(f"nn{i}", T.LongType()),
-                T.StructField(f"cos{i}", T.DoubleType()),
-            )
-        ]
-    )
-
-
-def _explode_topk(df: DataFrame, id_col: str, k: int) -> DataFrame:
-    ranked = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("rank"),
-                    F.col(f"nn.nn{i}").alias("neighbor_id"),
-                    F.col(f"nn.cos{i}").alias("cosine"),
-                )
-                for i in range(k)
-            ]
-        )
-    )
-    return (
-        df.select(id_col, ranked.alias("r"))
-        .select(id_col, "r.rank", "r.neighbor_id", "r.cosine")
-        .where(F.col("neighbor_id") >= 0)
-    )
-
-
 def cosine_topk_bruteforce(
     table: DataFrame,
     queries: list[tuple[int, np.ndarray]],

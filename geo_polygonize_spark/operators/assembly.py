@@ -15,6 +15,13 @@ unsigned-area filter (polygonizer.rs:255-258):
   ring set (the fallback for a pathological merged residue, and the
   tests' ground truth).
 
+Every containment test is ``kernels.rings.ray_cast_pairs``. The fused
+assembly has one hole→parent candidate search, ``_pip_candidates``
+(closed-bbox filter, strictly-larger rule, ray cast): a core's own
+shells, the broadcast merged shells, the visitor probes and the
+driver's visitor-vs-merged-shell pass all call it. The distributed
+assembly casts each Arrow batch's candidate pairs in one call.
+
 Protocol of the fused assembly
 ------------------------------
 The chain engine emits two kinds of rings: *core* rings, closed inside
@@ -76,7 +83,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..functions.cells import cell_range_cols
 from ..kernels.bboxjoin import bbox_join
-from ..kernels.rings import _pip_many_vs_ring
+from ..kernels.rings import ray_cast_pairs
 from .polygonize_op import POLYGON_SCHEMA
 from .tiling import claim_cores, core_key, core_key_col, core_reach_index, touching_cores
 
@@ -386,9 +393,7 @@ def _best_reduce(si, hj, areas, rids):
     return o[first]
 
 
-def _core_local_assembly(
-    area, rid, cx, cy, bx1, by1, bx2, by2, coords_x, coords_y, idx, ray_cast_rows
-):
+def _core_local_assembly(area, rid, cx, cy, bx1, by1, bx2, by2, fx, fy, off, idx):
     """Single-claim-core member assembly WITHOUT merged-shell knowledge:
     exact-bbox twin promotion (polygonizer.rs:152-185) and hole→parent
     local-candidate search (strictly-larger min-(area, rid) rule,
@@ -423,10 +428,7 @@ def _core_local_assembly(
     best_rid = np.full(nh, np.iinfo(np.int64).max, dtype=np.int64)
     best_local = np.full(nh, -1, dtype=np.int64)  # pos into sh
 
-    si, hj = _pip_candidates(
-        sh, hx, hy, h_area, area, bx1, by1, bx2, by2, coords_x, coords_y,
-        ray_cast_rows,
-    )
+    si, hj = _pip_candidates(sh, hx, hy, h_area, area, bx1, by1, bx2, by2, fx, fy, off)
     if si.size:
         srid = rid[sh[si]]
         sel = _best_reduce(si, hj, s_area[si], srid)
@@ -437,36 +439,28 @@ def _core_local_assembly(
     return sh, s_area, ho, h_area, hx, hy, best_area, best_rid, best_local
 
 
-def _pip_candidates(
-    sh, hx, hy, h_area, area, bx1, by1, bx2, by2, coords_x, coords_y, ray_cast_rows
-):
-    """(si, hj) PIP-confirmed candidate pairs: hole centroids vs the
-    shells ``sh`` (strictly-larger area rule, polygonizer.rs:226)."""
+def _ring_csr(xs_list, ys_list):
+    """Flat x, flat y and offsets of a list of rings: the CSR layout of
+    ``ray_cast_pairs``."""
+    if not xs_list:
+        return np.empty(0), np.empty(0), np.zeros(1, dtype=np.int64)
+    off = np.concatenate(([0], np.cumsum([len(v) for v in xs_list])))
+    fx = np.concatenate(xs_list).astype(np.float64, copy=False)
+    return fx, np.concatenate(ys_list).astype(np.float64, copy=False), off
+
+
+def _pip_candidates(sh, hx, hy, h_area, area, bx1, by1, bx2, by2, fx, fy, off):
+    """The hole→parent candidate search: (si, hj) pairs where hole
+    centroid ``(hx[hj], hy[hj])`` lies in the closed bbox of shell
+    ``sh[si]``, the shell is strictly larger (polygonizer.rs:226), and
+    the ray cast confirms containment. ``sh`` indexes rings into
+    ``area``, the bbox arrays and the CSR rings ``(fx, fy, off)``."""
     if sh.size == 0 or hx.size == 0:
         return np.empty(0, np.int64), np.empty(0, np.int64)
     si, hj = bbox_join(bx1[sh], by1[sh], bx2[sh], by2[sh], hx, hy, hx, hy)
     keep = np.abs(area[sh])[si] > h_area[hj] + 1e-6
     si, hj = si[keep], hj[keep]
-    if si.size == 0:
-        return si, hj
-    inside = np.zeros(si.size, dtype=bool)
-    uq, ucount = np.unique(si, return_counts=True)
-    heavy = np.zeros(si.size, dtype=bool)
-    for u in uq[(ucount * np.fromiter(
-        (coords_x[sh[u]].size for u in uq.tolist()),
-        np.int64, uq.size,
-    )) > 4_000_000].tolist():
-        rws = np.flatnonzero(si == u)
-        heavy[rws] = True
-        inside[rws] = _pip_many_vs_ring(
-            hx[hj[rws]], hy[hj[rws]], coords_x[sh[u]], coords_y[sh[u]]
-        )
-    light = np.flatnonzero(~heavy)
-    if light.size:
-        inside[light] = ray_cast_rows(
-            hx[hj[light]], hy[hj[light]],
-            [(coords_x[sh[u]], coords_y[sh[u]]) for u in si[light].tolist()],
-        )
+    inside = ray_cast_pairs(hx[hj], hy[hj], sh[si], fx, fy, off)
     return si[inside], hj[inside]
 
 
@@ -480,8 +474,6 @@ def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
     for broadcast visitor holes."""
 
     def kernel(batches):
-        from .spatial_join import _ray_cast_rows
-
         pdfs = [p for p in batches if len(p)]
         if not pdfs:
             return
@@ -499,6 +491,7 @@ def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
         by2 = pdf["by2"].to_numpy()
         coords_x = [np.asarray(v, np.float64) for v in pdf["xs"]]
         coords_y = [np.asarray(v, np.float64) for v in pdf["ys"]]
+        fx, fy, off = _ring_csr(coords_x, coords_y)
 
         gkey = core_key(*claim_cores(bx1, by1, x0, y0, ts, cols, rows, fmap), rows)
         order = np.argsort(gkey, kind="stable")
@@ -511,7 +504,6 @@ def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
         for vi, v in enumerate(visitors):
             for k in v[4]:
                 vis_by_key.setdefault(k, []).append(vi)
-        g_by_core = g.get("by_core")
 
         out: dict = {k.name: [] for k in FUSED_SCHEMA.fields}
 
@@ -524,10 +516,7 @@ def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
             idx = order[a:b]
             (
                 sh, s_area, ho, h_area, hx, hy, best_area, best_rid, best_local
-            ) = _core_local_assembly(
-                area, rid, cx, cy, bx1, by1, bx2, by2,
-                coords_x, coords_y, idx, _ray_cast_rows,
-            )
+            ) = _core_local_assembly(area, rid, cx, cy, bx1, by1, bx2, by2, fx, fy, off, idx)
             nh = ho.size
             if nh and g["n"]:
                 # per-core pre-index: only merged shells whose bbox can
@@ -535,31 +524,21 @@ def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
                 # not the whole residue — on a lattice the residue is
                 # O(√n) boundary rings and a full scan per core would
                 # be quadratic-ish
-                if g_by_core is not None:
-                    glist = list(g.get("always", ())) + list(
-                        g_by_core.get(int(gk_s[a]), ())
-                    )
-                else:
-                    glist = range(g["n"])
-                for gi in glist:
-                    ga = g["area"][gi]
-                    m = np.flatnonzero(
-                        (hx >= g["bx1"][gi]) & (hx <= g["bx2"][gi])
-                        & (hy >= g["by1"][gi]) & (hy <= g["by2"][gi])
-                        & (ga > h_area + 1e-6)
-                    )
-                    if m.size == 0:
-                        continue
-                    ins = _pip_many_vs_ring(
-                        hx[m], hy[m], g["xs"][gi], g["ys"][gi]
-                    )
-                    m = m[ins]
-                    take = (ga < best_area[m]) | (
-                        (ga == best_area[m]) & (g["rid"][gi] < best_rid[m])
-                    )
+                glist = np.asarray(
+                    list(g["always"]) + list(g["by_core"].get(int(gk_s[a]), ())), np.int64
+                )
+                gsi, ghj = _pip_candidates(
+                    glist, hx, hy, h_area, g["area"], g["bx1"], g["by1"], g["bx2"], g["by2"],
+                    g["fx"], g["fy"], g["off"],
+                )
+                if gsi.size:
+                    gi = glist[gsi]
+                    sel = _best_reduce(gsi, ghj, g["area"][gi], g["rid"][gi])
+                    m, ga, gr = ghj[sel], g["area"][gi[sel]], g["rid"][gi[sel]]
+                    take = (ga < best_area[m]) | ((ga == best_area[m]) & (gr < best_rid[m]))
                     rows_ = m[take]
-                    best_area[rows_] = ga
-                    best_rid[rows_] = g["rid"][gi]
+                    best_area[rows_] = ga[take]
+                    best_rid[rows_] = gr[take]
                     best_local[rows_] = -1
 
             attach: dict = {}
@@ -588,8 +567,7 @@ def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
                 vhy = np.fromiter((visitors[v][3] for v in vids), np.float64, len(vids))
                 vha = np.fromiter((visitors[v][1] for v in vids), np.float64, len(vids))
                 vsi, vhj = _pip_candidates(
-                    sh, vhx, vhy, vha, area, bx1, by1, bx2, by2,
-                    coords_x, coords_y, _ray_cast_rows,
+                    sh, vhx, vhy, vha, area, bx1, by1, bx2, by2, fx, fy, off
                 )
                 if vsi.size:
                     vsrid = rid[sh[vsi]]
@@ -712,8 +690,7 @@ def assemble_rings_fused(
     g_by2 = np.fromiter((r["by2"] for r, _ in gshells), np.float64, ng)
     g_area = np.fromiter((abs(r["area"]) for r, _ in gshells), np.float64, ng)
     g_rid = np.fromiter((r["rid"] for r, _ in gshells), np.int64, ng)
-    g_xs = [np.asarray(r["xs"], np.float64) for r, _ in gshells]
-    g_ys = [np.asarray(r["ys"], np.float64) for r, _ in gshells]
+    g_fx, g_fy, g_off = _ring_csr([r["xs"] for r, _ in gshells], [r["ys"] for r, _ in gshells])
 
     # per-core reach index: only merged shells whose bbox can reach a
     # core are tested there; world-spanning shells (e.g. the hull) are
@@ -724,7 +701,7 @@ def assemble_rings_fused(
     payload = {
         "n": ng, "rid": g_rid, "area": g_area,
         "bx1": g_bx1, "by1": g_by1, "bx2": g_bx2, "by2": g_by2,
-        "xs": g_xs, "ys": g_ys, "by_core": by_core, "always": g_always,
+        "fx": g_fx, "fy": g_fy, "off": g_off, "by_core": by_core, "always": g_always,
     }
     gbc = spark.sparkContext.broadcast(payload)
 
@@ -747,26 +724,16 @@ def assemble_rings_fused(
             vis.append(
                 (int(v_rid[vi]), float(v_ha[vi]), float(v_cx[vi]), float(v_cy[vi]), keys)
             )
-        if ng:
-            si, hj = bbox_join(g_bx1, g_by1, g_bx2, g_by2, v_cx, v_cy, v_cx, v_cy)
-            keep = g_area[si] > v_ha[hj] + 1e-6
-            si, hj = si[keep], hj[keep]
-            if si.size:
-                inside = np.zeros(si.size, dtype=bool)
-                for u in np.unique(si).tolist():
-                    rws = np.flatnonzero(si == u)
-                    inside[rws] = _pip_many_vs_ring(
-                        v_cx[hj[rws]], v_cy[hj[rws]], g_xs[u], g_ys[u]
-                    )
-                si, hj = si[inside], hj[inside]
-            if si.size:
-                o = np.lexsort((g_rid[si], g_area[si], hj))
-                first = np.concatenate(([True], hj[o][1:] != hj[o][:-1]))
-                for s in o[first].tolist():
-                    extra_rows.append(
-                        (int(v_rid[hj[s]]), int(g_rid[si[s]]),
-                         float(g_area[si[s]]), float(v_ha[hj[s]]))
-                    )
+        si, hj = _pip_candidates(
+            np.arange(ng), v_cx, v_cy, v_ha, g_area, g_bx1, g_by1, g_bx2, g_by2,
+            g_fx, g_fy, g_off,
+        )
+        if si.size:
+            for s in _best_reduce(si, hj, g_area[si], g_rid[si]).tolist():
+                extra_rows.append(
+                    (int(v_rid[hj[s]]), int(g_rid[si[s]]),
+                     float(g_area[si[s]]), float(v_ha[hj[s]]))
+                )
     vbc = spark.sparkContext.broadcast(vis)
     extra_partials = (
         spark.createDataFrame(
@@ -954,8 +921,7 @@ def assemble_rings_distributed(rings: DataFrame, drop_collapsed: bool = False) -
         & (F.col("s_area") > F.col("h_area") + 1e-6)  # polygonizer.rs:226
     )
     # group candidates per shell, then join the shell's ring arrays by
-    # rid — coordinates cross the wire exactly once per shell; the PIP
-    # kernel is many-probes-vs-one-ring (y-bucketed for huge rings).
+    # rid — coordinates cross the wire exactly once per shell.
     # Promoted shells join the ORIGINAL (reversed) ring — orientation
     # does not change even-odd containment.
     # persisted: consumed by the broadcast key prune AND the coords
@@ -983,67 +949,36 @@ def assemble_rings_distributed(rings: DataFrame, drop_collapsed: bool = False) -
     )
 
     def pip_hits(batches):
-        """Two regimes per Arrow batch: HEAVY shells (probes × ring
-        length > 4M) go through the y-bucketed per-ring index; the
-        long tail of small shells (typically 1-2 probes each) flattens
-        into ONE length-grouped dense ray cast for the whole batch —
-        per-row numpy setup on 10⁵ tiny groups was the dominant
-        assembly CPU."""
-        from ..kernels.rings import _pip_many_vs_ring
-        from .spatial_join import _ray_cast_rows
+        """One ray cast per Arrow batch: every (hole centroid, candidate
+        shell) pair of the batch goes through a single ``ray_cast_pairs``
+        call over the batch's shells as CSR rings."""
+        import pyarrow as pa
 
-        for pdf in batches:
-            hr: list = []
-            rr: list = []
-            sa: list = []
-            ha_out: list = []
-            flat_px: list = []
-            flat_py: list = []
-            flat_rings: list = []
-            flat_meta: list = []
-            for row in pdf.itertuples(index=False):
-                probes = row.probes
-                if len(probes) == 0:
-                    continue
-                ring_x = np.asarray(row.xs, np.float64)
-                ring_y = np.asarray(row.ys, np.float64)
-                if len(probes) * ring_x.size > 4_000_000:
-                    pxx = np.fromiter((p["hcx"] for p in probes), np.float64, len(probes))
-                    pyy = np.fromiter((p["hcy"] for p in probes), np.float64, len(probes))
-                    inside = _pip_many_vs_ring(pxx, pyy, ring_x, ring_y)
-                    for i in np.flatnonzero(inside):
-                        p = probes[i]
-                        hr.append(p["h_rid"])
-                        rr.append(row.rid)
-                        sa.append(row.s_area)
-                        ha_out.append(p["h_area"])
-                else:
-                    for p in probes:
-                        flat_px.append(p["hcx"])
-                        flat_py.append(p["hcy"])
-                        flat_rings.append((ring_x, ring_y))
-                        flat_meta.append((p["h_rid"], row.rid, row.s_area, p["h_area"]))
-            if flat_rings:
-                inside = _ray_cast_rows(
-                    np.asarray(flat_px, np.float64), np.asarray(flat_py, np.float64), flat_rings
-                )
-                for i in np.flatnonzero(inside):
-                    m = flat_meta[i]
-                    hr.append(m[0])
-                    rr.append(m[1])
-                    sa.append(m[2])
-                    ha_out.append(m[3])
-            if hr:
-                yield pd.DataFrame(
-                    {
-                        "h_rid": np.asarray(hr, np.int64),
-                        "rid": np.asarray(rr, np.int64),
-                        "s_area": np.asarray(sa, np.float64),
-                        "h_area_back": np.asarray(ha_out, np.float64),
-                    }
+        def lengths(lists):
+            return lists.value_lengths().fill_null(0).to_numpy()
+
+        for batch in batches:
+            col = batch.column
+            probes = col("probes").flatten()
+            owner = np.repeat(np.arange(batch.num_rows), lengths(col("probes")))
+            off = np.concatenate(([0], np.cumsum(lengths(col("xs")))))
+            inside = ray_cast_pairs(
+                probes.field("hcx").to_numpy(), probes.field("hcy").to_numpy(), owner,
+                col("xs").flatten().to_numpy(), col("ys").flatten().to_numpy(), off,
+            )
+            hit = np.flatnonzero(inside)
+            if hit.size:
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        probes.field("h_rid").take(hit),
+                        col("rid").take(owner[hit]),
+                        col("s_area").take(owner[hit]),
+                        probes.field("h_area").take(hit),
+                    ],
+                    names=hit_schema.names,
                 )
 
-    hit = with_coords.mapInPandas(pip_hits, hit_schema)
+    hit = with_coords.mapInArrow(pip_hits, hit_schema)
     winners = (
         hit.groupBy("h_rid")
         .agg(F.min_by(F.struct("rid"), "s_area").alias("best"), F.min("h_area_back").alias("h_area"))

@@ -97,7 +97,6 @@ from .tiling import (
     hot_tile_factors,
     repartition_tiles,
     split_hot_tiles,
-    unsplit,
 )
 
 # ``assembly="auto"`` assembles up to this many rings (an upper bound
@@ -106,6 +105,14 @@ LOCAL_ASSEMBLY_MAX_RINGS = 100_000
 # the chain engine halves a coarse tile while the average segment count
 # per tile stays above this (see chain_stitched_polygonize)
 TARGET_SEGMENTS_PER_TILE = 8000
+# chain sets up to this size merge in one coalesced task (a dict walk
+# over perimeter-scale rows, far below the per-round latency of the
+# distributed CC path); larger sets take the pointer-doubling CC +
+# partition-local walk
+LOCAL_CHAIN_MERGE_MAX = 200_000
+# inputs up to this many segments run the long-segment pre-split on the
+# driver (see _presplit_long_segments)
+PRESPLIT_DRIVER_MAX_SEGMENTS = 4096
 
 RING_SCHEMA = T.StructType(
     [
@@ -650,7 +657,6 @@ def _presplit_long_segments(
     bbox: tuple[float, float, float, float],
     snap_grid: float,
     n_segments: int | None = None,
-    driver_gate: int = 4096,
 ) -> DataFrame:
     """One DISTRIBUTED round of snap-round noding (snap → find_splits →
     apply — exactly round 1 of ``node_segments`` on the same snapped,
@@ -672,7 +678,7 @@ def _presplit_long_segments(
     rows; triggered only when max segment length > tile_size.
 
     Driver fast path (r5): when the INPUT is tiny (``n_segments`` ≤
-    ``driver_gate``, e.g. a few thousand full-extent construction
+    ``PRESPLIT_DRIVER_MAX_SEGMENTS``, e.g. a few thousand full-extent construction
     lines — the reference's lattice benches are 802–1602 segments),
     the distributed replica's ~6 stage waves are pure scheduling
     latency (~2 s measured at grid-400 with warm workers for ~50 ms
@@ -683,7 +689,7 @@ def _presplit_long_segments(
     split output (bounded by the split count the distributed path
     would also materialize). Worst-case driver work is gate² pair
     candidates (vectorized, grid-binned); 4096 keeps that trivial."""
-    if n_segments is not None and n_segments <= driver_gate:
+    if n_segments is not None and n_segments <= PRESPLIT_DRIVER_MAX_SEGMENTS:
         from ..kernels.noding import (
             _apply_splits,
             _normalize_dedup,
@@ -856,18 +862,14 @@ def chain_stitched_polygonize(
     snap_grid: float = DEFAULT_SNAP_GRID,
     drop_collapsed: bool = False,
     assembly: str = "auto",
-    chain_merge_threshold: int = 200_000,
     max_segments_per_tile: int | None = 200_000,
     max_split_factor: int = 16,
 ) -> DataFrame:
     """Exact distributed polygonize via boundary-chain stitching (module
     docstring). Output semantics match ``stitched_polygonize`` /
-    single-group ``polygonize`` exactly.
-
-    ``chain_merge_threshold``: chain sets at or below it merge in one
-    coalesced task (a dict walk over perimeter-scale rows — far below
-    the per-round latency of the distributed CC path); larger sets take
-    the pointer-doubling CC + partition-local walk."""
+    single-group ``polygonize`` exactly. Chain sets up to
+    ``LOCAL_CHAIN_MERGE_MAX`` merge in one task, larger ones
+    distributed."""
     if assembly not in ("auto", "local", "fused", "distributed"):
         raise ValueError(
             f"assembly must be auto|local|fused|distributed, got {assembly!r}"
@@ -967,15 +969,14 @@ def chain_stitched_polygonize(
                 assigned, max_segments_per_tile, max_split_factor
             ).collect()
         }
-    if fmap:
-        fdf = spark.createDataFrame(
-            [(ti, tj, fv) for (ti, tj), fv in fmap.items()],
-            "tile_i int, tile_j int, f int",
+    fdf = (
+        spark.createDataFrame(
+            [(ti, tj, fv) for (ti, tj), fv in fmap.items()], "tile_i int, tile_j int, f int"
         )
-        assigned = split_hot_tiles(assigned, fdf, x0, y0, tile_size, buffer_eff)
-    else:
-        assigned = unsplit(assigned)
-    assigned = repartition_tiles(assigned)
+        if fmap
+        else None
+    )
+    assigned = repartition_tiles(split_hot_tiles(assigned, fdf, x0, y0, tile_size, buffer_eff))
 
     kernel = _make_chain_kernel(x0, y0, float(tile_size), snap_grid, cols, rows, fmap)
     # r6: self-GC'd localCheckpoint instead of persist — blocks are
@@ -1040,7 +1041,7 @@ def chain_stitched_polygonize(
             pass
     if n_chains == 0:
         merged = None
-    elif n_chains <= chain_merge_threshold:
+    elif n_chains <= LOCAL_CHAIN_MERGE_MAX:
         merged = _merge_chain_cycles_local(chains)
     else:
         merged = _merge_chain_cycles_distributed(chains)

@@ -10,9 +10,9 @@ cell-keyed equi-joins + vectorized refinement:
   cell their bbox covers (column exprs), points key to one cell, the
   equi-join + JVM bbox pre-filter prune candidates, candidates group
   per polygon (salted), ring arrays join ONCE per (polygon, salt),
-  and an Arrow kernel ray-casts each probe batch against its one
-  polygon (exact even-odd incl. holes, simd.rs:31-79 semantics;
-  y-bucketed edge index for huge rings). Winner per point = the
+  and an Arrow kernel ray-casts each batch's (probe, polygon) pairs
+  in two ``kernels.rings.ray_cast_pairs`` calls, shells then holes
+  (exact even-odd, simd.rs:31-79 semantics). Winner per point = the
   smallest-area containing polygon (argmin via ``min_by``, the same
   rule as hole assignment, polygonizer.rs:226-229).
   Skew: ``salt`` bounds the probe-group size per polygon (a polygon
@@ -61,40 +61,6 @@ def polygon_cells(
     return p.withColumn("cell_i", F.explode(F.sequence(ci1, ci2))).withColumn(
         "cell_j", F.explode(F.sequence(cj1, cj2))
     )
-
-
-def _ray_cast_rows(px: np.ndarray, py: np.ndarray, rings: list) -> np.ndarray:
-    """Fully vectorized per-row ray cast over a ragged batch of rings.
-    Rows are processed GROUPED BY RING LENGTH: the row coordinates of
-    each group concatenate into one dense (rows × L) matrix — no
-    padding, so one 400-vertex hull in a batch of 5-vertex cells does
-    not inflate every row to width 400. Identical crossing rule to the
-    reference SimdRing (simd.rs:31-79), division-free form."""
-    n = len(rings)
-    if n == 0:
-        return np.zeros(0, dtype=bool)
-    lens = np.fromiter((len(r[0]) for r in rings), dtype=np.int64, count=n)
-    out = np.zeros(n, dtype=bool)
-    for L in np.unique(lens):
-        sel = np.flatnonzero(lens == L)
-        step = max(int(4_000_000 // max(L, 1)), 64)
-        for s0 in range(0, sel.size, step):
-            rows = sel[s0 : s0 + step]
-            X = np.empty((rows.size, L))
-            Y = np.empty((rows.size, L))
-            for r, i in enumerate(rows):
-                X[r] = rings[i][0]
-                Y[r] = rings[i][1]
-            x1, x2 = X[:, :-1], X[:, 1:]
-            y1, y2 = Y[:, :-1], Y[:, 1:]
-            pyv = py[rows][:, None]
-            pxv = px[rows][:, None]
-            straddle = (y1 > pyv) != (y2 > pyv)
-            lhs = (pxv - x1) * (y2 - y1)
-            rhs = (x2 - x1) * (pyv - y1)
-            cross = straddle & ((lhs < rhs) == (y2 > y1))
-            out[rows] = (np.count_nonzero(cross, axis=1) % 2).astype(bool)
-    return out
 
 
 def broadcast_coverage_index(spark, polygons: DataFrame | None = None, rows: list | None = None):
@@ -246,11 +212,11 @@ def pip_join(
     # covered cell — ring arrays never enter it. Candidates then group
     # per polygon (salted so one hot polygon cannot own a single task),
     # the polygon's rings join ONCE per (polygon, salt) by pkey, and an
-    # Arrow kernel ray-casts the whole probe batch against that one
-    # polygon (y-bucketed index for huge rings). Ring coordinates cross
-    # the wire O(polygons × salt) times total, independent of how many
-    # candidate points each polygon attracts — previously they rode on
-    # EVERY candidate row, the dominant shuffle payload at scale.
+    # Arrow kernel ray-casts each batch's probes against their polygons'
+    # rings. Ring coordinates cross the wire O(polygons × salt) times
+    # total, independent of how many candidate points each polygon
+    # attracts — previously they rode on EVERY candidate row, the
+    # dominant shuffle payload at scale.
     pkey = F.xxhash64("tile_i", "tile_j", "poly_id")
     group_salt = salt if (salt is not None and salt > 1) else 1
 
@@ -362,7 +328,7 @@ def pip_join(
         """One output batch per input batch: list columns are read as
         offsets + values, the hits gather as index arrays and the output
         is built with ``take`` (so the point id keeps its type)."""
-        from ..kernels.rings import _pip_many_vs_ring
+        from ..kernels.rings import ray_cast_pairs
 
         def csr(lists):
             # offsets from 0, child values from the first list on
@@ -392,19 +358,18 @@ def pip_join(
             ro = csr(rings)[0]
             hx, hy = (f64(csr(csr(col(c))[1])[1]) for c in ("hole_xs", "hole_ys"))
             nh = col("hole_xs").value_lengths().fill_null(0).to_numpy()
-            hits = []
-            for i in range(batch.num_rows):
-                qx, qy = px[po[i] : po[i + 1]], py[po[i] : po[i + 1]]
-                shell = slice(so[i], so[i + 1])
-                live = np.flatnonzero(_pip_many_vs_ring(qx, qy, sx[shell], sy[shell]))
-                for h in range(ho[i], ho[i] + nh[i]):
-                    if live.size == 0:
-                        break
-                    ring = slice(ro[h], ro[h + 1])
-                    live = live[~_pip_many_vs_ring(qx[live], qy[live], hx[ring], hy[ring])]
-                hits.append(live + po[i])
-            hit = np.concatenate(hits)
-            owner = np.repeat(np.arange(batch.num_rows), [h.size for h in hits])
+            # probe × its polygon's shell, then (live probe, hole ring)
+            # pairs over every hole of that polygon
+            owner = np.repeat(np.arange(batch.num_rows), np.diff(po))
+            live = np.flatnonzero(ray_cast_pairs(px, py, owner, sx, sy, so))
+            n_live_h = nh[owner[live]]
+            src = np.repeat(live, n_live_h)
+            first = np.cumsum(n_live_h) - n_live_h
+            ring = np.repeat(ho[owner[live]] - first, n_live_h) + np.arange(src.size)
+            in_hole = np.zeros(px.size, dtype=bool)
+            in_hole[src[ray_cast_pairs(px[src], py[src], ring, hx, hy, ro)]] = True
+            hit = live[~in_hole[live]]
+            owner = owner[hit]
             yield pa.RecordBatch.from_arrays(
                 [
                     ids.take(hit),

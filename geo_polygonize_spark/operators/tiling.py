@@ -11,8 +11,8 @@ tiles (the reference keeps the same decisions in src/tiling.rs).
 * **Hot tiles.** A tile whose window draws more than
   ``max_segments_per_tile`` segments splits into f×f sub-tiles, f from
   the overflow ratio, with the same window rule inside the tile
-  (``hot_tile_factors``, ``split_hot_tiles``; ``unsplit`` when the
-  caller knows no tile is hot).
+  (``hot_tile_factors``, ``split_hot_tiles``, which is ``unsplit``
+  when no tile is hot).
 * **Tile key.** ``TILE_KEY`` names a (sub-)tile; ``repartition_tiles``
   hash-partitions on it.
 * **Claim cores.** Each (sub-)tile's core is its half-open cell
@@ -132,15 +132,14 @@ def split_hot_tiles(
     buffer: float,
 ) -> DataFrame:
     """Tile-assigned segments → full ``TILE_KEY`` rows: each tile listed
-    in ``factors`` (broadcast-joined; None = no hot tiles, f = 1) splits
-    into f×f sub-tiles of side ``tile_size / f``, and a segment lands in
-    every sub-tile whose ``buffer``-padded window it touches."""
+    in ``factors`` (broadcast-joined; None = no hot tiles, ``unsplit``)
+    splits into f×f sub-tiles of side ``tile_size / f``, and a segment
+    lands in every sub-tile whose ``buffer``-padded window it touches."""
     if factors is None:
-        assigned = assigned.withColumn("f", F.lit(1))
-    else:
-        assigned = assigned.join(F.broadcast(factors), ["tile_i", "tile_j"], "left").fillna(
-            {"f": 1}
-        )
+        return unsplit(assigned)
+    assigned = assigned.join(F.broadcast(factors), ["tile_i", "tile_j"], "left").fillna(
+        {"f": 1}
+    )
     bx1, by1, bx2, by2 = _segment_bbox()
     ts = F.lit(tile_size)
     tile_x0 = F.lit(x0) + F.col("tile_i").cast("double") * ts

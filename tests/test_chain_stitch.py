@@ -5,6 +5,7 @@ chain-specific edge cases
 
 import numpy as np
 
+from geo_polygonize_spark.operators import chain_stitch
 from geo_polygonize_spark.operators.chain_stitch import chain_stitched_polygonize
 from geo_polygonize_spark.operators.polygonize_op import polygonize
 from geo_polygonize_spark.sources.fixtures import fixture, grid_lines, random_lines
@@ -142,15 +143,14 @@ def test_chain_long_buffer_segments(spark):
     assert len(got) == 3  # three 40x3 strips
 
 
-def test_chain_distributed_merge_equals_local(spark):
-    """chain_merge_threshold=0 forces the CC + partition-walk merge;
+def test_chain_distributed_merge_equals_local(spark, monkeypatch):
+    """LOCAL_CHAIN_MERGE_MAX=0 forces the CC + partition-walk merge;
     results must equal the one-task merge and the global trace."""
+    monkeypatch.setattr(chain_stitch, "LOCAL_CHAIN_MERGE_MAX", 0)
     xs, ys, node, snap = fixture("nested_holes")
     df = lines_to_df(spark, xs, ys)
     bbox = (0.0, 0.0, 100.0, 100.0)
-    got = chain_stitched_polygonize(
-        df, tile_size=10.0, buffer=2.0, bbox=bbox, chain_merge_threshold=0
-    ).collect()
+    got = chain_stitched_polygonize(df, tile_size=10.0, buffer=2.0, bbox=bbox).collect()
     want = polygonize(df, node_input=node, snap_grid=snap).collect()
     assert keyset(got) == keyset(want)
     assert sorted(round(r["area"], 6) for r in got) == [400.0, 3200.0, 6400.0]
@@ -256,7 +256,7 @@ def test_chain_fused_visitor_routing(spark):
     assert len(got2) == len(got) - 1
 
 
-def test_chain_fused_subsplit_and_dist_merge(spark):
+def test_chain_fused_subsplit_and_dist_merge(spark, monkeypatch):
     """Fused assembly under forced f×f claiming sub-splits (no
     bypass: the full Python pass) AND the forced distributed chain
     merge: both alternate code paths feed the same fused finish."""
@@ -270,9 +270,9 @@ def test_chain_fused_subsplit_and_dist_merge(spark):
         max_segments_per_tile=4, max_split_factor=3, assembly="fused",
     ).collect()
     assert keyset(got) == keyset(want)
+    monkeypatch.setattr(chain_stitch, "LOCAL_CHAIN_MERGE_MAX", 0)
     got_dm = chain_stitched_polygonize(
-        df, tile_size=10.0, buffer=2.0, bbox=(0.0, 0.0, 120.0, 100.0),
-        chain_merge_threshold=0, assembly="fused",
+        df, tile_size=10.0, buffer=2.0, bbox=(0.0, 0.0, 120.0, 100.0), assembly="fused",
     ).collect()
     assert keyset(got_dm) == keyset(want)
 

@@ -222,6 +222,78 @@ class TestRings:
         got = points_in_ring(arr(5, 15, -1, 9.99), arr(5, 5, 5, 9.99), xs, ys)
         assert got.tolist() == [True, False, False, True]
 
+    def test_ray_cast_pairs_paths_and_oracle(self, monkeypatch):
+        """``ray_cast_pairs`` on CSR rings of 4-400 vertices plus one ring
+        heavy enough for the y-bucketed index: forcing either path gives
+        the same bits on every probe (vertices, edge midpoints,
+        horizontal lines through vertices, far outside, NaN); the
+        dispatched call equals per-ring calls; and it equals the
+        division-form oracle ``points_in_ring`` away from the edges."""
+        from geo_polygonize_spark.kernels import rings
+
+        rng = np.random.default_rng(7)
+        ring_list = []
+        for k in range(60):
+            n = 3000 if k == 0 else int(rng.integers(3, 400))
+            t = np.sort(rng.uniform(0, 2 * np.pi, n))
+            r = rng.uniform(0.5, 1.5, n)
+            c = rng.uniform(0, 20, 2)
+            xs = np.round(c[0] + r * np.cos(t), 2)
+            ys = np.round(c[1] + r * np.sin(t), 2)
+            ring_list.append((np.append(xs, xs[0]), np.append(ys, ys[0])))
+        lens = np.array([x.size for x, _ in ring_list])
+        off = np.concatenate(([0], np.cumsum(lens)))
+        fx = np.concatenate([x for x, _ in ring_list])
+        fy = np.concatenate([y for _, y in ring_list])
+
+        m = 20_000
+        ridx = rng.integers(0, len(ring_list), m)
+        ridx[:2000] = 0  # 2000 pairs × 3001 vertices > _PAIR_BUDGET
+        assert 2000 * lens[0] > rings._PAIR_BUDGET
+        v = off[ridx] + rng.integers(0, 1 << 30, m) % (lens[ridx] - 1)
+        px = rng.uniform(-1, 21, m)
+        py = rng.uniform(-1, 21, m)
+        q = m // 5
+        px[:q], py[:q] = fx[v[:q]], fy[v[:q]]  # on vertices
+        e = slice(q, 2 * q)
+        px[e], py[e] = (fx[v[e]] + fx[v[e] + 1]) / 2, (fy[v[e]] + fy[v[e] + 1]) / 2
+        py[2 * q : 3 * q] = fy[v[2 * q : 3 * q]]  # horizontal line through a vertex
+        px[3 * q : 3 * q + 50] = 1e6  # outside every bbox
+        px[-50:-25] = np.nan
+        py[-25:] = np.nan
+
+        got = rings.ray_cast_pairs(px, py, ridx, fx, fy, off)
+        assert got.any() and not got.all()
+        for budget in (0, 1 << 62):  # every ring bucketed / every ring dense
+            monkeypatch.setattr(rings, "_PAIR_BUDGET", budget)
+            assert np.array_equal(rings.ray_cast_pairs(px, py, ridx, fx, fy, off), got)
+        monkeypatch.undo()
+
+        per_ring = np.zeros(m, dtype=bool)
+        for r in np.unique(ridx):
+            rows = np.flatnonzero(ridx == r)
+            per_ring[rows] = rings.ray_cast_pairs(px[rows], py[rows], ridx[rows], fx, fy, off)
+        assert np.array_equal(per_ring, got)
+
+        # oracle on finite probes at least 1e-9 from every edge of their ring
+        oracle = np.zeros(m, dtype=bool)
+        clear = np.isfinite(px) & np.isfinite(py)
+        for r in np.unique(ridx):
+            rows = np.flatnonzero((ridx == r) & clear)
+            xs, ys = ring_list[r]
+            ax, ay, bx, by = xs[:-1], ys[:-1], xs[1:], ys[1:]
+            dx, dy = bx - ax, by - ay
+            qx, qy = px[rows][:, None], py[rows][:, None]
+            # projection onto each edge; a zero-length edge (a vertex
+            # repeated after rounding) projects to its start
+            num, den = (qx - ax) * dx + (qy - ay) * dy, dx * dx + dy * dy
+            t = np.clip(np.divide(num, den, out=np.zeros_like(num), where=den > 0), 0, 1)
+            dist = np.hypot(qx - ax - t * dx, qy - ay - t * dy).min(axis=1)
+            clear[rows] = dist >= 1e-9
+            oracle[rows] = points_in_ring(px[rows], py[rows], xs, ys)
+        assert clear.sum() > m // 4 and oracle[clear].any()
+        assert np.array_equal(got[clear], oracle[clear])
+
     def test_canonicalize(self):
         xs = arr(4, 0, 0, 4, 4)
         ys = arr(4, 4, 0, 0, 4)
@@ -305,12 +377,7 @@ def test_coverage_index_f32_mirror_bit_identical():
         hole_ys=[[X0 + 2, X0 + 2, X0 + 7, X0 + 7, X0 + 2]]))
 
     idx = CoverageIndex(polys)
-    ref = CoverageIndex(polys)
-    # force the reference instance onto the pure-f64 path
-    ref._ray_cast_pairs_fast = (
-        lambda px, py, ridx, fx, fy, off, length, *rest:
-        ref._ray_cast_pairs(px, py, ridx, fx, fy, off, length)
-    )
+    ref = CoverageIndex(polys, use_f32=False)  # the pure-f64 path
 
     probes = [rng.uniform(X0 - 22, X0 + 13, size=(20000, 2))]
     # adversarial: on/near edges and vertices at several ulp scales
@@ -351,11 +418,7 @@ def test_coverage_index_f32_overflow_falls_back_to_f64():
     ]
     idx = CoverageIndex(polys)
     assert idx.use_f32
-    ref = CoverageIndex(polys)
-    ref._ray_cast_pairs_fast = (
-        lambda px, py, ridx, fx, fy, off, length, *rest:
-        ref._ray_cast_pairs(px, py, ridx, fx, fy, off, length)
-    )
+    ref = CoverageIndex(polys, use_f32=False)
     pts = np.random.default_rng(3).uniform(X0 - 1.2 * S, X0 + 1.2 * S, size=(20000, 2))
     f1, i1, n1 = idx.query(pts[:, 0].copy(), pts[:, 1].copy())
     f2, i2, n2 = ref.query(pts[:, 0].copy(), pts[:, 1].copy())
