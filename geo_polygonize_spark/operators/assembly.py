@@ -464,6 +464,47 @@ def _pip_candidates(sh, hx, hy, h_area, area, bx1, by1, bx2, by2, fx, fy, off):
     return si[inside], hj[inside]
 
 
+def _poly_rows(sh, holes, area, rid, cx, cy, coords_x, coords_y) -> pd.DataFrame:
+    """K_POLY rows of the fused kernel, one per shell ring position in
+    ``sh``, built as columns: ``holes`` maps a row to the ring positions
+    of the holes attached to it in-task (in hole order). A promoted CW
+    shell is re-wound CCW; net area is the shell's less its holes'."""
+    m = sh.size
+    shell_xs = [coords_x[p] for p in sh.tolist()]
+    shell_ys = [coords_y[p] for p in sh.tolist()]
+    for i in np.flatnonzero(area[sh] < 0).tolist():
+        shell_xs[i], shell_ys[i] = shell_xs[i][::-1], shell_ys[i][::-1]
+    hole_xs = [[]] * m  # one shared empty list: rows are only read
+    hole_ys = [[]] * m
+    n_holes = np.zeros(m, np.int32)
+    net_area = np.abs(area[sh])
+    for i, qs in holes.items():
+        hole_xs[i] = [coords_x[q] for q in qs]
+        hole_ys[i] = [coords_y[q] for q in qs]
+        n_holes[i] = len(qs)
+        net_area[i] = np.abs(area[sh[i]]) - np.abs(area[qs]).sum()
+    no_long = pd.arrays.IntegerArray(np.zeros(m, np.int64), np.ones(m, bool))
+    no_ring = pd.Series([None] * m, dtype=object)
+    return pd.DataFrame({
+        "kind": np.full(m, K_POLY, np.int32),
+        "rid": rid[sh],
+        "shell_xs": pd.Series(shell_xs, dtype=object),
+        "shell_ys": pd.Series(shell_ys, dtype=object),
+        "hole_xs": pd.Series(hole_xs, dtype=object),
+        "hole_ys": pd.Series(hole_ys, dtype=object),
+        "n_holes": n_holes,
+        "net_area": net_area,
+        "cx": cx[sh],
+        "cy": cy[sh],
+        "h_rid": no_long,
+        "cand_rid": no_long,
+        "cand_area": np.full(m, np.nan),
+        "h_area": np.full(m, np.nan),
+        "h_xs": no_ring,
+        "h_ys": no_ring,
+    })
+
+
 def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
     """Per-PARTITION assembly kernel (mapInPandas): regroups the cached
     trace output by claim core (derived from bbox corners — module
@@ -505,6 +546,9 @@ def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
             for k in v[4]:
                 vis_by_key.setdefault(k, []).append(vi)
 
+        # the few narrow K_FINAL / K_PARTIAL rows go out row by row; the
+        # K_POLY rows (nearly all of the output) are built as columns
+        # from the shells' ring positions at the end
         out: dict = {k.name: [] for k in FUSED_SCHEMA.fields}
 
         def emit(kind, **kw):
@@ -512,6 +556,9 @@ def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
             for fld in FUSED_SCHEMA.fields[1:]:
                 out[fld.name].append(kw.get(fld.name))
 
+        poly_rings = []  # per core: ring positions of its shells, in output order
+        poly_holes: dict = {}  # K_POLY row -> ring positions of its in-task holes
+        n_poly = 0
         for a, b in zip(bounds[:-1], bounds[1:]):
             idx = order[a:b]
             (
@@ -541,22 +588,20 @@ def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
                     best_rid[rows_] = gr[take]
                     best_local[rows_] = -1
 
-            attach: dict = {}
-            for p in range(nh):
-                if not np.isfinite(best_area[p]):
-                    continue  # unparented hole — vanishes
-                if best_local[p] >= 0:
-                    attach.setdefault(int(best_local[p]), []).append(p)
-                else:
-                    emit(
-                        K_FINAL,
-                        h_rid=int(rid[ho[p]]),
-                        cand_rid=int(best_rid[p]),
-                        cand_area=float(best_area[p]),
-                        h_area=float(h_area[p]),
-                        h_xs=coords_x[ho[p]],
-                        h_ys=coords_y[ho[p]],
-                    )
+            # an unparented hole (best_area inf) vanishes
+            parented = np.isfinite(best_area)
+            for p in np.flatnonzero(parented & (best_local >= 0)).tolist():
+                poly_holes.setdefault(n_poly + int(best_local[p]), []).append(ho[p])
+            for p in np.flatnonzero(parented & (best_local < 0)).tolist():
+                emit(
+                    K_FINAL,
+                    h_rid=int(rid[ho[p]]),
+                    cand_rid=int(best_rid[p]),
+                    cand_area=float(best_area[p]),
+                    h_area=float(h_area[p]),
+                    h_xs=coords_x[ho[p]],
+                    h_ys=coords_y[ho[p]],
+                )
 
             # visitor probes: merged CW holes touching this core test
             # against THIS core's shells only (merged-shell candidates
@@ -581,28 +626,14 @@ def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
                             h_area=float(vha[vhj[s]]),
                         )
 
-            for pos in range(sh.size):
-                p = sh[pos]
-                xs_p, ys_p = coords_x[p], coords_y[p]
-                if area[p] < 0:  # promoted CW: re-wind CCW
-                    xs_p, ys_p = xs_p[::-1], ys_p[::-1]
-                holes = attach.get(pos, ())
-                emit(
-                    K_POLY,
-                    rid=int(rid[p]),
-                    shell_xs=xs_p,
-                    shell_ys=ys_p,
-                    hole_xs=[coords_x[ho[q]] for q in holes],
-                    hole_ys=[coords_y[ho[q]] for q in holes],
-                    n_holes=len(holes),
-                    net_area=float(np.abs(area[p]) - h_area[list(holes)].sum()),
-                    cx=float(cx[p]),
-                    cy=float(cy[p]),
-                )
+            poly_rings.append(sh)
+            n_poly += sh.size
 
-        yield pd.DataFrame(
-            {k: pd.Series(v, dtype=object) for k, v in out.items()}
-        )
+        if out["kind"]:
+            yield pd.DataFrame({k: pd.Series(v, dtype=object) for k, v in out.items()})
+        if n_poly:
+            yield _poly_rows(np.concatenate(poly_rings), poly_holes, area, rid, cx, cy,
+                             coords_x, coords_y)
 
     return kernel
 

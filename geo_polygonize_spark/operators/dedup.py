@@ -333,6 +333,13 @@ def minhash_dedup_keepers(
     (singletons keep themselves). The doc→keeper mapping a curation
     pipeline filters on (keep rows where doc_id = keeper).
 
+    Precondition: ``id_col`` is unique. It is not checked: a
+    ``distinct()`` would add a shuffle that no recorded workload needs. A
+    repeated id still gives one output row per input row, and all rows
+    of that id get the same keeper: the documents sharing it are one
+    node of the pair graph (an edge from any of them links the id), and
+    they are never compared with each other.
+
     r6 (guide §1.2 — don't compute what's known): CC runs over the
     PAIR-TOUCHED ids only — a singleton's label can never change (no
     edge, and the doubling hop is the identity on self-labels), so

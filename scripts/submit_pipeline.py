@@ -16,10 +16,15 @@ mid-job, a completed run is a pure scan. The final line on stdout is
 one JSON object of run metrics (machine-readable — the smoke test and
 any scheduler wrapper parse it).
 
-Example (local smoke; on a cluster swap --master/--conf for yours):
+Example (local smoke; on a cluster swap --master/--conf for yours).
+The driver JVM starts before this script runs, so the package's JVM
+options (``plans.DRIVER_JAVA_OPTIONS``) go on the command line:
 
   python scripts/package_pyfiles.py dist/geo_polygonize_spark.zip
   spark-submit --master 'local[4]' \
+      --driver-java-options '-XX:Tier4InvocationThreshold=20000
+          -XX:Tier4MinInvocationThreshold=2400 -XX:Tier4CompileThreshold=60000
+          -XX:Tier4BackEdgeThreshold=160000' \
       --py-files dist/geo_polygonize_spark.zip \
       scripts/submit_pipeline.py \
       --n-records 100000 --grid 40 --tile-size 10 \

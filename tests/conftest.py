@@ -2,13 +2,21 @@ import os
 
 import pytest
 
+# Driver heap of the test session; $SPARK_DRIVER_MEM overrides it. At
+# the package default (40% of RAM) the suite's JVM held 7.8 GB RSS on a
+# 15.7 GB host. With 3g the whole suite passed at a peak RSS of 4.2 GB;
+# old-generation use peaked at 2.7 GB with no full GC (4 cores).
+TEST_DRIVER_MEM = "3g"
+
 
 @pytest.fixture(scope="session")
 def spark():
     from geo_polygonize_spark.plans import build_session
 
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
-    s = build_session("tests", cores=cores, shuffle_partitions=8)
+    heap = os.environ.get("SPARK_DRIVER_MEM") or TEST_DRIVER_MEM
+    s = build_session("tests", cores=cores, shuffle_partitions=8,
+                      extra_conf={"spark.driver.memory": heap})
     yield s
     s.stop()
 
