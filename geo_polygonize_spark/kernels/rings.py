@@ -14,6 +14,11 @@ Reproduces the reference's post-tracing stages
   area > hole_area + 1e-6 (polygonizer.rs:192-249)
 * assembly: polygon net area (shell - holes) must exceed 1e-6
   (polygonizer.rs:251-259)
+* the promotion and parent rules live in one place, ``_promoted``,
+  ``_parent_candidates`` and ``_smallest_parent``: the single-group
+  assembly (``assemble_polygons_pdf``; ``assemble_polygons`` is a view
+  of its rows) and the fused per-core assembly
+  (``operators/assembly.py``) both call them
 * ``ray_cast_pairs`` is the package's one point-in-ring test, the
   numpy analog of the SIMD ray cast (simd.rs:31-79): hole→parent
   assignment, the coverage index and both PIP joins call it.
@@ -26,6 +31,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
+
+from .bboxjoin import bbox_join
 
 
 def signed_area(xs: np.ndarray, ys: np.ndarray) -> float:
@@ -369,7 +376,9 @@ def assemble_polygons(
     ring_xs: list, ring_ys: list, drop_collapsed: bool = False
 ) -> list[Polygon]:
     """Classification → promotion → hole assignment → assembly
-    (polygonizer.rs:124-261). Input: closed rings from ring tracing.
+    (polygonizer.rs:124-261) as ``Polygon`` objects: a view over the
+    rows of ``assemble_polygons_pdf``. Input: closed rings from ring
+    tracing.
 
     ``drop_collapsed`` — the reference source carries a final
     ``unsigned_area() > 1e-6`` filter (polygonizer.rs:255-258) that
@@ -386,60 +395,113 @@ def assemble_polygons(
     the shipped filter and GEOS's faces-only polygon counts (used for
     the grid/random benchmark oracles).
     """
-    core = _assemble_core(ring_xs, ring_ys)
-    if core is None:
-        return []
-    (
-        shell_ids,
-        hole_ids,
-        pf,
-        all_shell_area,
-        hole_area_sum,
-        win_s,
-        win_h,
-        cent_x,
-        cent_y,
-        areas,
-    ) = core
-    n_orig = shell_ids.size
-    n_shells = n_orig + pf.size
-
-    shell_holes: list[list] = [[] for _ in range(n_shells)]
-    for s_i, h_j in zip(win_s.tolist(), win_h.tolist()):
-        r = hole_ids[h_j]
-        shell_holes[s_i].append((ring_xs[r], ring_ys[r]))
-
-    net_area = (all_shell_area - hole_area_sum).tolist()
-    out: list[Polygon] = []
-    for i in range(n_shells):
-        net = net_area[i]
-        if drop_collapsed and net <= 1e-6:
-            continue
-        if i < n_orig:
-            r = shell_ids[i]
-            xs, ys = ring_xs[r], ring_ys[r]
-        else:
-            r = hole_ids[pf[i - n_orig]]
-            xs, ys = ring_xs[r][::-1], ring_ys[r][::-1]
-        out.append(
-            Polygon(np.ascontiguousarray(xs), np.ascontiguousarray(ys), shell_holes[i], net)
+    pdf = assemble_polygons_pdf(ring_xs, ring_ys, drop_collapsed)
+    return [
+        Polygon(np.ascontiguousarray(sx), np.ascontiguousarray(sy), list(zip(hx, hy)), a)
+        for sx, sy, hx, hy, a in zip(
+            pdf["shell_xs"], pdf["shell_ys"], pdf["hole_xs"], pdf["hole_ys"],
+            pdf["area"].tolist(),
         )
+    ]
+
+
+# --- the shell/hole rule: every numpy assembly calls these three; only
+# the SQL translation in ``assemble_rings_distributed`` restates it ----
+
+
+def _promoted(area, bx1, by1, bx2, by2) -> np.ndarray:
+    """Twin promotion (polygonizer.rs:152-185), per ring: True for a CW
+    ring (area < 0) with no CCW ring of exactly equal bbox and area
+    within 1e-6. A promoted ring becomes a shell, re-wound CCW, and
+    stays a hole too (a coverage hull nets to zero that way). Exact-bbox
+    hash groups give O(1) twin lookup."""
+    box = np.stack((bx1, by1, bx2, by2), 1)
+    ccw = area > 0.0
+    cw = np.flatnonzero(area < 0.0)
+    twins: dict = {}
+    for b, a in zip(box[ccw].tolist(), area[ccw].tolist()):
+        twins.setdefault(tuple(b), []).append(a)
+    out = np.zeros(area.size, dtype=bool)
+    out[cw] = [
+        not any(abs(s - h) < 1e-6 for s in twins.get(tuple(b), ()))
+        for b, h in zip(box[cw].tolist(), (-area[cw]).tolist())
+    ]
     return out
 
 
-def _assemble_core(ring_xs: list, ring_ys: list):
-    """Shared vectorized assembly core: classification, twin
-    promotion, and hole→shell winner assignment over flat ragged
-    arrays. Returns (shell_ids, hole_ids, pf, all_shell_area,
-    hole_area_sum, win_s, win_h, cent_x, cent_y, areas) or None for an
-    empty result — consumed by ``assemble_polygons`` (Polygon objects)
-    and ``assemble_polygons_pdf`` (Arrow-ready DataFrame)."""
+def _parent_candidates(s_box, s_area, s_ring, q_box, px, py, h_area, fx, fy, off):
+    """Hole→parent candidates (polygonizer.rs:192-249): pairs (si, hj),
+    sorted by si, where shell si's bbox meets hole hj's query box
+    ``q_box``, the shell is strictly larger (polygonizer.rs:226), and
+    the probe ``(px[hj], py[hj])`` lies in ring ``s_ring[si]`` of the
+    CSR rings ``(fx, fy, off)``. ``s_box`` and ``q_box`` are
+    ``(x1, y1, x2, y2)`` arrays.
+
+    Holes that no shell can be strictly larger than never enter the
+    bbox join. This is not just an early filter: the largest ring (a
+    promoted coverage hull) has a world-spanning bbox, and joining it
+    against every shell was measured as ~80% of assembly time on grid
+    coverages, for candidates the area rule then discarded."""
+    if s_area.size == 0 or h_area.size == 0:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    ch = np.flatnonzero(h_area < float(s_area.max()) - 1e-6)
+    si, hj = bbox_join(*s_box, *(q[ch] for q in q_box))
+    hj = ch[hj]
+    bigger = s_area[si] > h_area[hj] + 1e-6
+    si, hj = si[bigger], hj[bigger]
+    inside = ray_cast_pairs(px[hj], py[hj], s_ring[si], fx, fy, off)
+    return si[inside], hj[inside]
+
+
+def _smallest_parent(si, hj, s_area, tie) -> np.ndarray:
+    """The parent of each hole: positions into the pairs ``(si, hj)`` of
+    the candidate with the least (``s_area``, ``tie``) of its shell,
+    one per hole, in hole order."""
+    o = np.lexsort((tie[si], s_area[si], hj))
+    return o[np.diff(hj[o], prepend=-1) != 0]
+
+
+def assemble_polygons_pdf(
+    ring_xs: list,
+    ring_ys: list,
+    drop_collapsed: bool = False,
+    tile_i: int = -1,
+    tile_j: int = -1,
+):
+    """Classification → promotion → hole assignment → assembly
+    (polygonizer.rs:124-261) straight into the POLYGON_SCHEMA pandas
+    DataFrame, vectorized over flat ragged arrays: no per-polygon
+    Python objects (at 160k rings that detour cost ~10 s of pure
+    Python). Polygon centroids follow ``polygon_centroid`` (same
+    formulas, same degeneracy fallbacks); ``drop_collapsed`` as in
+    ``assemble_polygons``."""
+    import pandas as pd
+
+    def frame(shell_x, shell_y, hole_x, hole_y, n_holes, area, cx, cy):
+        obj = lambda v: pd.Series(v, dtype=object)
+        m = len(shell_x)
+        return pd.DataFrame(
+            {
+                "tile_i": np.full(m, tile_i, dtype=np.int32),
+                "tile_j": np.full(m, tile_j, dtype=np.int32),
+                "poly_id": np.arange(m, dtype=np.int64),
+                "shell_xs": obj(shell_x),
+                "shell_ys": obj(shell_y),
+                "hole_xs": obj(hole_x),
+                "hole_ys": obj(hole_y),
+                "n_holes": n_holes,
+                "area": area,
+                "cx": cx,
+                "cy": cy,
+            }
+        )
+
     n_rings = len(ring_xs)
     if n_rings == 0:
-        return None
+        z = np.empty(0)
+        return frame([], [], [], [], np.empty(0, np.int32), z, z, z)
 
-    # --- vectorized per-ring area / bbox / centroid over flat ragged
-    # arrays (one reduceat pass instead of per-ring Python calls) ------
+    # --- per-ring area / bbox / centroid in one reduceat pass ---------
     lens = np.fromiter((len(x) for x in ring_xs), dtype=np.int64, count=n_rings)
     offs = np.concatenate(([0], np.cumsum(lens)))
     fx = np.concatenate(ring_xs)
@@ -462,204 +524,47 @@ def _assemble_core(ring_xs: list, ring_ys: list):
     bys1 = np.minimum.reduceat(fy, offs[:-1])
     bys2 = np.maximum.reduceat(fy, offs[:-1])
 
-    keep = np.abs(areas) >= 1e-9  # degenerate filter (polygonizer.rs:138-140)
-    shell_ids = np.flatnonzero(keep & (areas > 0.0))
-    hole_ids = np.flatnonzero(keep & (areas < 0.0))
-    n_holes = hole_ids.size
-    s_area = np.abs(areas[shell_ids])
+    # --- classification: degenerate filter (polygonizer.rs:138-140),
+    # CCW → shell, CW → hole, promoted CW → also a shell --------------
+    classed = np.where(np.abs(areas) >= 1e-9, areas, 0.0)
+    hole_ids = np.flatnonzero(classed < 0.0)
+    pf = np.flatnonzero(_promoted(classed, bxs1, bys1, bxs2, bys2)[hole_ids])
+    src = np.concatenate((np.flatnonzero(classed > 0.0), hole_ids[pf]))  # ring of each shell
+    n_orig = src.size - pf.size
+    s_area = np.abs(areas[src])
     h_area = np.abs(areas[hole_ids])
 
-    # --- hole promotion (polygonizer.rs:152-185) ----------------------
-    # CW ring with no CCW twin (area within 1e-6 AND exactly equal
-    # bbox) becomes a shell, re-wound CCW. Exact-bbox hash groups give
-    # O(1) twin lookup (plain-float tuples, not numpy scalars).
-    sbt = (
-        np.stack([bxs1[shell_ids], bys1[shell_ids], bxs2[shell_ids], bys2[shell_ids]], 1).tolist()
-        if shell_ids.size
-        else []
+    # --- hole assignment: the reference's envelope query on the hole
+    # bbox (polygonizer.rs:205), ray cast on the hole centroid --------
+    si, hj = _parent_candidates(
+        (bxs1[src], bys1[src], bxs2[src], bys2[src]), s_area, src,
+        (bxs1[hole_ids], bys1[hole_ids], bxs2[hole_ids], bys2[hole_ids]),
+        cent_x[hole_ids], cent_y[hole_ids], h_area, fx, fy, offs,
     )
-    hbt = (
-        np.stack([bxs1[hole_ids], bys1[hole_ids], bxs2[hole_ids], bys2[hole_ids]], 1).tolist()
-        if n_holes
-        else []
-    )
-    by_bbox: dict = {}
-    for i, b in enumerate(sbt):
-        by_bbox.setdefault(tuple(b), []).append(i)
-    s_area_l = s_area.tolist()
-    h_area_l = h_area.tolist()
-    promoted_from = [
-        k
-        for k, b in enumerate(hbt)
-        if not any(abs(s_area_l[i] - h_area_l[k]) < 1e-6 for i in by_bbox.get(tuple(b), ()))
-    ]
-
-    n_shells = shell_ids.size + len(promoted_from)
-    if n_shells == 0:
-        return None
-    pf = np.asarray(promoted_from, dtype=np.int64)
-
-    def cat(a, b):
-        return np.concatenate([a, b]) if pf.size else a
-
-    all_shell_area = cat(s_area, h_area[pf])
-    sx1 = cat(bxs1[shell_ids], bxs1[hole_ids][pf])
-    sx2 = cat(bxs2[shell_ids], bxs2[hole_ids][pf])
-    sy1 = cat(bys1[shell_ids], bys1[hole_ids][pf])
-    sy2 = cat(bys2[shell_ids], bys2[hole_ids][pf])
-    shell_ring = cat(shell_ids, hole_ids[pf])
-
-    # --- hole assignment (polygonizer.rs:192-249) ---------------------
-    hole_area_sum = np.zeros(n_shells)
-    win_s = np.empty(0, dtype=np.int64)
-    win_h = np.empty(0, dtype=np.int64)
-    if n_holes and n_shells:
-        from .bboxjoin import bbox_join
-
-        # only holes that CAN have a strictly-larger parent enter the
-        # spatial join (polygonizer.rs:226). This is not just an early
-        # filter: the largest ring (a promoted coverage hull) has a
-        # world-spanning bbox, and binning it joined it against every
-        # shell — measured as ~80% of assembly time on grid coverages —
-        # for candidates the area rule then discarded wholesale.
-        ch = np.flatnonzero(h_area < float(all_shell_area.max()) - 1e-6)
-        si, hj = bbox_join(
-            sx1,
-            sy1,
-            sx2,
-            sy2,
-            bxs1[hole_ids][ch],
-            bys1[hole_ids][ch],
-            bxs2[hole_ids][ch],
-            bys2[hole_ids][ch],
-        )
-        hj = ch[hj]
-        # parent must be strictly larger (polygonizer.rs:226)
-        bigger = all_shell_area[si] > h_area[hj] + 1e-6
-        si, hj = si[bigger], hj[bigger]
-        if si.size:
-            # PIP of hole centroids vs candidate shells; promoted shells
-            # are reversed rings — orientation does not change even-odd
-            # crossings
-            inside = ray_cast_pairs(
-                cent_x[hole_ids][hj], cent_y[hole_ids][hj], shell_ring[si], fx, fy, offs
-            )
-            si, hj = si[inside], hj[inside]
-            if si.size:
-                # smallest containing shell per hole (argmin)
-                order = np.lexsort((all_shell_area[si], hj))
-                first = np.concatenate(([True], hj[order][1:] != hj[order][:-1]))
-                win_s = si[order][first]
-                win_h = hj[order][first]
-                np.add.at(hole_area_sum, win_s, h_area[win_h])
-
-    return (
-        shell_ids,
-        hole_ids,
-        pf,
-        all_shell_area,
-        hole_area_sum,
-        win_s,
-        win_h,
-        cent_x,
-        cent_y,
-        areas,
-    )
-
-
-def assemble_polygons_pdf(
-    ring_xs: list,
-    ring_ys: list,
-    drop_collapsed: bool = False,
-    tile_i: int = -1,
-    tile_j: int = -1,
-):
-    """``assemble_polygons`` fused straight into the POLYGON_SCHEMA
-    pandas DataFrame — no per-polygon ``Polygon`` objects and no
-    per-polygon ``polygon_centroid`` recomputation. At 160k rings the
-    object detour costs ~10 s of pure Python; this path is the one the
-    Spark kernels (tiled per-tile assembly, stitched local assembly)
-    use. Column semantics identical to building rows from
-    ``assemble_polygons`` + ``polygon_centroid`` (same formulas, same
-    degeneracy fallbacks).
-    """
-    import pandas as pd
-
-    cols = (
-        "tile_i",
-        "tile_j",
-        "poly_id",
-        "shell_xs",
-        "shell_ys",
-        "hole_xs",
-        "hole_ys",
-        "n_holes",
-        "area",
-        "cx",
-        "cy",
-    )
-
-    def empty():
-        return pd.DataFrame(
-            {
-                "tile_i": np.empty(0, np.int32),
-                "tile_j": np.empty(0, np.int32),
-                "poly_id": np.empty(0, np.int64),
-                "shell_xs": pd.Series([], dtype=object),
-                "shell_ys": pd.Series([], dtype=object),
-                "hole_xs": pd.Series([], dtype=object),
-                "hole_ys": pd.Series([], dtype=object),
-                "n_holes": np.empty(0, np.int32),
-                "area": np.empty(0, np.float64),
-                "cx": np.empty(0, np.float64),
-                "cy": np.empty(0, np.float64),
-            },
-            columns=list(cols),
-        )
-
-    core = _assemble_core(ring_xs, ring_ys)
-    if core is None:
-        return empty()
-    (
-        shell_ids,
-        hole_ids,
-        pf,
-        all_shell_area,
-        hole_area_sum,
-        win_s,
-        win_h,
-        cent_x,
-        cent_y,
-        areas,
-    ) = core
-    n_orig = shell_ids.size
-    n_shells = n_orig + pf.size
-
-    net_area = all_shell_area - hole_area_sum
-    keep = np.ones(n_shells, dtype=bool) if not drop_collapsed else (net_area > 1e-6)
+    # bbox_join returns pairs sorted by shell, so the shell position as
+    # tie-break keeps the first of equal-area candidates
+    win = _smallest_parent(si, hj, s_area, np.arange(src.size))
+    win_s, win_h = si[win], hj[win]
+    hole_area_sum = np.zeros(src.size)
+    np.add.at(hole_area_sum, win_s, h_area[win_h])
+    net_area = s_area - hole_area_sum
 
     # polygon centroid (area-weighted shell − holes; polygon_centroid
     # semantics incl. the RELATIVE degeneracy fallback), vectorized
-    src = np.concatenate((shell_ids, hole_ids[pf])) if pf.size else shell_ids
     cx0 = cent_x[src]
     cy0 = cent_y[src]
-    num_x = all_shell_area * cx0
-    num_y = all_shell_area * cy0
-    if win_s.size:
-        h_abs = np.abs(areas[hole_ids[win_h]])
-        np.add.at(num_x, win_s, -h_abs * cent_x[hole_ids[win_h]])
-        np.add.at(num_y, win_s, -h_abs * cent_y[hole_ids[win_h]])
-    den = all_shell_area - hole_area_sum
-    degen = np.abs(den) < np.maximum(all_shell_area * 1e-9, 1e-12)
-    safe = np.where(degen, 1.0, den)
+    num_x = s_area * cx0
+    num_y = s_area * cy0
+    np.add.at(num_x, win_s, -h_area[win_h] * cent_x[hole_ids[win_h]])
+    np.add.at(num_y, win_s, -h_area[win_h] * cent_y[hole_ids[win_h]])
+    degen = np.abs(net_area) < np.maximum(s_area * 1e-9, 1e-12)
+    safe = np.where(degen, 1.0, net_area)
     cx = np.where(degen, cx0, num_x / safe)
     cy = np.where(degen, cy0, num_y / safe)
 
-    sel = np.flatnonzero(keep)
-    if sel.size == 0:
-        return empty()
-    # remap winner pairs to kept-shell output positions
-    out_pos = np.full(n_shells, -1, dtype=np.int64)
+    sel = np.flatnonzero(net_area > 1e-6) if drop_collapsed else np.arange(src.size)
+    # winner pairs remapped to kept-shell output positions
+    out_pos = np.full(src.size, -1, dtype=np.int64)
     out_pos[sel] = np.arange(sel.size)
 
     shell_x_col: list = [None] * sel.size
@@ -667,40 +572,23 @@ def assemble_polygons_pdf(
     hole_x_col: list = [[] for _ in range(sel.size)]
     hole_y_col: list = [[] for _ in range(sel.size)]
     n_holes_out = np.zeros(sel.size, dtype=np.int32)
-    for o, i in enumerate(sel.tolist()):
+    for o, (i, r) in enumerate(zip(sel.tolist(), src[sel].tolist())):
         if i < n_orig:
-            r = shell_ids[i]
             shell_x_col[o] = ring_xs[r]
             shell_y_col[o] = ring_ys[r]
         else:
-            r = hole_ids[pf[i - n_orig]]
             shell_x_col[o] = np.ascontiguousarray(ring_xs[r][::-1])
             shell_y_col[o] = np.ascontiguousarray(ring_ys[r][::-1])
-    for s_i, h_j in zip(win_s.tolist(), win_h.tolist()):
-        o = out_pos[s_i]
+    for o, r in zip(out_pos[win_s].tolist(), hole_ids[win_h].tolist()):
         if o < 0:
             continue
-        r = hole_ids[h_j]
         hole_x_col[o].append(ring_xs[r])
         hole_y_col[o].append(ring_ys[r])
         n_holes_out[o] += 1
 
-    obj = lambda v: pd.Series(v, dtype=object)
-    return pd.DataFrame(
-        {
-            "tile_i": np.full(sel.size, tile_i, dtype=np.int32),
-            "tile_j": np.full(sel.size, tile_j, dtype=np.int32),
-            "poly_id": np.arange(sel.size, dtype=np.int64),
-            "shell_xs": obj(shell_x_col),
-            "shell_ys": obj(shell_y_col),
-            "hole_xs": obj(hole_x_col),
-            "hole_ys": obj(hole_y_col),
-            "n_holes": n_holes_out,
-            "area": net_area[sel],
-            "cx": cx[sel],
-            "cy": cy[sel],
-        },
-        columns=list(cols),
+    return frame(
+        shell_x_col, shell_y_col, hole_x_col, hole_y_col, n_holes_out,
+        net_area[sel], cx[sel], cy[sel],
     )
 
 

@@ -1,10 +1,11 @@
 """Ring assembly for the stitched polygonize: ring set in, polygons out.
 
 Three finishes share the reference semantics of
-``kernels.rings._assemble_core`` (reference polygonizer.rs:124-261) —
-degenerate filter, exact-bbox twin promotion (polygonizer.rs:152-185),
-strictly-larger min-area parent rule (polygonizer.rs:226), final
-unsigned-area filter (polygonizer.rs:255-258):
+``kernels.rings.assemble_polygons_pdf`` (reference
+polygonizer.rs:124-261) — degenerate filter, exact-bbox twin promotion
+(polygonizer.rs:152-185), strictly-larger min-area parent rule
+(polygonizer.rs:226), final unsigned-area filter
+(polygonizer.rs:255-258):
 
 * ``_assemble_rings_local`` — the numpy kernel over the whole ring set
   in one task (small ring sets);
@@ -15,11 +16,14 @@ unsigned-area filter (polygonizer.rs:255-258):
   ring set (the fallback for a pathological merged residue, and the
   tests' ground truth).
 
-Every containment test is ``kernels.rings.ray_cast_pairs``. The fused
-assembly has one hole→parent candidate search, ``_pip_candidates``
-(closed-bbox filter, strictly-larger rule, ray cast): a core's own
-shells, the broadcast merged shells, the visitor probes and the
-driver's visitor-vs-merged-shell pass all call it. The distributed
+The numpy finishes state the rule nowhere themselves: twin promotion,
+the hole→parent candidate search and the min-(area, tie) parent
+choice are ``kernels.rings._promoted``, ``_parent_candidates`` and
+``_smallest_parent``. The fused assembly calls them for a core's own
+shells and the broadcast merged shells (one reduction over both), the
+visitor probes, and the driver's merged residue. Only
+``assemble_rings_distributed`` states the rule again, as SQL. Every
+containment test is ``kernels.rings.ray_cast_pairs``; the distributed
 assembly casts each Arrow batch's candidate pairs in one call.
 
 Protocol of the fused assembly
@@ -82,8 +86,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..functions.cells import cell_range_cols
-from ..kernels.bboxjoin import bbox_join
-from ..kernels.rings import ray_cast_pairs
+from ..kernels.rings import _parent_candidates, _promoted, _smallest_parent, ray_cast_pairs
 from .polygonize_op import POLYGON_SCHEMA
 from .tiling import claim_cores, core_key, core_key_col, core_reach_index, touching_cores
 
@@ -118,34 +121,7 @@ FUSED_SCHEMA = T.StructType(
 )
 
 _RING_COLS = ["rid", "xs", "ys", "area", "bx1", "by1", "bx2", "by2", "cx", "cy"]
-
-
-def _promote_rows(rows):
-    """Exact-bbox twin promotion over collected global rings (same rule
-    as kernels.rings._assemble_core, polygonizer.rs:152-185). Returns
-    (shells, visitors): shells = CCW rows + promoted CW rows as
-    (row, promoted) pairs; visitors = ALL CW rows — in the reference
-    semantics a promoted CW ring is BOTH a shell and still assigned as
-    a hole to its smallest strictly-larger container (that is how a
-    coverage hull nets to zero on a filled grid)."""
-    by_bbox: dict = {}
-    for r in rows:
-        if r["area"] > 0:
-            by_bbox.setdefault(
-                (r["bx1"], r["by1"], r["bx2"], r["by2"]), []
-            ).append(r["area"])
-    shells = []
-    visitors = []
-    for r in rows:
-        if r["area"] > 0:
-            shells.append((r, False))
-        else:
-            h_area = -r["area"]
-            visitors.append(r)
-            twins = by_bbox.get((r["bx1"], r["by1"], r["bx2"], r["by2"]), ())
-            if not any(abs(s - h_area) < 1e-6 for s in twins):
-                shells.append((r, True))  # promoted — AND a hole above
-    return shells, visitors
+_BOX = ("bx1", "by1", "bx2", "by2")
 
 
 def _bypass_poly_rows(plain: DataFrame) -> DataFrame:
@@ -197,9 +173,10 @@ def _bypass_interesting_split(df: DataFrame, key_col, keys: set, spark):
 def _finish_assignments(
     spark,
     out: DataFrame,
-    gshells: list,
+    residue: pd.DataFrame,
+    shell: np.ndarray,
+    promoted: np.ndarray,
     drop_collapsed: bool,
-    merged_coord_rows: list | None = None,
     extra_partials: DataFrame | None = None,
     bypass_polys: DataFrame | None = None,
 ) -> DataFrame:
@@ -208,12 +185,15 @@ def _finish_assignments(
     the global shells, and patch rare local-shell winners onto the
     emitted polygons via a broadcast join.
 
+    ``residue``: the driver-side merged rings (``_RING_COLS``);
+    ``shell``: the positions of its merged shells; ``promoted``: per
+    residue ring, whether twin promotion made it a shell.
+
     Hole coordinates ride ON the winner rows (h_xs/h_ys, emitted by
     the kernel, which holds every member ring's coords), so the finish
     never re-reads the caller's ring caches. The one exception is
-    merged visitors (their coords never enter
-    the kernel): those rows carry null h_xs and resolve from
-    ``merged_coord_rows`` — the (driver-side) global residue rows."""
+    merged visitors (their coords never enter the kernel): those rows
+    carry null h_xs and resolve from ``residue``."""
     polys = out.where(F.col("kind") == K_POLY)
     _wcols = ["h_rid", "cand_rid", "cand_area", "h_area", "h_xs", "h_ys"]
     finals = out.where(F.col("kind") == K_FINAL).select(*_wcols)
@@ -254,19 +234,13 @@ def _finish_assignments(
     # (driver-known) global shells directly inside the returned plan;
     # the two joins reference the same aggregate subtree, so the
     # exchange is planned once and reused.
-    if merged_coord_rows:
+    if len(residue):
         mcdf = spark.createDataFrame(
             pd.DataFrame(
                 {
-                    "h_rid": pd.Series(
-                        [int(r["rid"]) for r in merged_coord_rows], dtype="int64"
-                    ),
-                    "m_xs": pd.Series(
-                        [r["xs"] for r in merged_coord_rows], dtype=object
-                    ),
-                    "m_ys": pd.Series(
-                        [r["ys"] for r in merged_coord_rows], dtype=object
-                    ),
+                    "h_rid": residue["rid"].to_numpy(np.int64),
+                    "m_xs": residue["xs"],
+                    "m_ys": residue["ys"],
                 }
             ),
             "h_rid long, m_xs array<double>, m_ys array<double>",
@@ -321,27 +295,23 @@ def _finish_assignments(
         polys = polys.where(F.col("net_area") > 1e-6)
 
     gpolys = None
-    if gshells:
+    if shell.size:
+        g = residue.iloc[shell]
+        flip = promoted[shell].tolist()
+
+        def wound(col):  # promoted shells re-wind CCW
+            return pd.Series(
+                [list(c)[::-1] if f else list(c) for c, f in zip(g[col], flip)], dtype=object
+            )
+
         gpdf = pd.DataFrame(
             {
-                "rid": pd.Series(
-                    [int(r["rid"]) for r, _ in gshells], dtype="int64"
-                ),
-                "shell_xs": pd.Series(
-                    [list(r["xs"])[::-1] if prom else list(r["xs"])
-                     for r, prom in gshells], dtype=object),
-                "shell_ys": pd.Series(
-                    [list(r["ys"])[::-1] if prom else list(r["ys"])
-                     for r, prom in gshells], dtype=object),
-                "s_area": pd.Series(
-                    [abs(float(r["area"])) for r, _ in gshells], dtype="float64"
-                ),
-                "cx": pd.Series(
-                    [float(r["cx"]) for r, _ in gshells], dtype="float64"
-                ),
-                "cy": pd.Series(
-                    [float(r["cy"]) for r, _ in gshells], dtype="float64"
-                ),
+                "rid": g["rid"].to_numpy(np.int64),
+                "shell_xs": wound("xs"),
+                "shell_ys": wound("ys"),
+                "s_area": np.abs(g["area"].to_numpy(np.float64)),
+                "cx": g["cx"].to_numpy(np.float64),
+                "cy": g["cy"].to_numpy(np.float64),
             }
         )
         gbase = spark.createDataFrame(
@@ -386,57 +356,39 @@ def _finish_assignments(
     return result
 
 
-def _best_reduce(si, hj, areas, rids):
-    """One (area, rid)-lexicographic min candidate per hole."""
-    o = np.lexsort((rids, areas, hj))
-    first = np.concatenate(([True], hj[o][1:] != hj[o][:-1]))
-    return o[first]
+def _core_local_assembly(area, rid, cx, cy, box, fx, fy, off, idx, g, glist):
+    """Member assembly of one claim core over the rings at positions
+    ``idx`` (module docstring step 3): twin promotion, then the
+    hole→parent search over this core's shells and the merged shells
+    ``glist`` of the broadcast residue ``g``, both candidate sets
+    reduced to one min-(area, rid) parent per hole in one call.
 
-
-def _core_local_assembly(area, rid, cx, cy, bx1, by1, bx2, by2, fx, fy, off, idx):
-    """Single-claim-core member assembly WITHOUT merged-shell knowledge:
-    exact-bbox twin promotion (polygonizer.rs:152-185) and hole→parent
-    local-candidate search (strictly-larger min-(area, rid) rule,
-    polygonizer.rs:226) over the rings at positions ``idx``.
-
-    Returns ``(sh, s_area, ho, h_area, hx, hy, best_area, best_rid,
-    best_local)``: shells (promoted CW included), every CW ring as an
-    assignment candidate, and per-hole best LOCAL candidate (inf/-1
-    when no local shell strictly contains it)."""
+    Returns ``(sh, s_area, ho, h, w, cand_area, cand_rid)``: the shells'
+    ring positions (promoted CW included) and areas, every CW ring's
+    position, and the parents: hole ``ho[h[k]]`` takes candidate
+    ``w[k]``, the shell ``sh[w[k]]`` below ``sh.size`` and the merged
+    shell ``glist[w[k] - sh.size]`` from there on."""
     garea = area[idx]
-    ccw = garea > 0.0
-    cw = garea < 0.0
-    by_bbox: dict = {}
-    for p in idx[ccw].tolist():
-        by_bbox.setdefault((bx1[p], by1[p], bx2[p], by2[p]), []).append(area[p])
-    promoted = np.zeros(idx.size, dtype=bool)
-    cw_pos = np.flatnonzero(cw)
-    for pos in cw_pos.tolist():
-        p = idx[pos]
-        twins = by_bbox.get((bx1[p], by1[p], bx2[p], by2[p]), ())
-        if not any(abs(s + area[p]) < 1e-6 for s in twins):
-            promoted[pos] = True
-    sh = idx[ccw | (cw & promoted)]  # shells (promoted CW incl.)
+    sh = idx[(garea > 0.0) | _promoted(garea, *(c[idx] for c in box))]
+    ho = idx[garea < 0.0]
     s_area = np.abs(area[sh])
-    ho = idx[cw]  # every CW ring is an assignment candidate
-    nh = ho.size
     h_area = np.abs(area[ho])
-    hx = cx[ho]
-    hy = cy[ho]
-
-    best_area = np.full(nh, np.inf)
-    best_rid = np.full(nh, np.iinfo(np.int64).max, dtype=np.int64)
-    best_local = np.full(nh, -1, dtype=np.int64)  # pos into sh
-
-    si, hj = _pip_candidates(sh, hx, hy, h_area, area, bx1, by1, bx2, by2, fx, fy, off)
-    if si.size:
-        srid = rid[sh[si]]
-        sel = _best_reduce(si, hj, s_area[si], srid)
-        rows_ = hj[sel]
-        best_area[rows_] = s_area[si[sel]]
-        best_rid[rows_] = srid[sel]
-        best_local[rows_] = si[sel]
-    return sh, s_area, ho, h_area, hx, hy, best_area, best_rid, best_local
+    hx, hy = cx[ho], cy[ho]
+    q_box = (hx, hy, hx, hy)
+    si, hj = _parent_candidates(
+        tuple(c[sh] for c in box), s_area, sh, q_box, hx, hy, h_area, fx, fy, off
+    )
+    g_area = g["area"][glist]
+    gsi, ghj = _parent_candidates(
+        tuple(g[c][glist] for c in _BOX), g_area, glist, q_box, hx, hy, h_area,
+        g["fx"], g["fy"], g["off"],
+    )
+    cand_area = np.concatenate((s_area, g_area))
+    cand_rid = np.concatenate((rid[sh], g["rid"][glist]))
+    si = np.concatenate((si, gsi + sh.size))
+    hj = np.concatenate((hj, ghj))
+    win = _smallest_parent(si, hj, cand_area, cand_rid)
+    return sh, s_area, ho, hj[win], si[win], cand_area, cand_rid
 
 
 def _ring_csr(xs_list, ys_list):
@@ -449,26 +401,31 @@ def _ring_csr(xs_list, ys_list):
     return fx, np.concatenate(ys_list).astype(np.float64, copy=False), off
 
 
-def _pip_candidates(sh, hx, hy, h_area, area, bx1, by1, bx2, by2, fx, fy, off):
-    """The hole→parent candidate search: (si, hj) pairs where hole
-    centroid ``(hx[hj], hy[hj])`` lies in the closed bbox of shell
-    ``sh[si]``, the shell is strictly larger (polygonizer.rs:226), and
-    the ray cast confirms containment. ``sh`` indexes rings into
-    ``area``, the bbox arrays and the CSR rings ``(fx, fy, off)``."""
-    if sh.size == 0 or hx.size == 0:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    si, hj = bbox_join(bx1[sh], by1[sh], bx2[sh], by2[sh], hx, hy, hx, hy)
-    keep = np.abs(area[sh])[si] > h_area[hj] + 1e-6
-    si, hj = si[keep], hj[keep]
-    inside = ray_cast_pairs(hx[hj], hy[hj], sh[si], fx, fy, off)
-    return si[inside], hj[inside]
+def _fused_rows(kind: int, **cols) -> pd.DataFrame:
+    """FUSED_SCHEMA rows of one kind, built as columns: a list becomes
+    an object column, and a field not in ``cols`` is null."""
+    m = len(next(iter(cols.values())))
+    no_long = pd.arrays.IntegerArray(np.zeros(m, np.int64), np.ones(m, bool))
+    data = {"kind": np.full(m, kind, np.int32)}
+    for f in FUSED_SCHEMA.fields[1:]:
+        v = cols.get(f.name)
+        if isinstance(v, list):
+            v = pd.Series(v, dtype=object)
+        elif v is None:
+            v = (
+                no_long if isinstance(f.dataType, T.LongType)
+                else np.full(m, np.nan) if isinstance(f.dataType, T.DoubleType)
+                else pd.Series([None] * m, dtype=object)
+            )
+        data[f.name] = v
+    return pd.DataFrame(data)
 
 
 def _poly_rows(sh, holes, area, rid, cx, cy, coords_x, coords_y) -> pd.DataFrame:
     """K_POLY rows of the fused kernel, one per shell ring position in
-    ``sh``, built as columns: ``holes`` maps a row to the ring positions
-    of the holes attached to it in-task (in hole order). A promoted CW
-    shell is re-wound CCW; net area is the shell's less its holes'."""
+    ``sh``: ``holes`` maps a row to the ring positions of the holes
+    attached to it in-task (in hole order). A promoted CW shell is
+    re-wound CCW; net area is the shell's less its holes'."""
     m = sh.size
     shell_xs = [coords_x[p] for p in sh.tolist()]
     shell_ys = [coords_y[p] for p in sh.tolist()]
@@ -483,26 +440,10 @@ def _poly_rows(sh, holes, area, rid, cx, cy, coords_x, coords_y) -> pd.DataFrame
         hole_ys[i] = [coords_y[q] for q in qs]
         n_holes[i] = len(qs)
         net_area[i] = np.abs(area[sh[i]]) - np.abs(area[qs]).sum()
-    no_long = pd.arrays.IntegerArray(np.zeros(m, np.int64), np.ones(m, bool))
-    no_ring = pd.Series([None] * m, dtype=object)
-    return pd.DataFrame({
-        "kind": np.full(m, K_POLY, np.int32),
-        "rid": rid[sh],
-        "shell_xs": pd.Series(shell_xs, dtype=object),
-        "shell_ys": pd.Series(shell_ys, dtype=object),
-        "hole_xs": pd.Series(hole_xs, dtype=object),
-        "hole_ys": pd.Series(hole_ys, dtype=object),
-        "n_holes": n_holes,
-        "net_area": net_area,
-        "cx": cx[sh],
-        "cy": cy[sh],
-        "h_rid": no_long,
-        "cand_rid": no_long,
-        "cand_area": np.full(m, np.nan),
-        "h_area": np.full(m, np.nan),
-        "h_xs": no_ring,
-        "h_ys": no_ring,
-    })
+    return _fused_rows(
+        K_POLY, rid=rid[sh], shell_xs=shell_xs, shell_ys=shell_ys, hole_xs=hole_xs,
+        hole_ys=hole_ys, n_holes=n_holes, net_area=net_area, cx=cx[sh], cy=cy[sh],
+    )
 
 
 def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
@@ -512,7 +453,8 @@ def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
     exact-bbox twin promotion, hole→parent candidates over (own core's
     shells ∪ broadcast merged shells), in-task attach for local
     winners, narrow K_FINAL rows for merged winners, K_PARTIAL probes
-    for broadcast visitor holes."""
+    for broadcast visitor holes. Every kind of row is built as columns
+    from the per-core arrays."""
 
     def kernel(batches):
         pdfs = [p for p in batches if len(p)]
@@ -520,117 +462,79 @@ def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
             return
         pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
         g = gbc.value
-        visitors = vbc.value  # [(rid, h_area, cx, cy, [core keys])]
+        v = vbc.value  # visitor holes: rid, area, cx, cy, by_core
         n = len(pdf)
         area = pdf["area"].to_numpy()
         rid = pdf["rid"].to_numpy()
         cx = pdf["cx"].to_numpy()
         cy = pdf["cy"].to_numpy()
-        bx1 = pdf["bx1"].to_numpy()
-        by1 = pdf["by1"].to_numpy()
-        bx2 = pdf["bx2"].to_numpy()
-        by2 = pdf["by2"].to_numpy()
-        coords_x = [np.asarray(v, np.float64) for v in pdf["xs"]]
-        coords_y = [np.asarray(v, np.float64) for v in pdf["ys"]]
+        box = tuple(pdf[c].to_numpy() for c in _BOX)
+        coords_x = [np.asarray(c, np.float64) for c in pdf["xs"]]
+        coords_y = [np.asarray(c, np.float64) for c in pdf["ys"]]
         fx, fy, off = _ring_csr(coords_x, coords_y)
 
-        gkey = core_key(*claim_cores(bx1, by1, x0, y0, ts, cols, rows, fmap), rows)
+        gkey = core_key(*claim_cores(box[0], box[1], x0, y0, ts, cols, rows, fmap), rows)
         order = np.argsort(gkey, kind="stable")
         gk_s = gkey[order]
         bounds = np.concatenate(
             ([0], np.flatnonzero(gk_s[1:] != gk_s[:-1]) + 1, [n])
         )
-
-        vis_by_key: dict = {}
-        for vi, v in enumerate(visitors):
-            for k in v[4]:
-                vis_by_key.setdefault(k, []).append(vi)
-
-        # the few narrow K_FINAL / K_PARTIAL rows go out row by row; the
-        # K_POLY rows (nearly all of the output) are built as columns
-        # from the shells' ring positions at the end
-        out: dict = {k.name: [] for k in FUSED_SCHEMA.fields}
-
-        def emit(kind, **kw):
-            out["kind"].append(kind)
-            for fld in FUSED_SCHEMA.fields[1:]:
-                out[fld.name].append(kw.get(fld.name))
+        g_always = np.asarray(g["always"], np.int64)
 
         poly_rings = []  # per core: ring positions of its shells, in output order
         poly_holes: dict = {}  # K_POLY row -> ring positions of its in-task holes
         n_poly = 0
+        finals = []  # per core: (hole ring positions, parent rid, parent area)
+        partials = []  # per core: (visitor positions, candidate rid, candidate area)
         for a, b in zip(bounds[:-1], bounds[1:]):
-            idx = order[a:b]
-            (
-                sh, s_area, ho, h_area, hx, hy, best_area, best_rid, best_local
-            ) = _core_local_assembly(area, rid, cx, cy, bx1, by1, bx2, by2, fx, fy, off, idx)
-            nh = ho.size
-            if nh and g["n"]:
-                # per-core pre-index: only merged shells whose bbox can
-                # reach this core are tested (the padded driver index),
-                # not the whole residue — on a lattice the residue is
-                # O(√n) boundary rings and a full scan per core would
-                # be quadratic-ish
-                glist = np.asarray(
-                    list(g["always"]) + list(g["by_core"].get(int(gk_s[a]), ())), np.int64
-                )
-                gsi, ghj = _pip_candidates(
-                    glist, hx, hy, h_area, g["area"], g["bx1"], g["by1"], g["bx2"], g["by2"],
-                    g["fx"], g["fy"], g["off"],
-                )
-                if gsi.size:
-                    gi = glist[gsi]
-                    sel = _best_reduce(gsi, ghj, g["area"][gi], g["rid"][gi])
-                    m, ga, gr = ghj[sel], g["area"][gi[sel]], g["rid"][gi[sel]]
-                    take = (ga < best_area[m]) | ((ga == best_area[m]) & (gr < best_rid[m]))
-                    rows_ = m[take]
-                    best_area[rows_] = ga[take]
-                    best_rid[rows_] = gr[take]
-                    best_local[rows_] = -1
-
-            # an unparented hole (best_area inf) vanishes
-            parented = np.isfinite(best_area)
-            for p in np.flatnonzero(parented & (best_local >= 0)).tolist():
-                poly_holes.setdefault(n_poly + int(best_local[p]), []).append(ho[p])
-            for p in np.flatnonzero(parented & (best_local < 0)).tolist():
-                emit(
-                    K_FINAL,
-                    h_rid=int(rid[ho[p]]),
-                    cand_rid=int(best_rid[p]),
-                    cand_area=float(best_area[p]),
-                    h_area=float(h_area[p]),
-                    h_xs=coords_x[ho[p]],
-                    h_ys=coords_y[ho[p]],
-                )
+            key = int(gk_s[a])
+            # per-core pre-index: only merged shells whose bbox can
+            # reach this core are tested (the padded driver index), not
+            # the whole residue — on a lattice the residue is O(√n)
+            # boundary rings and a full scan per core would be
+            # quadratic-ish
+            glist = np.concatenate((g_always, np.asarray(g["by_core"].get(key, ()), np.int64)))
+            sh, s_area, ho, h, w, cand_area, cand_rid = _core_local_assembly(
+                area, rid, cx, cy, box, fx, fy, off, order[a:b], g, glist
+            )
+            # an unparented hole vanishes; a local parent attaches
+            # in-task, a merged one goes out as a K_FINAL row
+            local = w < sh.size
+            for q, s in zip(ho[h[local]].tolist(), w[local].tolist()):
+                poly_holes.setdefault(n_poly + s, []).append(q)
+            w_fin = w[~local]
+            finals.append((ho[h[~local]], cand_rid[w_fin], cand_area[w_fin]))
 
             # visitor probes: merged CW holes touching this core test
             # against THIS core's shells only (merged-shell candidates
             # are computed once, driver-side)
-            vids = vis_by_key.get(int(gk_s[a]), ())
-            if vids and sh.size:
-                vhx = np.fromiter((visitors[v][2] for v in vids), np.float64, len(vids))
-                vhy = np.fromiter((visitors[v][3] for v in vids), np.float64, len(vids))
-                vha = np.fromiter((visitors[v][1] for v in vids), np.float64, len(vids))
-                vsi, vhj = _pip_candidates(
-                    sh, vhx, vhy, vha, area, bx1, by1, bx2, by2, fx, fy, off
+            vids = v["by_core"].get(key)
+            if vids is not None and sh.size:
+                vx, vy, va = v["cx"][vids], v["cy"][vids], v["area"][vids]
+                vsi, vhj = _parent_candidates(
+                    tuple(c[sh] for c in box), s_area, sh, (vx, vy, vx, vy), vx, vy, va,
+                    fx, fy, off,
                 )
-                if vsi.size:
-                    vsrid = rid[sh[vsi]]
-                    sel = _best_reduce(vsi, vhj, s_area[vsi], vsrid)
-                    for s in sel.tolist():
-                        emit(
-                            K_PARTIAL,
-                            h_rid=int(visitors[vids[vhj[s]]][0]),
-                            cand_rid=int(vsrid[s]),
-                            cand_area=float(s_area[vsi[s]]),
-                            h_area=float(vha[vhj[s]]),
-                        )
+                win = _smallest_parent(vsi, vhj, s_area, rid[sh])
+                partials.append((vids[vhj[win]], rid[sh[vsi[win]]], s_area[vsi[win]]))
 
             poly_rings.append(sh)
             n_poly += sh.size
 
-        if out["kind"]:
-            yield pd.DataFrame({k: pd.Series(v, dtype=object) for k, v in out.items()})
+        q, q_rid, q_area = (np.concatenate(c) for c in zip(*finals))
+        if q.size:
+            yield _fused_rows(
+                K_FINAL, h_rid=rid[q], cand_rid=q_rid, cand_area=q_area,
+                h_area=np.abs(area[q]), h_xs=[coords_x[p] for p in q.tolist()],
+                h_ys=[coords_y[p] for p in q.tolist()],
+            )
+        if partials:
+            vq, q_rid, q_area = (np.concatenate(c) for c in zip(*partials))
+            if vq.size:
+                yield _fused_rows(
+                    K_PARTIAL, h_rid=v["rid"][vq], cand_rid=q_rid, cand_area=q_area,
+                    h_area=v["area"][vq],
+                )
         if n_poly:
             yield _poly_rows(np.concatenate(poly_rings), poly_holes, area, rid, cx, cy,
                              coords_x, coords_y)
@@ -681,7 +585,7 @@ def assemble_rings_fused(
         "xs", "ys", "area", "bx1", "by1", "bx2", "by2", "cx", "cy",
     )
 
-    grows: list = []
+    res = pd.DataFrame(columns=_RING_COLS)  # the merged residue
     if merged is not None:
         merged_rid = (
             merged.where(F.abs("area") >= 1e-9)
@@ -696,15 +600,15 @@ def assemble_rings_fused(
         ):
             # bounds certify the gates up front: one parallel Arrow
             # collect, no incremental limit waves
-            grows = merged_rid.toPandas().to_dict("records")
+            res = merged_rid.toPandas()
         else:
-            grows = [
-                r.asDict()
-                for r in merged_rid.limit(global_rows_gate + 1).collect()
-            ]
+            res = pd.DataFrame(
+                [r.asDict() for r in merged_rid.limit(global_rows_gate + 1).collect()],
+                columns=_RING_COLS,
+            )
         if (
-            len(grows) > global_rows_gate
-            or sum(len(r["xs"]) for r in grows) > global_coords_gate
+            len(res) > global_rows_gate
+            or sum(map(len, res["xs"])) > global_coords_gate
         ):
             # pathological residue: hand the FULL ring set to the
             # distributed assembly (lossless, slower), behind one eager
@@ -712,26 +616,29 @@ def assemble_rings_fused(
             # leak in the CacheManager for the session lifetime)
             rings = ringrows.unionByName(merged_rid).localCheckpoint(eager=True)
             return assemble_rings_distributed(rings, drop_collapsed)
-    gshells, gvisitors = _promote_rows(grows)
 
-    ng = len(gshells)
-    g_bx1 = np.fromiter((r["bx1"] for r, _ in gshells), np.float64, ng)
-    g_by1 = np.fromiter((r["by1"] for r, _ in gshells), np.float64, ng)
-    g_bx2 = np.fromiter((r["bx2"] for r, _ in gshells), np.float64, ng)
-    g_by2 = np.fromiter((r["by2"] for r, _ in gshells), np.float64, ng)
-    g_area = np.fromiter((abs(r["area"]) for r, _ in gshells), np.float64, ng)
-    g_rid = np.fromiter((r["rid"] for r, _ in gshells), np.int64, ng)
-    g_fx, g_fy, g_off = _ring_csr([r["xs"] for r, _ in gshells], [r["ys"] for r, _ in gshells])
+    # promotion among the residue (twins share a vertex set, hence a
+    # class): the merged shells are its CCW rings and promoted CW rings
+    r_rid = res["rid"].to_numpy(np.int64)
+    r_area = res["area"].to_numpy(np.float64)
+    r_cx = res["cx"].to_numpy(np.float64)
+    r_cy = res["cy"].to_numpy(np.float64)
+    r_box = tuple(res[c].to_numpy(np.float64) for c in _BOX)
+    promoted = _promoted(r_area, *r_box)
+    shell = np.flatnonzero((r_area > 0.0) | promoted)
+    g_rid = r_rid[shell]
+    g_area = np.abs(r_area[shell])
+    g_box = tuple(c[shell] for c in r_box)
+    g_fx, g_fy, g_off = _ring_csr(
+        list(res["xs"].to_numpy()[shell]), list(res["ys"].to_numpy()[shell])
+    )
 
     # per-core reach index: only merged shells whose bbox can reach a
     # core are tested there; world-spanning shells (e.g. the hull) are
     # tested by every core
-    by_core, g_always = core_reach_index(
-        g_bx1, g_by1, g_bx2, g_by2, x0, y0, ts, cols, rows, fmap
-    )
+    by_core, g_always = core_reach_index(*g_box, x0, y0, ts, cols, rows, fmap)
     payload = {
-        "n": ng, "rid": g_rid, "area": g_area,
-        "bx1": g_bx1, "by1": g_by1, "bx2": g_bx2, "by2": g_by2,
+        "rid": g_rid, "area": g_area, **dict(zip(_BOX, g_box)),
         "fx": g_fx, "fy": g_fy, "off": g_off, "by_core": by_core, "always": g_always,
     }
     gbc = spark.sparkContext.broadcast(payload)
@@ -741,36 +648,28 @@ def assemble_rings_fused(
     # resolved HERE (vectorized driver numpy — bbox_join + grouped PIP,
     # the residue can be O(√n) boundary rings on a lattice) and fed to
     # the finish as extra partial rows
-    vis = []
-    extra_rows = []
-    if gvisitors:
-        nv = len(gvisitors)
-        v_rid = np.fromiter((r["rid"] for r in gvisitors), np.int64, nv)
-        v_ha = np.fromiter((abs(r["area"]) for r in gvisitors), np.float64, nv)
-        v_cx = np.fromiter((r["cx"] for r in gvisitors), np.float64, nv)
-        v_cy = np.fromiter((r["cy"] for r in gvisitors), np.float64, nv)
-        for vi, r in enumerate(gvisitors):
-            touch = touching_cores(r["cx"], r["cy"], x0, y0, ts, cols, rows, fmap)
-            keys = [core_key(a, b, fv, p, q, rows) for a, b, fv, p, q in touch]
-            vis.append(
-                (int(v_rid[vi]), float(v_ha[vi]), float(v_cx[vi]), float(v_cy[vi]), keys)
-            )
-        si, hj = _pip_candidates(
-            np.arange(ng), v_cx, v_cy, v_ha, g_area, g_bx1, g_by1, g_bx2, g_by2,
-            g_fx, g_fy, g_off,
-        )
-        if si.size:
-            for s in _best_reduce(si, hj, g_area[si], g_rid[si]).tolist():
-                extra_rows.append(
-                    (int(v_rid[hj[s]]), int(g_rid[si[s]]),
-                     float(g_area[si[s]]), float(v_ha[hj[s]]))
-                )
-    vbc = spark.sparkContext.broadcast(vis)
+    hole = np.flatnonzero(r_area < 0.0)
+    v_rid, v_ha, v_cx, v_cy = r_rid[hole], -r_area[hole], r_cx[hole], r_cy[hole]
+    v_by_core: dict = {}
+    for vi, (px, py) in enumerate(zip(v_cx.tolist(), v_cy.tolist())):
+        for t in touching_cores(px, py, x0, y0, ts, cols, rows, fmap):
+            v_by_core.setdefault(int(core_key(*t, rows)), []).append(vi)
+    vbc = spark.sparkContext.broadcast({
+        "rid": v_rid, "area": v_ha, "cx": v_cx, "cy": v_cy,
+        "by_core": {k: np.asarray(i, np.int64) for k, i in v_by_core.items()},
+    })
+    si, hj = _parent_candidates(
+        g_box, g_area, np.arange(shell.size), (v_cx, v_cy, v_cx, v_cy), v_cx, v_cy, v_ha,
+        g_fx, g_fy, g_off,
+    )
+    win = _smallest_parent(si, hj, g_area, g_rid)
+    s, h = si[win], hj[win]
     extra_partials = (
         spark.createDataFrame(
-            extra_rows, "h_rid long, cand_rid long, cand_area double, h_area double"
+            list(zip(v_rid[h].tolist(), g_rid[s].tolist(), g_area[s].tolist(), v_ha[h].tolist())),
+            "h_rid long, cand_rid long, cand_area double, h_area double",
         )
-        if extra_rows
+        if win.size
         else None
     )
 
@@ -801,9 +700,8 @@ def assemble_rings_fused(
                 .distinct()
                 .collect()
             }
-        vis_cores = {int(k) for v in vis for k in v[4]}
         plain, phase2_in = _bypass_interesting_split(
-            ringrows, core_c, set(cw_cores) | vis_cores, spark
+            ringrows, core_c, set(cw_cores) | set(v_by_core), spark
         )
         bypass = _bypass_poly_rows(plain)
 
@@ -821,8 +719,7 @@ def assemble_rings_fused(
     # merged visitors (K_PARTIAL + extra_partials) resolve from the
     # driver-side residue rows
     return _finish_assignments(
-        spark, out, gshells, drop_collapsed,
-        merged_coord_rows=grows,
+        spark, out, res, shell, promoted, drop_collapsed,
         extra_partials=extra_partials,
         bypass_polys=bypass,
     )

@@ -335,8 +335,7 @@ def _make_chain_kernel(x0, y0, ts, snap_grid, cols, rows, fmap):
         gx = g.nx
         gy = g.ny
 
-        out_rows = {
-            "kind": [],
+        out_rows = {  # open chains (kind 1)
             "xs": [],
             "ys": [],
             "head_key": [],
@@ -406,74 +405,46 @@ def _make_chain_kernel(x0, y0, ts, snap_grid, cols, rows, fmap):
                 nodes = np.empty(seq.size + 1, dtype=np.int64)
                 nodes[0] = src[seq[0]]
                 nodes[1:] = dst[seq]
-                out_rows["kind"].append(1)
                 out_rows["xs"].append(gx[nodes])
                 out_rows["ys"].append(gy[nodes])
                 out_rows["head_key"].append(hks[ci])
                 out_rows["tail_key"].append(tks[ci])
 
-        # ---- local ring stats (spur-cancelled) ------------------------
+        # ---- local ring rows (spur-cancelled) -------------------------
         # spurs can only arise from degree-1 nodes (a U-turn in the
         # face walk happens exactly at a fan of one edge); dangle-free
         # tiles — the entire lattice benchmark — skip the machinery
-        n_chains = len(out_rows["kind"])
-        ring_rows = 0
-        if ring_xs:
-            if np.any(g.degree == 1):
-                spurs = _rings_have_spurs(ring_xs, ring_ys)
-                cleaned_x: list = []
-                cleaned_y: list = []
-                for i in range(len(ring_xs)):
-                    if spurs[i]:
-                        cx_, cy_ = _strip_spurs(ring_xs[i], ring_ys[i])
-                        if cx_ is None:
-                            continue
-                        cleaned_x.append(cx_)
-                        cleaned_y.append(cy_)
-                    else:
-                        cleaned_x.append(ring_xs[i])
-                        cleaned_y.append(ring_ys[i])
-            else:
-                cleaned_x, cleaned_y = ring_xs, ring_ys
-            if cleaned_x:
-                xr, yr, off, L, bx1, by1, bx2, by2, area, cxs, cys = batch_ring_stats(
-                    cleaned_x, cleaned_y
-                )
-                keep = np.flatnonzero(np.abs(area) >= 1e-9)
-                ring_rows = keep.size
-                for i in keep:
-                    o, l = off[i], L[i]
-                    out_rows["kind"].append(0)
-                    out_rows["xs"].append(np.concatenate((xr[o : o + l], xr[o : o + 1])))
-                    out_rows["ys"].append(np.concatenate((yr[o : o + l], yr[o : o + 1])))
-                    out_rows["head_key"].append(0)
-                    out_rows["tail_key"].append(0)
-                stat_arrays = (bx1, by1, bx2, by2, area, cxs, cys)
-        n_out = len(out_rows["kind"])
+        if ring_xs and np.any(g.degree == 1):
+            spurs = _rings_have_spurs(ring_xs, ring_ys)
+            cleaned_x: list = []
+            cleaned_y: list = []
+            for i in range(len(ring_xs)):
+                if spurs[i]:
+                    cx_, cy_ = _strip_spurs(ring_xs[i], ring_ys[i])
+                    if cx_ is None:
+                        continue
+                    cleaned_x.append(cx_)
+                    cleaned_y.append(cy_)
+                else:
+                    cleaned_x.append(ring_xs[i])
+                    cleaned_y.append(ring_ys[i])
+            ring_xs, ring_ys = cleaned_x, cleaned_y
+        rings = _rings_pdf(ring_xs, ring_ys)
+        n_chains = len(out_rows["xs"])
         z = np.zeros(n_chains)
-        if ring_rows:
-            bx1k, by1k, bx2k, by2k, areak, cxk, cyk = stat_arrays
-            stats = [
-                np.concatenate((z, a[keep]))
-                for a in (areak, bx1k, by1k, bx2k, by2k, cxk, cyk)
-            ]
-        else:
-            stats = [np.zeros(n_out)] * 7
+        zi = np.zeros(len(rings), np.int64)
         obj = lambda v: pd.Series(v, dtype=object)
         return pd.DataFrame(
             {
-                "kind": np.asarray(out_rows["kind"], np.int32),
-                "xs": obj(out_rows["xs"]),
-                "ys": obj(out_rows["ys"]),
-                "head_key": np.asarray(out_rows["head_key"], np.int64),
-                "tail_key": np.asarray(out_rows["tail_key"], np.int64),
-                "area": stats[0],
-                "bx1": stats[1],
-                "by1": stats[2],
-                "bx2": stats[3],
-                "by2": stats[4],
-                "cx": stats[5],
-                "cy": stats[6],
+                "kind": np.repeat(np.array([1, 0], np.int32), (n_chains, len(rings))),
+                "xs": obj(out_rows["xs"] + list(rings["xs"])),
+                "ys": obj(out_rows["ys"] + list(rings["ys"])),
+                "head_key": np.concatenate((np.asarray(out_rows["head_key"], np.int64), zi)),
+                "tail_key": np.concatenate((np.asarray(out_rows["tail_key"], np.int64), zi)),
+                **{
+                    c: np.concatenate((z, rings[c].to_numpy()))
+                    for c in ("area", "bx1", "by1", "bx2", "by2", "cx", "cy")
+                },
             }
         )
 

@@ -20,6 +20,7 @@ from geo_polygonize_spark.kernels.intersect import (
 from geo_polygonize_spark.kernels.morton import cell_morton, part1by1, z_order_index
 from geo_polygonize_spark.kernels.noding import node_segments
 from geo_polygonize_spark.kernels.rings import (
+    assemble_polygons_pdf,
     canonicalize_ring,
     centroid,
     point_in_ring,
@@ -328,6 +329,141 @@ class TestRings:
         c1 = canonicalize_ring(*rotate_closed(px, py, 2))
         c2 = canonicalize_ring(*rotate_closed(px, py, 5))
         assert c1[0].tolist() == c2[0].tolist() and c1[1].tolist() == c2[1].tolist()
+
+
+def box_ring(x1, y1, x2, y2, cw=False):
+    """Closed axis-aligned rectangle, CCW (or CW)."""
+    xs, ys = arr(x1, x2, x2, x1, x1), arr(y1, y1, y2, y2, y1)
+    return (xs[::-1].copy(), ys[::-1].copy()) if cw else (xs, ys)
+
+
+def notched_square(cut, cw=False):
+    """The unit square with its (1, 1) corner cut off by a right
+    triangle of legs ``cut``: the same bbox, area 1 − cut²/2."""
+    xs = arr(0, 1, 1, 1 - cut, 0, 0)
+    ys = arr(0, 0, 1 - cut, 1, 1, 0)
+    return (xs[::-1].copy(), ys[::-1].copy()) if cw else (xs, ys)
+
+
+def parents(ring_list, tie=None):
+    """The assembly rule of ``kernels.rings`` over hand-built rings:
+    (promoted mask, {hole ring: parent ring}). Holes are queried by
+    their bbox and probed at their centroid, as in the single-group
+    assembly; ``tie`` (per ring) breaks equal-area candidates, default
+    the ring index."""
+    from geo_polygonize_spark.kernels.rings import (
+        _parent_candidates, _promoted, _smallest_parent, bbox,
+    )
+
+    area = np.array([signed_area(x, y) for x, y in ring_list])
+    box = [np.array(c) for c in zip(*(bbox(x, y) for x, y in ring_list))]
+    cx, cy = (np.array(c) for c in zip(*(centroid(x, y) for x, y in ring_list)))
+    off = np.concatenate(([0], np.cumsum([x.size for x, _ in ring_list])))
+    fx = np.concatenate([x for x, _ in ring_list])
+    fy = np.concatenate([y for _, y in ring_list])
+    prom = _promoted(area, *box)
+    sh = np.flatnonzero((area > 0) | prom)
+    ho = np.flatnonzero(area < 0)
+    si, hj = _parent_candidates(
+        tuple(c[sh] for c in box), np.abs(area[sh]), sh, tuple(c[ho] for c in box),
+        cx[ho], cy[ho], -area[ho], fx, fy, off,
+    )
+    tie = np.arange(area.size) if tie is None else np.asarray(tie)
+    win = _smallest_parent(si, hj, np.abs(area[sh]), tie[sh])
+    return prom, dict(zip(ho[hj[win]].tolist(), sh[si[win]].tolist()))
+
+
+class TestAssemblyRule:
+    """Twin promotion and hole→parent selection (polygonizer.rs:152-249),
+    written once in ``kernels.rings`` for every numpy assembly."""
+
+    @pytest.mark.parametrize("cut, promoted", [(1e-3, False), (2e-3, True)])
+    def test_twin_area_threshold(self, cut, promoted):
+        # exactly equal bboxes; |Δarea| = cut²/2 = 5e-7 (a twin) or 2e-6
+        prom, got = parents([box_ring(0, 0, 1, 1), notched_square(cut, cw=True)])
+        assert prom.tolist() == [False, promoted]
+        # a twin is no parent either: it is not 1e-6 larger
+        assert got == ({1: 0} if promoted else {})
+        assert len(assemble_polygons_pdf(*zip(box_ring(0, 0, 1, 1),
+                                              notched_square(cut, cw=True)))) == 1 + promoted
+
+    def test_promoted_hull_is_also_a_hole(self):
+        rl = [box_ring(0, 0, 10, 10), box_ring(2, 2, 4, 4, cw=True)]
+        prom, got = parents(rl)
+        assert prom.tolist() == [False, True] and got == {1: 0}
+        pdf = assemble_polygons_pdf(*zip(*rl))
+        assert pdf["n_holes"].tolist() == [1, 0]
+        assert pdf["area"].tolist() == [96.0, 4.0]
+        # the promoted shell is re-wound CCW
+        assert signed_area(pdf["shell_xs"][1], pdf["shell_ys"][1]) == 4.0
+
+    def test_nested_shells_smallest_strictly_larger_wins(self):
+        rl = [box_ring(0, 0, 10, 10), box_ring(2, 2, 8, 8), box_ring(1, 1, 9, 9),
+              box_ring(4, 4, 6, 6), box_ring(4, 4, 6, 6, cw=True)]
+        prom, got = parents(rl)
+        # the hole's CCW twin (ring 3) is not strictly larger; ring 1 is
+        # the smallest shell that is
+        assert not prom.any() and got == {4: 1}
+
+    @pytest.mark.parametrize("grow, parent", [(1e-7, 0), (1e-6, 1)])
+    def test_container_within_1e6_is_no_parent(self, grow, parent):
+        # container (ring 1) of area 1 + grow around a hole of area
+        # 1 - 5e-7; within 1e-6 the next larger shell takes the hole
+        rl = [box_ring(-1, -1, 3, 3), box_ring(0, 0, 1 + grow, 1),
+              notched_square(1e-3, cw=True)]
+        prom, got = parents(rl)
+        assert prom.tolist() == [False, False, True]  # bboxes differ: no twin
+        assert got == {2: parent}
+
+    def test_equal_area_tie_goes_to_tie_key(self):
+        rl = [box_ring(0, 0, 4, 2), box_ring(0, 0, 2, 4), box_ring(0.5, 0.5, 1.5, 1.5, cw=True)]
+        assert parents(rl, tie=[0, 1, 2])[1] == {2: 0}
+        assert parents(rl, tie=[1, 0, 2])[1] == {2: 1}
+
+    def test_per_core_call_matches_single_group(self):
+        """The fused kernel's per-core assembly, run as ONE core over
+        every ring with no merged shells, picks the same shells and
+        the same parent for every hole as ``assemble_polygons_pdf``."""
+        from geo_polygonize_spark.kernels.polygonize import DEFAULT_SNAP_GRID, segmentize
+        from geo_polygonize_spark.kernels.rings import batch_ring_stats
+        from geo_polygonize_spark.operators.assembly import _core_local_assembly, _ring_csr
+        from geo_polygonize_spark.sources.fixtures import random_lines
+
+        x1, y1, x2, y2 = node_segments(*segmentize(*random_lines(200)), DEFAULT_SNAP_GRID)
+        g = build_graph(x1, y1, x2, y2)
+        sort_edges(g)
+        prune_dangles(g)
+        ring_xs, ring_ys = edge_rings(g)
+        _, _, _, _, bx1, by1, bx2, by2, area, cx, cy = batch_ring_stats(ring_xs, ring_ys)
+        keep = np.flatnonzero(np.abs(area) >= 1e-9)
+        ring_xs = [ring_xs[i] for i in keep]
+        ring_ys = [ring_ys[i] for i in keep]
+        area, cx, cy, box = area[keep], cx[keep], cy[keep], tuple(
+            c[keep] for c in (bx1, by1, bx2, by2))
+        fx, fy, off = _ring_csr(ring_xs, ring_ys)
+        z = np.empty(0)
+        no_merged = {"rid": np.empty(0, np.int64), "area": z, "bx1": z, "by1": z,
+                     "bx2": z, "by2": z, "fx": z, "fy": z, "off": np.zeros(1, np.int64)}
+        sh, _, ho, h, w, _, _ = _core_local_assembly(
+            area, np.arange(area.size), cx, cy, box, fx, fy, off, np.arange(area.size),
+            no_merged, np.empty(0, np.int64),
+        )
+        assert (w < sh.size).all()
+        fused = dict(zip(ho[h].tolist(), sh[w].tolist()))
+
+        pdf = assemble_polygons_pdf(ring_xs, ring_ys)
+        ring_of = {}
+        for i, (x, y) in enumerate(zip(ring_xs, ring_ys)):
+            ring_of[x.tobytes() + y.tobytes()] = i
+            ring_of[x[::-1].tobytes() + y[::-1].tobytes()] = i  # a promoted shell
+        single = {}
+        shells = []
+        for sx, sy, hxs, hys in zip(pdf["shell_xs"], pdf["shell_ys"], pdf["hole_xs"], pdf["hole_ys"]):
+            shells.append(ring_of[sx.tobytes() + sy.tobytes()])
+            for hx, hy in zip(hxs, hys):
+                single[ring_of[hx.tobytes() + hy.tobytes()]] = shells[-1]
+        assert sorted(shells) == sorted(sh.tolist())
+        assert len(single) > 100 and fused == single
 
 
 class TestMorton:
