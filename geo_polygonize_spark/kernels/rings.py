@@ -413,19 +413,27 @@ def _promoted(area, bx1, by1, bx2, by2) -> np.ndarray:
     """Twin promotion (polygonizer.rs:152-185), per ring: True for a CW
     ring (area < 0) with no CCW ring of exactly equal bbox and area
     within 1e-6. A promoted ring becomes a shell, re-wound CCW, and
-    stays a hole too (a coverage hull nets to zero that way). Exact-bbox
-    hash groups give O(1) twin lookup."""
-    box = np.stack((bx1, by1, bx2, by2), 1)
-    ccw = area > 0.0
-    cw = np.flatnonzero(area < 0.0)
-    twins: dict = {}
-    for b, a in zip(box[ccw].tolist(), area[ccw].tolist()):
-        twins.setdefault(tuple(b), []).append(a)
-    out = np.zeros(area.size, dtype=bool)
-    out[cw] = [
-        not any(abs(s - h) < 1e-6 for s in twins.get(tuple(b), ()))
-        for b, h in zip(box[cw].tolist(), (-area[cw]).tolist())
-    ]
+    stays a hole too (a coverage hull nets to zero that way).
+
+    One sort by (bbox, |area|) puts every equal-bbox group in a run; a
+    CW ring has a twin iff the nearest CCW ring below or above it in
+    its run is within 1e-6. Runs split wherever a bbox value differs
+    by ``==``, so -0.0 meets 0.0 and a NaN bbox has no twin."""
+    n = area.size
+    o = np.lexsort((np.abs(area), by2, bx2, by1, bx1))
+    a, ccw = np.abs(area[o]), area[o] > 0.0
+    pos = np.arange(n)
+    same = np.logical_and.reduce([k[o][1:] == k[o][:-1] for k in (bx1, by1, bx2, by2)])
+    run_lo = np.maximum.accumulate(np.where(np.r_[False, same], 0, pos))
+    run_hi = np.minimum.accumulate(np.where(np.r_[same, False], n, pos + 1)[::-1])[::-1]
+    below = np.maximum.accumulate(np.where(ccw, pos, -1))
+    above = np.minimum.accumulate(np.where(ccw, pos, n)[::-1])[::-1]
+
+    def twin(j):  # CCW ring j is in the run and within 1e-6
+        return (j >= run_lo) & (j < run_hi) & (np.abs(a[np.clip(j, 0, n - 1)] - a) < 1e-6)
+
+    out = np.zeros(n, dtype=bool)
+    out[o] = (area[o] < 0.0) & ~twin(below) & ~twin(above)
     return out
 
 

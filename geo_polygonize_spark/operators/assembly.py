@@ -60,11 +60,7 @@ one claim core (tile, or hot-tile sub-cell) of its trace kernel, and
    leaves the task); a merged winner emits a NARROW ``K_FINAL`` row.
    Visitor probes emit the core's best candidate as a ``K_PARTIAL``
    row, and the finish takes the min across cores.
-4. **Bypass.** On an unsplit grid, a core with no CW ring and no
-   visitor yields identity polygons (every ring a plain CCW shell), so
-   its rings never cross the Python boundary: they re-emit JVM-side
-   from the trace output.
-5. **Finish (narrow).** Per-hole winners = final rows ∪ (min of partial
+4. **Finish (narrow).** Per-hole winners = final rows ∪ (min of partial
    rows). Winners targeting merged shells net their areas; winners
    targeting core shells (rare: a concave merged hole whose centroid
    lands in a core shell) patch the emitted polygons through a
@@ -72,9 +68,11 @@ one claim core (tile, or hot-tile sub-cell) of its trace kernel, and
    ``drop_collapsed`` is applied in the finish (the kernel can't know
    about late-arriving patches), a narrow filter.
 
-Scale shape: ring coordinates of interesting cores cross exactly ONE
-Python pass (no shuffle); every later stage moves narrow winner rows
-(which carry only their own hole's coords). The merged residue is
+Scale shape: every core ring's coordinates cross exactly ONE Python
+pass (no shuffle); every later stage moves narrow winner rows (which
+carry only their own hole's coords). There is no cheaper path for
+"plain" cores: the face tracer returns bounded faces as CW rings, so
+every core that holds a ring holds a CW ring. The merged residue is
 O(tile-boundary crossings) with an explicit gate and a lossless
 fallback.
 """
@@ -88,12 +86,17 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from ..functions.cells import cell_range_cols
 from ..kernels.rings import _parent_candidates, _promoted, _smallest_parent, ray_cast_pairs
 from .polygonize_op import POLYGON_SCHEMA
-from .tiling import claim_cores, core_key, core_key_col, core_reach_index, touching_cores
+from .tiling import claim_cores, core_key, core_reach_index, touching_cores
 
 # kernel emission kinds
 K_POLY = 0      # finished polygon (assembled in-task)
 K_FINAL = 1     # final hole→global-shell assignment (narrow)
 K_PARTIAL = 4   # visitor hole: best candidate from one touching core
+
+# merged-residue size gates (rows, coordinates): above either, the
+# fused assembly hands the whole ring set to the distributed assembly
+MERGED_ROWS_GATE = 100_000
+MERGED_COORDS_GATE = 10_000_000
 
 FUSED_SCHEMA = T.StructType(
     [
@@ -124,52 +127,6 @@ _RING_COLS = ["rid", "xs", "ys", "area", "bx1", "by1", "bx2", "by2", "cx", "cy"]
 _BOX = ("bx1", "by1", "bx2", "by2")
 
 
-def _bypass_poly_rows(plain: DataFrame) -> DataFrame:
-    """JVM-side identity K_POLY rows for rings of PLAIN cores/tiles —
-    exactly what the Python kernels emit for a group with no CW ring
-    and no visitor (every ring a plain CCW shell: promotion needs a CW
-    twin, holes are CW rings, so no K_FINAL/K_PARTIAL and hole arrays
-    are empty). Input: _RING_COLS-shaped frame; output: FUSED_SCHEMA."""
-    return plain.select(
-        F.lit(K_POLY).cast("int").alias("kind"),
-        "rid",
-        F.col("xs").alias("shell_xs"),
-        F.col("ys").alias("shell_ys"),
-        F.array().cast("array<array<double>>").alias("hole_xs"),
-        F.array().cast("array<array<double>>").alias("hole_ys"),
-        F.lit(0).cast("int").alias("n_holes"),
-        F.col("area").alias("net_area"),
-        "cx",
-        "cy",
-        F.lit(None).cast("long").alias("h_rid"),
-        F.lit(None).cast("long").alias("cand_rid"),
-        F.lit(None).cast("double").alias("cand_area"),
-        F.lit(None).cast("double").alias("h_area"),
-        F.lit(None).cast("array<double>").alias("h_xs"),
-        F.lit(None).cast("array<double>").alias("h_ys"),
-    )
-
-
-def _bypass_interesting_split(df: DataFrame, key_col, keys: set, spark):
-    """(plain, interesting) split of ``df`` on ``key_col`` membership in
-    the driver-known ``keys`` — literal ``isin`` for small sets, anti/
-    semi broadcast joins above 512 (a 10^5-literal ``isin`` costs tens
-    of seconds of pure py4j expression construction, BENCH.md r5)."""
-    if not keys:
-        return df, df.where(F.lit(False))
-    ids = sorted(keys)
-    if len(ids) <= 512:
-        return df.where(~key_col.isin(ids)), df.where(key_col.isin(ids))
-    idf = spark.createDataFrame(
-        pd.DataFrame({"_k": pd.Series(ids, dtype="int64")}), "_k long"
-    )
-    kdf = df.withColumn("_k", key_col)
-    return (
-        kdf.join(F.broadcast(idf), "_k", "left_anti").drop("_k"),
-        kdf.join(F.broadcast(idf), "_k", "left_semi").drop("_k"),
-    )
-
-
 def _finish_assignments(
     spark,
     out: DataFrame,
@@ -178,7 +135,6 @@ def _finish_assignments(
     promoted: np.ndarray,
     drop_collapsed: bool,
     extra_partials: DataFrame | None = None,
-    bypass_polys: DataFrame | None = None,
 ) -> DataFrame:
     """Narrow finish over a FUSED_SCHEMA kernel output: resolve
     per-hole winners (finals + min over partial candidate rows), net
@@ -285,12 +241,6 @@ def _finish_assignments(
         )
         .drop("p_xs", "p_ys", "p_sum", "p_n")
     )
-    if bypass_polys is not None:
-        # identity rows of plain cores/tiles: never patch targets
-        # (callers' argument), so they union in AFTER the patch join
-        polys = polys.select(
-            *[f.name for f in FUSED_SCHEMA.fields]
-        ).unionByName(bypass_polys)
     if drop_collapsed:
         polys = polys.where(F.col("net_area") > 1e-6)
 
@@ -552,19 +502,11 @@ def assemble_rings_fused(
     rows: int,
     fmap: dict,
     drop_collapsed: bool = False,
-    global_rows_gate: int = 100_000,
-    global_coords_gate: int = 10_000_000,
     merged_rows_bound: int | None = None,
     merged_coords_bound: int | None = None,
-    cw_cores: set | None = None,
 ) -> DataFrame:
     """Chain-engine assembly with ZERO extra shuffles of ring data:
     phase 2 maps over the cached trace output (module docstring).
-
-    ``cw_cores``: pre-computed claim-core keys holding at least one CW
-    ring (the chain engine folds this into its counts job); None =
-    compute here with one narrow job. Only consulted when ``fmap`` is
-    empty (bypass path).
 
     ``trace_out``: the checkpointed CHAIN_SCHEMA kernel output (kind 0
     = core rings, already degenerate-filtered); it must outlive the
@@ -595,20 +537,20 @@ def assemble_rings_fused(
         if (
             merged_rows_bound is not None
             and merged_coords_bound is not None
-            and merged_rows_bound <= global_rows_gate
-            and merged_coords_bound <= global_coords_gate
+            and merged_rows_bound <= MERGED_ROWS_GATE
+            and merged_coords_bound <= MERGED_COORDS_GATE
         ):
             # bounds certify the gates up front: one parallel Arrow
             # collect, no incremental limit waves
             res = merged_rid.toPandas()
         else:
             res = pd.DataFrame(
-                [r.asDict() for r in merged_rid.limit(global_rows_gate + 1).collect()],
+                [r.asDict() for r in merged_rid.limit(MERGED_ROWS_GATE + 1).collect()],
                 columns=_RING_COLS,
             )
         if (
-            len(res) > global_rows_gate
-            or sum(map(len, res["xs"])) > global_coords_gate
+            len(res) > MERGED_ROWS_GATE
+            or sum(map(len, res["xs"])) > MERGED_COORDS_GATE
         ):
             # pathological residue: hand the FULL ring set to the
             # distributed assembly (lossless, slower), behind one eager
@@ -673,47 +615,11 @@ def assemble_rings_fused(
         else None
     )
 
-    # r6 phase-2 bypass (guide §4.1/§2.3 — don't move bytes through
-    # Python that come back unchanged): a core with no CW ring and no
-    # visitor produces the IDENTITY kernel output — every ring is a
-    # plain CCW shell (promotion needs a CW twin, holes are CW rings,
-    # K_FINAL/K_PARTIAL need holes), and such shells can never be
-    # patch targets in the finish (every winner's cand_rid lives in
-    # the hole's own core or the broadcast globals — both interesting).
-    # So only rings of INTERESTING cores (any CW ring, or a visitor
-    # touch) cross the Arrow boundary; the rest re-emit JVM-side from
-    # the cached trace output. On a dense lattice the interesting set
-    # is empty and phase 2 moves zero ring bytes through Python
-    # (measured: the phase-2 pass was ~1.7 s of pure serialization of
-    # 160k rings at grid-400 — the kernel's own compute is ~0.1 s).
-    # Hot-tile sub-splits (fmap) complicate the SQL core derivation —
-    # those rare runs keep the full Python pass.
-    bypass = None
-    phase2_in = ringrows
-    if not fmap:
-        core_c = core_key_col(x0, y0, ts, cols, rows)
-        if cw_cores is None:
-            cw_cores = {
-                int(r["core"])
-                for r in ringrows.where(F.col("area") < 0)
-                .select(core_c.alias("core"))
-                .distinct()
-                .collect()
-            }
-        plain, phase2_in = _bypass_interesting_split(
-            ringrows, core_c, set(cw_cores) | set(v_by_core), spark
-        )
-        bypass = _bypass_poly_rows(plain)
-
     kernel = _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc)
-    # lazy checkpoint of the (now small: interesting cores only) kernel
-    # output — materializes inside the finish's FIRST job (the winner
-    # aggregate) instead of as its own stage wave. The bypass rows do
-    # NOT ride through this checkpoint: they flow straight from the
-    # caller's trace storage into the final plan (zero extra copies of
-    # plain ring bytes) — valid because the chain engine's trace output
-    # is a self-GC'd localCheckpoint that outlives the plan (r6).
-    out = phase2_in.mapInPandas(kernel, FUSED_SCHEMA).localCheckpoint(eager=False)
+    # lazy checkpoint of the kernel output — materializes inside the
+    # finish's FIRST job (the winner aggregate) instead of as its own
+    # stage wave
+    out = ringrows.mapInPandas(kernel, FUSED_SCHEMA).localCheckpoint(eager=False)
 
     # hole coords: local winners carry theirs on the K_FINAL rows;
     # merged visitors (K_PARTIAL + extra_partials) resolve from the
@@ -721,7 +627,6 @@ def assemble_rings_fused(
     return _finish_assignments(
         spark, out, res, shell, promoted, drop_collapsed,
         extra_partials=extra_partials,
-        bypass_polys=bypass,
     )
 
 

@@ -92,7 +92,6 @@ from .tiling import (
     TILE_KEY,
     assign_windows,
     claim_cores,
-    core_key_col,
     grid_shape,
     hot_tile_factors,
     repartition_tiles,
@@ -953,9 +952,7 @@ def chain_stitched_polygonize(
     # r6: self-GC'd localCheckpoint instead of persist — blocks are
     # ContextCleaner-freed when the returned plan drops (no
     # CacheManager entry to leak or to plan-match a later run), and
-    # the final plan may legitimately keep reading it (the fused
-    # assembly's bypass rows flow straight from here — zero extra
-    # copies of plain ring bytes)
+    # the final plan may legitimately keep reading it
     out = (
         assigned.groupBy(*TILE_KEY)
         .applyInPandas(kernel, CHAIN_SCHEMA)
@@ -966,38 +963,21 @@ def chain_stitched_polygonize(
         "xs", "ys", "area", "bx1", "by1", "bx2", "by2", "cx", "cy"
     )
     chains = out.where(F.col("kind") == 1)
-    # ONE job over the checkpointed kernel output supplies all three
-    # decisions (merge strategy + assembly strategy + the r6 bypass's
-    # CW-core set): n_chains exactly, n_local + n_chains as an upper
-    # bound on the final ring count (each chain cycle yields ≤ its
-    # chain count in rings), and — when no hot-tile split is active —
-    # the distinct claim cores holding a CW ring (the interesting set
-    # for the fused assembly's phase-2 bypass; empty on lattices).
+    # ONE job over the checkpointed kernel output supplies both
+    # decisions (merge strategy + assembly strategy): n_chains exactly,
+    # and n_local + n_chains as an upper bound on the final ring count
+    # (each chain cycle yields ≤ its chain count in rings).
     # coords ride along (free in the same scan): the merged ring set
     # concatenates chain coordinate arrays, so its total coordinate
     # count is bounded by the chain total + one closing vertex per
     # ring — letting the fused assembly skip the incremental limit
     # gate and collect the residue through one parallel Arrow job
-    kc_aggs = [F.count("*").alias("n"), F.sum(F.size("xs")).alias("c")]
-    if not fmap:
-        kc_aggs.append(
-            F.collect_set(
-                F.when(
-                    (F.col("kind") == 0) & (F.col("area") < 0),
-                    core_key_col(x0, y0, float(tile_size), cols, rows),
-                )
-            ).alias("cwc")
-        )
-    kc_rows = out.groupBy("kind").agg(*kc_aggs).collect()
-    kc = {int(r["kind"]): (int(r["n"]), int(r["c"] or 0)) for r in kc_rows}
-    cw_cores = None
-    if not fmap:
-        cw_cores = {
-            int(v)
-            for r in kc_rows
-            if int(r["kind"]) == 0
-            for v in (r["cwc"] or ())
-        }
+    kc = {
+        int(r["kind"]): (int(r["n"]), int(r["c"] or 0))
+        for r in out.groupBy("kind")
+        .agg(F.count("*").alias("n"), F.sum(F.size("xs")).alias("c"))
+        .collect()
+    }
     n_chains, chain_coords = kc.get(1, (0, 0))
     n_rings_upper = kc.get(0, (0, 0))[0] + n_chains
     # the counts job materialized the kernel output cache — the segment
@@ -1033,15 +1013,12 @@ def chain_stitched_polygonize(
     if assembly == "fused":
         # fused phase-2: maps over the checkpointed trace output (no
         # ring reshuffle — every trace-local ring's core is derived
-        # from its bbox corner, bit-exactly the claiming core). The
-        # trace checkpoint is self-GC'd and the bypass rows in the final
-        # plan read it directly (r6).
+        # from its bbox corner, bit-exactly the claiming core)
         return assemble_rings_fused(
             out, merged, x0, y0, float(tile_size), cols, rows, fmap,
             drop_collapsed=drop_collapsed,
             merged_rows_bound=n_chains,
             merged_coords_bound=chain_coords + n_chains,
-            cw_cores=cw_cores,
         )
 
     rings = local_rings if merged is None else local_rings.unionByName(merged)

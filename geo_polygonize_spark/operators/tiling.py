@@ -19,10 +19,9 @@ tiles (the reference keeps the same decisions in src/tiling.rs).
   ``[min, max)``; the cores partition the plane. ``claim_cores`` maps
   points to cores with the index CLIPPED into the grid, so a point on
   the global max edge or outside the bbox still has exactly one core.
-  ``core_key`` packs a core into one int64, ``core_key_col`` is the
-  same key as a SQL expression (unsplit grids), ``touching_cores``
-  lists every core whose closure holds a point and ``core_reach_index``
-  the cores a bbox may reach. The tiled path's ownership
+  ``core_key`` packs a core into one int64, ``touching_cores`` lists
+  every core whose closure holds a point and ``core_reach_index`` the
+  cores a bbox may reach. The tiled path's ownership
   (``owned_by_core``) is the one unclipped test: polygons outside the
   grid belong to no core and are dropped. The chain engine's
   trace kernel claims half-edges with ``claim_cores`` and the fused
@@ -203,21 +202,6 @@ def claim_cores(px, py, x0, y0, ts, cols, rows, fmap):
 def core_key(ti, tj, fv, si, sj, rows):
     """Single int64 key of a claim core (f ≤ 16, si/sj < f)."""
     return (((ti * rows + tj) * 17 + fv) * 16 + si) * 16 + sj
-
-
-def core_key_col(x0, y0, ts, cols, rows):
-    """``core_key`` of the claim core of the point (bx1, by1), as SQL,
-    on a grid with no hot tiles: the same IEEE double quotient, floor
-    and clip as ``claim_cores``."""
-    ti_c = F.least(
-        F.greatest(F.floor((F.col("bx1") - F.lit(x0)) / F.lit(ts)), F.lit(0)),
-        F.lit(cols - 1),
-    ).cast("long")
-    tj_c = F.least(
-        F.greatest(F.floor((F.col("by1") - F.lit(y0)) / F.lit(ts)), F.lit(0)),
-        F.lit(rows - 1),
-    ).cast("long")
-    return ((ti_c * F.lit(rows) + tj_c) * F.lit(17) + F.lit(1)) * F.lit(256)
 
 
 def touching_cores(cx, cy, x0, y0, ts, cols, rows, fmap):

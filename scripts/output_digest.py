@@ -11,6 +11,9 @@ Workloads: grid-400 through the chain engine and the tiled engine as
 ``bench.py`` calls them; random-200 through the single-group kernel,
 the single-group Spark operator, the tiled engine and the chain engine
 (auto, and the fused assembly with and without collapsed shells); the
+fused assembly on grid-20 with tile 5, where every core-boundary column
+is merged residue (twin promotion, visitors and hull netting), and on
+the nested fixture, where every ring is merged (visitors only); the
 perfbench lattice operations (stitched polygonize, checkpointed tiled
 polygonize) and the images workload's driver-side coverage.
 
@@ -93,7 +96,7 @@ def main() -> None:
     from geo_polygonize_spark.operators.polygonize_op import polygonize, tiled_polygonize
     from geo_polygonize_spark.operators.stitch import stitched_polygonize
     from geo_polygonize_spark.plans import build_session
-    from geo_polygonize_spark.sources.fixtures import grid_lines, random_lines
+    from geo_polygonize_spark.sources.fixtures import fixture, grid_lines, random_lines
     from perfbench.workloads import (
         COVER_N, LATTICE_BUFFER, LATTICE_N, LATTICE_TILE, lines_frame,
     )
@@ -136,6 +139,18 @@ def main() -> None:
         report(f"random200_chain_fused_drop{int(drop)}", spark_rows(chain_stitched_polygonize(
             r_df, tile_size=25.0, buffer=10.0, bbox=box_r, drop_collapsed=drop,
             assembly="fused")))
+
+    # the fused assembly's merged-residue shapes: grid 20 / tile 5 as
+    # the fused-assembly oracle query calls it, and the nested fixture
+    g20_df = lines_frame(spark, *grid_lines(20))
+    for drop in (False, True):
+        report(f"grid20_fused_drop{int(drop)}", spark_rows(chain_stitched_polygonize(
+            g20_df, tile_size=5.0, buffer=1.5, bbox=(0.0, 0.0, 20.0, 20.0),
+            drop_collapsed=drop, assembly="fused")))
+    nx, ny, _, _ = fixture("nested_holes")
+    report("nested_chain_fused", spark_rows(chain_stitched_polygonize(
+        lines_frame(spark, nx, ny), tile_size=10.0, buffer=2.0,
+        bbox=(0.0, 0.0, 100.0, 100.0), assembly="fused")))
 
     # the perfbench lattice operations and the images coverage
     lx, ly = grid_lines(LATTICE_N)

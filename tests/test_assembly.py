@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from geo_polygonize_spark.operators import assembly as asm
 from geo_polygonize_spark.operators.assembly import (
     assemble_rings_distributed,
     assemble_rings_fused,
@@ -268,18 +269,17 @@ class TestSplitProtocol:
         # so its net stays 400 and it survives drop_collapsed)
         assert len(fused) == 17
 
-    def test_fallback_gate_delegates_to_distributed(self, spark):
+    def test_fallback_gate_delegates_to_distributed(self, spark, monkeypatch):
         """Above the merged-residue gate the fused path must hand the
         WHOLE ring set (core + merged) to the distributed assembly,
         losslessly."""
+        monkeypatch.setattr(asm, "MERGED_ROWS_GATE", 0)
         rows = [
             ring_row(0, 0, 20, 12),
             ring_row(9, 4, 11, 6, cw=True),
             ring_row(1, 1, 5, 5),
             ring_row(2, 2, 3, 3, cw=True),
         ]
-        fused, dist, n_core, n_merged = self._both(
-            spark, rows, 10.0, global_rows_gate=0
-        )
+        fused, dist, n_core, n_merged = self._both(spark, rows, 10.0)
         assert (n_core, n_merged) == (2, 2)
         assert fused == dist

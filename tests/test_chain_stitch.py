@@ -257,9 +257,9 @@ def test_chain_fused_visitor_routing(spark):
 
 
 def test_chain_fused_subsplit_and_dist_merge(spark, monkeypatch):
-    """Fused assembly under forced f×f claiming sub-splits (no
-    bypass: the full Python pass) AND the forced distributed chain
-    merge: both alternate code paths feed the same fused finish."""
+    """Fused assembly under forced f×f claiming sub-splits AND the
+    forced distributed chain merge: both alternate code paths feed the
+    same fused finish."""
     xs, ys, node, snap = fixture("nested_holes")
     xs = xs + [[50.0, 120.0]]
     ys = ys + [[50.0, 50.0]]
@@ -290,7 +290,6 @@ def test_chain_fused_gate_fallback(spark, monkeypatch):
 
     def gated(*a, **kw):
         calls.append("fused")
-        kw["global_rows_gate"] = 0  # any merged residue trips the gate
         return real_fused(*a, **kw)
 
     def dist(*a, **kw):
@@ -299,6 +298,7 @@ def test_chain_fused_gate_fallback(spark, monkeypatch):
 
     monkeypatch.setattr(chain_stitch, "assemble_rings_fused", gated)
     monkeypatch.setattr(asm, "assemble_rings_distributed", dist)
+    monkeypatch.setattr(asm, "MERGED_ROWS_GATE", 0)  # any merged residue trips the gate
     xs, ys, node, snap = fixture("nested_holes")
     df = lines_to_df(spark, xs, ys)
     got = chain_stitched_polygonize(

@@ -188,6 +188,38 @@ class TestGraph:
         assert removed == 1
         assert g.degree[n10] == 2
 
+    def test_bounded_faces_are_cw(self):
+        # the tracer returns every bounded face CW and the unbounded
+        # face CCW, so a lattice's cells are all CW rings
+        from geo_polygonize_spark.kernels.polygonize import DEFAULT_SNAP_GRID, segmentize
+        from geo_polygonize_spark.sources.fixtures import grid_lines
+
+        g = build_graph(*node_segments(*segmentize(*grid_lines(3)), DEFAULT_SNAP_GRID))
+        sort_edges(g)
+        prune_dangles(g)
+        areas = sorted(signed_area(x, y) for x, y in zip(*edge_rings(g)))
+        assert areas == [-1.0] * 9 + [9.0]
+
+    def test_ccw_rings_hold_a_cw_ring(self):
+        # the vertices of a CCW ring's faces lie inside its hull: every
+        # nondegenerate CCW ring's bbox holds some CW ring's bbox
+        from geo_polygonize_spark.kernels.polygonize import DEFAULT_SNAP_GRID, segmentize
+        from geo_polygonize_spark.kernels.rings import batch_ring_stats
+        from geo_polygonize_spark.sources.fixtures import random_lines
+
+        g = build_graph(*node_segments(*segmentize(*random_lines(50)), DEFAULT_SNAP_GRID))
+        sort_edges(g)
+        prune_dangles(g)
+        *_, bx1, by1, bx2, by2, area, _, _ = batch_ring_stats(*edge_rings(g))
+        ccw = np.flatnonzero(area >= 1e-9)
+        cw = np.flatnonzero(area < 0.0)
+        assert ccw.size and cw.size
+        for i in ccw:
+            inside = (bx1[cw] >= bx1[i]) & (by1[cw] >= by1[i]) & (bx2[cw] <= bx2[i]) & (
+                by2[cw] <= by2[i]
+            )
+            assert inside.any(), i
+
     def test_triangle_two_rings(self):
         # reference src/graph/tests.rs:88-99 — triangle → CCW + CW ring
         g = build_graph(arr(0, 10, 5), arr(0, 0, 5), arr(10, 5, 0), arr(0, 5, 0))
@@ -386,6 +418,23 @@ class TestAssemblyRule:
         assert got == ({1: 0} if promoted else {})
         assert len(assemble_polygons_pdf(*zip(box_ring(0, 0, 1, 1),
                                               notched_square(cut, cw=True)))) == 1 + promoted
+
+    @pytest.mark.parametrize(
+        "hole_cut, ccw_cuts, promoted",
+        [
+            (0.0, (0.5, 0.1, 2e-3, 1e-3), False),  # 1e-3: 5e-7 below
+            (0.0, (0.5, 0.1, 2e-3), True),
+            (1e-3, (0.5, 2e-3, 0.0), False),  # the full square: 5e-7 above
+            (1e-3, (0.5, 0.1, 2e-3), True),
+        ],
+    )
+    def test_twin_among_ccw_rings_of_one_bbox(self, hole_cut, ccw_cuts, promoted):
+        # every ring spans the unit square; a cut of 0 is the square
+        def ring(cut, cw=False):
+            return box_ring(0, 0, 1, 1, cw) if cut == 0.0 else notched_square(cut, cw)
+
+        prom, _ = parents([ring(c) for c in ccw_cuts] + [ring(hole_cut, cw=True)])
+        assert prom.tolist() == [False] * len(ccw_cuts) + [promoted]
 
     def test_promoted_hull_is_also_a_hole(self):
         rl = [box_ring(0, 0, 10, 10), box_ring(2, 2, 4, 4, cw=True)]

@@ -1,13 +1,14 @@
-"""The tile grid's claim-core arithmetic (operators/tiling.py): the
-numpy claim and the SQL key agree bit for bit, and a point on a core
-boundary touches every core on either side of it."""
+"""The tile grid's claim-core arithmetic (operators/tiling.py): where
+the clipped claim puts points on, near and outside core boundaries,
+and that a point on a core boundary touches every core on either side
+of it."""
+
+import math
 
 import numpy as np
 
 from geo_polygonize_spark.operators.tiling import (
     claim_cores,
-    core_key,
-    core_key_col,
     touching_cores,
 )
 
@@ -23,25 +24,23 @@ def _axis_probes(o, n):
     return np.array(lines + near + outside + mids)
 
 
-def test_claim_cores_numpy_equals_sql(spark):
+def test_claim_cores_boundaries():
     ax, ay = _axis_probes(X0, COLS), _axis_probes(Y0, ROWS)
     px = np.repeat(ax, ay.size)
     py = np.tile(ay, ax.size)
     ti, tj, f, si, sj = claim_cores(px, py, X0, Y0, TS, COLS, ROWS, {})
-    want = core_key(ti, tj, f, si, sj, ROWS)
 
-    pdf = spark.createDataFrame(
-        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(px, py))],
-        "i long, bx1 double, by1 double",
-    )
-    rows = pdf.select("i", core_key_col(X0, Y0, TS, COLS, ROWS).alias("k")).collect()
-    got = np.array([r["k"] for r in sorted(rows, key=lambda r: r["i"])])
-    assert np.array_equal(got, want)
+    # every probe, the 1-ulp ones included, takes the scalar IEEE
+    # quotient, floor and clip
+    def clipped(v, o, n):
+        return min(max(math.floor((v - o) / TS), 0), n - 1)
+
+    assert ti.tolist() == [clipped(x, X0, COLS) for x in px.tolist()]
+    assert tj.tolist() == [clipped(y, Y0, ROWS) for y in py.tolist()]
 
     # a point on an interior line belongs to the core above it (so may
-    # a point 1 ulp below it: x - x0 can round onto the line, the same
-    # way in both forms); the global max edge and everything outside
-    # clip to the edge cores
+    # a point 1 ulp below it: x - x0 can round onto the line); the
+    # global max edge and everything outside clip to the edge cores
     tile = dict(zip(zip(px.tolist(), py.tolist()), zip(ti.tolist(), tj.tolist())))
     assert tile[(X0 + TS, Y0 + TS)] == (1, 1)
     assert tile[(X0 + COLS * TS, Y0 + ROWS * TS)] == (COLS - 1, ROWS - 1)
