@@ -17,18 +17,37 @@ single-process library; a crash restarts from scratch). Design:
   fingerprint) with the latest committed rows — unchanged tiles skip,
   changed/missing tiles recompute. Idempotent end to end.
 
-Job shape of one call. The tile-assigned segments are persisted once
-and feed both the per-tile metrics and the kernel. Two small frames
-come back to the driver, one row per (sub-)tile each: the current
-metrics and the store's latest committed rows. The driver decides what
-is pending and what is stale, so no ``limit`` probe runs. Then, only
-if something is pending, the kernel writes the polygons and a scan of
-the new run directory counts them; when only some tiles are pending, a
-semi-join with the broadcast pending keys selects their segments. Then
-the metrics and tombstone rows are appended in one write. These rows
-are data (``createDataFrame``); ``run_id`` and ``completed_at`` never
-become literals in a plan. Every read of the store passes its schema,
-so no schema-inference job runs.
+Job shape of one call: only jobs that do work.
+
+1. Metrics first, from one aggregate: a ``groupBy(tile_i, tile_j)``
+   over the unsplit window assignment returns each tile's
+   ``n_segments``, ``fingerprint`` and split factor ``f``. A tile with
+   ``f = 1`` (the common case: no tile is hot) is its own
+   ``(ti, tj, 1, 0, 0)`` key. Hot tiles split with the driver-known
+   factors, and only their rows run a second, sub-tile aggregate. The
+   assignment is not persisted: it is column expressions over the
+   caller's frame, and a persisted frame's first read is a job of its
+   own under AQE.
+2. The store's latest committed rows are collected once, with their
+   ``run_id``. The driver decides what is pending and what is stale,
+   so no ``limit`` probe runs.
+3. Only if something is pending, the kernel writes the polygons; when
+   only some tiles are pending, a semi-join with the broadcast pending
+   keys selects their segments. The kernel stamps each row with its
+   tile's polygon count, and an ``Observation`` brings the counts back
+   with the write's own jobs, so no scan of the new run directory
+   follows. Then the metrics and tombstone rows are appended in one
+   write.
+4. The returned coverage is the polygons scan, semi-joined by
+   broadcast to the admitted (tile key, ``run_id``) set the driver
+   already holds: the committed latest rows, updated with the rows
+   just appended. It does not read the metrics again.
+
+Rows built on the driver (metrics, tombstones, pending and admitted
+keys) go to Spark as Arrow tables (``sources.arrow.rows_frame``), never
+as Python lists, which would round-trip through the Python workers;
+``run_id`` and ``completed_at`` never become literals in a plan. Every
+read of the store passes its schema, so no schema-inference job runs.
 A call over an unchanged store therefore writes nothing, and it
 compiles no new code after its first run in the JVM (README,
 "Deployment notes").
@@ -39,11 +58,20 @@ from __future__ import annotations
 import time
 import uuid
 
+import pandas as pd
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F, types as T
 
-from .operators.polygonize_op import POLYGON_SCHEMA, prepare_assigned, prepare_tiled
-from .operators.tiling import TILE_KEY
+from .kernels.polygonize import DEFAULT_SNAP_GRID
+from .operators.polygonize_op import POLYGON_SCHEMA, tile_kernel, window_assignment
+from .operators.tiling import (
+    TILE_KEY,
+    factors_frame,
+    repartition_tiles,
+    split_factor,
+    split_hot_tiles,
+)
+from .sources.arrow import rows_frame
 
 KEY_SCHEMA = T.StructType([T.StructField(c, T.IntegerType()) for c in TILE_KEY])
 METRICS_SCHEMA = T.StructType(
@@ -63,16 +91,26 @@ POLYGONS_SCHEMA = T.StructType(POLYGON_SCHEMA.fields + KEY_SCHEMA.fields[2:])
 STORE_POLYGONS_SCHEMA = T.StructType(
     POLYGONS_SCHEMA.fields + [T.StructField("run_id", T.StringType())]
 )
+ADMITTED_SCHEMA = T.StructType(KEY_SCHEMA.fields + [T.StructField("run_id", T.StringType())])
+# the kernel's output: the stored polygon rows plus the tile's polygon count
+KERNEL_SCHEMA = T.StructType(POLYGONS_SCHEMA.fields + [T.StructField("n_polys", T.LongType())])
 
 
-def _tile_metrics(assigned: DataFrame) -> DataFrame:
+def _tile_metrics(assigned: DataFrame, *group) -> DataFrame:
     # bit_xor: commutative + overflow-free under ANSI mode (a plain
     # sum of 64-bit hashes overflows); n_segments disambiguates the
     # duplicate-pair xor cancellation case
-    return assigned.groupBy(*TILE_KEY).agg(
+    return assigned.groupBy(*group).agg(
         F.count("*").alias("n_segments"),
         F.bit_xor(F.xxhash64("x1", "y1", "x2", "y2")).alias("fingerprint"),
     )
+
+
+def _key_values(rows) -> dict[tuple, tuple]:
+    """tile key -> (n_segments, fingerprint) of collected metrics rows."""
+    return {
+        tuple(r[c] for c in TILE_KEY): (r["n_segments"], r["fingerprint"]) for r in rows
+    }
 
 
 def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
@@ -85,6 +123,10 @@ def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
+def _path_not_found(e: AnalysisException) -> bool:
+    return "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e)
+
+
 def _latest_metrics(spark: SparkSession, metrics_path: str) -> DataFrame | None:
     # a fresh store has no metrics dir yet: check before reading, since
     # Spark logs a WARN stack trace for every read of an absent path
@@ -95,19 +137,34 @@ def _latest_metrics(spark: SparkSession, metrics_path: str) -> DataFrame | None:
     except AnalysisException as e:
         # the dir vanished after the check: a fresh store again; other
         # failures must surface (same rationale as the polygons read in
-        # read_checkpointed_coverage)
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
+        # _admitted_polygons)
+        if _path_not_found(e):
             return None
         raise
     w = Window.partitionBy(*TILE_KEY).orderBy(F.col("completed_at").desc())
     return m.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
 
 
-def _key_values(rows) -> dict[tuple, tuple]:
-    """tile key -> (n_segments, fingerprint) of collected metrics rows."""
-    return {
-        tuple(r[c] for c in TILE_KEY): (r["n_segments"], r["fingerprint"]) for r in rows
-    }
+def _admitted_polygons(spark: SparkSession, ckpt_dir: str, admitted: DataFrame) -> DataFrame:
+    """The store's polygons whose (tile key, run_id) is a row of
+    ``admitted``, as ``POLYGON_SCHEMA`` rows (a broadcast semi-join)."""
+    try:
+        # the store root, not a ``run_id=*`` glob: partition discovery
+        # finds run_id, and Spark logs a WARN stack trace for every glob
+        # read even when each run dir exists
+        polys = spark.read.schema(STORE_POLYGONS_SCHEMA).parquet(f"{ckpt_dir}/polygons")
+    except AnalysisException as e:
+        # ONLY a genuinely absent polygons dir reads as empty (a
+        # metrics-only checkpoint: every committed run wrote 0 polygons,
+        # so no polygons/ directory was ever created). Any other read
+        # failure — permissions, corruption, transient FS errors — must
+        # surface, not masquerade as an empty coverage.
+        if _path_not_found(e):
+            return rows_frame(spark, [], POLYGON_SCHEMA)
+        raise
+    return polys.join(F.broadcast(admitted), TILE_KEY + ["run_id"], "left_semi").drop(
+        "run_id", "f", "sub_i", "sub_j"
+    )
 
 
 def resumable_tiled_polygonize(
@@ -120,7 +177,11 @@ def resumable_tiled_polygonize(
     x0: float = 0.0,
     y0: float = 0.0,
     buffer: float = 0.0,
-    **kwargs,
+    bbox: tuple[float, float, float, float] | None = None,
+    snap_grid: float = DEFAULT_SNAP_GRID,
+    drop_collapsed: bool = False,
+    max_segments_per_tile: int | None = 200_000,
+    max_split_factor: int = 16,
 ) -> DataFrame:
     """Tiled polygonize with tile-level checkpoint/resume. Returns the
     polygon DataFrame read from the checkpoint store — identical
@@ -135,27 +196,45 @@ def resumable_tiled_polygonize(
     applies only within the parents present in the assignment, and
     absent tiles are trusted as still-valid coverage."""
     if assigned_segments is not None:
-        bbox = kwargs.pop("bbox", None)
         if bbox is not None:
             x0, y0 = float(bbox[0]), float(bbox[1])
-        assigned, kernel = prepare_assigned(
-            assigned_segments, tile_size, buffer=buffer, x0=x0, y0=y0, **kwargs
-        )
+        assigned = assigned_segments
     else:
-        assigned, kernel = prepare_tiled(lines_df, tile_size, buffer=buffer, **kwargs)
-    # one assignment (and one skew-factor aggregate) feeds the metrics
-    # and the kernel
-    assigned = assigned.persist()
-    now = _key_values(_tile_metrics(assigned).collect())
+        assigned, x0, y0 = window_assignment(lines_df, tile_size, buffer, bbox)
+
+    # one aggregate over the unsplit assignment: each tile's metrics
+    # and its split factor. A tile that does not split is its own
+    # (ti, tj, 1, 0, 0) key; only hot tiles need a second, sub-tile
+    # aggregate.
+    f = F.lit(1)
+    if max_segments_per_tile is not None:
+        f = F.when(
+            F.col("n_segments") > max_segments_per_tile,
+            split_factor(F.col("n_segments"), max_segments_per_tile, max_split_factor),
+        ).otherwise(1)
+    now, fmap = {}, {}
+    for r in _tile_metrics(assigned, "tile_i", "tile_j").withColumn("f", f).collect():
+        if r["f"] > 1:
+            fmap[(r["tile_i"], r["tile_j"])] = r["f"]
+        else:
+            now[(r["tile_i"], r["tile_j"], 1, 0, 0)] = (r["n_segments"], r["fingerprint"])
+    factors = factors_frame(spark, fmap)
+    assigned = split_hot_tiles(assigned, factors, x0, y0, tile_size, buffer)
+    if factors is not None:
+        now.update(_key_values(_tile_metrics(assigned.filter(F.col("f") > 1), *TILE_KEY).collect()))
 
     poly_path = f"{ckpt_dir}/polygons"
     metrics_path = f"{ckpt_dir}/metrics"
 
     latest = _latest_metrics(spark, metrics_path)
-    committed = {} if latest is None else _key_values(latest.collect())
+    # tile key -> (n_segments, fingerprint, run_id) of its latest committed row
+    committed = {} if latest is None else {
+        tuple(r[c] for c in TILE_KEY): (r["n_segments"], r["fingerprint"], r["run_id"])
+        for r in latest.collect()
+    }
     # n_segments is compared too: xor cancels on duplicated segments,
     # so (n_segments, fingerprint) together identify the tile's multiset
-    pending = [k for k, v in now.items() if committed.get(k) != v]
+    pending = [k for k, v in now.items() if committed.get(k, ())[:2] != v]
     # stale keys: committed in the store but absent from the CURRENT
     # assignment — a vanished tile, or a sub-tile layout superseded by
     # a different skew-split factor f (a changed max_segments_per_tile
@@ -170,17 +249,18 @@ def resumable_tiled_polygonize(
     parents = {k[:2] for k in now}
     stale = [
         k
-        for k, (n_segments, _) in committed.items()
+        for k, (n_segments, _, _) in committed.items()
         if n_segments > 0 and k not in now and (not scope_to_assigned or k[:2] in parents)
     ]
 
-    import pandas as pd
+    kernel = tile_kernel(tile_size, x0, y0, snap_grid, drop_collapsed)
 
     def keyed_kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         out = kernel(key, pdf)
         out["f"] = int(key[2])
         out["sub_i"] = int(key[3])
         out["sub_j"] = int(key[4])
+        out["n_polys"] = len(out)
         return out
 
     run_id = uuid.uuid4().hex
@@ -188,27 +268,37 @@ def resumable_tiled_polygonize(
     if pending:
         # every tile pending (a fresh store): skip the semi-join and its
         # broadcast job, ~3% of a perfbench lattice round's CPU
-        todo = assigned
         if len(pending) < len(now):
-            todo = assigned.join(
-                F.broadcast(spark.createDataFrame(pending, KEY_SCHEMA)), TILE_KEY, "left_semi"
+            assigned = assigned.join(
+                F.broadcast(rows_frame(spark, pending, KEY_SCHEMA)), TILE_KEY, "left_semi"
             )
-        run_dir = f"{poly_path}/run_id={run_id}"
-        polys = todo.groupBy(*TILE_KEY).applyInPandas(keyed_kernel, POLYGONS_SCHEMA)
-        polys.write.mode("append").parquet(run_dir)
-        # count what actually landed (cheap scan of the new run dir)
-        landed = (
-            spark.read.schema(POLYGONS_SCHEMA).parquet(run_dir).groupBy(*TILE_KEY).count()
+        # the kernel stamps each row with its tile's polygon count, and
+        # an observation carries the counts back with the write's own
+        # jobs; the column never reaches the store
+        counts = Observation()
+        polys = (
+            repartition_tiles(assigned)
+            .groupBy(*TILE_KEY)
+            .applyInPandas(keyed_kernel, KERNEL_SCHEMA)
+            .observe(counts, F.collect_set(F.struct(*TILE_KEY, "n_polys")).alias("tiles"))
         )
-        n_polys = {tuple(r[c] for c in TILE_KEY): r["count"] for r in landed.collect()}
+        polys.drop("n_polys").write.mode("append").parquet(f"{poly_path}/run_id={run_id}")
+        n_polys = {tuple(t[:5]): t[5] for t in counts.get["tiles"]}
         rows += [(*k, *now[k], n_polys.get(k, 0), run_id) for k in pending]
     rows += [(*k, 0, 0, 0, run_id) for k in stale]
-    assigned.unpersist()
     if rows:
         completed_at = time.time()
-        metrics = spark.createDataFrame([(*r, completed_at) for r in rows], METRICS_SCHEMA)
+        metrics = rows_frame(spark, [(*r, completed_at) for r in rows], METRICS_SCHEMA)
         metrics.coalesce(1).write.mode("append").parquet(metrics_path)
-    return read_checkpointed_coverage(spark, ckpt_dir)
+    # the admitted runs: the committed latest rows, updated with the
+    # rows just appended
+    admitted = {k: v[2] for k, v in committed.items()}
+    admitted.update((r[:5], run_id) for r in rows)
+    if not admitted:
+        return rows_frame(spark, [], POLYGON_SCHEMA)
+    return _admitted_polygons(
+        spark, ckpt_dir, rows_frame(spark, [(*k, r) for k, r in admitted.items()], ADMITTED_SCHEMA)
+    )
 
 
 def read_checkpointed_coverage(spark: SparkSession, ckpt_dir: str) -> DataFrame:
@@ -219,23 +309,5 @@ def read_checkpointed_coverage(spark: SparkSession, ckpt_dir: str) -> DataFrame:
     not-yet-written checkpoint dir reads as an empty coverage."""
     latest = _latest_metrics(spark, f"{ckpt_dir}/metrics")
     if latest is None:
-        return spark.createDataFrame([], POLYGON_SCHEMA)
-    try:
-        # the store root, not a ``run_id=*`` glob: partition discovery
-        # finds run_id, and Spark logs a WARN stack trace for every glob
-        # read even when each run dir exists
-        polys = spark.read.schema(STORE_POLYGONS_SCHEMA).parquet(f"{ckpt_dir}/polygons")
-    except AnalysisException as e:
-        # ONLY a genuinely absent polygons dir reads as empty (a
-        # metrics-only checkpoint: every committed run wrote 0 polygons,
-        # so no polygons/ directory was ever created). Any other read
-        # failure — permissions, corruption, transient FS errors — must
-        # surface, not masquerade as an empty coverage.
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], POLYGON_SCHEMA)
-        raise
-    return polys.join(
-        F.broadcast(latest.select(*TILE_KEY, "run_id")),
-        on=TILE_KEY + ["run_id"],
-        how="left_semi",
-    ).drop("run_id", "f", "sub_i", "sub_j")
+        return rows_frame(spark, [], POLYGON_SCHEMA)
+    return _admitted_polygons(spark, ckpt_dir, latest.select(*TILE_KEY, "run_id"))

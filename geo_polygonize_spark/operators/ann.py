@@ -22,6 +22,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..sources.arrow import rows_frame
+
 
 def cosine_topk_bruteforce(
     table: DataFrame,
@@ -239,9 +241,7 @@ def lsh_cosine_topk(
         for b in buckets:
             probe_rows.append((int(qid), [float(x) for x in v], int(b)))
     spark = table.sparkSession
-    probes = spark.createDataFrame(
-        probe_rows, f"query_id long, qvec array<double>, bucket long"
-    )
+    probes = rows_frame(spark, probe_rows, "query_id long, qvec array<double>, bucket long")
 
     bucketed = hyperplane_bucket(table, dim, n_planes, seed, vec_col)
     cand = bucketed.join(F.broadcast(probes), "bucket")

@@ -85,6 +85,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..functions.cells import cell_range_cols
 from ..kernels.rings import _parent_candidates, _promoted, _smallest_parent, ray_cast_pairs
+from ..sources.arrow import rows_frame
 from .polygonize_op import POLYGON_SCHEMA
 from .tiling import claim_cores, core_key, core_reach_index, touching_cores
 
@@ -607,8 +608,9 @@ def assemble_rings_fused(
     win = _smallest_parent(si, hj, g_area, g_rid)
     s, h = si[win], hj[win]
     extra_partials = (
-        spark.createDataFrame(
-            list(zip(v_rid[h].tolist(), g_rid[s].tolist(), g_area[s].tolist(), v_ha[h].tolist())),
+        rows_frame(
+            spark,
+            zip(v_rid[h].tolist(), g_rid[s].tolist(), g_area[s].tolist(), v_ha[h].tolist()),
             "h_rid long, cand_rid long, cand_area double, h_area double",
         )
         if win.size

@@ -92,6 +92,7 @@ from .tiling import (
     TILE_KEY,
     assign_windows,
     claim_cores,
+    factors_frame,
     grid_shape,
     hot_tile_factors,
     repartition_tiles,
@@ -694,7 +695,7 @@ def _presplit_long_segments(
             path,
             row_group_size=65536,  # enough row groups to split the scan
         )
-        out = segments.sparkSession.read.parquet(path)
+        out = segments.sparkSession.read.schema(SEG_SCHEMA).parquet(path)
         # stats are free on the driver — hand them back so the caller
         # skips its post-split agg job entirely. The parquet path rides
         # back too (r6, ADVICE r5): the caller deletes it once the
@@ -874,16 +875,18 @@ def chain_stitched_polygonize(
             segments, tile_size, bbox, snap_grid,
             n_segments=n_segments,
         )
-        segments = segments.persist()
-        _to_unpersist.append(segments)
         if _aux_cache is not None:
             _to_unpersist.append(_aux_cache)
         if _split_stats is not None:
             # driver fast path: stats came back with the frame — no
-            # post-split agg job (the persist materializes lazily on
-            # the trace's first touch)
+            # post-split agg job. The handoff scan is not persisted: the
+            # trace kernel reads it once and later stages read the
+            # trace's checkpoint, and under AQE a persisted frame's
+            # first read is a cache-stage job of its own
             l_max, n_segments = _split_stats
         else:
+            segments = segments.persist()
+            _to_unpersist.append(segments)
             _st = segments.agg(
                 F.max(seg_len).alias("l"), F.count("*").alias("n")
             ).collect()[0]
@@ -939,14 +942,9 @@ def chain_stitched_polygonize(
                 assigned, max_segments_per_tile, max_split_factor
             ).collect()
         }
-    fdf = (
-        spark.createDataFrame(
-            [(ti, tj, fv) for (ti, tj), fv in fmap.items()], "tile_i int, tile_j int, f int"
-        )
-        if fmap
-        else None
+    assigned = repartition_tiles(
+        split_hot_tiles(assigned, factors_frame(spark, fmap), x0, y0, tile_size, buffer_eff)
     )
-    assigned = repartition_tiles(split_hot_tiles(assigned, fdf, x0, y0, tile_size, buffer_eff))
 
     kernel = _make_chain_kernel(x0, y0, float(tile_size), snap_grid, cols, rows, fmap)
     # r6: self-GC'd localCheckpoint instead of persist — blocks are

@@ -122,59 +122,33 @@ def _bbox_of_segments(segments: DataFrame) -> tuple[float, float, float, float]:
     return (r["bx0"], r["by0"], r["bx1"], r["by1"])
 
 
-def prepare_tiled(
+def window_assignment(
     lines_df: DataFrame,
     tile_size: float,
     buffer: float = 0.0,
     bbox: tuple[float, float, float, float] | None = None,
-    snap_grid: float = DEFAULT_SNAP_GRID,
-    drop_collapsed: bool = False,
-    max_segments_per_tile: int | None = 200_000,
-    max_split_factor: int = 16,
-):
-    """Build (assigned_segments_df, kernel) for tiled polygonize —
-    exposed so the checkpoint/resume layer can anti-join completed
-    tile keys between assignment and execution."""
+) -> tuple[DataFrame, float, float]:
+    """lines → (unsplit window assignment, grid origin x0, y0): one row
+    per (segment, tile) pair as column expressions; the grid covers
+    ``bbox``, derived from the data (one aggregate job) when None."""
     segments = segmentize_df(lines_df)
     if bbox is None:
         bbox = _bbox_of_segments(segments)
     x0, y0 = float(bbox[0]), float(bbox[1])
     cols, rows = grid_shape(bbox, tile_size)
-    return prepare_assigned(
-        assign_windows(segments, x0, y0, tile_size, buffer, cols, rows),
-        tile_size,
-        buffer=buffer,
-        x0=x0,
-        y0=y0,
-        snap_grid=snap_grid,
-        drop_collapsed=drop_collapsed,
-        max_segments_per_tile=max_segments_per_tile,
-        max_split_factor=max_split_factor,
-    )
+    return assign_windows(segments, x0, y0, tile_size, buffer, cols, rows), x0, y0
 
 
-def prepare_assigned(
-    assigned: DataFrame,
+def tile_kernel(
     tile_size: float,
-    buffer: float,
     x0: float,
     y0: float,
     snap_grid: float = DEFAULT_SNAP_GRID,
     drop_collapsed: bool = False,
-    max_segments_per_tile: int | None = 200_000,
-    max_split_factor: int = 16,
 ):
-    """Skew sub-split + kernel for ALREADY tile-assigned segments
-    (``tiling.assign_windows`` output, or a tile-partitioned segment
-    store as in the streaming path). The hot-tile factors stay inside
-    the plan, a broadcast join of one aggregate."""
-    factors = None
-    if max_segments_per_tile is not None:
-        factors = hot_tile_factors(assigned, max_segments_per_tile, max_split_factor)
-    assigned = repartition_tiles(
-        split_hot_tiles(assigned, factors, x0, y0, tile_size, buffer)
-    )
-
+    """The grouped-map kernel of one (sub-)tile group: noded polygonize
+    of the group's segments, then the sliver filter and the half-open
+    core ownership of the group's ``TILE_KEY``."""
     ts_py = float(tile_size)
 
     def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -199,7 +173,33 @@ def prepare_assigned(
         out["poly_id"] = np.arange(len(out), dtype=np.int64)
         return out
 
-    return assigned, kernel
+    return kernel
+
+
+def prepare_assigned(
+    assigned: DataFrame,
+    tile_size: float,
+    buffer: float,
+    x0: float,
+    y0: float,
+    snap_grid: float = DEFAULT_SNAP_GRID,
+    drop_collapsed: bool = False,
+    max_segments_per_tile: int | None = 200_000,
+    max_split_factor: int = 16,
+):
+    """(kernel input, kernel) of ``tiled_polygonize`` for a window
+    assignment: the skew sub-split and the ``TILE_KEY`` repartition.
+    The hot-tile factors stay inside the plan, a broadcast join of one
+    aggregate. The checkpoint (and through it the streaming path) does
+    not come here: it collects its per-tile counts anyway, so it splits
+    with driver-known factors and calls ``tile_kernel`` itself."""
+    factors = None
+    if max_segments_per_tile is not None:
+        factors = hot_tile_factors(assigned, max_segments_per_tile, max_split_factor)
+    assigned = repartition_tiles(
+        split_hot_tiles(assigned, factors, x0, y0, tile_size, buffer)
+    )
+    return assigned, tile_kernel(tile_size, x0, y0, snap_grid, drop_collapsed)
 
 
 def tiled_polygonize(
@@ -224,11 +224,13 @@ def tiled_polygonize(
     the grid from the data, or use ``stitched_polygonize`` for exact
     unbounded output regardless of bbox staleness.
     """
-    assigned, kernel = prepare_tiled(
-        lines_df,
+    assigned, x0, y0 = window_assignment(lines_df, tile_size, buffer, bbox)
+    assigned, kernel = prepare_assigned(
+        assigned,
         tile_size,
-        buffer=buffer,
-        bbox=bbox,
+        buffer,
+        x0,
+        y0,
         snap_grid=snap_grid,
         drop_collapsed=drop_collapsed,
         max_segments_per_tile=max_segments_per_tile,

@@ -10,9 +10,9 @@ tiles (the reference keeps the same decisions in src/tiling.rs).
   into the grid (``assign_windows``).
 * **Hot tiles.** A tile whose window draws more than
   ``max_segments_per_tile`` segments splits into f×f sub-tiles, f from
-  the overflow ratio, with the same window rule inside the tile
-  (``hot_tile_factors``, ``split_hot_tiles``, which is ``unsplit``
-  when no tile is hot).
+  the overflow ratio (``split_factor``), with the same window rule
+  inside the tile (``hot_tile_factors``, ``split_hot_tiles``, which is
+  ``unsplit`` when no tile is hot).
 * **Tile key.** ``TILE_KEY`` names a (sub-)tile; ``repartition_tiles``
   hash-partitions on it.
 * **Claim cores.** Each (sub-)tile's core is its half-open cell
@@ -33,7 +33,9 @@ tiles (the reference keeps the same decisions in src/tiling.rs).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..sources.arrow import rows_frame
 
 TILE_KEY = ["tile_i", "tile_j", "f", "sub_i", "sub_j"]
 
@@ -99,12 +101,20 @@ def assign_windows(
     )
 
 
+def split_factor(count, max_segments_per_tile: int, max_split_factor: int):
+    """Split factor of a hot tile whose window holds ``count`` (more
+    than ``max_segments_per_tile``) segments, as a column:
+    ``f = min(ceil(sqrt(count / max_segments_per_tile)), max_split_factor)``."""
+    return F.least(
+        F.ceil(F.sqrt(count / F.lit(max_segments_per_tile))), F.lit(max_split_factor)
+    ).cast("int")
+
+
 def hot_tile_factors(
     assigned: DataFrame, max_segments_per_tile: int, max_split_factor: int
 ) -> DataFrame:
     """(tile_i, tile_j, f) for every tile whose window holds more than
-    ``max_segments_per_tile`` segments: ``f = min(ceil(sqrt(count /
-    max_segments_per_tile)), max_split_factor)``."""
+    ``max_segments_per_tile`` segments (``split_factor``)."""
     return (
         assigned.groupBy("tile_i", "tile_j")
         .count()
@@ -112,13 +122,18 @@ def hot_tile_factors(
         .select(
             "tile_i",
             "tile_j",
-            F.least(
-                F.ceil(F.sqrt(F.col("count") / F.lit(max_segments_per_tile))),
-                F.lit(max_split_factor),
-            )
-            .cast("int")
-            .alias("f"),
+            split_factor(F.col("count"), max_segments_per_tile, max_split_factor).alias("f"),
         )
+    )
+
+
+def factors_frame(spark: SparkSession, fmap: dict) -> DataFrame | None:
+    """Driver-known hot-tile factors ``{(tile_i, tile_j): f}`` as the
+    ``factors`` frame of ``split_hot_tiles``; None when no tile is hot."""
+    if not fmap:
+        return None
+    return rows_frame(
+        spark, [(ti, tj, f) for (ti, tj), f in fmap.items()], "tile_i int, tile_j int, f int"
     )
 
 

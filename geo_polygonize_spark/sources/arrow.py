@@ -6,15 +6,37 @@ Spark's Arrow execution path is the same idea end-to-end; this module
 makes it explicit with ``mapInArrow``: segmentization runs directly on
 ``pyarrow.RecordBatch`` buffers — list-offset arithmetic on the raw
 value buffers, no pandas materialization, no per-row objects.
+
+``rows_frame`` is the package's one way to turn rows built on the
+driver into a DataFrame.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+
+def rows_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """Driver rows (tuples in ``schema`` order) → DataFrame, through a
+    ``pyarrow.Table`` typed from the Spark schema (a StructType or a DDL
+    string). The JVM holds the table as a local relation; a Python list
+    would instead go through ``parallelize`` and round-trip through the
+    Python workers on every evaluation of the frame."""
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def segmentize_arrow(lines_df: DataFrame) -> DataFrame:

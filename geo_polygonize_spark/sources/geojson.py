@@ -14,6 +14,8 @@ import json
 
 import numpy as np
 
+from .arrow import rows_frame
+
 
 def _coords_to_arrays(coords):
     xs = np.asarray([c[0] for c in coords], dtype=np.float64)
@@ -96,8 +98,8 @@ def read_geojson_lines(spark, path: str, dataset: str = "geojson"):
         (i, [float(v) for v in x], [float(v) for v in y], dataset)
         for i, (x, y) in enumerate(zip(xs, ys))
     ]
-    return spark.createDataFrame(
-        rows, "line_id long, xs array<double>, ys array<double>, dataset string"
+    return rows_frame(
+        spark, rows, "line_id long, xs array<double>, ys array<double>, dataset string"
     )
 
 

@@ -15,7 +15,9 @@ fused assembly on grid-20 with tile 5, where every core-boundary column
 is merged residue (twin promotion, visitors and hull netting), and on
 the nested fixture, where every ring is merged (visitors only); the
 perfbench lattice operations (stitched polygonize, checkpointed tiled
-polygonize) and the images workload's driver-side coverage.
+polygonize into an empty store and again over the unchanged store), a
+checkpointed grid-20 / tile-5 store whose every tile splits hot, and the
+images workload's driver-side coverage.
 
 Usage (from the root of the tree to digest):
 
@@ -162,9 +164,13 @@ def main() -> None:
         drop_collapsed=True, strategy="auto")))
     with tempfile.TemporaryDirectory() as tmp:
         store = os.path.join(tmp, "store")
-        report("lattice_checkpoint", spark_rows(resumable_tiled_polygonize(
-            spark, l_df, store, LATTICE_TILE, buffer=LATTICE_BUFFER, bbox=box_l,
-            drop_collapsed=True)))
+        for name in ("lattice_checkpoint", "lattice_checkpoint_resume"):
+            report(name, spark_rows(resumable_tiled_polygonize(
+                spark, l_df, store, LATTICE_TILE, buffer=LATTICE_BUFFER, bbox=box_l,
+                drop_collapsed=True)))
+        report("grid20_checkpoint_hot", spark_rows(resumable_tiled_polygonize(
+            spark, g20_df, os.path.join(tmp, "hot"), 5.0, buffer=1.5,
+            bbox=(0.0, 0.0, 20.0, 20.0), drop_collapsed=True, max_segments_per_tile=10)))
     cx, cy = grid_lines(COVER_N)
     report("images_coverage", _pdf_rows(polygonize_segments_pdf(
         *segmentize(cx, cy), node_input=True, drop_collapsed=True)))

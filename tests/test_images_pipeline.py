@@ -266,6 +266,64 @@ class TestCheckpoint:
             m.columns
         )
 
+    @pytest.mark.parametrize("max_segments_per_tile", [200_000, 10])
+    def test_metrics_n_polys_count_run_dirs(self, spark, tmp_path, max_segments_per_tile):
+        """Each metrics row's n_polys equals the number of polygons its
+        (tile key, run_id) wrote: the unsplit layout (4 keys) and the
+        hot-split one (every tile splits, 16 keys)."""
+        from geo_polygonize_spark.checkpoint import resumable_tiled_polygonize
+
+        n = 10
+        xs, ys = grid_lines(n)
+        lines = lines_to_df(spark, xs, ys)
+        ck = str(tmp_path / "ck")
+        out = resumable_tiled_polygonize(
+            spark, lines, ck, tile_size=5.0, buffer=1.5, bbox=(0.0, 0.0, float(n), float(n)),
+            drop_collapsed=True, max_segments_per_tile=max_segments_per_tile,
+        )
+        assert out.count() == n * n
+        key = ["tile_i", "tile_j", "f", "sub_i", "sub_j", "run_id"]
+        written = {
+            tuple(r[c] for c in key): r["count"]
+            for r in spark.read.parquet(f"{ck}/polygons").groupBy(*key).count().collect()
+        }
+        metrics = spark.read.parquet(f"{ck}/metrics").collect()
+        assert len(metrics) == (4 if max_segments_per_tile > 100 else 16)
+        assert {tuple(r[c] for c in key): r["n_polys"] for r in metrics} == {
+            k: written.get(k, 0) for k in (tuple(r[c] for c in key) for r in metrics)
+        }
+        assert sum(r["n_polys"] for r in metrics) == n * n
+
+    def test_write_and_resume_job_counts(self, spark, tmp_path):
+        """A fresh write runs 8 Spark jobs and a resume over the
+        unchanged store 7, each with the count of the returned
+        coverage: the per-tile aggregate (2), the latest committed rows
+        (2, resume only), the kernel write (2, write only), the metrics
+        append (1, write only) and the coverage count (3)."""
+        from geo_polygonize_spark.checkpoint import resumable_tiled_polygonize
+
+        n = 10
+        xs, ys = grid_lines(n)
+        lines = lines_to_df(spark, xs, ys)
+        ck = str(tmp_path / "ck")
+        sc = spark.sparkContext
+
+        def jobs(tag: str) -> int:
+            sc.setJobGroup(tag, tag)
+            try:
+                out = resumable_tiled_polygonize(
+                    spark, lines, ck, tile_size=5.0, buffer=1.5,
+                    bbox=(0.0, 0.0, float(n), float(n)), drop_collapsed=True,
+                )
+                assert out.count() == n * n
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+        assert jobs("checkpoint-write") == 8
+        assert jobs("checkpoint-resume") == 7
+
     def test_store_reads_name_existing_paths(self, spark, tmp_path, monkeypatch):
         """Every store read during a fresh write and a resume names a
         path that exists, with no glob: Spark logs a WARN stack trace

@@ -97,3 +97,33 @@ def test_segmentize_arrow_matches_codegen(spark):
     a = sorted(map(tuple, segmentize_df(df).collect()))
     b = sorted(map(tuple, segmentize_arrow(df).collect()))
     assert a == b and len(a) == 2 * 7  # 2(n+1) single-segment lines pre-noding
+
+
+@pytest.mark.parametrize(
+    "schema, rows",
+    [
+        # an int and a long column (a long beyond int32), a string, nulls
+        (
+            "i int, n long, s string",
+            [(1, 2**40, "a"), (None, -(2**62), None), (-(2**31), None, "")],
+        ),
+        # array<double>: values, an empty array, a null element, a null array
+        (
+            "k long, xs array<double>",
+            [(0, [1.5, -2.0]), (1, []), (2, [None, 3.0]), (3, None)],
+        ),
+        ("i int, xs array<double>, s string", []),  # empty input
+    ],
+)
+def test_rows_frame_matches_list_frame(spark, schema, rows):
+    # driver rows through the Arrow table equal the same rows passed as
+    # a Python list, in schema and in values, for a DDL and a StructType
+    from pyspark.sql import types as T
+
+    from geo_polygonize_spark.sources.arrow import rows_frame
+
+    want = spark.createDataFrame(rows, schema)
+    for s in (schema, T.DataType.fromDDL(schema)):
+        got = rows_frame(spark, rows, s)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
