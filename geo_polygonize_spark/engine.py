@@ -12,9 +12,9 @@ Stages (each a documented operator elsewhere in the package):
   5. raster tile assignment (column arithmetic)
   6. payload re-join + caption passthrough
 
-Every join is either broadcast or a cell-key equi-join; the only wide
-shuffles are the tile shuffle inside tiled_polygonize and the PIP
-cell join.
+Every join is either broadcast or a cell-hash cogroup; the only wide
+shuffles are the tile shuffle inside tiled_polygonize and, for a
+coverage too large to broadcast, the cells PIP join's bucket shuffle.
 """
 
 from __future__ import annotations
@@ -65,7 +65,6 @@ def image_pipeline(
     buffer: float = 1.0,
     cell_size: float | None = None,
     polygons: DataFrame | None = None,
-    salt: int | None = None,
     drop_collapsed: bool = True,
     pip_strategy: str = "auto",
     broadcast_poly_limit: int = 2_000_000,
@@ -99,11 +98,11 @@ def image_pipeline(
     )
 
     # broadcast PIP when the coverage is collectible (bounded polygon
-    # count), else the shuffle cell join with optional salting. The
-    # size check persists + counts (full task parallelism — a
-    # limit().collect() probe executes as Spark's incremental limit,
-    # 1→4→20 task waves, serializing the polygonize), then the
-    # broadcast path collects from cache; polygonize never recomputes.
+    # count), else the cells join. The size check persists + counts
+    # (full task parallelism — a limit().collect() probe executes as
+    # Spark's incremental limit, 1→4→20 task waves, serializing the
+    # polygonize), then the broadcast path collects from cache as an
+    # Arrow table; polygonize never recomputes.
     if coverage_index is not None:
         # prebuilt broadcast index (``broadcast_coverage_index``) —
         # the zero-per-batch-fixed-cost production path: no coverage
@@ -115,16 +114,9 @@ def image_pipeline(
         pip_strategy = "broadcast"
     elif pip_strategy == "auto":
         polygons = polygons.persist()
-        n_polys = polygons.count()
-        if n_polys <= broadcast_poly_limit:
-            pip_strategy = "broadcast"
-            # Arrow-path collect (a plain .collect() drags ring arrays
-            # through py4j row by row)
-            poly_rows = polygons.toPandas().to_dict("records")
-        else:
-            pip_strategy = "cells"
+        pip_strategy = "broadcast" if polygons.count() <= broadcast_poly_limit else "cells"
     hits = pip_join(
-        points, polygons, x0, y0, cell_size, salt=salt, strategy=pip_strategy,
+        points, polygons, x0, y0, cell_size, strategy=pip_strategy,
         rows=poly_rows, index=coverage_index,
     )
 

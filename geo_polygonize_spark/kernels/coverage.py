@@ -9,16 +9,17 @@ coordinate arrays, and a fully vectorized batched query:
   ``kernels.rings.ray_cast_pairs`` (shell, then holes of hits) →
   smallest-area winner per point.
 
-Built once on the driver from the (bounded-size) polygon coverage and
-shipped to executors as a ``SparkContext.broadcast`` (once per
-executor, not per task) — the classic broadcast-side spatial join.
-The shuffle-based cell join remains in operators/spatial_join.py for
-coverages too large to broadcast.
+The index is built from Arrow list columns. Both PIP strategies of
+``operators/spatial_join.py`` use it: the broadcast join builds it once
+on the driver and ships it as a ``SparkContext.broadcast`` (once per
+executor, not per task); the cells join, for coverages too large to
+broadcast, builds one per cell-hash bucket inside the task.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 from .rings import ray_cast_pairs
 
@@ -40,14 +41,42 @@ def _local_f32(fx, fy, off, bx1, bx2, by1, by2):
     return cx, cy, lx.astype(np.float32), ly.astype(np.float32), E
 
 
+# The columns the index reads, with the Arrow types a coverage frame
+# (``operators.polygonize_op.POLYGON_SCHEMA``) carries.
+INDEX_SCHEMA = pa.schema(
+    [
+        ("tile_i", pa.int32()),
+        ("tile_j", pa.int32()),
+        ("poly_id", pa.int64()),
+        ("shell_xs", pa.list_(pa.float64())),
+        ("shell_ys", pa.list_(pa.float64())),
+        ("hole_xs", pa.list_(pa.list_(pa.float64()))),
+        ("hole_ys", pa.list_(pa.list_(pa.float64()))),
+        ("area", pa.float64()),
+    ]
+)
+
+
+def _csr(lists):
+    """(offsets from 0, flat child values) of a list array; a null list
+    counts as empty (``flatten`` skips it and honours a slice)."""
+    lens = _numpy(lists.value_lengths().fill_null(0), np.int64)
+    return np.concatenate(([0], np.cumsum(lens))), lists.flatten()
+
+
+def _numpy(values, dtype=np.float64) -> np.ndarray:
+    return np.asarray(values.to_numpy(zero_copy_only=False), dtype=dtype)
+
+
 class CoverageIndex:
-    def __init__(
-        self, polys: list[dict], cell_size: float | None = None,
-        use_f32: bool | None = None,
-    ):
-        """polys: list of dicts with keys tile_i, tile_j, poly_id,
-        shell_xs, shell_ys, hole_xs, hole_ys, area (the POLYGON_SCHEMA
-        row layout). ``use_f32``: evaluate the ray cast on the f32
+    def __init__(self, polys, cell_size: float | None = None, use_f32: bool | None = None):
+        """polys: the coverage as a ``pyarrow.Table`` or ``RecordBatch``
+        with the ``INDEX_SCHEMA`` columns (others are ignored), or as a
+        list of dicts with those keys, which is converted to one. The
+        list columns are read through their offsets and values: no
+        Python object per polygon. A null hole list counts as no holes.
+
+        ``use_f32``: evaluate the ray cast on the f32
         ring-local mirror with the certified exact fallback — results
         are bit-identical either way, only the traffic/compute balance
         differs. Measured (64M-record stream, pinned, interleaved):
@@ -55,42 +84,39 @@ class CoverageIndex:
         LOSES ~1.4× at 8 pinned cores (compute-bound — the
         certification arithmetic roughly doubles the instruction
         count). None = auto: callers that know the deployment's
-        parallelism (broadcast_coverage_index / pip_join_broadcast)
-        resolve it as parallelism ≥ 16; a bare constructor defaults to
-        the wide-deployment choice (True)."""
-        n = len(polys)
+        parallelism (broadcast_coverage_index / pip_join) resolve it
+        as parallelism ≥ 16; a bare constructor defaults to the
+        wide-deployment choice (True)."""
+        if isinstance(polys, list):
+            polys = pa.Table.from_pylist(polys, schema=INDEX_SCHEMA)
+
+        def col(name):
+            c = polys.column(name)
+            return c.combine_chunks() if isinstance(c, pa.ChunkedArray) else c
+
+        n = polys.num_rows
         self.n = n
         self.use_f32 = True if use_f32 is None else bool(use_f32)
-        self.tile_i = np.asarray([p["tile_i"] for p in polys], dtype=np.int32)
-        self.tile_j = np.asarray([p["tile_j"] for p in polys], dtype=np.int32)
-        self.poly_id = np.asarray([p["poly_id"] for p in polys], dtype=np.int64)
-        self.area = np.asarray([p["area"] for p in polys], dtype=np.float64)
+        self.tile_i = _numpy(col("tile_i"), np.int32)
+        self.tile_j = _numpy(col("tile_j"), np.int32)
+        self.poly_id = _numpy(col("poly_id"), np.int64)
+        self.area = _numpy(col("area"))
+        # the winner among equal areas is the least (tile_i, tile_j,
+        # poly_id), so no answer depends on the order polygons arrive in
+        self.rank = np.empty(n, dtype=np.int64)
+        self.rank[np.lexsort((self.poly_id, self.tile_j, self.tile_i, self.area))] = np.arange(n)
 
-        shells_x = [np.asarray(p["shell_xs"], dtype=np.float64) for p in polys]
-        shells_y = [np.asarray(p["shell_ys"], dtype=np.float64) for p in polys]
-        self.slen = np.asarray([s.size for s in shells_x], dtype=np.int64)
-        self.soff = np.concatenate(([0], np.cumsum(self.slen)))
-        self.sx = np.concatenate(shells_x) if n else np.empty(0)
-        self.sy = np.concatenate(shells_y) if n else np.empty(0)
+        self.soff, sx = _csr(col("shell_xs"))
+        self.sx, self.sy = _numpy(sx), _numpy(_csr(col("shell_ys"))[1])
+        self.slen = np.diff(self.soff)
 
-        # holes: flat rings + per-poly ranges
-        hx_flat: list[np.ndarray] = []
-        hy_flat: list[np.ndarray] = []
-        hole_poly: list[int] = []
-        for i, p in enumerate(polys):
-            p_hx = p["hole_xs"]
-            p_hy = p["hole_ys"]
-            if p_hx is None or p_hy is None:
-                continue
-            for hx, hy in zip(p_hx, p_hy):
-                hx_flat.append(np.asarray(hx, dtype=np.float64))
-                hy_flat.append(np.asarray(hy, dtype=np.float64))
-                hole_poly.append(i)
-        self.hole_poly = np.asarray(hole_poly, dtype=np.int64)
-        self.hlen = np.asarray([a.size for a in hx_flat], dtype=np.int64)
-        self.hoff = np.concatenate(([0], np.cumsum(self.hlen)))
-        self.hx = np.concatenate(hx_flat) if hx_flat else np.empty(0)
-        self.hy = np.concatenate(hy_flat) if hy_flat else np.empty(0)
+        # holes: flat rings + the polygon each ring belongs to; hole_ys
+        # shares hole_xs's layout
+        poly_rings, rings_x = _csr(col("hole_xs"))
+        self.hole_poly = np.repeat(np.arange(n, dtype=np.int64), np.diff(poly_rings))
+        self.hoff, hx = _csr(rings_x)
+        self.hx, self.hy = _numpy(hx), _numpy(_csr(_csr(col("hole_ys"))[1])[1])
+        self.hlen = np.diff(self.hoff)
 
         # bboxes
         if n:
@@ -331,7 +357,7 @@ class CoverageIndex:
         # scatter back to INPUT positions (prow indexes the sorted view)
         np.add.at(ncont, order[prow], 1)
         # smallest-area winner per point
-        owin = np.lexsort((self.area[pcol], prow))
+        owin = np.lexsort((self.rank[pcol], prow))
         first = np.concatenate(([True], prow[owin][1:] != prow[owin][:-1]))
         wrow = order[prow[owin][first]]
         wcol = pcol[owin][first]

@@ -2,22 +2,26 @@
 
 These are the north_rule extensions the reference does not have (its
 single-process analogs: the R-tree candidate join ``snap.rs:117-132``
-and hole-assignment join ``polygonizer.rs:192-249``); here they are
-cell-keyed equi-joins + vectorized refinement:
+and hole-assignment join ``polygonizer.rs:192-249``). Both PIP
+strategies answer with one kernel, ``kernels.coverage.CoverageIndex``
+(cell CSR + flat rings, exact even-odd ray cast, simd.rs:31-79
+semantics): the winner per point is the smallest-area containing
+polygon, the rule of hole assignment (polygonizer.rs:226-229), and the
+two strategies return the same rows.
 
-* ``pip_join(points, polygons)`` — point-in-polygon: polygon KEYS
-  (id + bbox + area, never ring arrays) replicate into every grid
-  cell their bbox covers (column exprs), points key to one cell, the
-  equi-join + JVM bbox pre-filter prune candidates, candidates group
-  per polygon (salted), ring arrays join ONCE per (polygon, salt),
-  and an Arrow kernel ray-casts each batch's (probe, polygon) pairs
-  in two ``kernels.rings.ray_cast_pairs`` calls, shells then holes
-  (exact even-odd, simd.rs:31-79 semantics). Winner per point = the
-  smallest-area containing polygon (argmin via ``min_by``, the same
-  rule as hole assignment, polygonizer.rs:226-229).
-  Skew: ``salt`` bounds the probe-group size per polygon (a polygon
-  attracting millions of candidates splits into ``salt`` groups, at
-  the cost of shipping its rings ``salt`` times).
+* ``pip_join(points, polygons)`` — point-in-polygon in one
+  co-partitioned pass. Each point keys to one bucket, the hash of its
+  grid cell modulo B; each polygon goes once to every distinct bucket
+  of the cells its shell bbox covers (to all B when it covers at least
+  B cells, without enumerating them). The two sides cogroup by bucket,
+  and an Arrow kernel builds one ``CoverageIndex`` over the bucket's
+  polygons and probes every point of the bucket with it. A polygon
+  that contains a point covers the point's cell, so it is in the
+  point's bucket: each point's answer is final in its bucket, and no
+  argmin shuffle follows. Skew is bounded by construction: points
+  spread by cell hash, and a polygon ships at most B times.
+  ``strategy="broadcast"`` (``pip_join_broadcast``) builds the index
+  once on the driver instead and probes map-only.
 
 * ``knn_join(points, centroids, k)`` — k nearest tile centroids per
   point: the (small) centroid table is collected and numpy-broadcast
@@ -31,36 +35,34 @@ cell-keyed equi-joins + vectorized refinement:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.cells import cell_range_cols
+from ..kernels.coverage import INDEX_SCHEMA, CoverageIndex
+
+# Cell-hash buckets (B) of the cells join per shuffle partition. Spark
+# hash-partitions the bucket key again and AQE coalesces, so B buckets
+# land in fewer tasks. Measured on bench.py's 1M-point × 40k-polygon
+# leaf at 8 partitions, local[4], one process each (cogroup tasks, most
+# rows one task read, 2nd / 3rd call wall): B = 8 → 4 tasks, 406k,
+# 3.0 / 2.5 s; B = 16 → 5 tasks, 274k, 2.9 / 2.4 s; B = 32 → 6 tasks,
+# 266k, 3.5 / 2.9 s.
+BUCKETS_PER_PARTITION = 2
+# points probed per ``CoverageIndex.query`` call, so the (probe,
+# polygon) and (probe, hole) pair lists of a large bucket stay bounded:
+# the broadcast join's Arrow batch size (plans.build_session)
+QUERY_SLICE = 65_536
 
 
-def polygon_cells(
-    polygons: DataFrame,
-    x0: float,
-    y0: float,
-    cell_size: float,
-    n_cells: int = 1 << 20,
-) -> DataFrame:
-    """Replicate each polygon into every covering grid cell of its
-    shell bbox — bbox from array_min/array_max (JVM-side), range
-    explode like tile assignment."""
-    p = polygons.withColumn("pbx1", F.array_min("shell_xs")).withColumn(
-        "pbx2", F.array_max("shell_xs")
-    ).withColumn("pby1", F.array_min("shell_ys")).withColumn("pby2", F.array_max("shell_ys"))
-    ci1 = cell_range_cols(F.col("pbx1"), x0, cell_size, n_cells)
-    ci2 = cell_range_cols(F.col("pbx2"), x0, cell_size, n_cells)
-    cj1 = cell_range_cols(F.col("pby1"), y0, cell_size, n_cells)
-    cj2 = cell_range_cols(F.col("pby2"), y0, cell_size, n_cells)
-    return p.withColumn("cell_i", F.explode(F.sequence(ci1, ci2))).withColumn(
-        "cell_j", F.explode(F.sequence(cj1, cj2))
-    )
+def _use_f32(sc) -> bool:
+    """The index's f32 mirror pays only on wide deployments
+    (kernels/coverage.py — measured crossover between 8 and 32 local
+    cores; results identical either way)."""
+    return sc.defaultParallelism >= 16
 
 
 def broadcast_coverage_index(spark, polygons: DataFrame | None = None, rows: list | None = None):
@@ -70,17 +72,20 @@ def broadcast_coverage_index(spark, polygons: DataFrame | None = None, rows: lis
     shape: polygonize once, stream micro-batches against it — without
     this, every batch job re-pays the driver-side index compile +
     broadcast write (~1.4 s fixed at a 160k-polygon coverage, the
-    dominant cost of a small batch)."""
-    from ..kernels.coverage import CoverageIndex
+    dominant cost of a small batch).
 
+    The frame is collected as an Arrow table; ``rows``, a list of
+    polygon dicts already on the driver, is used instead when given.
+    The index ships via SparkContext.broadcast: it can be tens of MB,
+    and a plain closure capture would ride inside the task command —
+    re-sent by the driver FOR EVERY TASK (measured: a 34MB index × 64
+    tasks made the whole stage driver-transfer-bound and flat across
+    core counts). A broadcast transfers once per executor and the
+    closure only carries the handle."""
     if rows is None:
-        rows = polygons.toPandas().to_dict("records")
-    # f32-mirror ray cast iff the deployment is wide enough to be
-    # bandwidth-contended (kernels/coverage.py — measured crossover
-    # between 8 and 32 local cores; results identical either way)
-    return spark.sparkContext.broadcast(
-        CoverageIndex(rows, use_f32=spark.sparkContext.defaultParallelism >= 16)
-    )
+        rows = polygons.select(*INDEX_SCHEMA.names).toArrow()
+    sc = spark.sparkContext
+    return sc.broadcast(CoverageIndex(rows, use_f32=_use_f32(sc)))
 
 
 def pip_join_broadcast(
@@ -95,30 +100,15 @@ def pip_join_broadcast(
     kernels/coverage.py), and captured by a single map-only Arrow UDF
     that resolves candidates + exact PIP + smallest-area argmin per
     batch. ZERO shuffles and no ring arrays on the wire — the right
-    plan whenever the coverage fits in executor memory (the shuffle
-    cell join below is the fallback for coverages that don't).
+    plan whenever the coverage fits in executor memory (the cells
+    join is the path for coverages that don't).
 
     ``index``: a prebuilt broadcast from ``broadcast_coverage_index``
     — skips the per-call compile+broadcast entirely.
     """
-    from ..kernels.coverage import CoverageIndex
-
-    if index is not None:
-        bc = index
-    else:
-        if rows is None:
-            rows = [r.asDict() for r in polygons.collect()]
-        # ship via SparkContext.broadcast: the serialized index can be
-        # tens of MB, and a plain closure capture would ride inside the
-        # task command — re-sent by the driver FOR EVERY TASK
-        # (measured: a 34MB index × 64 tasks made the whole stage
-        # driver-transfer-bound and flat across core counts). A
-        # broadcast transfers once per executor and the closure only
-        # carries the handle.
-        sc = points.sparkSession.sparkContext
-        bc = sc.broadcast(
-            CoverageIndex(rows, use_f32=sc.defaultParallelism >= 16)
-        )
+    bc = index if index is not None else broadcast_coverage_index(
+        points.sparkSession, polygons, rows
+    )
 
     schema = T.StructType(
         [
@@ -183,224 +173,113 @@ def pip_join(
     y0: float,
     cell_size: float,
     point_id: str = "image_id",
-    salt: int | None = None,
     strategy: str = "cells",
     rows: list | None = None,
     index=None,
-    max_probes_per_group: int = 200_000,
 ) -> DataFrame:
     """points(point_id, x, y) × polygons → one row per point with its
-    smallest containing polygon (or none: inner join semantics —
-    points outside all coverage drop out).
+    smallest containing polygon: (point_id, poly_tile_i, poly_tile_j,
+    poly_id, poly_area, x, y, n_containing). Inner-join semantics:
+    points outside the coverage, or with a null or non-finite
+    coordinate, drop out.
 
-    ``strategy="broadcast"`` → pip_join_broadcast (map-only; coverage
-    must fit in memory). ``strategy="cells"`` (this body) → narrow
-    cell-key equi-join + per-polygon probe grouping + one-ring-batch
-    PIP refine (module docstring) — the scale path for coverages too
-    large to collect. ``salt`` fixes each polygon's probe-group split
-    count; the default (None) DERIVES it per polygon from its actual
-    candidate count (one narrow window count) so a hot polygon — e.g.
-    a hull whose bbox covers the whole point cloud — can never gather
-    more than ``max_probes_per_group`` probes into a single
-    collect_list row/task.
+    ``strategy="cells"`` (this body) is the scale path for coverages
+    too large to collect: points and polygons cogroup by the hash of
+    their grid cells (``cell_size`` on the grid anchored at
+    ``(x0, y0)``), and each bucket is probed with its own
+    ``CoverageIndex`` (module docstring). ``strategy="broadcast"`` →
+    ``pip_join_broadcast`` (map-only; the coverage, or ``rows`` /
+    ``index``, must fit in memory; it keeps every point column).
     """
     if strategy == "broadcast":
         return pip_join_broadcast(
             points, polygons, point_id=point_id, rows=rows, index=index
         )
-    # NARROW cell join: only (pkey, bbox, area, tile ids) replicate per
-    # covered cell — ring arrays never enter it. Candidates then group
-    # per polygon (salted so one hot polygon cannot own a single task),
-    # the polygon's rings join ONCE per (polygon, salt) by pkey, and an
-    # Arrow kernel ray-casts each batch's probes against their polygons'
-    # rings. Ring coordinates cross the wire O(polygons × salt) times
-    # total, independent of how many candidate points each polygon
-    # attracts — previously they rode on EVERY candidate row, the
-    # dominant shuffle payload at scale.
-    pkey = F.xxhash64("tile_i", "tile_j", "poly_id")
-    group_salt = salt if (salt is not None and salt > 1) else 1
+    spark = points.sparkSession
+    n_buckets = BUCKETS_PER_PARTITION * int(spark.conf.get("spark.sql.shuffle.partitions"))
+    use_f32 = _use_f32(spark.sparkContext)
 
-    pc = polygon_cells(
-        polygons.select("tile_i", "tile_j", "poly_id", "area", "shell_xs", "shell_ys"),
-        x0,
-        y0,
-        cell_size,
-    ).select(
-        "cell_i",
-        "cell_j",
-        pkey.alias("pkey"),
-        F.col("tile_i").alias("p_tile_i"),
-        F.col("tile_j").alias("p_tile_j"),
-        F.col("poly_id").alias("p_poly_id"),
-        F.col("area").alias("p_area"),
-        "pbx1",
-        "pbx2",
-        "pby1",
-        "pby2",
-    )
-    coords = polygons.select(
-        pkey.alias("pkey"), "shell_xs", "shell_ys", "hole_xs", "hole_ys"
-    )
-    pts = points.select(point_id, "x", "y").withColumn(
-        "cell_i", cell_range_cols(F.col("x"), x0, cell_size, 1 << 20)
-    ).withColumn("cell_j", cell_range_cols(F.col("y"), y0, cell_size, 1 << 20))
+    def cell(c, origin: float):
+        return cell_range_cols(c, origin, cell_size, 1 << 20)
 
-    if salt is None:
-        # auto: per-polygon split count from an UPPER BOUND on its
-        # candidate volume — sum of points-per-cell over the polygon's
-        # covered cells. The bound needs only a narrow agg of the
-        # points table plus a join against the (already narrow) cell
-        # cover; the expensive pts×pc candidate join itself executes
-        # ONCE (r4 — previously the counts aggregated ``cand`` and the
-        # candidate subtree ran twice unless exchange reuse kicked in,
-        # a silent 2× on the dominant join). Bound ≥ actual (bbox
-        # filter only shrinks it) → conservative split counts, each
-        # group still ≤ max_probes_per_group.
-        # r6 (guide §2.3): ``_ns`` joins onto the NARROW pc frame
-        # (O(polygons × cells) rows) BEFORE the cell join and rides
-        # into the candidates as one int column — previously the
-        # counts joined onto the candidate frame itself, re-shuffling
-        # every (point × polygon) row for a per-polygon lookup
-        # (measured ~0.4 s of the 5.4 s 1M×40k wall).
-        pts_per_cell = pts.groupBy("cell_i", "cell_j").agg(F.count("*").alias("_np"))
-        counts = (
-            pc.select("cell_i", "cell_j", "pkey")
-            .join(pts_per_cell, ["cell_i", "cell_j"], "inner")
-            .groupBy("pkey")
-            .agg(F.sum("_np").alias("_nc"))
-        )
-        n_salt = F.greatest(
-            F.ceil(F.col("_nc") / F.lit(max_probes_per_group)), F.lit(1)
-        ).cast("int")
-        pc = pc.join(counts.select("pkey", n_salt.alias("_ns")), "pkey", "left").fillna(
-            {"_ns": 1}  # a polygon with zero points in its cells draws
-            # no candidates anyway; 1 keeps the left join total
-        )
-    # a point keys to ONE cell, so each (point, polygon) candidate pair
-    # arises once — no dedup needed
-    cand = pts.join(pc, ["cell_i", "cell_j"], "inner").where(
-        (F.col("x") >= F.col("pbx1"))
-        & (F.col("x") <= F.col("pbx2"))
-        & (F.col("y") >= F.col("pby1"))
-        & (F.col("y") <= F.col("pby2"))
-    )
-    if salt is None:
-        cand = cand.withColumn(
-            "gsalt", F.pmod(F.xxhash64(point_id), F.col("_ns")).cast("int")
-        ).drop("_ns")
-    elif group_salt > 1:
-        cand = cand.withColumn(
-            "gsalt", F.pmod(F.xxhash64(point_id), F.lit(group_salt)).cast("int")
-        )
-    else:
-        cand = cand.withColumn("gsalt", F.lit(0))
-    # THREE PARALLEL PRIMITIVE ARRAYS, not collect_list(struct(...)):
-    # all aggregates of one groupBy consume the same per-group row
-    # stream, so the arrays stay index-aligned, and Arrow hands the
-    # kernel numpy-convertible list columns directly — no per-element
-    # Python dict unpacking in the probe hot path (r4; was the one
-    # per-row-Python site left in a scale path).
-    per_poly = cand.groupBy("pkey", "gsalt").agg(
-        F.first("p_tile_i").alias("p_tile_i"),
-        F.first("p_tile_j").alias("p_tile_j"),
-        F.first("p_poly_id").alias("p_poly_id"),
-        F.first("p_area").alias("p_area"),
-        F.collect_list(F.col(point_id)).alias("probe_ids"),
-        F.collect_list("x").alias("probe_xs"),
-        F.collect_list("y").alias("probe_ys"),
-    )
-    with_coords = per_poly.join(coords, "pkey")
+    def bucket(ci, cj):
+        return F.pmod(F.xxhash64(ci, cj), F.lit(n_buckets)).cast("int")
 
-    pt_field = points.schema[point_id].dataType
-    hit_schema = T.StructType(
+    inf = float("inf")
+    finite = (F.col("x") > -inf) & (F.col("x") < inf) & (F.col("y") > -inf) & (F.col("y") < inf)
+    pts = (
+        points.select(point_id, "x", "y")
+        .where(finite)  # also drops null and NaN (NaN sorts above +inf)
+        .withColumn("_b", bucket(cell(F.col("x"), x0), cell(F.col("y"), y0)))
+    )
+    # each polygon's buckets: those of the cells its shell bbox covers
+    # (the clamp in cell_range_cols is monotone, so a point inside the
+    # bbox keys to a cell of the range), or all B once it covers B cells
+    ranged = polygons.select(
+        *INDEX_SCHEMA.names,
+        cell(F.array_min("shell_xs"), x0).alias("_i1"),
+        cell(F.array_max("shell_xs"), x0).alias("_i2"),
+        cell(F.array_min("shell_ys"), y0).alias("_j1"),
+        cell(F.array_max("shell_ys"), y0).alias("_j2"),
+    )
+    i1, i2, j1, j2 = (F.col(c) for c in ("_i1", "_i2", "_j1", "_j2"))
+    n_cells = (i2 - i1 + 1).cast("long") * (j2 - j1 + 1).cast("long")
+    buckets = F.when(n_cells >= n_buckets, F.sequence(F.lit(0), F.lit(n_buckets - 1))).otherwise(
+        F.array_distinct(
+            F.flatten(
+                F.transform(
+                    F.sequence(i1, i2),
+                    lambda i: F.transform(F.sequence(j1, j2), lambda j: bucket(i, j)),
+                )
+            )
+        )
+    )
+    cover = ranged.select(*INDEX_SCHEMA.names, F.explode(buckets).alias("_b"))
+
+    out_schema = T.StructType(
         [
-            T.StructField(point_id, pt_field),
+            T.StructField(point_id, points.schema[point_id].dataType),
+            T.StructField("poly_tile_i", T.IntegerType()),
+            T.StructField("poly_tile_j", T.IntegerType()),
+            T.StructField("poly_id", T.LongType()),
+            T.StructField("poly_area", T.DoubleType()),
             T.StructField("x", T.DoubleType()),
             T.StructField("y", T.DoubleType()),
-            T.StructField("p_tile_i", T.IntegerType()),
-            T.StructField("p_tile_j", T.IntegerType()),
-            T.StructField("p_poly_id", T.LongType()),
-            T.StructField("p_area", T.DoubleType()),
+            T.StructField("n_containing", T.LongType()),
         ]
     )
+    arrow_out = to_arrow_schema(out_schema)
 
-    def pip_hits(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        """One output batch per input batch: list columns are read as
-        offsets + values, the hits gather as index arrays and the output
-        is built with ``take`` (so the point id keeps its type)."""
-        from ..kernels.rings import ray_cast_pairs
+    def probe_bucket(pts: pa.Table, polys: pa.Table) -> pa.Table:
+        """One bucket: an index over its polygons, every point probed."""
+        if pts.num_rows == 0 or polys.num_rows == 0:
+            return arrow_out.empty_table()
+        index = CoverageIndex(polys, use_f32=use_f32)
+        px = pts.column("x").to_numpy().astype(np.float64, copy=False)
+        py = pts.column("y").to_numpy().astype(np.float64, copy=False)
+        found = np.zeros(px.size, dtype=bool)
+        idx = np.zeros(px.size, dtype=np.int64)
+        ncont = np.zeros(px.size, dtype=np.int64)
+        for s in range(0, px.size, QUERY_SLICE):
+            sl = slice(s, s + QUERY_SLICE)
+            found[sl], idx[sl], ncont[sl] = index.query(px[sl], py[sl])
+        hit = np.flatnonzero(found)
+        won = idx[hit]
+        return pa.Table.from_arrays(
+            [
+                pts.column(point_id).take(hit),
+                pa.array(index.tile_i[won]),
+                pa.array(index.tile_j[won]),
+                pa.array(index.poly_id[won]),
+                pa.array(index.area[won]),
+                pa.array(px[hit]),
+                pa.array(py[hit]),
+                pa.array(ncont[hit]),
+            ],
+            schema=arrow_out,
+        )
 
-        def csr(lists):
-            # offsets from 0, child values from the first list on
-            # (``offsets`` follows a sliced column, ``values`` does not);
-            # an empty column (no holes in the batch) may come without
-            # an offsets buffer
-            if len(lists) == 0:
-                return np.zeros(1, np.int64), lists.values
-            o = lists.offsets.to_numpy()
-            return o - o[0], lists.values.slice(o[0])
-
-        def f64(values):
-            return values.to_numpy().astype(np.float64, copy=False)
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            col = batch.column
-            po, ids = csr(col("probe_ids"))
-            so = csr(col("shell_xs"))[0]
-            px, py, sx, sy = (
-                f64(csr(col(c))[1]) for c in ("probe_xs", "probe_ys", "shell_xs", "shell_ys")
-            )
-            # holes: polygon -> its rings -> their vertices; a null hole
-            # list counts as none
-            ho, rings = csr(col("hole_xs"))
-            ro = csr(rings)[0]
-            hx, hy = (f64(csr(csr(col(c))[1])[1]) for c in ("hole_xs", "hole_ys"))
-            nh = col("hole_xs").value_lengths().fill_null(0).to_numpy()
-            # probe × its polygon's shell, then (live probe, hole ring)
-            # pairs over every hole of that polygon
-            owner = np.repeat(np.arange(batch.num_rows), np.diff(po))
-            live = np.flatnonzero(ray_cast_pairs(px, py, owner, sx, sy, so))
-            n_live_h = nh[owner[live]]
-            src = np.repeat(live, n_live_h)
-            first = np.cumsum(n_live_h) - n_live_h
-            ring = np.repeat(ho[owner[live]] - first, n_live_h) + np.arange(src.size)
-            in_hole = np.zeros(px.size, dtype=bool)
-            in_hole[src[ray_cast_pairs(px[src], py[src], ring, hx, hy, ro)]] = True
-            hit = live[~in_hole[live]]
-            owner = owner[hit]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(hit),
-                    pa.array(px[hit]),
-                    pa.array(py[hit]),
-                    col("p_tile_i").take(owner).cast(pa.int32()),
-                    col("p_tile_j").take(owner).cast(pa.int32()),
-                    col("p_poly_id").take(owner).cast(pa.int64()),
-                    col("p_area").take(owner).cast(pa.float64()),
-                ],
-                names=hit_schema.names,
-            )
-
-    hit = with_coords.mapInArrow(pip_hits, hit_schema)
-    # smallest containing polygon per point (argmin, polygonizer.rs:226-229)
-    return hit.groupBy(point_id).agg(
-        F.min_by(F.struct("p_tile_i", "p_tile_j", "p_poly_id"), "p_area").alias("best"),
-        F.min("p_area").alias("poly_area"),
-        F.first("x").alias("x"),
-        F.first("y").alias("y"),
-        F.count("*").alias("n_containing"),
-    ).select(
-        point_id,
-        F.col("best.p_tile_i").alias("poly_tile_i"),
-        F.col("best.p_tile_j").alias("poly_tile_j"),
-        F.col("best.p_poly_id").alias("poly_id"),
-        "poly_area",
-        "x",
-        "y",
-        "n_containing",
-    )
+    return pts.groupBy("_b").cogroup(cover.groupBy("_b")).applyInArrow(probe_bucket, out_schema)
 
 
 def knn_join(

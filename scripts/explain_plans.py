@@ -100,30 +100,27 @@ def main() -> None:
             out.append((header, block))
         return out
 
-    # 5. pip_join cells path: ring arrays must NOT ride the cell-join
-    # shuffle — only the per-polygon coords join carries them
+    # 5. pip_join cells path: points and polygons each cross one
+    # bucket shuffle into a cogrouped Arrow kernel, whose rows are the
+    # answer (each point's bucket holds every polygon that can contain it)
     from geo_polygonize_spark.operators.spatial_join import pip_join
 
     pts2 = derive_points(images.select("image_id"), (0.0, 0.0, 12.0, 12.0))
-    pj = pip_join(pts2, polys, 0.0, 0.0, 1.0, salt=4)
+    pj = pip_join(pts2, polys, 0.0, 0.0, 1.0)
     p = plan_of(pj)
     blocks = detail_blocks(p)
-    # the coords join (by pkey) legitimately shuffles ring arrays ONCE
-    # per polygon; the violation is arrays riding the cell-key join
-    cell_exch_with_arrays = [
-        h for h, b in blocks
-        if h.startswith("Exchange") and "cell_i" in b and "shell_xs" in b
+    bucket_exchanges = [
+        h for h, b in blocks if h.startswith("Exchange") and "hashpartitioning(_b" in b
     ]
-    gen_with_arrays = [
-        h for h, b in blocks if h.startswith("Generate") and "shell_xs" in b.split("Output")[-1]
-    ]
+    tree = p.split("\n\n")[0]
     checks = [
-        ("cell-key Exchanges carry no ring arrays (narrow cell join)", len(cell_exch_with_arrays) == 0),
-        ("cell explode output pruned of ring arrays", len(gen_with_arrays) == 0),
-        ("per-batch PIP refine kernel (MapInArrow)", "MapInArrow" in p),
+        ("one bucket exchange per side", len(bucket_exchanges) == 2),
+        ("cogrouped Arrow kernel (FlatMapCoGroupsInArrow)", "FlatMapCoGroupsInArrow" in tree),
+        ("no exchange between the kernel and the output",
+         "Exchange" not in tree.split("FlatMapCoGroupsInArrow")[0]),
         ("no cartesian product", "CartesianProduct" not in p),
     ]
-    sections.append(("pip_join (cells): narrow join, rings cross once per polygon", p, checks))
+    sections.append(("pip_join (cells): one bucket shuffle per side, cogrouped kernel", p, checks))
 
     # 6. minhash LSH: shingle arrays cross only the verify join, never
     # the band-bucket self-join

@@ -17,7 +17,11 @@ the nested fixture, where every ring is merged (visitors only); the
 perfbench lattice operations (stitched polygonize, checkpointed tiled
 polygonize into an empty store and again over the unchanged store), a
 checkpointed grid-20 / tile-5 store whose every tile splits hot, and the
-images workload's driver-side coverage.
+images workload's driver-side coverage. PIP rows (point id, polygon
+key, area, x, y, containing count) come from the images workload's
+point-in-polygon join on that coverage, and on the same coverage with
+its hull kept, through the cells and the broadcast strategy; each
+cells line must equal its broadcast line.
 
 Usage (from the root of the tree to digest):
 
@@ -62,9 +66,16 @@ def _row_bytes(row: dict) -> bytes:
     return b"|".join(parts)
 
 
-def digest(rows) -> tuple[int, str]:
+def _pip_row_bytes(row: dict) -> bytes:
+    return struct.pack(
+        "<4qd2dq", int(row["image_id"]), row["poly_tile_i"], row["poly_tile_j"], row["poly_id"],
+        row["poly_area"], row["x"], row["y"], row["n_containing"],
+    )
+
+
+def digest(rows, row_bytes=_row_bytes) -> tuple[int, str]:
     """(row count, sha256 hex) of the rows, sorted by their bytes."""
-    blobs = sorted(_row_bytes(r) for r in rows)
+    blobs = sorted(row_bytes(r) for r in rows)
     h = hashlib.sha256()
     for b in blobs:
         h.update(struct.pack("<q", len(b)))
@@ -99,9 +110,12 @@ def main() -> None:
     from geo_polygonize_spark.operators.stitch import stitched_polygonize
     from geo_polygonize_spark.plans import build_session
     from geo_polygonize_spark.sources.fixtures import fixture, grid_lines, random_lines
+    from geo_polygonize_spark.operators.polygonize_op import POLYGON_SCHEMA
+    from geo_polygonize_spark.operators.spatial_join import pip_join
     from perfbench.workloads import (
-        COVER_N, LATTICE_BUFFER, LATTICE_N, LATTICE_TILE, lines_frame,
+        COVER_N, JOIN_CELL, JOIN_POINTS, LATTICE_BUFFER, LATTICE_N, LATTICE_TILE, lines_frame,
     )
+    from pyspark.sql import functions as F
 
     spark = build_session(
         "output_digest", cores=args.cores, shuffle_partitions=max(args.cores, 8),
@@ -112,8 +126,8 @@ def main() -> None:
     def spark_rows(df):
         return _pdf_rows(df.toPandas())
 
-    def report(name, rows):
-        n, h = digest(rows)
+    def report(name, rows, row_bytes=_row_bytes):
+        n, h = digest(rows, row_bytes)
         print(f"{name:<34} {n:>8} {h}", flush=True)
 
     # grid-400 and random-200 as bench.py builds and calls them
@@ -174,6 +188,23 @@ def main() -> None:
     cx, cy = grid_lines(COVER_N)
     report("images_coverage", _pdf_rows(polygonize_segments_pdf(
         *segmentize(cx, cy), node_input=True, drop_collapsed=True)))
+
+    # the images workload's PIP join (its points at seed 7)
+    seed, side = 7, COVER_N * 10_000
+    points = spark.range(JOIN_POINTS, numPartitions=2 * args.cores).select(
+        F.col("id").alias("image_id"),
+        ((F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(side)) + 0.5) / 10_000.0).alias("x"),
+        ((F.pmod(F.xxhash64("id", F.lit(seed + 1)), F.lit(side)) + 0.5) / 10_000.0).alias("y"),
+    ).persist()
+    for name, drop in (("images_pip", True), ("images_hull_pip", False)):
+        cover = spark.createDataFrame(polygonize_segments_pdf(
+            *segmentize(cx, cy), node_input=True, drop_collapsed=drop), POLYGON_SCHEMA).persist()
+        for strategy in ("cells", "broadcast"):
+            report(f"{name}_{strategy}", spark_rows(pip_join(
+                points, cover, 0.0, 0.0, JOIN_CELL, point_id="image_id", strategy=strategy,
+            ).select("image_id", "poly_tile_i", "poly_tile_j", "poly_id", "poly_area", "x", "y",
+                     "n_containing")), _pip_row_bytes)
+        cover.unpersist()
     spark.stop()
 
 

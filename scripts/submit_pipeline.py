@@ -126,8 +126,7 @@ def main(argv: list[str] | None = None) -> int:
             lines, tile_size=tile_size, buffer=args.buffer, bbox=bbox,
             drop_collapsed=True,
         )
-    poly_rows = polygons.toPandas().to_dict("records")
-    cov_idx = broadcast_coverage_index(spark, rows=poly_rows)
+    cov_idx = broadcast_coverage_index(spark, polygons)
     cover_sec = time.time() - t0
 
     # phase 2: stream the records against the compiled coverage
@@ -141,7 +140,7 @@ def main(argv: list[str] | None = None) -> int:
     stream_sec = time.time() - t0
 
     print(json.dumps({
-        "n_polygons": len(poly_rows),
+        "n_polygons": cov_idx.value.n,
         "n_out": n_out,
         "cover_sec": round(cover_sec, 2),
         "stream_sec": round(stream_sec, 2),

@@ -114,25 +114,99 @@ class TestSpatialJoin:
         assert got_map == pdict
         assert len(got_map) > 0
 
-    def test_pip_join_salted_equals_unsalted(self, spark):
+    def test_pip_cells_skew_equals_broadcast(self, spark):
+        """A kept hull with holes is a candidate for every point, so it
+        ships to every bucket. At one shuffle partition the hull's 16
+        cells reach all B buckets; at 64 it enumerates its cells. The
+        cells join equals the broadcast join row for row at both."""
+        from geo_polygonize_spark.kernels.polygonize import polygonize_segments_pdf, segmentize
+        from geo_polygonize_spark.operators.polygonize_op import POLYGON_SCHEMA
+
+        n = 6
+        bbox = (0.0, 0.0, float(n), float(n))
+        pdf = polygonize_segments_pdf(
+            *segmentize(*grid_lines(n)), node_input=True, drop_collapsed=False
+        )
+        assert sorted(pdf.n_holes)[-2:] == [0, n * n]
+        polys = spark.createDataFrame(pdf, POLYGON_SCHEMA).cache()
+        pts = derive_points(synth_images(spark, 200), bbox)
+        key = lambda r: (r["image_id"], r["poly_tile_i"], r["poly_tile_j"],
+                         r["poly_id"], round(r["poly_area"], 9), r["n_containing"])
+        b = sorted(key(r) for r in pip_join(
+            pts, polys, 0.0, 0.0, 2.0, strategy="broadcast").collect())
+        assert len(b) == 200
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        try:
+            for parts in ("1", "64"):
+                spark.conf.set("spark.sql.shuffle.partitions", parts)
+                a = sorted(key(r) for r in pip_join(pts, polys, 0.0, 0.0, 2.0).collect())
+                assert a == b, parts
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    def test_pip_hostile_points_drop_out(self, spark):
+        """A point with a NaN, ±inf or null coordinate lies in nothing: both
+        strategies return the same rows, and none for those points."""
+        n = 4
+        xs, ys = grid_lines(n)
+        polys = tiled_polygonize(
+            lines_to_df(spark, xs, ys), tile_size=4.0, buffer=1.5,
+            bbox=(0.0, 0.0, float(n), float(n)), drop_collapsed=True,
+        ).cache()
+        nan, inf = float("nan"), float("inf")
+        bad = [(nan, 0.5), (0.5, nan), (inf, 0.5), (-inf, 0.5), (0.5, inf),
+               (0.5, -inf), (None, 0.5), (0.5, None), (nan, nan), (None, None)]
+        pts = spark.createDataFrame(
+            [(0, 0.5, 0.5), (1, 2.5, 3.5)] + [(10 + i, x, y) for i, (x, y) in enumerate(bad)],
+            "image_id long, x double, y double",
+        )
+        rows = {
+            s: sorted(tuple(r) for r in pip_join(pts, polys, 0.0, 0.0, 1.0, strategy=s)
+                      .select("image_id", "poly_tile_i", "poly_tile_j", "poly_id",
+                              "poly_area", "x", "y", "n_containing").collect())
+            for s in ("cells", "broadcast")
+        }
+        assert rows["cells"] == rows["broadcast"]
+        assert [r[0] for r in rows["cells"]] == [0, 1]
+
+    def test_pip_empty_inputs(self, spark):
+        from geo_polygonize_spark.operators.polygonize_op import POLYGON_SCHEMA
+
+        xs, ys = grid_lines(3)
+        polys = tiled_polygonize(
+            lines_to_df(spark, xs, ys), tile_size=3.0, buffer=1.5,
+            bbox=(0.0, 0.0, 3.0, 3.0), drop_collapsed=True,
+        ).cache()
+        pts = spark.createDataFrame([(0, 0.5, 0.5)], "image_id long, x double, y double")
+        no_pts = spark.createDataFrame([], "image_id long, x double, y double")
+        no_cover = spark.createDataFrame([], POLYGON_SCHEMA)
+        for strategy in ("cells", "broadcast"):
+            assert pip_join(pts, polys, 0.0, 0.0, 1.0, strategy=strategy).count() == 1
+            assert pip_join(no_pts, polys, 0.0, 0.0, 1.0, strategy=strategy).collect() == []
+            assert pip_join(pts, no_cover, 0.0, 0.0, 1.0, strategy=strategy).collect() == []
+
+    def test_pip_cells_job_count(self, spark):
+        """A cells join's count runs 4 jobs: one bucket shuffle per side,
+        the cogrouped kernel with the partial count, and the final
+        count. A pre-pass over either side would add jobs."""
         n = 6
         xs, ys = grid_lines(n)
-        lines = lines_to_df(spark, xs, ys)
-        bbox = (0.0, 0.0, float(n), float(n))
         polys = tiled_polygonize(
-            lines, tile_size=3.0, buffer=1.5, bbox=bbox, drop_collapsed=True
-        ).cache()
-        images = synth_images(spark, 100)
-        pts = derive_points(images, bbox)
-        a = sorted(
-            (r["image_id"], r["poly_tile_i"], r["poly_tile_j"], r["poly_id"])
-            for r in pip_join(pts, polys, 0.0, 0.0, 1.0).collect()
-        )
-        b = sorted(
-            (r["image_id"], r["poly_tile_i"], r["poly_tile_j"], r["poly_id"])
-            for r in pip_join(pts, polys, 0.0, 0.0, 1.0, salt=4).collect()
-        )
-        assert a == b
+            lines_to_df(spark, xs, ys), tile_size=3.0, buffer=1.5,
+            bbox=(0.0, 0.0, float(n), float(n)), drop_collapsed=True,
+        ).persist()
+        assert polys.count() == n * n
+        pts = derive_points(synth_images(spark, 100), (0.0, 0.0, float(n), float(n)))
+        sc = spark.sparkContext
+        tag = "pip-cells-count"
+        sc.setJobGroup(tag, tag)
+        try:
+            assert pip_join(pts, polys, 0.0, 0.0, 1.0).count() == 100
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(tag)) == 4
+        polys.unpersist()
 
     def test_pip_broadcast_equals_cells(self, spark):
         n = 8
@@ -149,9 +223,9 @@ class TestSpatialJoin:
         key = lambda r: (r["image_id"], r["poly_tile_i"], r["poly_tile_j"],
                          r["poly_id"], round(r["poly_area"], 9), r["n_containing"])
 
-        def cells_equal_broadcast(p, salt=None):
+        def cells_equal_broadcast(p):
             # both joins use the division-free crossing rule: row for row
-            a = sorted(key(r) for r in pip_join(p, polys, 0.0, 0.0, 1.0, salt=salt).collect())
+            a = sorted(key(r) for r in pip_join(p, polys, 0.0, 0.0, 1.0).collect())
             b = sorted(key(r) for r in pip_join(
                 p, polys, 0.0, 0.0, 1.0, strategy="broadcast").collect())
             assert a == b
@@ -159,7 +233,6 @@ class TestSpatialJoin:
 
         a = cells_equal_broadcast(pts)
         assert len(a) > 0
-        assert cells_equal_broadcast(pts, salt=3) == a
         str_pts = pts.select(
             F.concat(F.lit("img"), F.col("image_id").cast("string")).alias("image_id"), "x", "y"
         )
@@ -173,7 +246,6 @@ class TestSpatialJoin:
         )
         on_lattice = cells_equal_broadcast(lattice)
         assert 0 < len(on_lattice) < q * q
-        assert len(cells_equal_broadcast(lattice, salt=3)) == len(on_lattice)
         outside = spark.createDataFrame(
             [(i, -1.0 - i, float(n) + 0.5 * i) for i in range(20)],
             "image_id long, x double, y double",

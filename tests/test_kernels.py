@@ -611,3 +611,52 @@ def test_coverage_index_f32_overflow_falls_back_to_f64():
     assert np.array_equal(f1, f2)
     assert np.array_equal(n1, n2)
     assert np.array_equal(i1[f1], i2[f2])
+
+
+def test_coverage_index_arrow_equals_list():
+    """The index reads its list columns through Arrow offsets. A
+    coverage as a list of dicts and the same coverage as a chunked,
+    sliced Arrow table give bit-identical index arrays, and the flat
+    rings equal a per-polygon concatenation. Empty and null hole lists
+    count as no holes; an empty coverage finds nothing."""
+    import numpy as np
+    import pyarrow as pa
+    from geo_polygonize_spark.kernels.coverage import INDEX_SCHEMA, CoverageIndex
+
+    def box(x, y, s):
+        return [x, x + s, x + s, x, x], [y, y, y + s, y + s, y]
+
+    polys = []
+    for k, holes in enumerate(([], None, [(1.0, 1.0, 1.0), (3.0, 3.0, 1.0)], [], [(0.5, 0.5, 0.5)])):
+        sx, sy = box(10.0 * k, 0.0, 6.0)
+        hx = None if holes is None else [box(10.0 * k + a, b, s)[0] for a, b, s in holes]
+        hy = None if holes is None else [box(10.0 * k + a, b, s)[1] for a, b, s in holes]
+        polys.append(dict(tile_i=k % 2, tile_j=1, poly_id=100 + k, area=36.0 - k,
+                          shell_xs=sx, shell_ys=sy, hole_xs=hx, hole_ys=hy, n_holes=0))
+    cols = {f.name: pa.array([p[f.name] for p in polys], f.type) for f in INDEX_SCHEMA}
+    whole = pa.table(cols)
+    table = pa.concat_tables([whole.slice(0, 2), whole.slice(2, 1), whole.slice(3)])
+    assert table.column("shell_xs").num_chunks == 3
+
+    a, b = CoverageIndex(polys), CoverageIndex(table)
+    arrays = {k: v for k, v in vars(a).items() if isinstance(v, np.ndarray)}
+    assert set(arrays) == {k for k, v in vars(b).items() if isinstance(v, np.ndarray)}
+    for k, v in arrays.items():
+        w = getattr(b, k)
+        assert v.dtype == w.dtype and v.tobytes() == w.tobytes(), k
+    assert np.array_equal(a.sx, np.concatenate([p["shell_xs"] for p in polys]))
+    rings = [(i, h) for i, p in enumerate(polys) for h in (p["hole_ys"] or [])]
+    assert np.array_equal(a.hole_poly, [i for i, _ in rings])
+    assert np.array_equal(a.hy, np.concatenate([h for _, h in rings]))
+    assert np.array_equal(a.hoff, np.concatenate(([0], np.cumsum([len(h) for _, h in rings]))))
+    found, idx, ncont = a.query(np.array([21.5, 21.5, 40.7, 0.5]), np.array([1.5, 0.5, 0.7, 0.5]))
+    assert found.tolist() == [False, True, False, True]
+    assert a.poly_id[idx[found]].tolist() == [102, 100]
+
+    empty = CoverageIndex([])
+    assert empty.n == 0 and CoverageIndex(INDEX_SCHEMA.empty_table()).n == 0
+    for k, v in vars(empty).items():
+        if isinstance(v, np.ndarray):
+            w = getattr(CoverageIndex(INDEX_SCHEMA.empty_table()), k)
+            assert v.dtype == w.dtype and v.tobytes() == w.tobytes(), k
+    assert not empty.query(np.array([0.5]), np.array([0.5]))[0].any()
