@@ -405,8 +405,8 @@ def assemble_polygons(
     ]
 
 
-# --- the shell/hole rule: every numpy assembly calls these three; only
-# the SQL translation in ``assemble_rings_distributed`` restates it ----
+# --- the shell/hole rule: every assembly calls these three, and no
+# other code restates it ------------------------------------------------
 
 
 def _promoted(area, bx1, by1, bx2, by2) -> np.ndarray:

@@ -1,6 +1,6 @@
 """Ring assembly for the stitched polygonize: ring set in, polygons out.
 
-Three finishes share the reference semantics of
+Two finishes share the reference semantics of
 ``kernels.rings.assemble_polygons_pdf`` (reference
 polygonizer.rs:124-261) — degenerate filter, exact-bbox twin promotion
 (polygonizer.rs:152-185), strictly-larger min-area parent rule
@@ -11,20 +11,15 @@ polygonizer.rs:124-261) — degenerate filter, exact-bbox twin promotion
   in one task (small ring sets);
 * ``assemble_rings_fused`` — per claim core, over the chain engine's
   cached trace output, with no extra shuffle of ring data (large ring
-  sets; protocol below);
-* ``assemble_rings_distributed`` — DataFrame joins over the global
-  ring set (the fallback for a pathological merged residue, and the
-  tests' ground truth).
+  sets; protocol below).
 
-The numpy finishes state the rule nowhere themselves: twin promotion,
-the hole→parent candidate search and the min-(area, tie) parent
-choice are ``kernels.rings._promoted``, ``_parent_candidates`` and
+Neither states the rule itself: twin promotion, the hole→parent
+candidate search and the min-(area, tie) parent choice are
+``kernels.rings._promoted``, ``_parent_candidates`` and
 ``_smallest_parent``. The fused assembly calls them for a core's own
 shells and the broadcast merged shells (one reduction over both), the
-visitor probes, and the driver's merged residue. Only
-``assemble_rings_distributed`` states the rule again, as SQL. Every
-containment test is ``kernels.rings.ray_cast_pairs``; the distributed
-assembly casts each Arrow batch's candidate pairs in one call.
+visitor probes, and the driver's merged residue. Every containment test
+is ``kernels.rings.ray_cast_pairs``.
 
 Protocol of the fused assembly
 ------------------------------
@@ -36,32 +31,42 @@ one claim core (tile, or hot-tile sub-cell) of its trace kernel, and
    tails claimed by one core, so its bbox corner identifies that core
    BIT-EXACTLY and orientation-invariantly:
    ``ti = clip(floor((bx1-x0)/ts))`` — the min-x vertex is in the core,
-   and twins (same vertex set) always co-derive. The trace output's
-   partitions hold whole claim groups, so an in-pandas groupby inside
-   each partition reproduces the per-core grouping without an exchange.
-2. **Merged residue (driver).** The merged rings are size-gated (above
-   the gates: the whole ring set goes to ``assemble_rings_distributed``).
-   Promotion runs driver-side among them — twins share a vertex set,
-   hence a class — yielding the *merged shells*, broadcast (meta +
-   coords, with a per-core reach index) to every task. Every merged CW
-   ring (promoted or not: promotion adds shell-hood, it does not remove
-   hole-hood — a promoted hull is still absorbed by any strictly larger
-   container) becomes a *visitor* hole that probes the cores whose
-   closure contains its centroid; its merged-shell candidates are
-   resolved on the driver.
-3. **Per-core kernel.** Member promotion (exact-bbox twins are always
-   co-grouped), then hole→parent assignment over (this core's shells)
-   ∪ (broadcast merged shells). *Completeness*: a nondegenerate ring's
-   centroid is strictly inside its open bbox, the open bbox of a
-   core-contained ring crosses no core boundary, and clipped edge cores
-   have no interior core boundaries — so every core-ring parent of a
-   member hole lies in the hole's own core. Winner = lexicographic min
-   (area, rid). A local winner attaches in-task (the polygon never
-   leaves the task); a merged winner emits a NARROW ``K_FINAL`` row.
+   and two core rings of one vertex set always co-derive. The trace
+   output's partitions hold whole claim groups, so an in-pandas groupby
+   inside each partition reproduces the per-core grouping without an
+   exchange.
+2. **Merged residue (driver).** The merged rings are collected with one
+   ``toPandas()``: on grid-400 they are 11,228 rings and 46,260
+   coordinates, and each closes from at least two chains.
+   Promotion runs driver-side among them, yielding the *merged
+   shells*. A merged CW ring has no core twin: it bounds a face, so
+   its spurs lie inside its bbox, and a CCW core twin of the same bbox
+   would put every vertex of the CW ring in that twin's core, closing
+   it there. The merged shells are broadcast (meta + coords, with a
+   per-core reach index) to every task. Every merged CW ring (promoted
+   or not: promotion adds shell-hood, it does not remove hole-hood — a
+   promoted hull is still absorbed by any strictly larger container)
+   becomes a *visitor* hole that probes the cores whose closure
+   contains its centroid; its merged-shell candidates are resolved on
+   the driver.
+3. **Per-core kernel.** Member promotion, with the broadcast merged
+   CCW rings as twin candidates too: a dangle on the outer side of a
+   face's boundary rides in that face's CCW ring, so when it crosses a
+   core boundary the CCW ring closes through the merge while its CW
+   twin stays a core ring. Then hole→parent assignment over (this
+   core's shells) ∪ (broadcast merged shells). *Completeness*: a
+   nondegenerate ring's centroid is strictly inside its open bbox, the
+   open bbox of a core-contained ring crosses no core boundary, and
+   clipped edge cores have no interior core boundaries — so every
+   core-ring parent of a member hole lies in the hole's own core.
+   Winner = lexicographic min (area, rid). A local winner attaches
+   in-task (the polygon never leaves the task); a merged winner emits
+   a NARROW ``K_FINAL`` row.
    Visitor probes emit the core's best candidate as a ``K_PARTIAL``
    row, and the finish takes the min across cores.
 4. **Finish (narrow).** Per-hole winners = final rows ∪ (min of partial
-   rows). Winners targeting merged shells net their areas; winners
+   rows). Winners targeting merged shells net their areas and area
+   moments (the polygon centroid subtracts its holes'); winners
    targeting core shells (rare: a concave merged hole whose centroid
    lands in a core shell) patch the emitted polygons through a
    broadcast join — kernel output is never reshuffled.
@@ -73,8 +78,7 @@ pass (no shuffle); every later stage moves narrow winner rows (which
 carry only their own hole's coords). There is no cheaper path for
 "plain" cores: the face tracer returns bounded faces as CW rings, so
 every core that holds a ring holds a CW ring. The merged residue is
-O(tile-boundary crossings) with an explicit gate and a lossless
-fallback.
+O(tile-boundary crossings).
 """
 
 from __future__ import annotations
@@ -83,8 +87,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..functions.cells import cell_range_cols
-from ..kernels.rings import _parent_candidates, _promoted, _smallest_parent, ray_cast_pairs
+from ..kernels.rings import _parent_candidates, _promoted, _smallest_parent
 from ..sources.arrow import rows_frame
 from .polygonize_op import POLYGON_SCHEMA
 from .tiling import claim_cores, core_key, core_reach_index, touching_cores
@@ -93,11 +96,6 @@ from .tiling import claim_cores, core_key, core_reach_index, touching_cores
 K_POLY = 0      # finished polygon (assembled in-task)
 K_FINAL = 1     # final hole→global-shell assignment (narrow)
 K_PARTIAL = 4   # visitor hole: best candidate from one touching core
-
-# merged-residue size gates (rows, coordinates): above either, the
-# fused assembly hands the whole ring set to the distributed assembly
-MERGED_ROWS_GATE = 100_000
-MERGED_COORDS_GATE = 10_000_000
 
 FUSED_SCHEMA = T.StructType(
     [
@@ -115,6 +113,12 @@ FUSED_SCHEMA = T.StructType(
         T.StructField("cand_rid", T.LongType()),
         T.StructField("cand_area", T.DoubleType()),
         T.StructField("h_area", T.DoubleType()),
+        # hole area moments (area × centroid): a winner row's own hole,
+        # summed over a K_POLY row's in-task holes; with the shell area
+        # they give the polygon centroid of ``_net_centroid``
+        T.StructField("s_area", T.DoubleType()),
+        T.StructField("mx", T.DoubleType()),
+        T.StructField("my", T.DoubleType()),
         # hole coordinates ride ON the winner rows (the kernel holds
         # them anyway), so the finish never re-reads the caller's ring
         # cache — merged-visitor rows leave them null and resolve from
@@ -128,6 +132,20 @@ _RING_COLS = ["rid", "xs", "ys", "area", "bx1", "by1", "bx2", "by2", "cx", "cy"]
 _BOX = ("bx1", "by1", "bx2", "by2")
 
 
+def _net_centroid(c: str, m: str):
+    """Polygon centroid column from the shell centroid ``c``, the hole
+    moment sum ``m`` and the ``s_area`` / ``net_area`` / ``n_holes``
+    columns: ``polygon_centroid``'s formula and its relative degeneracy
+    fallback to the shell centroid. A polygon without holes keeps its
+    shell centroid bit for bit."""
+    keep = (F.col("n_holes") == 0) | (
+        F.abs("net_area") < F.greatest(F.col("s_area") * 1e-9, F.lit(1e-12))
+    )
+    return F.when(keep, F.col(c)).otherwise(
+        (F.col("s_area") * F.col(c) - F.col(m)) / F.col("net_area")
+    )
+
+
 def _finish_assignments(
     spark,
     out: DataFrame,
@@ -139,8 +157,8 @@ def _finish_assignments(
 ) -> DataFrame:
     """Narrow finish over a FUSED_SCHEMA kernel output: resolve
     per-hole winners (finals + min over partial candidate rows), net
-    the global shells, and patch rare local-shell winners onto the
-    emitted polygons via a broadcast join.
+    the global shells' areas and centroids, and patch rare local-shell
+    winners onto the emitted polygons via a broadcast join.
 
     ``residue``: the driver-side merged rings (``_RING_COLS``);
     ``shell``: the positions of its merged shells; ``promoted``: per
@@ -152,7 +170,7 @@ def _finish_assignments(
     merged visitors (their coords never enter the kernel): those rows
     carry null h_xs and resolve from ``residue``."""
     polys = out.where(F.col("kind") == K_POLY)
-    _wcols = ["h_rid", "cand_rid", "cand_area", "h_area", "h_xs", "h_ys"]
+    _wcols = ["h_rid", "cand_rid", "cand_area", "h_area", "mx", "my", "h_xs", "h_ys"]
     finals = out.where(F.col("kind") == K_FINAL).select(*_wcols)
     # deferred-min rides in the same plan (an empty K_PARTIAL set costs
     # one empty exchange inside the job — cheaper than a separate
@@ -167,7 +185,7 @@ def _finish_assignments(
     deferred = (
         partial_src.groupBy("h_rid")
         .agg(
-            F.min(F.struct("cand_area", "cand_rid", "h_area")).alias("w"),
+            F.min(F.struct("cand_area", "cand_rid", "h_area", "mx", "my")).alias("w"),
             # all rows of one h_rid describe the SAME hole ring — any
             # non-null coords are the coords
             F.first("h_xs", ignorenulls=True).alias("h_xs"),
@@ -176,7 +194,8 @@ def _finish_assignments(
         .select(
             "h_rid", F.col("w.cand_rid").alias("cand_rid"),
             F.col("w.cand_area").alias("cand_area"),
-            F.col("w.h_area").alias("h_area"), "h_xs", "h_ys",
+            F.col("w.h_area").alias("h_area"), F.col("w.mx").alias("mx"),
+            F.col("w.my").alias("my"), "h_xs", "h_ys",
         )
     )
     winners = finals.unionByName(deferred)
@@ -214,6 +233,8 @@ def _finish_assignments(
             F.collect_list("h_xs").alias("p_xs"),
             F.collect_list("h_ys").alias("p_ys"),
             F.sum("h_area").alias("p_sum"),
+            F.sum("mx").alias("p_mx"),
+            F.sum("my").alias("p_my"),
             F.count("*").alias("p_n"),
         )
         .withColumnRenamed("cand_rid", "rid")
@@ -240,7 +261,10 @@ def _finish_assignments(
             "n_holes",
             (F.col("n_holes") + F.coalesce("p_n", F.lit(0))).cast("int"),
         )
-        .drop("p_xs", "p_ys", "p_sum", "p_n")
+        .withColumn("mx", F.col("mx") + F.coalesce("p_mx", F.lit(0.0)))
+        .withColumn("my", F.col("my") + F.coalesce("p_my", F.lit(0.0)))
+        .withColumn("cx", _net_centroid("cx", "mx"))
+        .withColumn("cy", _net_centroid("cy", "my"))
     )
     if drop_collapsed:
         polys = polys.where(F.col("net_area") > 1e-6)
@@ -280,8 +304,12 @@ def _finish_assignments(
                 (F.col("s_area") - F.coalesce("p_sum", F.lit(0.0))).alias(
                     "net_area"
                 ),
-                "cx", "cy",
+                "s_area", "cx", "cy",
+                F.coalesce("p_mx", F.lit(0.0)).alias("mx"),
+                F.coalesce("p_my", F.lit(0.0)).alias("my"),
             )
+            .withColumn("cx", _net_centroid("cx", "mx"))
+            .withColumn("cy", _net_centroid("cy", "my"))
         )
         if drop_collapsed:
             gpolys = gpolys.where(F.col("net_area") > 1e-6)
@@ -309,7 +337,8 @@ def _finish_assignments(
 
 def _core_local_assembly(area, rid, cx, cy, box, fx, fy, off, idx, g, glist):
     """Member assembly of one claim core over the rings at positions
-    ``idx`` (module docstring step 3): twin promotion, then the
+    ``idx`` (module docstring step 3): twin promotion, with the merged
+    CCW rings of ``glist`` as twin candidates too, then the
     hole→parent search over this core's shells and the merged shells
     ``glist`` of the broadcast residue ``g``, both candidate sets
     reduced to one min-(area, rid) parent per hole in one call.
@@ -320,7 +349,12 @@ def _core_local_assembly(area, rid, cx, cy, box, fx, fy, off, idx, g, glist):
     ``w[k]``, the shell ``sh[w[k]]`` below ``sh.size`` and the merged
     shell ``glist[w[k] - sh.size]`` from there on."""
     garea = area[idx]
-    sh = idx[(garea > 0.0) | _promoted(garea, *(c[idx] for c in box))]
+    tw = glist[g["ccw"][glist]]
+    promoted = _promoted(
+        np.concatenate((garea, g["area"][tw])),
+        *(np.concatenate((c[idx], g[k][tw])) for c, k in zip(box, _BOX)),
+    )[: idx.size]
+    sh = idx[(garea > 0.0) | promoted]
     ho = idx[garea < 0.0]
     s_area = np.abs(area[sh])
     h_area = np.abs(area[ho])
@@ -385,15 +419,20 @@ def _poly_rows(sh, holes, area, rid, cx, cy, coords_x, coords_y) -> pd.DataFrame
     hole_xs = [[]] * m  # one shared empty list: rows are only read
     hole_ys = [[]] * m
     n_holes = np.zeros(m, np.int32)
-    net_area = np.abs(area[sh])
+    s_area = np.abs(area[sh])
+    net_area = s_area.copy()
+    mx, my = np.zeros(m), np.zeros(m)
     for i, qs in holes.items():
         hole_xs[i] = [coords_x[q] for q in qs]
         hole_ys[i] = [coords_y[q] for q in qs]
         n_holes[i] = len(qs)
-        net_area[i] = np.abs(area[sh[i]]) - np.abs(area[qs]).sum()
+        h_area = np.abs(area[qs])
+        net_area[i] = s_area[i] - h_area.sum()
+        mx[i], my[i] = h_area @ cx[qs], h_area @ cy[qs]
     return _fused_rows(
         K_POLY, rid=rid[sh], shell_xs=shell_xs, shell_ys=shell_ys, hole_xs=hole_xs,
         hole_ys=hole_ys, n_holes=n_holes, net_area=net_area, cx=cx[sh], cy=cy[sh],
+        s_area=s_area, mx=mx, my=my,
     )
 
 
@@ -474,17 +513,20 @@ def _make_fused_partition_kernel(x0, y0, ts, cols, rows, fmap, gbc, vbc):
 
         q, q_rid, q_area = (np.concatenate(c) for c in zip(*finals))
         if q.size:
+            q_ha = np.abs(area[q])
             yield _fused_rows(
                 K_FINAL, h_rid=rid[q], cand_rid=q_rid, cand_area=q_area,
-                h_area=np.abs(area[q]), h_xs=[coords_x[p] for p in q.tolist()],
+                h_area=q_ha, mx=q_ha * cx[q], my=q_ha * cy[q],
+                h_xs=[coords_x[p] for p in q.tolist()],
                 h_ys=[coords_y[p] for p in q.tolist()],
             )
         if partials:
             vq, q_rid, q_area = (np.concatenate(c) for c in zip(*partials))
             if vq.size:
+                va = v["area"][vq]
                 yield _fused_rows(
                     K_PARTIAL, h_rid=v["rid"][vq], cand_rid=q_rid, cand_area=q_area,
-                    h_area=v["area"][vq],
+                    h_area=va, mx=va * v["cx"][vq], my=va * v["cy"][vq],
                 )
         if n_poly:
             yield _poly_rows(np.concatenate(poly_rings), poly_holes, area, rid, cx, cy,
@@ -503,8 +545,6 @@ def assemble_rings_fused(
     rows: int,
     fmap: dict,
     drop_collapsed: bool = False,
-    merged_rows_bound: int | None = None,
-    merged_coords_bound: int | None = None,
 ) -> DataFrame:
     """Chain-engine assembly with ZERO extra shuffles of ring data:
     phase 2 maps over the cached trace output (module docstring).
@@ -512,15 +552,9 @@ def assemble_rings_fused(
     ``trace_out``: the checkpointed CHAIN_SCHEMA kernel output (kind 0
     = core rings, already degenerate-filtered); it must outlive the
     returned plan, which keeps reading it. ``merged``: chain-merge
-    output frame (RING_SCHEMA), or None when no chains existed.
-
-    ``merged_rows_bound`` / ``merged_coords_bound``: caller-known upper
-    bounds on the merged residue (the chain engine gets both free from
-    its kind-count job: rows ≤ n_chains, coords ≤ chain coords +
-    closing vertices). When both fit the gates, the residue collects
-    through ONE parallel Arrow job (``toPandas``) instead of Spark's
-    incremental ``limit().collect()`` — which executes 1→4→20-task
-    waves and converts ring arrays row-by-row through py4j."""
+    output frame (RING_SCHEMA), or None when no chains existed; its
+    rings come to the driver through one parallel Arrow job
+    (``toPandas``)."""
     spark = trace_out.sparkSession
     ts = float(tile_size)
     ringrows = trace_out.where(F.col("kind") == 0).select(
@@ -530,35 +564,12 @@ def assemble_rings_fused(
 
     res = pd.DataFrame(columns=_RING_COLS)  # the merged residue
     if merged is not None:
-        merged_rid = (
+        res = (
             merged.where(F.abs("area") >= 1e-9)
             .withColumn("rid", F.xxhash64("xs", "ys"))
             .select(*_RING_COLS)
+            .toPandas()
         )
-        if (
-            merged_rows_bound is not None
-            and merged_coords_bound is not None
-            and merged_rows_bound <= MERGED_ROWS_GATE
-            and merged_coords_bound <= MERGED_COORDS_GATE
-        ):
-            # bounds certify the gates up front: one parallel Arrow
-            # collect, no incremental limit waves
-            res = merged_rid.toPandas()
-        else:
-            res = pd.DataFrame(
-                [r.asDict() for r in merged_rid.limit(MERGED_ROWS_GATE + 1).collect()],
-                columns=_RING_COLS,
-            )
-        if (
-            len(res) > MERGED_ROWS_GATE
-            or sum(map(len, res["xs"])) > MERGED_COORDS_GATE
-        ):
-            # pathological residue: hand the FULL ring set to the
-            # distributed assembly (lossless, slower), behind one eager
-            # local checkpoint its several joins share (a persist would
-            # leak in the CacheManager for the session lifetime)
-            rings = ringrows.unionByName(merged_rid).localCheckpoint(eager=True)
-            return assemble_rings_distributed(rings, drop_collapsed)
 
     # promotion among the residue (twins share a vertex set, hence a
     # class): the merged shells are its CCW rings and promoted CW rings
@@ -581,7 +592,7 @@ def assemble_rings_fused(
     # tested by every core
     by_core, g_always = core_reach_index(*g_box, x0, y0, ts, cols, rows, fmap)
     payload = {
-        "rid": g_rid, "area": g_area, **dict(zip(_BOX, g_box)),
+        "rid": g_rid, "area": g_area, "ccw": r_area[shell] > 0.0, **dict(zip(_BOX, g_box)),
         "fx": g_fx, "fy": g_fy, "off": g_off, "by_core": by_core, "always": g_always,
     }
     gbc = spark.sparkContext.broadcast(payload)
@@ -610,8 +621,10 @@ def assemble_rings_fused(
     extra_partials = (
         rows_frame(
             spark,
-            zip(v_rid[h].tolist(), g_rid[s].tolist(), g_area[s].tolist(), v_ha[h].tolist()),
-            "h_rid long, cand_rid long, cand_area double, h_area double",
+            zip(v_rid[h].tolist(), g_rid[s].tolist(), g_area[s].tolist(), v_ha[h].tolist(),
+                (v_ha[h] * v_cx[h]).tolist(), (v_ha[h] * v_cy[h]).tolist()),
+            "h_rid long, cand_rid long, cand_area double, h_area double, mx double, "
+            "my double",
         )
         if win.size
         else None
@@ -634,8 +647,7 @@ def assemble_rings_fused(
 
 def _assemble_rings_local(rings: DataFrame, drop_collapsed: bool) -> DataFrame:
     """Single-task assembly: the numpy assembly kernel over the whole
-    (small) ring set — identical semantics to the distributed joins, a
-    fraction of the latency. coalesce(1) + mapInPandas, NOT a
+    (small) ring set. coalesce(1) + mapInPandas, NOT a
     groupBy(lit) grouped-map: coalesce narrowly reads the cached ring
     partitions into one task with no single-partition shuffle
     exchange."""
@@ -650,210 +662,3 @@ def _assemble_rings_local(rings: DataFrame, drop_collapsed: bool) -> DataFrame:
         yield assemble_polygons_pdf(ring_xs, ring_ys, drop_collapsed, -2, -2)
 
     return rings.select("xs", "ys").coalesce(1).mapInPandas(kernel, POLYGON_SCHEMA)
-
-
-def assemble_rings_distributed(rings: DataFrame, drop_collapsed: bool = False) -> DataFrame:
-    """Distributed assembly over a global ring set (the DataFrame
-    translation of kernels.rings.assemble_polygons; same semantics,
-    reference polygonizer.rs:124-261).
-
-    Shuffle discipline: every classification / promotion / candidate /
-    winner stage runs over NARROW metadata rows (rid, area, bbox,
-    centroid — 72 bytes). Ring coordinate arrays cross the wire in
-    exactly three bounded places: once per candidate-bearing shell
-    into the PIP kernel, once per ASSIGNED hole into the hole
-    aggregation, and once per output polygon in the final attach —
-    never per candidate row, never through the promotion joins."""
-    coords = rings.select("rid", "xs", "ys")
-    meta = rings.select("rid", "area", "bx1", "by1", "bx2", "by2", "cx", "cy")
-    shells = meta.where("area > 0").select(
-        "rid", F.col("area").alias("s_area"), "bx1", "by1", "bx2", "by2", "cx", "cy"
-    )
-    holes = meta.where("area < 0").select(
-        F.col("rid").alias("h_rid"),
-        (-F.col("area")).alias("h_area"),
-        F.col("bx1").alias("hbx1"),
-        F.col("by1").alias("hby1"),
-        F.col("bx2").alias("hbx2"),
-        F.col("by2").alias("hby2"),
-        F.col("cx").alias("hcx"),
-        F.col("cy").alias("hcy"),
-    )
-
-    # --- promotion: CW ring with no CCW twin (exact bbox + ~area) ----
-    twins = (
-        holes.join(
-            shells.select("s_area", "bx1", "by1", "bx2", "by2"),
-            (F.col("hbx1") == F.col("bx1"))
-            & (F.col("hby1") == F.col("by1"))
-            & (F.col("hbx2") == F.col("bx2"))
-            & (F.col("hby2") == F.col("by2"))
-            & (F.abs(F.col("h_area") - F.col("s_area")) < 1e-6),
-            "left_semi",
-        )
-    ).select("h_rid")
-    promoted = holes.join(twins, "h_rid", "left_anti").select(
-        F.col("h_rid").alias("rid"),
-        F.col("h_area").alias("s_area"),
-        F.col("hbx1").alias("bx1"),
-        F.col("hby1").alias("by1"),
-        F.col("hbx2").alias("bx2"),
-        F.col("hby2").alias("by2"),
-        F.col("hcx").alias("cx"),
-        F.col("hcy").alias("cy"),
-        F.lit(True).alias("promoted"),
-    )
-    all_shells = shells.withColumn("promoted", F.lit(False)).unionByName(promoted)
-
-    # --- hole assignment: bbox cell-join + PIP(hole centroid) --------
-    # cell grid sized from the shell bbox distribution (driver-side agg
-    # of 4 scalars)
-    stats = all_shells.agg(
-        F.min("bx1").alias("gx0"),
-        F.min("by1").alias("gy0"),
-        F.max("bx2").alias("gx1"),
-        F.max("by2").alias("gy1"),
-        F.expr("percentile_approx(bx2 - bx1, 0.5)").alias("med"),
-        F.count("*").alias("n"),
-        F.max("s_area").alias("max_area"),
-    ).collect()[0]
-    if stats["n"] == 0:
-        return rings.sparkSession.createDataFrame([], POLYGON_SCHEMA)
-    gx0, gy0 = float(stats["gx0"]), float(stats["gy0"])
-    span = max(float(stats["gx1"]) - gx0, float(stats["gy1"]) - gy0, 1e-300)
-    cell = max(span / max(int(np.sqrt(stats["n"])), 1), float(stats["med"] or 0.0), span * 1e-9)
-    n_cells = 1 << 20
-
-    # NARROW candidate generation: only (rid, bbox, area) replicate per
-    # covered cell — ring coordinate arrays never enter the cell join.
-    # (A shell spanning the full extent — e.g. a grid hull — covers
-    # every cell; replicating its 10⁵-vertex array per cell is an
-    # O(cells × ring) shuffle blowup, measured as the dominant cost.)
-    sc = all_shells.select("rid", "s_area", "bx1", "by1", "bx2", "by2")
-    ci1 = cell_range_cols(F.col("bx1"), gx0, cell, n_cells)
-    ci2 = cell_range_cols(F.col("bx2"), gx0, cell, n_cells)
-    cj1 = cell_range_cols(F.col("by1"), gy0, cell, n_cells)
-    cj2 = cell_range_cols(F.col("by2"), gy0, cell, n_cells)
-    shell_cells = sc.withColumn("cell_i", F.explode(F.sequence(ci1, ci2))).withColumn(
-        "cell_j", F.explode(F.sequence(cj1, cj2))
-    )
-    # holes that cannot have a strictly-larger parent (above all the
-    # promoted coverage hull — whose centroid would otherwise generate
-    # a candidate against every cell-mate) never enter the cell join
-    # (polygonizer.rs:226; same prefilter as the kernel assembly)
-    hole_pts = holes.where(
-        F.col("h_area") < F.lit(float(stats["max_area"])) - 1e-6
-    ).select("h_rid", "hcx", "hcy", "h_area").withColumn(
-        "cell_i", cell_range_cols(F.col("hcx"), gx0, cell, n_cells)
-    ).withColumn("cell_j", cell_range_cols(F.col("hcy"), gy0, cell, n_cells))
-    # a hole keys to exactly ONE cell, so each (hole, shell) candidate
-    # pair arises once — no dedup needed
-    cand = hole_pts.join(shell_cells, ["cell_i", "cell_j"]).where(
-        (F.col("hcx") >= F.col("bx1"))
-        & (F.col("hcx") <= F.col("bx2"))
-        & (F.col("hcy") >= F.col("by1"))
-        & (F.col("hcy") <= F.col("by2"))
-        & (F.col("s_area") > F.col("h_area") + 1e-6)  # polygonizer.rs:226
-    )
-    # group candidates per shell, then join the shell's ring arrays by
-    # rid — coordinates cross the wire exactly once per shell.
-    # Promoted shells join the ORIGINAL (reversed) ring — orientation
-    # does not change even-odd containment.
-    # persisted: consumed by the broadcast key prune AND the coords
-    # join — an unpersisted broadcast build would re-execute the whole
-    # candidate pipeline a second time
-    per_shell = cand.groupBy("rid", "s_area").agg(
-        F.collect_list(F.struct("h_rid", "hcx", "hcy", "h_area")).alias("probes")
-    ).persist()
-    # broadcast-semi prune coords BEFORE its shuffle: only the
-    # candidate-bearing shells' arrays move (an unpruned join by rid
-    # would shuffle EVERY ring's arrays — measured as the dominant
-    # assembly bytes)
-    cand_shells = coords.join(
-        F.broadcast(per_shell.select("rid")), "rid", "left_semi"
-    )
-    with_coords = per_shell.join(cand_shells, "rid")
-
-    hit_schema = T.StructType(
-        [
-            T.StructField("h_rid", T.LongType()),
-            T.StructField("rid", T.LongType()),
-            T.StructField("s_area", T.DoubleType()),
-            T.StructField("h_area_back", T.DoubleType()),
-        ]
-    )
-
-    def pip_hits(batches):
-        """One ray cast per Arrow batch: every (hole centroid, candidate
-        shell) pair of the batch goes through a single ``ray_cast_pairs``
-        call over the batch's shells as CSR rings."""
-        import pyarrow as pa
-
-        def lengths(lists):
-            return lists.value_lengths().fill_null(0).to_numpy()
-
-        for batch in batches:
-            col = batch.column
-            probes = col("probes").flatten()
-            owner = np.repeat(np.arange(batch.num_rows), lengths(col("probes")))
-            off = np.concatenate(([0], np.cumsum(lengths(col("xs")))))
-            inside = ray_cast_pairs(
-                probes.field("hcx").to_numpy(), probes.field("hcy").to_numpy(), owner,
-                col("xs").flatten().to_numpy(), col("ys").flatten().to_numpy(), off,
-            )
-            hit = np.flatnonzero(inside)
-            if hit.size:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        probes.field("h_rid").take(hit),
-                        col("rid").take(owner[hit]),
-                        col("s_area").take(owner[hit]),
-                        probes.field("h_area").take(hit),
-                    ],
-                    names=hit_schema.names,
-                )
-
-    hit = with_coords.mapInArrow(pip_hits, hit_schema)
-    winners = (
-        hit.groupBy("h_rid")
-        .agg(F.min_by(F.struct("rid"), "s_area").alias("best"), F.min("h_area_back").alias("h_area"))
-        .select("h_rid", F.col("best.rid").alias("rid"), "h_area")
-        .persist()  # read by its own broadcast key prune + the join
-    )
-    hole_coords = coords.select(
-        F.col("rid").alias("h_rid"), F.col("xs").alias("h_xs"), F.col("ys").alias("h_ys")
-    ).join(F.broadcast(winners.select("h_rid")), "h_rid", "left_semi")
-    # hole ring arrays: once per ASSIGNED hole, by id
-    assigned = winners.join(hole_coords, "h_rid")
-
-    hole_agg = assigned.groupBy("rid").agg(
-        F.collect_list("h_xs").alias("hole_xs"),
-        F.collect_list("h_ys").alias("hole_ys"),
-        F.sum("h_area").alias("holes_area"),
-        F.count("*").alias("n_holes"),
-    )
-
-    out = (
-        all_shells.join(hole_agg, "rid", "left")
-        .withColumn("holes_area", F.coalesce("holes_area", F.lit(0.0)))
-        .withColumn("n_holes", F.coalesce("n_holes", F.lit(0)).cast("int"))
-        .withColumn("net_area", F.col("s_area") - F.col("holes_area"))
-    )
-    if drop_collapsed:
-        out = out.where(F.col("net_area") > 1e-6)  # polygonizer.rs:255-258
-    # single arrays attach per output polygon; promoted shells re-wind
-    # CCW here (polygonizer.rs:164-169)
-    out = out.join(coords, "rid")
-    return out.select(
-        F.lit(-2).cast("int").alias("tile_i"),  # stitched marker
-        F.lit(-2).cast("int").alias("tile_j"),
-        F.col("rid").alias("poly_id"),
-        F.when(F.col("promoted"), F.reverse("xs")).otherwise(F.col("xs")).alias("shell_xs"),
-        F.when(F.col("promoted"), F.reverse("ys")).otherwise(F.col("ys")).alias("shell_ys"),
-        F.coalesce("hole_xs", F.array().cast("array<array<double>>")).alias("hole_xs"),
-        F.coalesce("hole_ys", F.array().cast("array<array<double>>")).alias("hole_ys"),
-        "n_holes",
-        F.col("net_area").alias("area"),
-        "cx",
-        "cy",
-    )

@@ -52,10 +52,11 @@ Protocol (each step local and deterministic):
    link (tail with no matching head) is topologically impossible under
    (1)+(2), so the kernel RAISES on it rather than dropping data.
 6. **Assembly.** The ring set (local + merged) feeds the
-   classification / twin-promotion / hole-assignment pipeline of
-   ``assembly.py`` (one-task kernel, per-core fused assembly, or
-   distributed joins) — semantics identical to the reference
-   polygonizer (polygonizer.rs:124-261).
+   classification / twin-promotion / hole-assignment rule of
+   ``kernels/rings.py``, run by ``assembly.py`` either as one task over
+   the whole ring set or per claim core (the fused assembly) —
+   semantics identical to the reference polygonizer
+   (polygonizer.rs:124-261).
 
 Scale shape: one wide shuffle of segment data (the tile repartition),
 then shuffles over chain rows only: for a W×W-tile lattice the chain
@@ -82,11 +83,7 @@ from ..kernels.graph import build_graph, sort_edges, successor_permutation
 from ..kernels.noding import node_segments
 from ..kernels.polygonize import DEFAULT_SNAP_GRID
 from ..kernels.rings import batch_ring_stats
-from .assembly import (
-    _assemble_rings_local,
-    assemble_rings_distributed,
-    assemble_rings_fused,
-)
+from .assembly import _assemble_rings_local, assemble_rings_fused
 from .polygonize_op import _bbox_of_segments, segmentize_df
 from .tiling import (
     TILE_KEY,
@@ -841,10 +838,8 @@ def chain_stitched_polygonize(
     single-group ``polygonize`` exactly. Chain sets up to
     ``LOCAL_CHAIN_MERGE_MAX`` merge in one task, larger ones
     distributed."""
-    if assembly not in ("auto", "local", "fused", "distributed"):
-        raise ValueError(
-            f"assembly must be auto|local|fused|distributed, got {assembly!r}"
-        )
+    if assembly not in ("auto", "local", "fused"):
+        raise ValueError(f"assembly must be auto|local|fused, got {assembly!r}")
     _presplit_file: str | None = None
     segments = segmentize_df(lines_df).persist()
     _to_unpersist = [segments]  # cache hygiene: dropped once consumed
@@ -957,27 +952,17 @@ def chain_stitched_polygonize(
         .localCheckpoint(eager=False)
     )
 
-    local_rings = out.where(F.col("kind") == 0).select(
-        "xs", "ys", "area", "bx1", "by1", "bx2", "by2", "cx", "cy"
-    )
     chains = out.where(F.col("kind") == 1)
     # ONE job over the checkpointed kernel output supplies both
     # decisions (merge strategy + assembly strategy): n_chains exactly,
     # and n_local + n_chains as an upper bound on the final ring count
-    # (each chain cycle yields ≤ its chain count in rings).
-    # coords ride along (free in the same scan): the merged ring set
-    # concatenates chain coordinate arrays, so its total coordinate
-    # count is bounded by the chain total + one closing vertex per
-    # ring — letting the fused assembly skip the incremental limit
-    # gate and collect the residue through one parallel Arrow job
+    # (each chain cycle yields ≤ its chain count in rings)
     kc = {
-        int(r["kind"]): (int(r["n"]), int(r["c"] or 0))
-        for r in out.groupBy("kind")
-        .agg(F.count("*").alias("n"), F.sum(F.size("xs")).alias("c"))
-        .collect()
+        int(r["kind"]): int(r["n"])
+        for r in out.groupBy("kind").agg(F.count("*").alias("n")).collect()
     }
-    n_chains, chain_coords = kc.get(1, (0, 0))
-    n_rings_upper = kc.get(0, (0, 0))[0] + n_chains
+    n_chains = kc.get(1, 0)
+    n_rings_upper = kc.get(0, 0) + n_chains
     # the counts job materialized the kernel output cache — the segment
     # cache behind it (and the driver pre-split parquet handoff, if
     # any) is dead weight from here on
@@ -997,8 +982,7 @@ def chain_stitched_polygonize(
 
     if assembly == "auto":
         # r5: large ring sets take the FUSED per-core assembly (zero
-        # extra shuffles of ring data) instead of the global joins —
-        # the r4 perf-weak global-assembly floor. Crossover measured on
+        # extra shuffles of ring data). Crossover measured on
         # the lattice sweep (BENCH.md r5): one-task local assembly wins
         # to ~40k rings (fused pays ~4 fixed job latencies), fused wins
         # by 160k (serial assembly of 10⁵ rings loses to 64-way tasks)
@@ -1015,20 +999,11 @@ def chain_stitched_polygonize(
         return assemble_rings_fused(
             out, merged, x0, y0, float(tile_size), cols, rows, fmap,
             drop_collapsed=drop_collapsed,
-            merged_rows_bound=n_chains,
-            merged_coords_bound=chain_coords + n_chains,
         )
 
-    rings = local_rings if merged is None else local_rings.unionByName(merged)
-    rings = rings.withColumn("rid", F.xxhash64("xs", "ys"))
-    if assembly == "local":
-        # single consumer, one coalesced task — reads the trace
-        # checkpoint narrowly, no intermediate ring copy needed (r6;
-        # the eager ring checkpoint existed only so the old persist
-        # could be released early)
-        return _assemble_rings_local(rings, drop_collapsed=drop_collapsed)
-    # distributed assembly re-consumes the ring set from several joins —
-    # one eager executor-local checkpoint serves every consumer (blocks
-    # GC-cleaned when the frame drops)
-    rings = rings.localCheckpoint(eager=True)
-    return assemble_rings_distributed(rings, drop_collapsed=drop_collapsed)
+    # single consumer, one coalesced task — reads the trace checkpoint
+    # narrowly, no intermediate ring copy needed
+    rings = out.where(F.col("kind") == 0).select(*RING_SCHEMA.names)
+    if merged is not None:
+        rings = rings.unionByName(merged)
+    return _assemble_rings_local(rings, drop_collapsed=drop_collapsed)

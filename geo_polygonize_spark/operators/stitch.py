@@ -37,7 +37,8 @@ def stitched_polygonize(
     """Exact distributed polygonize with no maximum polygon size.
 
     Output matches the single-group ``polygonize`` exactly (same ring
-    set, same assembly semantics), but every stage is distributed.
+    set, same assembly semantics). Tracing and the chain merge are
+    distributed; assembly runs in one task or per claim core.
 
     ``strategy``: "auto" (default) or "chain" — both run
     ``chain_stitch.chain_stitched_polygonize``. The chain engine beat
@@ -47,10 +48,11 @@ def stitched_polygonize(
 
     ``assembly``: "auto" (single-task assembly up to
     ``chain_stitch.LOCAL_ASSEMBLY_MAX_RINGS`` (100,000) rings, the
-    per-core fused assembly above), "local" (always one task), "fused"
-    (always the per-core assembly of ``assembly.assemble_rings_fused``)
-    or "distributed" (always the DataFrame joins — the unbounded-scale
-    path).
+    per-core fused assembly above), "local" (always one task) or
+    "fused" (always the per-core assembly of
+    ``assembly.assemble_rings_fused``); any other value raises
+    ``ValueError``. Both run the one assembly rule of
+    ``kernels/rings.py``.
     """
     if strategy not in ("auto", "chain"):
         raise ValueError(f"strategy must be auto|chain, got {strategy!r}")

@@ -1,18 +1,15 @@
-"""Ring assembly (operators/assembly.py): equivalence of the local,
-fused and distributed finishes on real coverages, plus direct
-synthetic-ring probes of the fused assembly's rare protocol paths
-(on-gridline visitors, core-shell winner patches, the merged-residue
-fallback gate)."""
+"""Ring assembly (operators/assembly.py): the local and fused finishes
+against each other and against the single-group ``polygonize`` on real
+coverages, plus direct synthetic-ring probes of the fused assembly's
+rare protocol paths (on-gridline visitors, core-shell winner patches,
+promoted rings that are also holes), checked against the single-group
+kernel ``kernels.rings.assemble_polygons_pdf``."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from geo_polygonize_spark.operators import assembly as asm
-from geo_polygonize_spark.operators.assembly import (
-    assemble_rings_distributed,
-    assemble_rings_fused,
-)
+from geo_polygonize_spark.kernels.rings import assemble_polygons_pdf
+from geo_polygonize_spark.operators.assembly import assemble_rings_fused
 from geo_polygonize_spark.operators.chain_stitch import (
     CHAIN_SCHEMA,
     RING_SCHEMA,
@@ -72,40 +69,30 @@ class TestSplitEquivalence:
         df = lines_to_df(spark, xs, ys)
         bbox = (0.0, 0.0, float(n), float(n))
         for dc in (False, True):
-            a = canon(
-                chain_stitched_polygonize(
-                    df, tile_size=5.0, bbox=bbox, drop_collapsed=dc,
-                    assembly="distributed",
-                ).collect()
-            )
-            b = canon(
-                chain_stitched_polygonize(
-                    df, tile_size=5.0, bbox=bbox, drop_collapsed=dc,
-                    assembly="fused",
-                ).collect()
-            )
-            c = canon(
-                stitched_polygonize(
-                    df, tile_size=5.0, bbox=bbox, drop_collapsed=dc,
-                    assembly="local",
-                ).collect()
-            )
-            assert a == b == c
+            fused = chain_stitched_polygonize(
+                df, tile_size=5.0, bbox=bbox, drop_collapsed=dc, assembly="fused",
+            ).collect()
+            local = stitched_polygonize(
+                df, tile_size=5.0, bbox=bbox, drop_collapsed=dc, assembly="local",
+            ).collect()
+            want = keyset(polygonize(df, node_input=True, drop_collapsed=dc).collect())
+            assert canon(fused) == canon(local)
+            assert keyset(fused) == keyset(local) == want
 
     def test_random_lines(self, spark):
         xs, ys = random_lines(60)
         df = lines_to_df(spark, xs, ys)
         bbox = (0.0, 0.0, 100.0, 100.0)
-        a, b, c = (
-            canon(
-                chain_stitched_polygonize(
-                    df, tile_size=25.0, buffer=10.0, bbox=bbox,
-                    drop_collapsed=True, assembly=mode,
-                ).collect()
-            )
-            for mode in ("distributed", "fused", "local")
+        fused, local = (
+            chain_stitched_polygonize(
+                df, tile_size=25.0, buffer=10.0, bbox=bbox,
+                drop_collapsed=True, assembly=mode,
+            ).collect()
+            for mode in ("fused", "local")
         )
-        assert a == b == c
+        want = keyset(polygonize(df, node_input=True, drop_collapsed=True).collect())
+        assert canon(fused) == canon(local)
+        assert keyset(fused) == keyset(local) == want
 
     def test_nested_holes_vs_global(self, spark):
         """Cross-tile shells (100/60/20 rings vs tile 10) land in the
@@ -163,10 +150,12 @@ class TestSplitProtocol:
     """Direct probes of assemble_rings_fused over synthetic rings, split
     the way the chain engine splits them: a ring whose vertices all lie
     in one claiming core is a kind-0 trace row, every other ring is a
-    merged (chain-closed) ring. The ground truth is
-    assemble_rings_distributed on the SAME rings."""
+    merged (chain-closed) ring. The ground truth is the single-group
+    kernel ``assemble_polygons_pdf`` on the SAME ring coordinates: the
+    same polygons bit for bit (``canon``) and the same centroids
+    (``keyset``)."""
 
-    def _both(self, spark, rows, ts, drop_collapsed=False, **fused_kw):
+    def _both(self, spark, rows, ts, drop_collapsed=False):
         ext = max(max(r[5], r[6]) for r in rows)
         cols = rows_n = max(int(np.ceil(ext / ts)), 1)
         core, merged = [], []
@@ -179,19 +168,20 @@ class TestSplitProtocol:
             [(0, r[0], r[1], 0, 0) + r[2:] for r in core], CHAIN_SCHEMA
         ).coalesce(1)
         mdf = spark.createDataFrame(merged, RING_SCHEMA) if merged else None
-        fused = canon(
-            assemble_rings_fused(
-                trace, mdf, 0.0, 0.0, ts, cols, rows_n, {},
-                drop_collapsed=drop_collapsed, **fused_kw,
-            ).collect()
-        )
-        rings = spark.createDataFrame(rows, RING_SCHEMA).withColumn(
-            "rid", F.xxhash64("xs", "ys")
-        )
-        dist = canon(
-            assemble_rings_distributed(rings, drop_collapsed=drop_collapsed).collect()
-        )
-        return fused, dist, len(core), len(merged)
+        fused = assemble_rings_fused(
+            trace, mdf, 0.0, 0.0, ts, cols, rows_n, {},
+            drop_collapsed=drop_collapsed,
+        ).collect()
+        kernel = assemble_polygons_pdf(
+            [np.asarray(r[0]) for r in rows], [np.asarray(r[1]) for r in rows],
+            drop_collapsed,
+        ).to_dict("records")
+        return fused, kernel, len(core), len(merged)
+
+    @staticmethod
+    def _assert_same(fused, kernel):
+        assert canon(fused) == canon(kernel)
+        assert keyset(fused) == keyset(kernel)
 
     def test_deferred_on_gridline_visitor(self, spark):
         """A merged CW hole straddling the x=10 gridline with centroid
@@ -203,17 +193,18 @@ class TestSplitProtocol:
             ring_row(1, 1, 5, 5),               # unrelated core shell
         ]
         assert rows[1][7] == 10.0  # centroid IS on the ts=10 gridline
-        fused, dist, n_core, n_merged = self._both(spark, rows, 10.0)
+        fused, kernel, n_core, n_merged = self._both(spark, rows, 10.0)
         assert (n_core, n_merged) == (1, 2)
-        assert fused == dist
-        by_holes = {r[1]: r for r in fused}
-        assert by_holes[1][0] == pytest.approx(240.0 - 4.0)  # hole assigned
+        self._assert_same(fused, kernel)
+        assert [r[:2] for r in canon(fused)] == [(4.0, 0), (16.0, 0), (236.0, 1)]
 
     def test_local_shell_wins_visitor_hole(self, spark):
         """Concave-emulating case: a merged CW ring whose centroid lies
         inside a CORE shell strictly smaller than the merged container
         — the core shell must win and its already-emitted polygon is
-        patched."""
+        patched. The kernel recomputes centroids from coordinates, so
+        the expected polygons are written out here; the fused assembly
+        takes every centroid from the ring rows."""
         rows = [
             ring_row(0, 0, 24, 24),                      # merged shell, 576
             ring_row(2, 2, 8, 8),                        # core shell, 36
@@ -221,11 +212,17 @@ class TestSplitProtocol:
             # centroid (5,5) inside core shell 2
             ring_row(9, 20, 12, 22, cw=True, cx=5.0, cy=5.0),
         ]
-        fused, dist, n_core, n_merged = self._both(spark, rows, 10.0)
+        fused, _, n_core, n_merged = self._both(spark, rows, 10.0)
         assert (n_core, n_merged) == (1, 2)
-        assert fused == dist
-        patched = [r for r in fused if r[0] == pytest.approx(36.0 - 6.0)]
-        assert len(patched) == 1 and patched[0][1] == 1  # shell 2 got it
+        # the twinless CW ring is promoted (6, re-wound CCW), its hole
+        # patches core shell 2 (36 - 6), and the merged shell keeps none
+        hole = (tuple(rows[2][0]), tuple(rows[2][1]))
+        assert keyset(fused) == [(5.0, 5.0, 6.0, 0), (5.0, 5.0, 30.0, 1), (12.0, 12.0, 576.0, 0)]
+        assert canon(fused) == [
+            (6.0, 0, tuple(rows[2][0][::-1]), tuple(rows[2][1][::-1]), ()),
+            (30.0, 1, tuple(rows[1][0]), tuple(rows[1][1]), (hole,)),
+            (576.0, 0, tuple(rows[0][0]), tuple(rows[0][1]), ()),
+        ]
 
     def test_promoted_ring_is_also_a_hole(self, spark):
         """A CW ring with no CCW twin is promoted to a shell AND still
@@ -239,16 +236,12 @@ class TestSplitProtocol:
             ring_row(17, 3, 21, 7, cw=True),     # twinless merged CW
         ]
         for dc in (False, True):
-            fused, dist, n_core, n_merged = self._both(
+            fused, kernel, n_core, n_merged = self._both(
                 spark, rows, 10.0, drop_collapsed=dc
             )
             assert (n_core, n_merged) == (1, 2)
-            assert fused == dist
-        fused, _, _, _ = self._both(spark, rows, 10.0)
-        areas = sorted(r[0] for r in fused)
-        assert areas == [
-            pytest.approx(16.0), pytest.approx(16.0), pytest.approx(900.0 - 32.0)
-        ]
+            self._assert_same(fused, kernel)
+            assert [r[:2] for r in canon(fused)] == [(16.0, 0), (16.0, 0), (868.0, 2)]
 
     def test_tile_edge_touching_rings_stay_local(self, spark):
         """Rings on an aligned lattice touch core edges: cells whose
@@ -259,27 +252,12 @@ class TestSplitProtocol:
         rows = [ring_row(i * 5, j * 5, i * 5 + 5, j * 5 + 5)
                 for i in range(4) for j in range(4)]
         rows.append(ring_row(0, 0, 20, 20, cw=True))  # hull
-        fused, dist, n_core, n_merged = self._both(
+        fused, kernel, n_core, n_merged = self._both(
             spark, rows, 10.0, drop_collapsed=True
         )
         assert (n_core, n_merged) == (9, 8)
-        assert fused == dist
+        self._assert_same(fused, kernel)
         # 16 CCW cells + the promoted hull (CCW cells are shells, not
         # holes — nothing absorbs into the hull in this construction,
         # so its net stays 400 and it survives drop_collapsed)
         assert len(fused) == 17
-
-    def test_fallback_gate_delegates_to_distributed(self, spark, monkeypatch):
-        """Above the merged-residue gate the fused path must hand the
-        WHOLE ring set (core + merged) to the distributed assembly,
-        losslessly."""
-        monkeypatch.setattr(asm, "MERGED_ROWS_GATE", 0)
-        rows = [
-            ring_row(0, 0, 20, 12),
-            ring_row(9, 4, 11, 6, cw=True),
-            ring_row(1, 1, 5, 5),
-            ring_row(2, 2, 3, 3, cw=True),
-        ]
-        fused, dist, n_core, n_merged = self._both(spark, rows, 10.0)
-        assert (n_core, n_merged) == (2, 2)
-        assert fused == dist

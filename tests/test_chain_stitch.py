@@ -33,7 +33,7 @@ def test_chain_recovers_big_polygons(spark):
     xs, ys, node, snap = fixture("nested_holes")
     df = lines_to_df(spark, xs, ys)
     bbox = (0.0, 0.0, 100.0, 100.0)
-    for assembly in ("local", "distributed"):
+    for assembly in ("local", "fused"):
         got = chain_stitched_polygonize(
             df, tile_size=10.0, buffer=2.0, bbox=bbox, assembly=assembly
         ).collect()
@@ -94,7 +94,7 @@ def test_chain_dangle_only_input(spark):
     xs = [[0.0, 4.0], [1.0, 5.0], [2.0, 2.0]]
     ys = [[0.0, 0.5], [2.0, 2.5], [3.0, 4.0]]
     df = lines_to_df(spark, xs, ys)
-    for assembly in ("local", "distributed"):
+    for assembly in ("local", "fused"):
         got = chain_stitched_polygonize(
             df, tile_size=2.0, buffer=1.0, bbox=(0.0, 0.0, 6.0, 6.0), assembly=assembly
         ).collect()
@@ -121,6 +121,26 @@ def test_chain_cross_tile_dangle_spur(spark):
     # the square's CW ring is the CCW shell's twin (never promoted),
     # and the whisker cancels — exactly one polygon
     assert sorted(round(r["area"], 6) for r in got) == [16.0]
+
+
+def test_chain_island_with_cross_core_dangle(spark):
+    """An off-centre island in a big square, with a dangle on the
+    island's outer side crossing the core boundary x=5. The island's
+    CW face ring closes in its core, while its CCW twin carries the
+    spur and closes through the merge: twin promotion must see the
+    merged twin (else the island comes out twice). The big square's
+    polygon has the island as an off-centre hole, so its centroid is
+    not its shell's."""
+    xs = [[0.0, 20.0, 20.0, 0.0, 0.0], [1.0, 4.0, 4.0, 1.0, 1.0], [4.0, 7.0]]
+    ys = [[0.0, 0.0, 20.0, 20.0, 0.0], [1.0, 1.0, 4.0, 4.0, 1.0], [2.0, 2.0]]
+    df = lines_to_df(spark, xs, ys)
+    want = polygonize(df, node_input=True).collect()
+    assert sorted((round(r["area"], 6), r["n_holes"]) for r in want) == [(9.0, 0), (391.0, 1)]
+    for assembly in ("local", "fused"):
+        got = chain_stitched_polygonize(
+            df, tile_size=5.0, buffer=1.5, bbox=(0.0, 0.0, 20.0, 20.0), assembly=assembly
+        ).collect()
+        assert keyset(got) == keyset(want), assembly
 
 
 def test_chain_long_buffer_segments(spark):
@@ -277,39 +297,6 @@ def test_chain_fused_subsplit_and_dist_merge(spark, monkeypatch):
     assert keyset(got_dm) == keyset(want)
 
 
-def test_chain_fused_gate_fallback(spark, monkeypatch):
-    """When the merged residue trips the fused assembly's collection
-    gates it must hand the whole ring set to the lossless distributed
-    assembly, with identical results."""
-    from geo_polygonize_spark.operators import assembly as asm
-    from geo_polygonize_spark.operators import chain_stitch
-
-    real_fused = asm.assemble_rings_fused
-    real_dist = asm.assemble_rings_distributed
-    calls = []
-
-    def gated(*a, **kw):
-        calls.append("fused")
-        return real_fused(*a, **kw)
-
-    def dist(*a, **kw):
-        calls.append("distributed")
-        return real_dist(*a, **kw)
-
-    monkeypatch.setattr(chain_stitch, "assemble_rings_fused", gated)
-    monkeypatch.setattr(asm, "assemble_rings_distributed", dist)
-    monkeypatch.setattr(asm, "MERGED_ROWS_GATE", 0)  # any merged residue trips the gate
-    xs, ys, node, snap = fixture("nested_holes")
-    df = lines_to_df(spark, xs, ys)
-    got = chain_stitched_polygonize(
-        df, tile_size=10.0, buffer=2.0, bbox=(0.0, 0.0, 100.0, 100.0),
-        assembly="fused",
-    ).collect()
-    want = polygonize(df, node_input=node, snap_grid=snap).collect()
-    assert keyset(got) == keyset(want)
-    assert calls == ["fused", "distributed"]
-
-
 def test_stitched_strategy_chain_dispatch(spark):
     """stitched_polygonize(strategy="chain") delegates to the chain
     engine and matches the default strategy exactly; retired
@@ -330,7 +317,8 @@ def test_stitched_strategy_chain_dispatch(spark):
     assert keyset(got) == keyset(want) and len(got) == 64
     with pytest.raises(ValueError, match="strategy must be"):
         stitched_polygonize(df, tile_size=3.0, strategy="nope")
-    with pytest.raises(ValueError, match="assembly must be"):
-        stitched_polygonize(df, tile_size=3.0, assembly="split")
+    for retired in ("split", "distributed"):
+        with pytest.raises(ValueError, match="assembly must be"):
+            stitched_polygonize(df, tile_size=3.0, assembly=retired)
     with pytest.raises(TypeError, match="escalation"):
         stitched_polygonize(df, tile_size=3.0, escalation="pruned")

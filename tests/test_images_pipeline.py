@@ -213,8 +213,9 @@ class TestSpatialJoin:
         xs, ys = grid_lines(n)
         lines = lines_to_df(spark, xs, ys)
         bbox = (0.0, 0.0, float(n), float(n))
-        # keep the hull (drop_collapsed=False) so holes exercise the
-        # broadcast index's hole-exclusion path
+        # drop_collapsed=False, but tiled_polygonize still drops the
+        # net-zero hull, so this coverage has no holes;
+        # test_pip_cells_skew_equals_broadcast covers holes
         polys = tiled_polygonize(
             lines, tile_size=8.0, buffer=2.0, bbox=bbox, drop_collapsed=False
         ).cache()

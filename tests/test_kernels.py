@@ -491,8 +491,9 @@ class TestAssemblyRule:
             c[keep] for c in (bx1, by1, bx2, by2))
         fx, fy, off = _ring_csr(ring_xs, ring_ys)
         z = np.empty(0)
-        no_merged = {"rid": np.empty(0, np.int64), "area": z, "bx1": z, "by1": z,
-                     "bx2": z, "by2": z, "fx": z, "fy": z, "off": np.zeros(1, np.int64)}
+        no_merged = {"rid": np.empty(0, np.int64), "area": z, "ccw": np.empty(0, bool),
+                     "bx1": z, "by1": z, "bx2": z, "by2": z, "fx": z, "fy": z,
+                     "off": np.zeros(1, np.int64)}
         sh, _, ho, h, w, _, _ = _core_local_assembly(
             area, np.arange(area.size), cx, cy, box, fx, fy, off, np.arange(area.size),
             no_merged, np.empty(0, np.int64),

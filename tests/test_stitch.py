@@ -29,7 +29,7 @@ def test_stitched_recovers_big_polygons(spark):
     assert len(lossy) < 3  # demonstrates the flaw being fixed
 
     # pin BOTH assembly strategies (auto picks local at this size)
-    for assembly in ("local", "distributed"):
+    for assembly in ("local", "fused"):
         got = stitched_polygonize(
             df, tile_size=10.0, buffer=2.0, bbox=bbox, assembly=assembly
         ).collect()
@@ -64,8 +64,8 @@ def test_stitched_equals_global_on_random(spark):
 def test_stitched_mixed_scales(spark):
     # a giant ring enclosing a small grid: the giant ring closes only
     # through the chain merge while grid cells close inside their tile
-    # cores; the giant shell must receive the grid's outer CW ring as a hole via the
-    # distributed assignment
+    # cores; the giant shell must receive the grid's outer CW ring as a
+    # hole
     n = 8
     gx, gy = grid_lines(n)
     # shift grid to (20..28) inside a 0..60 giant square
@@ -148,7 +148,8 @@ def test_cross_engine_equivalence_random(spark, seed):
     caught the r5 bbox-overhang bug, promoted from scripts/cold_ab.py
     into CI. Random linework with a randomized segment-length regime
     and bbox overhang (the r5 bug's trigger class); single-group ground
-    truth vs chain/auto on value-level canonical keys,
+    truth vs the chain engine's local (auto) and fused assemblies on
+    value-level canonical keys,
     and tiled's deficit must consist ONLY of polygons its owner-tile
     buffered window provably cannot produce (the documented
     bounded-window contract, reference src/tiling.rs:66-106)."""
@@ -171,7 +172,8 @@ def test_cross_engine_equivalence_random(spark, seed):
     want = keyset(want_rows)
     assert want, "degenerate fixture: ground truth produced no polygons"
 
-    for kwargs in ({"strategy": "chain"}, {"strategy": "auto"}):
+    # auto picks the local assembly at this size; fused is forced
+    for kwargs in ({"strategy": "auto"}, {"assembly": "fused"}):
         got = stitched_polygonize(
             df, tile_size=ts_, buffer=buf, bbox=bbox, drop_collapsed=True, **kwargs
         ).collect()
@@ -220,7 +222,7 @@ def test_stitched_dangle_only_input(spark):
     xs = [[0.0, 4.0], [1.0, 5.0], [2.0, 2.0]]
     ys = [[0.0, 0.5], [2.0, 2.5], [3.0, 4.0]]
     df = lines_to_df(spark, xs, ys)
-    for assembly in ("local", "distributed"):
+    for assembly in ("local", "fused"):
         got = stitched_polygonize(
             df, tile_size=2.0, buffer=1.0, bbox=(0.0, 0.0, 6.0, 6.0), assembly=assembly
         ).collect()
